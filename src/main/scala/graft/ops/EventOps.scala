@@ -120,12 +120,20 @@ object EventOps {
     * prefer the streaming form `dropDuplicatesWithinWatermark` (bounded
     * RocksDB state) — see graft.streaming.
     */
-  def dedupFirstWins(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-  }
+  def dedupFirstWins(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
+    withFirstWinsRank(df, keys, order)
+      .where(col(FirstWinsRank) === 1)
+      .drop(FirstWinsRank)
+
+  /** Rank column of [[withFirstWinsRank]]. */
+  val FirstWinsRank = "__rn"
+
+  /** `df` plus its first-wins rank per key ([[FirstWinsRank]], 1 = the
+    * row [[dedupFirstWins]] keeps). Rank 2 occurs once per key that occurs
+    * more than once, so one pass can both dedup and count duplicate keys. */
+  def withFirstWinsRank(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
+    df.withColumn(FirstWinsRank,
+      row_number().over(Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
 
   /** Count of keys that occur more than once (reference:
     * toy_glue.py:47-50 — `groupBy(uuid).count().where(count>1).count()`).

@@ -67,7 +67,16 @@ object StreamingPipeline {
     * exactly the hours that batch touched into language-partitioned
     * parquet. `foreachBatch` + dynamic partition overwrite makes the
     * compaction idempotent per hour; the touched-hours collect is a
-    * handful of tuples, not data. */
+    * handful of tuples, not data.
+    *
+    * A micro-batch that carries data into one hour runs 3 Spark jobs:
+    * (1) the touched-hours collect over the persisted batch, the only pass
+    * of decode → dedup → state store; (2) the staging write, from the
+    * cache; (3) the hour's compaction, one pass whose write also observes
+    * its duplicate and written counts (each further touched hour adds one
+    * job). An empty micro-batch runs job 1 only. Cost still open: job 3
+    * re-reads the whole hour's staging, so rows read per micro-batch grow
+    * with the hour's age. */
   def startIngestWithCompaction(records: org.apache.spark.sql.DataFrame,
       stagingDir: String, processedDir: String, checkpointDir: String,
       metrics: graft.pipeline.Metrics = new graft.pipeline.Metrics,
@@ -77,23 +86,27 @@ object StreamingPipeline {
       pipeline(records, watermark), col("ts")))
     staged.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try {
-            batch.write.mode("append")
+        batch.persist()
+        try {
+          // job 1: the one pass of decode → dedup → state store, filling
+          // the cache on its way to the touched hours
+          val hours = batch.select("year", "month", "day", "hour")
+            .distinct().collect()
+          // empty micro-batch: no hours, so nothing is staged or compacted
+          // (the reference logs "No records" and skips,
+          // toy_lambda_function.py:66-69)
+          if (hours.nonEmpty) {
+            batch.write.mode("append") // job 2, from the cache
               .partitionBy("year", "month", "day", "hour", "minute")
               .json(stagingDir)
-            val hours = batch.select("year", "month", "day", "hour")
-              .distinct().collect()
-            hours.foreach { h =>
+            hours.foreach { h => // job 3 per touched hour
               graft.pipeline.BatchPipeline.compactHour(
                 batch.sparkSession, stagingDir, processedDir,
                 h.getString(0), h.getString(1), h.getString(2), h.getString(3),
                 metrics)
             }
-          } finally batch.unpersist()
-        } // empty micro-batch: reference logs "No records" and skips
-          // (toy_lambda_function.py:66-69)
+          }
+        } finally batch.unpersist()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

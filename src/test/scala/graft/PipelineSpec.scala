@@ -71,6 +71,110 @@ class PipelineSpec extends SparkSpecBase {
     assert(w1 === w2, "re-compacting the same hour must not duplicate data")
   }
 
+  /** Decode, enrich and stage `events` as minute-partitioned NDJSON. */
+  private def stage(events: org.apache.spark.sql.DataFrame, staging: String): Unit =
+    BatchPipeline.stageEvents(
+      StreamingPipeline.decodeRecords(EventGen.enveloped(events))
+        .drop("event_type", "event_subtype", "created_datetime"),
+      staging, ts = $"ts")
+
+  /** `n` events from id `from` on, all in hour 17 of 2024-03-09. */
+  private def hour17(from: Long, n: Long) =
+    EventGen.eventsFromIds(spark.range(from, from + n).toDF(), t0 = 1.71e9 + 3600)
+
+  private val (y, mo, d) = ("2024", "03", "09")
+
+  test("compactHour on an hour with no staged rows returns (0, 0)") {
+    val staging = tmpDir("staging_empty")
+    val processed = tmpDir("processed_empty")
+    val metrics = new Metrics
+    stage(EventGen.events(spark, 200), staging) // hour 16 only
+    assert(BatchPipeline.compactHour(
+      spark, staging, processed, y, mo, d, "17", metrics) === ((0L, 0L)))
+    assert(metrics.batchDuplicates.get === 0L)
+    assert(metrics.ingestedEvents.get === 0L)
+    assert(!new java.io.File(s"$processed/year=$y/month=$mo/day=$d/hour=17").exists)
+
+    // the hour's directory exists but holds no rows: the write's observed
+    // counts over an empty input are 0, not null
+    val emptyMinute = new java.io.File(s"$staging/year=$y/month=$mo/day=$d/hour=18/minute=00")
+    assert(emptyMinute.mkdirs())
+    assert(new java.io.File(emptyMinute, "part-00000.json").createNewFile())
+    assert(BatchPipeline.compactHour(
+      spark, staging, processed, y, mo, d, "18", metrics) === ((0L, 0L)))
+    assert(metrics.ingestedEvents.get === 0L)
+  }
+
+  test("compaction reads only its hour's staging files, and its output " +
+    "equals a filtered read of the whole staging tree") {
+    val staging = tmpDir("staging_hour")
+    val processed = tmpDir("processed_hour")
+    stage(EventGen.withDuplicates(EventGen.events(spark, 1500), 0.05), staging)
+    stage(hour17(5000, 400), staging)
+
+    val hourDir = new java.io.File(s"$staging/year=$y/month=$mo/day=$d/hour=16")
+    def jsonFiles(f: java.io.File): Seq[String] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(jsonFiles)
+      else if (f.getName.endsWith(".json")) Seq(f.getCanonicalPath) else Nil
+    val read = BatchPipeline.readStagedHour(spark, staging, y, mo, d, "16")
+    val listed = read.inputFiles.map(u => new java.io.File(new java.net.URI(u))
+      .getCanonicalPath).toSet
+    assert(listed.nonEmpty && listed === jsonFiles(hourDir).toSet)
+    assert(jsonFiles(new java.io.File(staging)).toSet.diff(listed).nonEmpty,
+      "hour 17's files exist but must not be listed")
+    assert(read.columns.toSeq.takeRight(5) ===
+      Seq("year", "month", "day", "hour", "minute"))
+
+    // the same hour selected from the whole tree by partition filters
+    val whole = spark.read.schema(graft.model.EventModel.stagedEventSchema)
+      .json(staging)
+      .where($"year" === y && $"month" === mo && $"day" === d && $"hour" === "16")
+    val expected = EventOps.liftLanguageId(EventOps.dedupFirstWins(
+        whole, Seq("event_uuid"), Seq($"created_at")))
+      .drop("year", "month", "day", "hour", "minute")
+
+    val (dupKeys, written) = BatchPipeline.compactHour(
+      spark, staging, processed, y, mo, d, "16")
+    assert(dupKeys === EventOps.duplicateKeys(whole, "event_uuid").count())
+    assert(dupKeys > 0 && written === 1500L)
+    val back = spark.read.parquet(s"$processed/year=$y/month=$mo/day=$d/hour=16")
+      .select(expected.columns.toSeq.map(col): _*)
+    assert(back.schema === expected.schema)
+    assert(back.exceptAll(expected).isEmpty && expected.exceptAll(back).isEmpty)
+  }
+
+  test("compactHour overwrites only its own partitions under a static " +
+    "session partitionOverwriteMode, and leaves the session value alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val staging = tmpDir("staging_static")
+      val processed = tmpDir("processed_static")
+      stage(EventGen.events(spark, 600), staging)
+      stage(hour17(5000, 300), staging)
+      assert(BatchPipeline.compactHour(
+        spark, staging, processed, y, mo, d, "17")._2 === 300L)
+      // a language partition the next compaction of hour 16 does not write
+      val hour16 = s"$processed/year=$y/month=$mo/day=$d/hour=16"
+      val sibling = new java.io.File(s"$hour16/language_id=zz")
+      Seq("kept").toDF("event_uuid").write.parquet(sibling.toString)
+      val siblingFiles = sibling.list().toSet
+
+      assert(BatchPipeline.compactHour(
+        spark, staging, processed, y, mo, d, "16")._2 === 600L)
+      assert(spark.conf.get(key) === "static")
+      assert(sibling.list().toSet === siblingFiles, "sibling language partition lost")
+      assert(spark.read.parquet(s"$processed/year=$y/month=$mo/day=$d/hour=17")
+        .count() === 300L, "sibling hour lost")
+      assert(new java.io.File(hour16).listFiles().count(_.getName
+        .startsWith("language_id=")) > 1)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("generator fidelity: staged schema matches EventModel; all 30 " +
     "union keys populated; per-subtype field sets match event_config.yml") {
     val staged = StreamingPipeline.decodeRecords(

@@ -110,6 +110,78 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
+  test("an EP1 data micro-batch runs at most 3 Spark jobs, and a " +
+    "re-delivered duplicate batch leaves the pipeline counters unchanged") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val staging = tmpDir("jobs_staging")
+    val processed = tmpDir("jobs_processed")
+    val ckpt = tmpDir("jobs_ckpt")
+    val batch = envelopedStrings(300)
+    // an earlier delivery of the first 40 events already sits in staging,
+    // unseen by this query's dedup state: the hour's compaction finds them
+    // twice
+    graft.pipeline.BatchPipeline.stageEvents(
+      StreamingPipeline.decodeRecords(batch.take(40).toDF("record"))
+        .drop("event_type", "event_subtype", "created_datetime"),
+      staging, ts = $"ts")
+
+    val metrics = new graft.pipeline.Metrics
+    val progress = metrics.streamingListener()
+    val mem = MemoryStream[String]
+    val q = StreamingPipeline.startIngestWithCompaction(
+      mem.toDF().select($"value".as("record")), staging, processed, ckpt,
+      metrics, trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    // Spark jobs per micro-batch of this query, from the batch id Spark
+    // stamps on every job a micro-batch runs
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(p =>
+          p.getProperty("sql.streaming.queryId") == q.id.toString)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.merge(b.toLong, 1, _ + _))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.streams.addListener(progress)
+    try {
+      mem.addData(batch ++ batch.take(30)) // in-batch duplicates
+      q.processAllAvailable()
+      drainListenerBus()
+      // 40 keys staged twice; 300 rows out of the stream + the 300 rows the
+      // hour now holds (the stream's observation sees each row once: no
+      // probe pass over the batch adds to it)
+      assert(metrics.batchDuplicates.get === 40L)
+      assert(metrics.ingestedEvents.get === 600L)
+      assert(q.recentProgress.filter(_.numInputRows > 0).map(
+        _.observedMetrics.get("cw").getAs[Long]("n_rows")).toSeq === Seq(300L))
+
+      mem.addData(batch.take(50)) // re-delivered: the dedup state drops all
+      q.processAllAvailable()
+      drainListenerBus()
+      assert(metrics.batchDuplicates.get === 40L)
+      assert(metrics.ingestedEvents.get === 600L)
+      val hourDir = s"$processed/year=2024/month=03/day=09/hour=16"
+      assert(spark.read.parquet(hourDir).count() === 300L)
+
+      val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+      assert(dataBatches.length === 2)
+      val perBatch = dataBatches.map(b => b -> jobs.getOrDefault(b, 0)).toMap
+      assert(perBatch(dataBatches.head) > 0, s"no jobs seen: $perBatch")
+      assert(perBatch.values.forall(_ <= 3), s"jobs per data micro-batch: $perBatch")
+    } finally {
+      q.stop()
+      spark.streams.removeListener(progress)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** Wait until every event posted so far has reached the listeners. */
+  private def drainListenerBus(): Unit = {
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+      .invoke(spark.sparkContext)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   test("late data beyond the watermark is dropped AND observable via " +
     "numRowsDroppedByWatermark (silent loss is not acceptable at scale)") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
