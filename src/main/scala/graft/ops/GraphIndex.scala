@@ -23,12 +23,10 @@ import org.apache.spark.sql.functions._
   *     in-degree a read-time frontier explosion, so the degree bound is
   *     enforced where edges are written, the Vamana/HNSW `R` discipline.
   *
-  * Generations follow the family idempotence contract (LshIndex.scala):
-  * batch inserts land in `gen=b<id>` via dynamic partition overwrite and
-  * the probe excludes its own generation, so a foreachBatch crash-retry
-  * probes the identical pre-batch graph and converges on storage.
-  * Tombstones are the IvfIndex sibling-log contract (`<path>.tombstones`
-  * + TombstoneLog snapshot discipline); a taken-down node drops out of
+  * Generations, retries, takedowns and folds are the GenTable lifecycle:
+  * a foreachBatch crash-retry probes the identical pre-batch graph and
+  * converges on storage. The tombstone log is a sibling
+  * (`<path>.tombstones`, as IvfIndex's); a taken-down node drops out of
   * entry selection, traversal and results immediately, and out of
   * storage at the next [[compact]]. Traversal-through-deleted (the HNSW
   * soft-delete refinement) is deliberately not done: the oracle replays
@@ -226,10 +224,10 @@ object GraphIndex {
     * prune (beam ∪ neighbors-of-beam, cosine vs the probe, top-`beamW`
     * by cos desc / vertex asc), and returns the final per-probe top-`k`
     * as (probe_id, rn, neighbor_id, cos) — cos unrounded, self excluded.
-    * `excludeGen` hides one generation (the retry contract); tombstoned
-    * nodes are invisible to entry, traversal and results. See the object
-    * scaladoc for the two execution paths (driver-localized beams with
-    * pruned scans vs the distributed fallback). */
+    * `excludeGen` is hidden (GenTable.hide, the retry contract);
+    * tombstoned nodes are invisible to entry, traversal and results. See
+    * the object scaladoc for the two execution paths (driver-localized
+    * beams with pruned scans vs the distributed fallback). */
   def beamSearch(spark: SparkSession, path: String, probes: DataFrame,
       k: Int = 4, beamW: Int = 8, hops: Int = 2,
       excludeGen: Option[String] = None, maxLocal: Int = 1 << 20,
@@ -238,10 +236,8 @@ object GraphIndex {
     def dropT(df: DataFrame, cols: String*): DataFrame =
       tombs.fold(df)(t => cols.foldLeft(df)((d, c) =>
         d.join(t.withColumnRenamed("vec_id", c), Seq(c), "left_anti")))
-    def visible(sub: String): DataFrame = {
-      val df = spark.read.parquet(sub)
-      excludeGen.fold(df)(g => df.where(col("gen") =!= g))
-    }
+    def visible(sub: String): DataFrame =
+      GenTable.hide(spark.read.parquet(sub), excludeGen)
     val nodes = dropT(visible(nodesPath(path)), "vec_id")
       .select(col("vec_id"), col("embedding"))
     val edges = dropT(visible(edgesPath(path)), "src", "dst")
@@ -352,10 +348,9 @@ object GraphIndex {
     * `revCap` per batch instead of unboundedly — the Vamana/HNSW
     * insertion discipline, oracle-replayed by q165/q166. Returns the
     * per-vector ANN log (probe_id, rn, neighbor_id, cos_sim),
-    * materialized BEFORE the append (the family freeze rule). Same
-    * retry contract as the other families: `batchId = Some(b)` probes
-    * exclude `gen=b<b>` and the append replaces exactly that
-    * generation. */
+    * materialized BEFORE the append — serially, because the reverse
+    * edges derive from the probe result (GenTable's `batchId` delivery
+    * contract otherwise). */
   def probeAndAppend(spark: SparkSession, path: String, batch: DataFrame,
       batchId: Option[Long], k: Int = 4, beamW: Int = 8, hops: Int = 2,
       revCap: Int = 4, files: Int = 2, id: String = "vec_id",
@@ -364,21 +359,16 @@ object GraphIndex {
       files, id, vec, log => Caches.localize(log, maxRows = 1 << 22)
         .getOrElse(log.localCheckpoint()))
 
-  /** [[probeAndAppend]] with the ANN log materialized DIRECTLY into a
-    * `batch_id`-partitioned parquet log (dynamic partition overwrite —
-    * a retried batch replaces its own partition), the families' shared
-    * sink form (one job instead of localize + write). */
+  /** [[probeAndAppend]] with the ANN log written DIRECTLY into the
+    * `batch_id`-partitioned log (GenTable.writeBatchLog) — one job
+    * instead of localize + write. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       batch: DataFrame, annDir: String, batchId: Long, k: Int = 4,
       beamW: Int = 8, hops: Int = 2, revCap: Int = 4, files: Int = 2,
       id: String = "vec_id", vec: String = "embedding"): Unit = {
     probeAppendCore(spark, path, batch, Some(batchId), k, beamW, hops,
       revCap, files, id, vec, { log =>
-        log.withColumn("batch_id", lit(batchId))
-          .write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(annDir)
-        spark.emptyDataFrame
+        GenTable.writeBatchLog(log, batchId, annDir); spark.emptyDataFrame
       })
     ()
   }
@@ -388,8 +378,7 @@ object GraphIndex {
       hops: Int, revCap: Int, files: Int, id: String, vec: String,
       materialize: DataFrame => DataFrame): DataFrame =
     IndexLock.withWriter(path) {
-      val gen = batchId.fold("adhoc")(b => s"b$b")
-      val mode = if (batchId.isDefined) "replace-gen" else "append"
+      val (gen, mode) = (GenTable.appendGen(batchId), GenTable.appendMode(batchId))
       val b = batch.select(col(id).as("vec_id"), col(vec).as("embedding"))
         .persist()
       try {
@@ -397,7 +386,7 @@ object GraphIndex {
         // vector, bounded by construction), so fwd/rev below re-derive
         // from a local/persisted frame, not from a re-run search
         val ann = beamSearch(spark, path, b, k, beamW, hops,
-          excludeGen = batchId.map(x => s"b$x"),
+          excludeGen = batchId.map(GenTable.batchGen),
           id = "vec_id", vec = "embedding")
         val result = materialize(
           ann.select(col("probe_id"), col("rn"), col("neighbor_id"),
@@ -430,98 +419,57 @@ object GraphIndex {
     * hot path. */
   def markDeleted(spark: SparkSession, path: String, vecIds: Seq[Long]): Unit =
     IndexLock.withWriter(path) {
-      import spark.implicits._
       require(new org.apache.hadoop.fs.Path(nodesPath(path))
           .getFileSystem(spark.sessionState.newHadoopConf())
           .exists(new org.apache.hadoop.fs.Path(nodesPath(path))),
         s"markDeleted: no graph index at $path")
-      vecIds.toDF("vec_id").coalesce(1)
-        .write.mode("append").parquet(tombsPath(path))
+      TombstoneLog.append(spark, tombsPath(path), "vec_id", vecIds)
     }
 
-  /** Fold the accumulated generations back into one tight `gen=base`:
-    * tombstoned nodes drop physically WITH every edge touching them
-    * (either endpoint), and — in the OFFLINE form (`keepBatch = None`)
-    * — the merged adjacency re-prunes to `maxDeg` per node, absorbing
-    * the reverse-edge growth the per-batch `revCap` admitted. The
-    * in-stream form (`keepBatch = Some(b)`, the lag-1 auto-compaction
-    * policy) folds VERBATIM instead — no re-prune — because a kept
-    * batch's crash-retry must probe the exact pre-compaction adjacency
-    * to converge; the offline re-prune runs at the next quiesced
-    * compaction. Tombstone lifecycle (snapshot / retained-in-kept-gen /
-    * delete-snapshot) and the stage-then-swap commit are the IvfIndex
-    * contract verbatim. */
+  /** Fold the accumulated generations back into one tight `gen=base`
+    * (GenTable.fold): tombstoned nodes drop physically WITH every edge
+    * touching them (either endpoint), and — in the OFFLINE form
+    * (`keepBatch = None`) — the merged adjacency re-prunes to `maxDeg`
+    * per node, absorbing the reverse-edge growth the per-batch `revCap`
+    * admitted. The in-stream form (`keepBatch = Some(b)`) folds VERBATIM
+    * instead — no re-prune — because a kept batch's crash-retry must
+    * probe the exact pre-compaction adjacency to converge; the offline
+    * re-prune runs at the next quiesced compaction. Both tables stage
+    * under one root and commit in ONE `Layout.swapInto` of the index
+    * root, so the root is what a crash leaves in `<path>.old`. */
   def compact(spark: SparkSession, path: String, maxDeg: Int = 8,
       files: Int = 4, keepBatch: Option[Long] = None): Unit =
-    IndexLock.withWriter(path) {
-      val keepGen = keepBatch.map(b => s"b$b")
-      val tombSnap = TombstoneLog.snapshot(spark, tombsPath(path))
-      val tombs = TombstoneLog.read(spark, tombSnap, "vec_id")
-      // VERBATIM in-stream fold with nothing to fold (only `base` and
-      // the kept generation on disk, no tombstones) — a byte-identical
-      // rewrite, skipped (the LshIndex.compact rule). The offline form
-      // never skips: it owes the maxDeg re-prune.
-      // Heal a half-committed prior swap BEFORE the skip — a missing
-      // live dir globs as the empty generation set and the skip would
-      // silently no-op instead of restoring (r16 advice).
-      Layout.healRestore(spark, nodesPath(path))
-      Layout.healRestore(spark, edgesPath(path))
-      if (keepGen.isDefined && tombs.isEmpty &&
-          (GenTable.genNames(spark, nodesPath(path), nested = false) ++
-            GenTable.genNames(spark, edgesPath(path), nested = false))
-            .subsetOf(Set("base") ++ keepGen)) return
+    GenTable.fold(spark, path, keepBatch,
+      tables = Seq(nodesPath(path) -> false, edgesPath(path) -> false),
+      heal = Seq(path),
+      tombs = Some(GenTable.Tombs(tombsPath(path), "vec_id", nodesPath(path)))) { f =>
       val staged = s"$path.compacting"
       Layout.healSwap(spark, staged, path)
-      val nodesRaw = spark.read.parquet(nodesPath(path))
-        .select(col("vec_id"), col("embedding"), col("gen"))
-      val edgesRaw = spark.read.parquet(edgesPath(path))
-        .select(col("src"), col("dst"), col("cos"), col("gen"))
-      val retained: Seq[Long] = (keepGen, tombs) match {
-        case (Some(g), Some(t)) =>
-          nodesRaw.where(col("gen") === g).select(col("vec_id"))
-            .join(broadcast(t), Seq("vec_id"), "left_semi")
-            .distinct().collect().map(_.getLong(0)).toSeq
-        case _ => Seq.empty
-      }
-      val nodesAll = tombs.fold(nodesRaw)(t =>
-        nodesRaw.join(t, Seq("vec_id"), "left_anti"))
-      val edgesAll = tombs.fold(edgesRaw) { t =>
-        edgesRaw
-          .join(t.withColumnRenamed("vec_id", "src"), Seq("src"), "left_anti")
-          .join(t.withColumnRenamed("vec_id", "dst"), Seq("dst"), "left_anti")
-      }
-      val foldNodes = keepGen.fold(nodesAll)(g => nodesAll.where(col("gen") =!= g))
-        .drop("gen")
-      val foldEdgesRaw = keepGen.fold(edgesAll)(g => edgesAll.where(col("gen") =!= g))
-        .drop("gen")
-      val foldEdges =
-        if (keepGen.isDefined) foldEdgesRaw else topPerSrc(foldEdgesRaw, maxDeg)
-      // nodes and edges are independent targets: fold them concurrently
-      // (Par) so the compaction pays one job-floor, not two; with a kept
-      // generation each table additionally lands base + kept in ONE
-      // shuffle + write job (gen derived in-row — the LshIndex.compact
-      // rule) instead of two serial writes
-      def target(g: String): Column =
-        when(col("gen") === g, col("gen")).otherwise("base")
+      val nodesAll = f.dropTombstoned(spark.read.parquet(nodesPath(path))
+        .select(col("vec_id"), col("embedding"), col("gen")))
+      val edgesAll = f.dropTombstoned(spark.read.parquet(edgesPath(path))
+        .select(col("src"), col("dst"), col("cos"), col("gen")), "src", "dst")
+      // nodes and edges are independent targets: fold them concurrently;
+      // with a kept generation each table lands base + kept in ONE
+      // shuffle + write job (gen derived in-row) instead of two
       Par.all(
-        () => keepGen match {
-          case Some(g) =>
+        () => f.keepGen match {
+          case Some(_) =>
             writeGensBy(nodesAll.select(col("vec_id"), col("embedding"),
-                target(g).as("gen")),
+                f.target.as("gen")),
               nodesPath(staged), files, col("vec_id"))
           case None =>
-            writeNodesGen(foldNodes, staged, files, "overwrite", "base")
+            writeNodesGen(nodesAll.drop("gen"), staged, files, "overwrite", "base")
         },
-        () => keepGen match {
-          case Some(g) =>
+        () => f.keepGen match {
+          case Some(_) =>
             writeGensBy(edgesAll.select(col("src"), col("dst"), col("cos"),
-                target(g).as("gen")),
+                f.target.as("gen")),
               edgesPath(staged), files, col("src"))
           case None =>
-            writeEdgesGen(foldEdges, staged, files, "overwrite", "base")
+            writeEdgesGen(topPerSrc(edgesAll.drop("gen"), maxDeg), staged, files,
+              "overwrite", "base")
         })
       Layout.swapInto(spark, staged, path)
-      if (retained.nonEmpty) markDeleted(spark, path, retained)
-      TombstoneLog.deleteSnapshot(spark, tombsPath(path), tombSnap)
     }
 }

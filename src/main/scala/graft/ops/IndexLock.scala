@@ -1,8 +1,10 @@
 package graft.ops
 
-/** Writer fence for the persisted index families (LshIndex, IvfIndex):
-  * every MUTATION of one index — `probeAndAppend` (probe + append must
-  * see one stable pre-batch state), `markDeleted`, `compact` — runs
+/** Writer fence for the six persisted index families (LshIndex,
+  * SimHashIndex, IvfIndex, PqIndex, GraphIndex, InvertedIndex): every
+  * MUTATION of one index — `probeAndAppend` (probe + append must see one
+  * stable pre-batch state), `markDeleted`, and the fold (GenTable.fold,
+  * behind each family's `compact`) — runs
   * under a per-path reentrant lock, so a compaction interleaving with an
   * append can no longer lose the append (the rename-aside commit
   * replaces the table AFTER the compaction's read, silently dropping a
@@ -18,7 +20,7 @@ package graft.ops
   * filesystem lock file cannot distinguish a crashed holder from a slow
   * one and would either deadlock recovery or reintroduce the race on
   * expiry. Locks are keyed by the normalized path string and reentrant
-  * (compact retains tombstones via markDeleted on the same thread).
+  * (a mutation may call another under the same fence on its thread).
   */
 object IndexLock {
   private val locks = new java.util.concurrent.ConcurrentHashMap[

@@ -58,16 +58,13 @@ import org.apache.spark.sql.functions._
   * float sum ≤ 2 addends: IEEE addition is commutative, so the score is
   * bit-stable without ordering tricks.
   *
-  * Generations, retries, takedowns and compaction follow the family
-  * contract verbatim (LshIndex.scala is the authoritative scaladoc):
-  * batch appends land in `gen=b<id>` via dynamic partition overwrite and
-  * the probe excludes its own generation (exactly-once on storage);
-  * [[markDeleted]] tombstones hide docs from emitted MATCHES immediately
-  * — but, deliberately, NOT from df/N/avgdl until [[compact]] folds them
-  * out physically: corpus statistics stay a property of the physical
-  * postings, exactly the public Lucene semantics (deleted docs count
-  * toward docFreq until segment merge), so probes never pay a
-  * corpus-sized stats correction on the hot path.
+  * Generations, retries, takedowns and folds are the GenTable
+  * lifecycle; [[markDeleted]] tombstones hide docs from emitted MATCHES
+  * immediately — but, deliberately, NOT from df/N/avgdl until
+  * [[compact]] folds them out physically: corpus statistics stay a
+  * property of the physical postings, exactly the public Lucene
+  * semantics (deleted docs count toward docFreq until segment merge), so
+  * probes never pay a corpus-sized stats correction on the hot path.
   *
   * Reference anchor: the toy pipeline has no retrieval surface at all
   * (SURVEY §2B gap rows) — semantics follow the public Okapi BM25
@@ -147,9 +144,6 @@ object InvertedIndex {
   private def tombsPath(path: String) = s"$path/tombstones"
   private def metaPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_index_meta")
-
-  private def genOf(batchId: Option[Long]): String =
-    batchId.map(b => s"b$b").getOrElse("adhoc")
 
   private def termPk(cfg: Config): Column =
     pmod(xxhash64(col("term")), lit(cfg.indexPartitions)).cast("int")
@@ -294,7 +288,7 @@ object InvertedIndex {
     * pruned scan; N/avgdl from the generation stats rows. Tombstoned
     * docs never appear in results (they still count toward df/N/avgdl —
     * see the object scaladoc for why that is the Lucene contract).
-    * `excludeGen` hides one generation (the retry contract).
+    * `excludeGen` is hidden (GenTable.hide, the retry contract).
     *
     * `maxPostings = Some(m)` applies IMPACT-ORDERED truncation (the
     * public Anh–Moffat impact-ordering / Lucene max-score family): each
@@ -337,10 +331,9 @@ object InvertedIndex {
             .collect().map(r => Int.box(r.getInt(0))).toSeq
           (qcols, tt, pk, None)
       }
-    def dropOwnGen(df: DataFrame): DataFrame =
-      excludeGen.fold(df)(g => df.where(col("gen") =!= g))
-    val rawPost = dropOwnGen(spark.read.parquet(postingsPath(path))
-      .where(col("pk").isin(touchedPk: _*)))
+    def visible(table: String): DataFrame =
+      GenTable.hide(spark.read.parquet(table), excludeGen)
+    val rawPost = visible(postingsPath(path)).where(col("pk").isin(touchedPk: _*))
     // materialized truncation: on an impact-ordered index the per-term
     // cut is a pushed parquet predicate on the rank column — the scan
     // reads ≤ m rows per (term, generation) and prunes a hot term's
@@ -357,12 +350,11 @@ object InvertedIndex {
     // longer supply it once truncated. Legacy era: count the full scan.
     val df =
       if (layout.impactOrdered)
-        dropOwnGen(spark.read.parquet(termdfPath(path))
-            .where(col("pk").isin(touchedPk: _*)))
+        visible(termdfPath(path)).where(col("pk").isin(touchedPk: _*))
           .join(broadcast(touchedTerms), Seq("term"), "left_semi")
           .groupBy(col("term")).agg(sum(col("df")).as("df"))
       else post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = dropOwnGen(spark.read.parquet(statsPath(path)))
+    val stats = visible(statsPath(path))
       .agg(sum(col("n_docs")).as("n"),
         (sum(col("sum_dl")).cast("double") / sum(col("n_docs"))).as("avgdl"))
     // the exact q130 BM25 spelling — bit-pinned against DuckDB there
@@ -641,10 +633,9 @@ object InvertedIndex {
             .collect().map(r => Int.box(r.getInt(0))).toSeq
           (qterms0, tt, pk)
       }
-    def dropOwnGen(df: DataFrame): DataFrame =
-      excludeGen.fold(df)(g => df.where(col("gen") =!= g))
-    val posScan = dropOwnGen(spark.read.parquet(positionsPath(path))
-        .where(col("pk").isin(touchedPk: _*)))
+    def visible(table: String): DataFrame =
+      GenTable.hide(spark.read.parquet(table), excludeGen)
+    val posScan = visible(positionsPath(path)).where(col("pk").isin(touchedPk: _*))
       .select(col("term"), col("doc_id"), col("pos"), col("dl"))
       .join(broadcast(touchedTerms), Seq("term"), "left_semi")
     // phrase length per query — the alignment-completeness target
@@ -666,7 +657,7 @@ object InvertedIndex {
     // filter (deleted docs count toward statistics until compact)
     val pdf = ptf.groupBy(col("query_id"), col("phrase"))
       .agg(count(lit(1)).as("df"))
-    val stats = dropOwnGen(spark.read.parquet(statsPath(path)))
+    val stats = visible(statsPath(path))
       .agg(sum(col("n_docs")).as("n"),
         (sum(col("sum_dl")).cast("double") / sum(col("n_docs"))).as("avgdl"))
     val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
@@ -688,11 +679,9 @@ object InvertedIndex {
     * discipline that keeps BM25 sums bit-stable — probes the PRE-batch
     * index for its top-`k` matches (contamination / near-dup forensics
     * against the standing corpus), then appends the batch's postings
-    * and stats as generation `b<id>`. Returns the match log
-    * (probe_id, rn, match_id, score_r), materialized BEFORE the append
-    * (the family freeze rule). Retry contract: `batchId = Some(b)`
-    * probes exclude `gen=b<b>` and the append replaces exactly that
-    * generation. */
+    * and stats as its own generation. Returns the match log
+    * (probe_id, rn, match_id, score_r), materialized before the appends
+    * can be observed (GenTable's `batchId` delivery contract). */
   def probeAndAppend(spark: SparkSession, path: String, batch: DataFrame,
       batchId: Option[Long], k: Int = 3, queryTerms: Int = 2,
       cfg: Config = Config(), id: String = "doc_id",
@@ -702,10 +691,9 @@ object InvertedIndex {
       text, maxPostings, log => Caches.localize(log, maxRows = 1 << 20)
         .getOrElse(log.localCheckpoint()))
 
-  /** [[probeAndAppend]] with the match log materialized DIRECTLY into a
-    * `batch_id`-partitioned parquet log (dynamic partition overwrite —
-    * a retried batch replaces its own partition), the families' shared
-    * sink form (one job instead of localize + write). */
+  /** [[probeAndAppend]] with the match log written DIRECTLY into the
+    * `batch_id`-partitioned log (GenTable.writeBatchLog) — one job
+    * instead of localize + write. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       batch: DataFrame, matchesDir: String, batchId: Long, k: Int = 3,
       queryTerms: Int = 2, cfg: Config = Config(), id: String = "doc_id",
@@ -713,11 +701,7 @@ object InvertedIndex {
       maxPostings: Option[Int] = Some(DefaultMaxPostings)): Unit = {
     probeAppendCore(spark, path, batch, Some(batchId), k, queryTerms, cfg,
       id, text, maxPostings, { log =>
-        log.withColumn("batch_id", lit(batchId))
-          .write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(matchesDir)
-        spark.emptyDataFrame
+        GenTable.writeBatchLog(log, batchId, matchesDir); spark.emptyDataFrame
       })
     ()
   }
@@ -747,36 +731,23 @@ object InvertedIndex {
         // max-score phase-A jobs here, serial before the appends — two
         // small prefix-sized jobs, a price worth the retry safety.
         val log = probe(spark, path, q, k,
-          excludeGen = batchId.map(b => genOf(Some(b))), cfg = layout,
+          excludeGen = batchId.map(GenTable.batchGen), cfg = layout,
           maxPostings = maxPostings)
           .select(col("query_id").as("probe_id"), col("rn"),
             col("doc_id").as("match_id"),
             round(col("score"), 4).as("score_r"))
-        val mode = if (batchId.isDefined) "replace-gen" else "append"
-        val gen = genOf(batchId)
-        // independent targets (postings vs termdf vs stats) — append
+        // independent targets (postings vs termdf vs stats) — appended
         // concurrently; the termdf sidecar exists only in the
         // impact-ordered era (appends adopt the index's layout)
-        val appendJobs: Seq[() => Unit] = Seq(
-          () => writePartitioned(post, postingsPath(path), layout, mode, gen),
-          () => writeStats(docStatsOf(batch, id, text), statsPath(path), mode, gen)) ++
-          (if (layout.impactOrdered)
-            Seq(() => writeTermDf(post, termdfPath(path), layout, mode, gen))
-          else Nil) ++
-          pos.map(p => () =>
-            writePositions(p, positionsPath(path), layout, mode, gen)).toSeq
-        var result: DataFrame = spark.emptyDataFrame
-        if (batchId.isDefined)
-          // one concurrent round: the probe's scans (postings, termdf,
-          // stats) all exclude gen=b<id> — the only generation the
-          // appends write — and their listings froze at construction
-          // (the LshIndex.probeAppendCore rule; halves the per-batch
-          // job floor). Ad-hoc appends share gen=adhoc with the probe's
-          // scans → strict materialize-then-append order below.
-          Par.all((Seq(() => { result = materialize(log); () })
-            ++ appendJobs): _*)
-        else { result = materialize(log); Par.all(appendJobs: _*) }
-        result
+        GenTable.probeThenAppend(batchId, () => materialize(log),
+          Seq[Option[(String, String) => Unit]](
+            Some((mode, gen) => writePartitioned(post, postingsPath(path), layout, mode, gen)),
+            Some((mode, gen) =>
+              writeStats(docStatsOf(batch, id, text), statsPath(path), mode, gen)),
+            Option.when(layout.impactOrdered)((mode, gen) =>
+              writeTermDf(post, termdfPath(path), layout, mode, gen)),
+            pos.map(p => (mode, gen) =>
+              writePositions(p, positionsPath(path), layout, mode, gen))).flatten)
       } finally { post.unpersist(); pos.foreach(_.unpersist()); () }
     }
 
@@ -785,149 +756,107 @@ object InvertedIndex {
     * the next [[compact]]. O(deletions) writes, nothing rebuilt. */
   def markDeleted(spark: SparkSession, path: String, docIds: Seq[Long]): Unit =
     IndexLock.withWriter(path) {
-      import spark.implicits._
       adoptMeta(spark, path, Config()) // loud failure on a non-index path
-      docIds.toDF("doc_id").coalesce(1)
-        .write.mode("append").parquet(tombsPath(path))
+      TombstoneLog.append(spark, tombsPath(path), "doc_id", docIds)
     }
 
-  /** Fold the accumulated generations back into one tight `gen=base`:
-    * tombstoned docs drop physically from the postings AND from the
-    * recomputed generation stats (df/N/avgdl snap to the post-takedown
-    * corpus — the Lucene merge semantics). `keepBatch = Some(b)` is the
-    * lag-1 in-stream form: generation `b<b>` is rewritten verbatim
-    * (minus tombstoned docs, retained in the log — the LshIndex rule)
-    * so the kept batch's replace-gen retry still converges. Tombstone
-    * snapshot discipline and the stage-then-swap commit are the family
-    * contract verbatim. */
+  /** Fold the accumulated generations back into one tight `gen=base`
+    * (GenTable.fold): tombstoned docs drop physically from the postings
+    * AND from the recomputed generation stats (df/N/avgdl snap to the
+    * post-takedown corpus — the Lucene merge semantics). Every fold
+    * rewrites into the impact-ordered era, so a PRE-ERA index never
+    * skips: the in-stream fold is also its upgrade. */
   def compact(spark: SparkSession, path: String,
-      keepBatch: Option[Long] = None): Unit = IndexLock.withWriter(path) {
+      keepBatch: Option[Long] = None): Unit = {
     val cfg = adoptMeta(spark, path, Config())
-    val tombSnap = TombstoneLog.snapshot(spark, tombsPath(path))
-    val tombs = TombstoneLog.read(spark, tombSnap, "doc_id")
-    val keepGen = keepBatch.map(b => s"b$b")
-    // Heal a half-committed prior swap BEFORE the skip decides anything:
-    // after a crash between swapInto's renames the live dir is missing
-    // (it lives in `.old`), genNames on the missing path returns the
-    // empty set — a subset of any set — and the skip would silently
-    // no-op instead of restoring the table (r16 advice).
-    Layout.healRestore(spark, postingsPath(path))
-    Layout.healRestore(spark, termdfPath(path))
-    if (cfg.positions) Layout.healRestore(spark, positionsPath(path))
-    Layout.healRestore(spark, statsPath(path))
-    // VERBATIM in-stream fold with nothing to fold — skipped, the
-    // LshIndex.compact rule (the offline form never skips: it owes the
-    // stats recompute and tombstone clear). A PRE-ERA index never skips
-    // either: the in-stream fold is also its upgrade into the
-    // impact-ordered layout.
-    if (keepGen.isDefined && tombs.isEmpty && cfg.impactOrdered &&
-        (GenTable.genNames(spark, postingsPath(path), nested = true) ++
-          GenTable.genNames(spark, termdfPath(path), nested = true) ++
-          (if (cfg.positions)
-            GenTable.genNames(spark, positionsPath(path), nested = true)
-          else Set.empty[String]) ++
-          GenTable.genNames(spark, statsPath(path), nested = false))
-          .subsetOf(Set("base") ++ keepGen)) return
-    val retained: Seq[Long] = (keepGen, tombs) match {
-      case (Some(g), Some(t)) =>
-        spark.read.parquet(postingsPath(path)).where(col("gen") === g)
-          .select(col("doc_id"))
-          .join(t, Seq("doc_id"), "left_semi")
-          .distinct().collect().map(_.getLong(0)).toSeq
-      case _ => Seq.empty
-    }
-    def dropTombstoned(df: DataFrame): DataFrame =
-      tombs.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    // stats recompute below derives each gen's row from its REWRITTEN
-    // postings: one row per doc survives as distinct (doc_id, dl) —
-    // every doc has ≥ 1 token under string_split semantics, so no doc
-    // is lost there
-    // Every compact rewrites into the impact-ordered era (the LSM merge
-    // is where a pre-era index upgrades: irn materialized, termdf
-    // sidecar created, meta stamped) — probes adopt the new layout from
-    // the meta the moment the swaps land.
-    val upgraded = cfg.copy(impactOrdered = true)
-    val postStaged = s"${postingsPath(path)}.compacting"
-    Layout.healSwap(spark, postStaged, postingsPath(path))
-    val all = spark.read.parquet(postingsPath(path))
-    val dataCols = Seq("term", "doc_id", "tf", "dl").map(col)
-    // every surviving row maps to its target generation in-row (kept
-    // batch stays itself, everything else folds to base) and each table
-    // lands base + kept in ONE shuffle + write job via GenTable.writeGens
-    // — the overwrite-then-append spelling paid two serial writes per
-    // table per compaction (the LshIndex.compact rule)
-    def target: Column = keepGen.fold(lit("base"))(g =>
-      when(col("gen") === g, col("gen")).otherwise("base"))
-    // positions fold mirrors the postings fold verbatim (tombstoned docs
-    // drop, keepGen rewritten as its own generation) — the sidecar only
-    // exists on positions-enabled indexes; a positions-less index stays
-    // positions-less (there is nothing to derive them from).
-    val posStaged = s"${positionsPath(path)}.compacting"
-    val positionsFold: () => Unit = () => if (cfg.positions) {
-      Layout.healSwap(spark, posStaged, positionsPath(path))
-      val allPos = spark.read.parquet(positionsPath(path))
-      val posCols = Seq("term", "doc_id", "pos", "dl").map(col)
-      GenTable.writeGens(
-        dropTombstoned(allPos)
-          .select(posCols :+ target.as("__gen"): _*)
-          .withColumn("__part", termPk(upgraded)),
-        posStaged, upgraded.postFiles,
-        col("term"), col("doc_id"), col("pos"))
-    }
-    // the postings fold and the positions fold read and write DISJOINT
-    // tables — one concurrent round instead of two serial rewrites (the
-    // LshIndex.compact bands∥sigs rule; on the in-stream lag-1 cadence
-    // this is the dominant per-firing cost)
-    Par.all(
-      () => {
-        val folded = dropTombstoned(all)
-          .select(dataCols :+ target.as("__gen"): _*)
-        // the impact rank is a per-(term, GENERATION) property — the
-        // multi-gen write ranks within __gen so each generation's prefix
-        // is exactly what its own writePartitioned would have produced
-        val wImp = Window.partitionBy(col("term"), col("__gen"))
-          .orderBy(col("tf").desc, col("doc_id"))
+    val pkTables = Seq(postingsPath(path), termdfPath(path)) ++
+      (if (cfg.positions) Seq(positionsPath(path)) else Nil)
+    GenTable.fold(spark, path, keepBatch,
+      tables = pkTables.map(_ -> true) :+ (statsPath(path) -> false),
+      heal = pkTables :+ statsPath(path),
+      tombs = Some(GenTable.Tombs(tombsPath(path), "doc_id", postingsPath(path))),
+      skippable = cfg.impactOrdered) { f =>
+      // stats recompute below derives each gen's row from its REWRITTEN
+      // postings: one row per doc survives as distinct (doc_id, dl) —
+      // every doc has ≥ 1 token under string_split semantics, so no doc
+      // is lost there
+      // Every compact rewrites into the impact-ordered era (the LSM merge
+      // is where a pre-era index upgrades: irn materialized, termdf
+      // sidecar created, meta stamped) — probes adopt the new layout from
+      // the meta the moment the swaps land.
+      val upgraded = cfg.copy(impactOrdered = true)
+      val postStaged = s"${postingsPath(path)}.compacting"
+      Layout.healSwap(spark, postStaged, postingsPath(path))
+      val all = spark.read.parquet(postingsPath(path))
+      val dataCols = Seq("term", "doc_id", "tf", "dl").map(col)
+      // positions fold mirrors the postings fold verbatim (tombstoned docs
+      // drop, keepGen rewritten as its own generation) — the sidecar only
+      // exists on positions-enabled indexes; a positions-less index stays
+      // positions-less (there is nothing to derive them from).
+      val posStaged = s"${positionsPath(path)}.compacting"
+      val positionsFold: () => Unit = () => if (cfg.positions) {
+        Layout.healSwap(spark, posStaged, positionsPath(path))
+        val allPos = spark.read.parquet(positionsPath(path))
+        val posCols = Seq("term", "doc_id", "pos", "dl").map(col)
         GenTable.writeGens(
-          folded.withColumn("irn", row_number().over(wImp))
+          f.dropTombstoned(allPos)
+            .select(posCols :+ f.target.as("__gen"): _*)
             .withColumn("__part", termPk(upgraded)),
-          postStaged, upgraded.postFiles, col("term"), col("irn"))
-      },
-      positionsFold)
-    // termdf + stats recomputed from the STAGED rewrite (the committed
-    // bytes, not the plan) — independent target tables over the same
-    // read-only staged rows, so the two derivations share one round too
-    // (each now a single multi-gen write); then all tables swap
-    val stagedRows = spark.read.parquet(postStaged)
-    val termdfStaged = s"${termdfPath(path)}.compacting"
-    val statsStaged = s"${statsPath(path)}.compacting"
-    Par.all(
-      () => {
-        Layout.healSwap(spark, termdfStaged, termdfPath(path))
-        GenTable.writeGens(
-          stagedRows.groupBy(col("term"), col("gen").as("__gen"))
-            .agg(count(lit(1)).as("df"))
-            .withColumn("__part", termPk(upgraded)),
-          termdfStaged, upgraded.postFiles, col("term"))
-      },
-      () => {
-        Layout.healSwap(spark, statsStaged, statsPath(path))
-        // one distinct + one grouped agg across all generations — a doc
-        // lives in exactly one, so the per-gen rows equal the serial
-        // statsFromPostings spelling
-        stagedRows.select(col("doc_id"), col("dl"), col("gen")).distinct()
-          .groupBy(col("gen"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-          .select(col("n_docs"), col("sum_dl"), col("gen"))
-          .coalesce(1).write.partitionBy("gen")
-          .mode("overwrite").parquet(statsStaged)
-      })
-    Layout.swapInto(spark, postStaged, postingsPath(path))
-    swapOrPlace(spark, termdfStaged, termdfPath(path))
-    if (cfg.positions) Layout.swapInto(spark, posStaged, positionsPath(path))
-    Layout.swapInto(spark, statsStaged, statsPath(path))
-    writeMeta(spark, path, upgraded)
-    if (retained.nonEmpty) markDeleted(spark, path, retained)
-    TombstoneLog.deleteSnapshot(spark, tombsPath(path), tombSnap)
+          posStaged, upgraded.postFiles,
+          col("term"), col("doc_id"), col("pos"))
+      }
+      // the postings fold and the positions fold read and write DISJOINT
+      // tables — one concurrent round instead of two serial rewrites; each
+      // lands base + kept in ONE shuffle + write job (GenTable.writeGens)
+      Par.all(
+        () => {
+          val folded = f.dropTombstoned(all)
+            .select(dataCols :+ f.target.as("__gen"): _*)
+          // the impact rank is a per-(term, GENERATION) property — the
+          // multi-gen write ranks within __gen so each generation's prefix
+          // is exactly what its own writePartitioned would have produced
+          val wImp = Window.partitionBy(col("term"), col("__gen"))
+            .orderBy(col("tf").desc, col("doc_id"))
+          GenTable.writeGens(
+            folded.withColumn("irn", row_number().over(wImp))
+              .withColumn("__part", termPk(upgraded)),
+            postStaged, upgraded.postFiles, col("term"), col("irn"))
+        },
+        positionsFold)
+      // termdf + stats recomputed from the STAGED rewrite (the committed
+      // bytes, not the plan) — independent target tables over the same
+      // read-only staged rows, so the two derivations share one round too
+      // (each a single multi-gen write); then all tables swap
+      val stagedRows = spark.read.parquet(postStaged)
+      val termdfStaged = s"${termdfPath(path)}.compacting"
+      val statsStaged = s"${statsPath(path)}.compacting"
+      Par.all(
+        () => {
+          Layout.healSwap(spark, termdfStaged, termdfPath(path))
+          GenTable.writeGens(
+            stagedRows.groupBy(col("term"), col("gen").as("__gen"))
+              .agg(count(lit(1)).as("df"))
+              .withColumn("__part", termPk(upgraded)),
+            termdfStaged, upgraded.postFiles, col("term"))
+        },
+        () => {
+          Layout.healSwap(spark, statsStaged, statsPath(path))
+          // one distinct + one grouped agg across all generations — a doc
+          // lives in exactly one, so the per-gen rows equal the serial
+          // statsFromPostings spelling
+          stagedRows.select(col("doc_id"), col("dl"), col("gen")).distinct()
+            .groupBy(col("gen"))
+            .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+            .select(col("n_docs"), col("sum_dl"), col("gen"))
+            .coalesce(1).write.partitionBy("gen")
+            .mode("overwrite").parquet(statsStaged)
+        })
+      Layout.swapInto(spark, postStaged, postingsPath(path))
+      swapOrPlace(spark, termdfStaged, termdfPath(path))
+      if (cfg.positions) Layout.swapInto(spark, posStaged, positionsPath(path))
+      Layout.swapInto(spark, statsStaged, statsPath(path))
+      writeMeta(spark, path, upgraded)
+    }
   }
 
   /** [[Layout.swapInto]] when `target` exists; a plain rename otherwise —

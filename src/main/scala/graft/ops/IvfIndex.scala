@@ -125,14 +125,11 @@ object IvfIndex {
 
   // ------------------------------------------------------ ingest corpus
 
-  /** One generation of the persisted IVF corpus: `gen` is a hive
-    * partition level (the LshIndex idempotence contract — see
-    * LshIndex.scala:48-55), rows cell-clustered WITHIN the generation so
+  /** One generation of the persisted IVF corpus (`gen` is a hive
+    * partition level, the GenTable lifecycle; "replace-gen" is dynamic
+    * partition overwrite), rows cell-clustered WITHIN the generation so
     * per-file min/max on `cell` keeps a probe's scan proportional to its
-    * touched cells across every generation. "replace-gen" uses dynamic
-    * partition overwrite: the write replaces exactly its own `gen=b<id>`
-    * partition, so a foreachBatch retry converges instead of
-    * double-appending. */
+    * touched cells across every generation. */
   private def writeGen(assigned: DataFrame, path: String, files: Int,
       mode: String, gen: String): Unit = {
     val w = assigned.withColumn("gen", lit(gen))
@@ -169,17 +166,9 @@ object IvfIndex {
     * Scale shape: the probed-cell short-list collects as ≤ K ints; the
     * corpus scan filters `cell IN (touched)` — pushed to parquet, pruned
     * at file level by the clustered layout — and the batch broadcasts
-    * onto it (the corpus never shuffles). With `batchId = Some(b)` the
-    * probe EXCLUDES generation `b<b>` and the append replaces exactly
-    * that generation (dynamic partition overwrite), so a crash-retry
-    * probes the identical pre-batch corpus and converges on storage —
-    * the exactly-once contract `StreamingPipeline.startVectorIngest`
-    * relies on. `None` = ad-hoc at-least-once append into `gen=adhoc`.
-    * Convergence caveat (same as LshIndex.probeAndAppend): tombstones
-    * are applied at probe time, so a takedown landing between a batch's
-    * first delivery and its crash-retry makes the retry emit the
-    * post-takedown neighbor lists — last-writer-wins between two
-    * admissible states; quiesce takedowns for bit-stable replay. */
+    * onto it (the corpus never shuffles). `batchId` is the GenTable
+    * delivery contract (`Some(b)`: exactly-once on storage, what
+    * `StreamingPipeline.startVectorIngest` relies on). */
   def probeAndAppend(spark: SparkSession, path: String, batch: DataFrame,
       cents: Seq[Seq[Float]], batchId: Option[Long], k: Int = 3,
       nprobe: Int = 2, files: Int = 2, id: String = "vec_id",
@@ -188,38 +177,31 @@ object IvfIndex {
       id, vec, ann => Caches.localize(ann, maxRows = 1 << 22)
         .getOrElse(ann.localCheckpoint()))
 
-  /** [[probeAndAppend]] with the ANN rows materialized DIRECTLY into a
-    * `batch_id`-partitioned log parquet (dynamic partition overwrite —
-    * a retried batch replaces its own log partition) instead of a
-    * driver localize + second write job — LshIndex.probeAndAppendToLog's
-    * contract for the vector family (r15 streaming-floor cut). */
+  /** [[probeAndAppend]] with the ANN rows written DIRECTLY into the
+    * `batch_id`-partitioned log (GenTable.writeBatchLog) — one job per
+    * micro-batch instead of localize + write. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       batch: DataFrame, annDir: String, cents: Seq[Seq[Float]],
       batchId: Long, k: Int = 3, nprobe: Int = 2, files: Int = 2,
       id: String = "vec_id", vec: String = "embedding"): Unit = {
     probeAppendCore(spark, path, batch, cents, Some(batchId), k, nprobe,
       files, id, vec, { ann =>
-        ann.withColumn("batch_id", lit(batchId))
-          .write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(annDir)
-        spark.emptyDataFrame
+        GenTable.writeBatchLog(ann, batchId, annDir); spark.emptyDataFrame
       })
     ()
   }
 
   /** Shared probe/append body: `materialize` runs the one action that
-    * freezes the ANN result BEFORE the append (LshIndex's rule). */
+    * freezes the ANN result, ordered by GenTable.probeThenAppend. */
   private def probeAppendCore(spark: SparkSession, path: String,
       batch: DataFrame, cents: Seq[Seq[Float]], batchId: Option[Long],
       k: Int, nprobe: Int, files: Int, id: String, vec: String,
       materialize: DataFrame => DataFrame): DataFrame = IndexLock.withWriter(path) {
     import org.apache.spark.sql.expressions.Window
-    val gen = batchId.fold("adhoc")(b => s"b$b")
     // One evaluation of the batch plan + ONE K-centroid cosine pass per
     // vector, shared by the touched-cell collect, the probe broadcast
-    // and the append (the LshIndex.probeAndAppend persist rule — without
-    // it each consumer re-runs the upstream batch plan).
+    // and the append — without the persist each consumer re-runs the
+    // upstream batch plan.
     val assigned = batch
       .select(col(id).as("vec_id"), col(vec).as("embedding"))
       .withColumn("cell", cellOf(spark, col("embedding"), cents))
@@ -232,8 +214,7 @@ object IvfIndex {
       val probes = assigned.select(col("vec_id").as("probe_id"),
         col("embedding").as("probe"), col("pcells"))
       val corpus = dropTombstoned(spark, path,
-        spark.read.parquet(path)
-          .where(batchId.fold(lit(true))(b => col("gen") =!= s"b$b"))
+        GenTable.hide(spark.read.parquet(path), batchId.map(GenTable.batchGen))
           .where(col("cell").isin(touched: _*)))
       val cand = corpus.crossJoin(broadcast(probes))
         .where(array_contains(col("pcells"), col("cell")) &&
@@ -246,19 +227,10 @@ object IvfIndex {
         .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
           round(col("cos"), 4).as("cos_sim"))
       // k rows per batch vector — bounded by construction
-      val appendJob: () => Unit = () =>
-        writeGen(assigned.select(col("vec_id"), col("embedding"), col("cell")),
-          path, files, if (batchId.isDefined) "replace-gen" else "append", gen)
-      var result: DataFrame = spark.emptyDataFrame
-      if (batchId.isDefined)
-        // one concurrent round: the ANN plan's listing froze at
-        // construction and its scan excludes gen=b<id> — the only
-        // partition the append writes (the LshIndex.probeAppendCore
-        // rule; halves the per-batch job floor). Ad-hoc appends share
-        // gen=adhoc with the probe's scan → strict order below.
-        Par.all(() => { result = materialize(ann); () }, appendJob)
-      else { result = materialize(ann); appendJob() }
-      result
+      GenTable.probeThenAppend(batchId, () => materialize(ann), Seq(
+        (mode, gen) => writeGen(
+          assigned.select(col("vec_id"), col("embedding"), col("cell")),
+          path, files, mode, gen)))
     } finally assigned.unpersist()
   }
 
@@ -276,89 +248,45 @@ object IvfIndex {
     tombstones(spark, path).fold(df)(t =>
       df.join(t, Seq("vec_id"), "left_anti"))
 
-  /** Tombstone `vecIds` — the LshIndex.markDeleted contract for the
-    * vector corpus: the vectors stay physically present until the next
-    * [[compactCorpus]], but no subsequent probe returns them as
+  /** Tombstone `vecIds`: the vectors stay physically present until the
+    * next [[compactCorpus]], but no subsequent probe returns them as
     * neighbors. O(deletions) writes, no rebuild, nothing on the ingest
     * hot path. */
   def markDeleted(spark: SparkSession, path: String, vecIds: Seq[Long]): Unit =
     IndexLock.withWriter(path) {
-      import spark.implicits._
       require(new org.apache.hadoop.fs.Path(path)
           .getFileSystem(spark.sessionState.newHadoopConf())
           .exists(new org.apache.hadoop.fs.Path(path)),
         s"markDeleted: no corpus at $path")
-      vecIds.toDF("vec_id").coalesce(1)
-        .write.mode("append").parquet(tombsPath(path))
+      TombstoneLog.append(spark, tombsPath(path), "vec_id", vecIds)
     }
 
   /** Fold the corpus's accumulated generations back into one tight
     * `gen=base` layout (`files` globally cell-clustered files) — the
-    * LshIndex.compact contract for the vector corpus: run off the ingest
-    * path at whatever cadence keeps per-cell file counts bounded.
-    * Tombstoned vectors ([[markDeleted]]) are dropped physically and the
-    * tombstone log cleared.
-    *
-    * `keepBatch = Some(b)` is the IN-STREAM form (lag-1 policy):
-    * generation `b<b>` is rewritten verbatim instead of folded, so the
-    * in-flight batch's replace-gen retry contract survives — the retry
-    * still replaces exactly its own partitions and its probe (which
-    * excludes `b<b>`) sees the folded base = the same pre-compaction
-    * rows. Same stage-then-swap commit as Layout.compact.
-    *
-    * Tombstone lifecycle and single-writer discipline are the
-    * LshIndex.compact contract (see TombstoneLog): the snapshot of the
-    * log's files taken at start is what gets applied and deleted — a
-    * concurrent markDeleted survives for the next probe/compaction —
-    * and tombstones naming vectors in the KEPT generation are retained,
-    * so a kept-batch crash-retry (which re-derives its rows from raw
-    * batch data) cannot resurrect a taken-down vector. */
+    * GenTable.fold lifecycle, with `Layout.swapInto` as the commit. Run
+    * it at whatever cadence keeps per-cell file counts bounded. */
   def compactCorpus(spark: SparkSession, path: String, files: Int = 4,
-      keepBatch: Option[Long] = None): Unit = IndexLock.withWriter(path) {
-    val keepGen = keepBatch.map(b => s"b$b")
-    val tombSnap = TombstoneLog.snapshot(spark, tombsPath(path))
-    val tombs = TombstoneLog.read(spark, tombSnap, "vec_id")
-    // Heal a half-committed prior swap BEFORE the skip — a missing
-    // live dir globs as the empty generation set and the skip would
-    // silently no-op instead of restoring (r16 advice).
-    Layout.healRestore(spark, path)
-    // VERBATIM in-stream fold with nothing to fold — skipped, the
-    // LshIndex.compact rule (the offline form never skips)
-    if (keepGen.isDefined && tombs.isEmpty &&
-        GenTable.genNames(spark, path, nested = false)
-          .subsetOf(Set("base") ++ keepGen)) return
-    val staged = s"$path.compacting"
-    Layout.healSwap(spark, staged, path)
-    val raw = spark.read.parquet(path)
-      .select(col("vec_id"), col("embedding"), col("cell"), col("gen"))
-    // Tombstoned ids present in the kept generation, collected before
-    // the rewrite drops them (bounded by min(|takedowns|, |batch|)).
-    val retained: Seq[Long] = (keepGen, tombs) match {
-      case (Some(g), Some(t)) =>
-        raw.where(col("gen") === g).select(col("vec_id"))
-          .join(t, Seq("vec_id"), "left_semi")
-          .distinct().collect().map(_.getLong(0)).toSeq
-      case _ => Seq.empty
+      keepBatch: Option[Long] = None): Unit =
+    GenTable.fold(spark, path, keepBatch, tables = Seq(path -> false),
+      heal = Seq(path),
+      tombs = Some(GenTable.Tombs(tombsPath(path), "vec_id", path))) { f =>
+      val staged = s"$path.compacting"
+      Layout.healSwap(spark, staged, path)
+      val all = f.dropTombstoned(spark.read.parquet(path)
+        .select(col("vec_id"), col("embedding"), col("cell"), col("gen")))
+      f.keepGen match {
+        case Some(_) =>
+          // one pass, one write: the target generation derives in-row,
+          // base + kept land in a single shuffle + write job; the (gen,
+          // cell) task sort keeps every output file cell-sorted within
+          // its generation, so min/max cell pruning is unchanged
+          all.select(col("vec_id"), col("embedding"), col("cell"), f.target.as("gen"))
+            .repartitionByRange(files, col("cell"))
+            .sortWithinPartitions(col("gen"), col("cell"))
+            .write.partitionBy("gen").mode("overwrite").parquet(staged)
+        case None =>
+          writeGen(all.drop("gen"), staged, files, "overwrite", "base")
+      }
+      Layout.swapInto(spark, staged, path)
     }
-    val all = tombs.fold(raw)(t =>
-      raw.join(t, Seq("vec_id"), "left_anti"))
-    keepGen match {
-      case Some(g) =>
-        // one pass, one write (the LshIndex.compact rule): the target
-        // generation derives in-row, base + kept land in a single
-        // shuffle + write job instead of two serial table writes; the
-        // (gen, cell) task sort keeps every output file cell-sorted
-        // within its generation, so min/max cell pruning is unchanged
-        all.select(col("vec_id"), col("embedding"), col("cell"),
-            when(col("gen") === g, col("gen")).otherwise("base").as("gen"))
-          .repartitionByRange(files, col("cell"))
-          .sortWithinPartitions(col("gen"), col("cell"))
-          .write.partitionBy("gen").mode("overwrite").parquet(staged)
-      case None =>
-        writeGen(all.drop("gen"), staged, files, "overwrite", "base")
-    }
-    Layout.swapInto(spark, staged, path)
-    if (retained.nonEmpty) markDeleted(spark, path, retained)
-    TombstoneLog.deleteSnapshot(spark, tombsPath(path), tombSnap)
-  }
 }

@@ -44,8 +44,8 @@ object Layout {
       .sortWithinPartitions(cols: _*)
       .write.mode(mode).parquet(path)
 
-  /** The shared compaction commit, used by [[compact]],
-    * LshIndex.compact and IvfIndex.compactCorpus: rename-ASIDE, not
+  /** The shared compaction commit, used by [[compact]] and by every
+    * index family's fold body (GenTable.fold): rename-ASIDE, not
     * delete-first — `target` → `target.old`, `staged` → `target`, then
     * drop `.old`. At no point is the data deleted before its
     * replacement is in place, so every crash point leaves a recoverable

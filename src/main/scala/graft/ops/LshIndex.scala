@@ -44,25 +44,12 @@ import org.apache.spark.sql.functions._
   * New-vs-new pairs inside the batch are found in the same pass as
   * new-vs-old — the batch's own band rows ride the combined table.
   *
-  * Incremental writes: `probeAndAppend` writes the batch's bands/sigs
-  * into the index after probing. Both tables carry a SECOND hive
-  * partition level, `gen` (generation): the build writes `gen=base`, and
-  * a batch append with a caller-supplied `batchId` writes `gen=b<id>`
-  * via DYNAMIC partition overwrite — a foreachBatch retry of the same
-  * batch REPLACES its own generation instead of duplicating rows, which
-  * is what makes the streaming ingest exactly-once on storage
-  * (StreamingPipeline.startNearDupIngest). A batchId-probe also EXCLUDES
-  * its own generation from the index scans (partition-pruned on `gen`),
-  * so a retried batch probes the identical pre-batch state — including
-  * hot-bucket-cap counts — and emits the identical pairs. Appends land
-  * in the same pk hash-bucket directories either way, so file-level
-  * pruning keeps working as the index grows.
-  *
-  * Deletions: [[markDeleted]] writes doc tombstones next to the tables;
-  * probes anti-join them out of the emitted pairs, and [[compact]] —
-  * which also folds accumulated generations back into one tight
-  * `gen=base` layout — physically drops tombstoned rows and clears the
-  * tombstone log.
+  * Generations, retries, takedowns and folds are the GenTable
+  * lifecycle: `probeAndAppend` appends the batch's bands/sigs as its own
+  * generation (the hidden one, so a retry probes the identical pre-batch
+  * state — hot-bucket-cap counts included), [[markDeleted]] tombstones
+  * docs, [[compact]] folds. Appends land in the same pk hash-bucket
+  * directories, so file-level pruning keeps working as the index grows.
   */
 object LshIndex {
 
@@ -98,10 +85,6 @@ object LshIndex {
   private def sigsPath(path: String) = s"$path/sigs"
   private def tombsPath(path: String) = s"$path/tombstones"
   private def metaPath(path: String) = new HPath(path, "_index_meta")
-
-  /** Generation partition value for a batch append. */
-  private def genOf(batchId: Option[Long]): String =
-    batchId.map(b => s"b$b").getOrElse("adhoc")
 
   /** The partition modulus and file counts are a LAYOUT contract between
     * build and probe: a probe under a different modulus derives the wrong
@@ -153,28 +136,22 @@ object LshIndex {
     TextOps.lshBands(sig, id, cfg.k, cfg.r)
       .select(col("band"), col("key"), col(id).as("doc_id"))
 
-  /** Hive-partitioned clustered write: hash-shuffle on the partition
-    * bucket alone (a range shuffle would pay an extra sampling pass over
-    * the input per write — measurable per ingest batch), then sort each
-    * task on (bucket, cluster key). A task holds every row of its
-    * buckets, so the writer emits ONE file per bucket directory per
-    * write, fully sorted on the cluster key — row groups within a file
-    * are disjoint, and file counts grow by ≤ #buckets per append. Bucket
-    * size is governed by `indexPartitions` ([[sizedConfig]] keeps a
-    * directory at a few GB), so the one-task-per-bucket write is the
-    * scale-correct shape; `files` caps the shuffle parallelism.
-    *
-    * `gen` is the second partition level. Write modes:
-    *  - "overwrite" (build/compact): static overwrite, wipes the table;
-    *  - "append": accumulates into `gen` (the non-idempotent ad-hoc path);
-    *  - "replace-gen": DYNAMIC partition overwrite — replaces exactly the
-    *    (pk, gen) partitions present in `df`, i.e. this write's own
-    *    generation, leaving every other generation untouched. Re-running
-    *    the same batch lands on the same partitions: idempotent.
-    * Implementation shared with SimHashIndex via [[GenTable]]. */
-  private def writePartitioned(df: DataFrame, path: String, files: Int,
-      mode: String, gen: String, cluster: Column*): Unit =
-    GenTable.writePartitioned(df, path, files, mode, gen, cluster: _*)
+  /** The bands table write (GenTable's bucketed layout, clustered on the
+    * bucket key). Bucket size is governed by `indexPartitions`
+    * ([[sizedConfig]] keeps a directory at a few GB), so the
+    * one-task-per-bucket write is the scale-correct shape. */
+  private def writeBands(bands: DataFrame, path: String, cfg: Config,
+      mode: String, gen: String): Unit =
+    GenTable.writePartitioned(bands.withColumn("__part", bandPk(cfg)),
+      bandsPath(path), cfg.bandFiles, mode, gen, col("band"), col("key"))
+
+  /** The sigs table write, bucketed and clustered on doc_id. */
+  private def writeSigs(sig: DataFrame, path: String, cfg: Config, id: String,
+      mode: String, gen: String): Unit =
+    GenTable.writePartitioned(
+      sig.select(col(id).as("doc_id"), col("sh"))
+        .withColumn("__part", sigPs(cfg, col("doc_id"))),
+      sigsPath(path), cfg.sigFiles, mode, gen, col("doc_id"))
 
   /** Build the index at `path` from a base corpus (full recompute — run
     * once; subsequent batches go through [[probeAndAppend]]). */
@@ -188,13 +165,8 @@ object LshIndex {
     * frame — shared by [[build]] and [[buildSized]]. */
   private def buildFromSig(sig: DataFrame, path: String, cfg: Config,
       id: String): Unit = {
-    writePartitioned(
-      bandsOf(sig, cfg, id).withColumn("__part", bandPk(cfg)),
-      bandsPath(path), cfg.bandFiles, "overwrite", "base", col("band"), col("key"))
-    writePartitioned(
-      sig.select(col(id).as("doc_id"), col("sh"))
-        .withColumn("__part", sigPs(cfg, col("doc_id"))),
-      sigsPath(path), cfg.sigFiles, "overwrite", "base", col("doc_id"))
+    writeBands(bandsOf(sig, cfg, id), path, cfg, "overwrite", "base")
+    writeSigs(sig, path, cfg, id, "overwrite", "base")
     writeMeta(sig.sparkSession, path, cfg)
   }
 
@@ -234,16 +206,10 @@ object LshIndex {
     * Returns the probe plans plus the batch band rows (for the append). */
   private def probePairs(spark: SparkSession, path: String, sig: DataFrame,
       rawCfg: Config, id: String, extraCaches: Seq[DataFrame],
-      excludeGen: Option[String] = None): (Probe, DataFrame, Config) = {
+      hiddenGen: Option[String] = None): (Probe, DataFrame, Config) = {
     val cfg = adoptMeta(spark, path, rawCfg)
     val caches = scala.collection.mutable.Buffer[DataFrame](extraCaches: _*)
     val newBandsPlan = bandsOf(sig, cfg, id)
-    // A retried batch must probe the identical PRE-batch state even though
-    // its own earlier append is already on disk — excluding its generation
-    // (a partition filter, file-pruned like pk) restores it exactly,
-    // hot-bucket counts included.
-    def dropOwnGen(df: DataFrame): DataFrame =
-      excludeGen.fold(df)(g => df.where(col("gen") =!= g))
     // Only buckets the batch touches can yield new pairs. The batch's
     // distinct pk values (≤ indexPartitions ints — bounded regardless of
     // batch size) become a partition predicate, so the bands scan LISTS
@@ -280,8 +246,8 @@ object LshIndex {
             .collect().map(r => Int.box(r.getInt(0))).toSeq
           (newBandsPlan, tk, pk)
       }
-    val indexBands = dropOwnGen(spark.read.parquet(bandsPath(path))
-        .where(col("pk").isin(touchedPk: _*)))
+    val indexBands = GenTable.hide(spark.read.parquet(bandsPath(path))
+        .where(col("pk").isin(touchedPk: _*)), hiddenGen)
       .select(col("band"), col("key"), col("doc_id"))
       .join(broadcast(touchedKeys), Seq("band", "key"), "left_semi")
     val combined = indexBands.withColumn("is_new", lit(false))
@@ -323,8 +289,8 @@ object LshIndex {
     // values (again ≤ indexPartitions ints) prune the sigs scan to the
     // touched directories — at 100 TB sigs are corpus-sized, so this is
     // the pruning that matters most.
-    val indexSets = dropOwnGen(spark.read.parquet(sigsPath(path))
-        .where(col("pk").isin(candPs: _*)))
+    val indexSets = GenTable.hide(spark.read.parquet(sigsPath(path))
+        .where(col("pk").isin(candPs: _*)), hiddenGen)
       .select(col("doc_id"), col("sh"))
     val sets = indexSets
       .unionByName(sig.select(col(id).as("doc_id"), col("sh")))
@@ -374,24 +340,9 @@ object LshIndex {
     * from the batch; doc_a < doc_b), then appends the batch's bands and
     * shingle sets to the index so the next batch sees them.
     *
-    * `batchId` selects the delivery contract:
-    *  - `Some(id)`: EXACTLY-ONCE on storage — the append replaces
-    *    generation `b<id>` (dynamic partition overwrite) and the probe
-    *    excludes that generation, so re-running the same batch (a
-    *    foreachBatch retry after a crash between append and checkpoint
-    *    commit) returns the identical pairs and leaves index row counts
-    *    unchanged. Streaming callers MUST pass their micro-batch id.
-    *  - `None`: ad-hoc at-least-once append into `gen=adhoc` — fine for
-    *    one-shot jobs that never retry a completed write.
-    *
-    * Convergence caveat: tombstones are applied at probe time, not
-    * snapshotted per generation, so a [[markDeleted]] landing BETWEEN a
-    * batch's first delivery and its crash-retry makes the retry emit the
-    * post-takedown pair set (the dynamic overwrite replaces the log
-    * partition with it). That is last-writer-wins between two admissible
-    * states — the retry reflecting a newer takedown is correct policy
-    * enforcement, not row duplication — but callers needing bit-stable
-    * replay must quiesce takedowns while batches are in flight.
+    * `batchId` selects the GenTable delivery contract: `Some(id)` is
+    * exactly-once on storage (streaming callers MUST pass their
+    * micro-batch id), `None` an ad-hoc at-least-once append.
     *
     * The returned pair list is localized (it is orders of magnitude
     * smaller than the batch) so no cache outlives the call; an over-cap
@@ -405,34 +356,27 @@ object LshIndex {
       pairs => Caches.localize(pairs, maxRows = 1 << 20)
         .getOrElse(pairs.localCheckpoint()))
 
-  /** [[probeAndAppend]] with the verified pairs materialized DIRECTLY
-    * into a `batch_id`-hive-partitioned pair-log parquet (dynamic
-    * partition overwrite — the exactly-once log contract: a retried
-    * batch REPLACES its own log partition) instead of a driver-side
-    * localize followed by a second write job. The log write IS the
-    * pre-append materialization, so the probe still observes the
-    * pre-batch index and the append still lands after the pairs are on
-    * storage — one job where the streaming ingest previously paid two
-    * per micro-batch (the r15 streaming-floor cut; the per-batch cost
-    * is a stack of tiny fixed-overhead jobs). */
+  /** [[probeAndAppend]] with the verified pairs written DIRECTLY into
+    * the `batch_id`-partitioned pair log (GenTable.writeBatchLog) instead
+    * of a driver-side localize followed by a second write job: the log
+    * write IS the pre-append materialization — one job where the
+    * streaming ingest paid two per micro-batch. This is the body
+    * StreamingPipeline.startNearDupIngest runs per micro-batch. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       newDocs: DataFrame, pairsDir: String, cfg: Config = Config(),
       id: String = "doc_id", text: String = "text",
       batchId: Long = 0L): Unit = {
     probeAppendCore(spark, path, newDocs, cfg, id, text, Some(batchId),
       { pairs =>
-        pairs.withColumn("batch_id", lit(batchId))
-          .write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(pairsDir)
-        spark.emptyDataFrame
+        GenTable.writeBatchLog(pairs, batchId, pairsDir); spark.emptyDataFrame
       }, needOrdered = false)
     ()
   }
 
   /** Shared probe/append body: `materialize` runs the one action that
-    * freezes the verified pairs BEFORE the index appends (localize for
-    * the returning API, a direct log write for the streaming form). */
+    * freezes the verified pairs (localize for the returning API, a direct
+    * log write for the streaming form), ordered against the index
+    * appends by GenTable.probeThenAppend. */
   private def probeAppendCore(spark: SparkSession, path: String,
       newDocs: DataFrame, cfg: Config, id: String, text: String,
       batchId: Option[Long],
@@ -443,47 +387,16 @@ object LshIndex {
     var probeCaches: Seq[DataFrame] = Seq(sig)
     try {
       val (probe, newBands, layout) = probePairs(spark, path, sig, cfg, id,
-        extraCaches = Seq(sig), excludeGen = batchId.map(b => genOf(Some(b))))
+        extraCaches = Seq(sig), hiddenGen = batchId.map(GenTable.batchGen))
       probeCaches = probe.caches
       val pairsOut = if (needOrdered) probe.pairs else probe.pairsUnordered
-      val mode = if (batchId.isDefined) "replace-gen" else "append"
-      val gen = genOf(batchId)
       // independent targets (bands vs sigs), shared input persisted
-      // (sig) or driver-local (newBands) — append concurrently
-      val appendJobs: Seq[() => Unit] = Seq(
-        () => writePartitioned(newBands.withColumn("__part", bandPk(layout)),
-          bandsPath(path), layout.bandFiles, mode, gen, col("band"), col("key")),
-        () => writePartitioned(
-          sig.select(col(id).as("doc_id"), col("sh"))
-            .withColumn("__part", sigPs(layout, col("doc_id"))),
-          sigsPath(path), layout.sigFiles, mode, gen, col("doc_id")))
-      var result: DataFrame = spark.emptyDataFrame
-      if (batchId.isDefined) {
-        // The probe materialization COMMUTES with the generation appends
-        // when the batch owns a generation: the probe plan's file
-        // listing froze at construction and its partition filter
-        // excludes gen=b<id> — the only directories the appends touch —
-        // so "the probe sees the pre-batch index" holds with all three
-        // actions in ONE concurrent round (one job-floor per micro-batch
-        // instead of two, the last streaming-floor cut). Retries
-        // converge in either order: every sink is dynamic partition
-        // overwrite keyed on the same batch id.
-        Par.all((Seq(() => { result = materialize(pairsOut); () })
-          ++ appendJobs): _*)
-      } else {
-        // ad-hoc appends land in the shared `adhoc` generation the probe
-        // does NOT exclude — keep the strict materialize-then-append
-        // order there
-        result = materialize(pairsOut)
-        Par.all(appendJobs: _*)
-      }
-      result
+      // (sig) or driver-local (newBands) — appended concurrently
+      GenTable.probeThenAppend(batchId, () => materialize(pairsOut), Seq(
+        (mode, gen) => writeBands(newBands, path, layout, mode, gen),
+        (mode, gen) => writeSigs(sig, path, layout, id, mode, gen)))
     } finally probeCaches.foreach(_.unpersist())
   }
-
-  /** Writer serialization for probeAndAppend/markDeleted/compact is the
-    * IndexLock contract — see its scaladoc for scope and the
-    * multi-driver upgrade path. */
 
   /** Tombstone `docIds`: the docs stay physically in the index until the
     * next [[compact]], but no subsequent probe emits a pair naming them.
@@ -491,118 +404,47 @@ object LshIndex {
     * O(deletions) writes, no index rebuild, no rewrite on the hot path. */
   def markDeleted(spark: SparkSession, path: String, docIds: Seq[Long]): Unit =
     IndexLock.withWriter(path) {
-      import spark.implicits._
       adoptMeta(spark, path, Config()) // loud failure on a non-index path
-      docIds.toDF("doc_id").coalesce(1)
-        .write.mode("append").parquet(tombsPath(path))
+      TombstoneLog.append(spark, tombsPath(path), "doc_id", docIds)
     }
 
-  /** Rewrite the index back to single-generation tightness: fold every
-    * generation's rows (minus tombstoned docs) into a fresh `gen=base`
-    * layout with the same persisted pk modulus, then clear the tombstone
-    * log. File counts return to one file per pk directory — the shape a
-    * fresh [[build]] produces — so probes stop paying one extra file per
-    * past ingest batch. Run it off the ingest path at whatever cadence
-    * keeps per-directory file counts bounded (e.g. every N batches).
-    *
-    * Commits per table via Layout.swapInto after a Layout.healSwap
-    * (rename-aside: the data is never deleted before its replacement is
-    * in place), so a crash at any point is recovered by re-running
-    * compact; a production deployment commits via a manifest instead.
-    *
-    * `keepBatch = Some(b)` is the IN-STREAM form (the lag-1 policy the
-    * auto-compacting ingest uses): generation `b<b>` is REWRITTEN
-    * verbatim instead of folded, so batch `b`'s replace-gen retry
-    * contract survives the compaction — a retry still replaces exactly
-    * its own partitions, and its probe (which excludes `b<b>`) sees the
-    * folded base = the same rows it saw pre-compaction. Folding the
-    * in-flight generation instead would double its rows on retry.
-    *
-    * Tombstone lifecycle (see TombstoneLog): the compaction applies the
-    * log's file listing as SNAPSHOTTED at start and deletes only those
-    * files at the end (a markDeleted landing mid-compaction survives for
-    * the next probe/compaction to apply); and any tombstoned id that
-    * occurs in the KEPT generation is retained in the log, because a
-    * kept-batch crash-retry re-derives its rows from raw batch data and
-    * would otherwise resurrect the taken-down doc against an emptied
-    * log. Retained entries clear at the next keepBatch-free compaction.
-    *
-    * Concurrency: all writers of one index (probeAndAppend, markDeleted,
-    * compact) serialize under ops/IndexLock's per-path fence — a racing
-    * append can no longer be silently dropped by the rename-aside commit
-    * (IndexConcurrencySpec races the two from live threads). The fence
-    * is driver-JVM-scoped (see IndexLock's scaladoc for why, and for the
-    * multi-driver manifest upgrade path); Layout.swapInto's rename
-    * window additionally exposes out-of-band READERS of a mid-compaction
-    * index to transient path-not-found — see its scaladoc. */
+  /** Fold the index back to single-generation tightness (GenTable.fold:
+    * tombstoned docs drop, `keepBatch` is the in-stream lag-1 form): one
+    * fresh `gen=base` layout under the same persisted pk modulus, one
+    * file per pk directory — the shape a fresh [[build]] produces — so
+    * probes stop paying one extra file per past ingest batch. Run it at
+    * whatever cadence keeps per-directory file counts bounded (e.g. the
+    * ingest's `compactEvery`). Each table commits via Layout.swapInto
+    * (rename-aside: a crash at any point is recovered by re-running
+    * compact); out-of-band READERS of a mid-fold index may see a
+    * transient path-not-found — see swapInto's scaladoc. */
   def compact(spark: SparkSession, path: String,
-      keepBatch: Option[Long] = None): Unit = IndexLock.withWriter(path) {
+      keepBatch: Option[Long] = None): Unit = {
     val cfg = adoptMeta(spark, path, Config())
-    val tombSnap = TombstoneLog.snapshot(spark, tombsPath(path))
-    val tombs = TombstoneLog.read(spark, tombSnap, "doc_id")
-    val keepGen = keepBatch.map(b => s"b$b")
-    // The in-stream (keepBatch) fold is VERBATIM: when nothing but
-    // `base` and the kept generation exists and no tombstone is pending,
-    // the rewrite would reproduce the index byte-for-byte — skip it (a
-    // short `compactEvery` cadence otherwise pays two full table
-    // rewrites per firing for zero effect; one FS glob decides). The
-    // offline form never skips: it must clear tombstones and re-tighten
-    // file counts even when the generation set looks folded.
-    // Heal a half-committed prior swap BEFORE the skip: a crashed
-    // swapInto leaves the live dir in `.old`, genNames on the missing
-    // path is the empty set (subset of anything), and the skip would
-    // silently no-op instead of restoring (r16 advice).
-    Layout.healRestore(spark, bandsPath(path))
-    Layout.healRestore(spark, sigsPath(path))
-    if (keepGen.isDefined && tombs.isEmpty &&
-        (GenTable.genNames(spark, bandsPath(path), nested = true) ++
-          GenTable.genNames(spark, sigsPath(path), nested = true))
-          .subsetOf(Set("base") ++ keepGen)) return
-    // Tombstoned ids present in the kept generation — bounded by
-    // min(|takedowns|, |batch|), collected BEFORE the rewrites below
-    // physically drop them.
-    val retained: Seq[Long] = (keepGen, tombs) match {
-      case (Some(g), Some(t)) =>
-        spark.read.parquet(sigsPath(path)).where(col("gen") === g)
-          .select(col("doc_id"))
-          .join(t, Seq("doc_id"), "left_semi")
-          .distinct().collect().map(_.getLong(0)).toSeq
-      case _ => Seq.empty
+    GenTable.fold(spark, path, keepBatch,
+      tables = Seq(bandsPath(path) -> true, sigsPath(path) -> true),
+      heal = Seq(bandsPath(path), sigsPath(path)),
+      tombs = Some(GenTable.Tombs(tombsPath(path), "doc_id", sigsPath(path)))) { f =>
+      // ONE pass, one write per table: every surviving row maps to its
+      // target generation in-row and GenTable.writeGens lands base + kept
+      // in a single shuffle + write job; __part is recomputed rather than
+      // trusting the read-back pk (identical by construction, but the
+      // hash is the layout's source of truth)
+      def rewrite(tablePath: String, files: Int, dataCols: Seq[String],
+          part: Column, cluster: Column*): Unit = {
+        val staged = s"$tablePath.compacting"
+        Layout.healSwap(spark, staged, tablePath)
+        val out = f.dropTombstoned(spark.read.parquet(tablePath))
+          .select(dataCols.map(col) :+ f.target.as("__gen"): _*)
+        GenTable.writeGens(out.withColumn("__part", part), staged, files, cluster: _*)
+        Layout.swapInto(spark, staged, tablePath)
+      }
+      // independent targets: their fold jobs run concurrently
+      Par.all(
+        () => rewrite(bandsPath(path), cfg.bandFiles,
+          Seq("band", "key", "doc_id"), bandPk(cfg), col("band"), col("key")),
+        () => rewrite(sigsPath(path), cfg.sigFiles, Seq("doc_id", "sh"),
+          sigPs(cfg, col("doc_id")), col("doc_id")))
     }
-    def dropTombstoned(df: DataFrame): DataFrame =
-      tombs.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    def rewrite(tablePath: String, files: Int, dataCols: Seq[String],
-        cluster: Column*): Unit = {
-      val staged = s"$tablePath.compacting"
-      Layout.healSwap(spark, staged, tablePath)
-      val all = spark.read.parquet(tablePath)
-      // recompute __part rather than trusting the read-back pk: identical
-      // by construction, but the hash is the layout's source of truth
-      def keyed(rows: DataFrame): DataFrame =
-        if (dataCols.contains("band")) rows.withColumn("__part", bandPk(cfg))
-        else rows.withColumn("__part", sigPs(cfg, col("doc_id")))
-      // ONE pass, one write: every surviving row maps to its target
-      // generation in-row (kept batch stays itself, everything else
-      // folds to base) and GenTable.writeGens lands both partitions in
-      // a single shuffle + write job — the overwrite-then-append
-      // spelling paid two serial table writes per compaction.
-      val target = keepGen.fold(lit("base"))(g =>
-        when(col("gen") === g, col("gen")).otherwise("base"))
-      val out = dropTombstoned(all)
-        .select(dataCols.map(col) :+ target.as("__gen"): _*)
-      GenTable.writeGens(keyed(out), staged, files, cluster: _*)
-      Layout.swapInto(spark, staged, tablePath)
-    }
-    // the two tables are independent targets: their fold jobs run
-    // concurrently (Par) so the compaction pays one job-floor, not two
-    Par.all(
-      () => rewrite(bandsPath(path), cfg.bandFiles,
-        Seq("band", "key", "doc_id"), col("band"), col("key")),
-      () => rewrite(sigsPath(path), cfg.sigFiles, Seq("doc_id", "sh"), col("doc_id")))
-    // Retain kept-generation tombstones FIRST (append — not in the
-    // snapshot, so the delete below can't touch them), then clear
-    // exactly the files this compaction applied.
-    if (retained.nonEmpty) markDeleted(spark, path, retained)
-    TombstoneLog.deleteSnapshot(spark, tombsPath(path), tombSnap)
   }
 }

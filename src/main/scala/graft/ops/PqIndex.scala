@@ -13,14 +13,11 @@ import graft.functions.VectorOps
   * Neighbor Search", TPAMI 2011), and a probe scores candidates
   * ASYMMETRICALLY: true probe vector vs the candidate's reconstruction.
   *
-  * Same storage contract as [[IvfIndex]]'s corpus (one scaladoc, two
-  * families): generation-partitioned parquet (`gen=base` + `gen=b<id>`),
-  * ingest appends land via dynamic partition overwrite so a
-  * foreachBatch retry REPLACES its own generation and converges, and a
-  * probe with `batchId = Some(b)` excludes generation `b<b>` so a retry
-  * probes the identical pre-batch table. Codebooks are FROZEN plan-time
-  * literals (FAISS add-after-train): encoding is a pure map-side pass —
-  * zero shuffle, no codebook table anywhere in the plan.
+  * Same storage contract as [[IvfIndex]]'s corpus: generation-partitioned
+  * parquet under the GenTable lifecycle (exactly-once batch appends,
+  * own-generation hiding, lag-1 folds; no takedown log). Codebooks are
+  * FROZEN plan-time literals (FAISS add-after-train): encoding is a pure
+  * map-side pass — zero shuffle, no codebook table anywhere in the plan.
   *
   * The probe here is FLAT ADC (every stored code scored — the
   * RAM-resident regime where the linear scan of 4-byte codes is the
@@ -151,9 +148,7 @@ object PqIndex {
     * floats — only the 4 code ints ride the scan, reconstruction is a
     * literal when-chain, the batch broadcasts onto it; the only
     * corpus-sized movement is the top-k window on (probe, adc). The
-    * `batchId` delivery contract is [[IvfIndex.probeAndAppend]]'s
-    * verbatim (replace-gen + own-generation exclusion = exactly-once on
-    * storage). */
+    * `batchId` delivery contract is GenTable's. */
   /** `prune = Some((cellCents, nprobe))` turns the flat ADC scan into
     * the IVFPQ probe: the table must have been built/appended with the
     * same `cellCents` (cells ride next to the codes), each probe scores
@@ -178,11 +173,9 @@ object PqIndex {
       prune, ann => Caches.localize(ann, maxRows = 1 << 22)
         .getOrElse(ann.localCheckpoint()))
 
-  /** [[probeAndAppend]] with the ANN rows materialized DIRECTLY into a
-    * `batch_id`-partitioned log parquet (dynamic partition overwrite —
-    * a retried batch replaces its own log partition) instead of a
-    * driver localize + second write job — LshIndex.probeAndAppendToLog's
-    * contract for the PQ family (r15 streaming-floor cut). */
+  /** [[probeAndAppend]] with the ANN rows written DIRECTLY into the
+    * `batch_id`-partitioned log (GenTable.writeBatchLog) — one job per
+    * micro-batch instead of localize + write. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       batch: DataFrame, annDir: String, base: Seq[Seq[Float]],
       batchId: Long, k: Int = 3, files: Int = 2, id: String = "vec_id",
@@ -190,24 +183,19 @@ object PqIndex {
       prune: Option[(Seq[Seq[Float]], Int)] = None): Unit = {
     probeAppendCore(spark, path, batch, base, Some(batchId), k, files, id,
       vec, prune, { ann =>
-        ann.withColumn("batch_id", lit(batchId))
-          .write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(annDir)
-        spark.emptyDataFrame
+        GenTable.writeBatchLog(ann, batchId, annDir); spark.emptyDataFrame
       })
     ()
   }
 
   /** Shared probe/append body: `materialize` runs the one action that
-    * freezes the ANN result BEFORE the append (LshIndex's rule). */
+    * freezes the ANN result, ordered by GenTable.probeThenAppend. */
   private def probeAppendCore(spark: SparkSession, path: String,
       batch: DataFrame, base: Seq[Seq[Float]], batchId: Option[Long],
       k: Int, files: Int, id: String, vec: String,
       prune: Option[(Seq[Seq[Float]], Int)],
       materialize: DataFrame => DataFrame): DataFrame = IndexLock.withWriter(path) {
     import org.apache.spark.sql.expressions.Window
-    val gen = batchId.fold("adhoc")(b => s"b$b")
     // one evaluation of the batch plan + one K-centroid pass per
     // subspace, shared by the probe broadcast and the append
     val coded = batch
@@ -223,8 +211,8 @@ object PqIndex {
         prune.map { case (cents, np) =>
           IvfIndex.topCellsOf(spark, col("embedding"), cents, np).as("pcells")
         }.toSeq: _*)
-      val corpusRaw = spark.read.parquet(path)
-        .where(batchId.fold(lit(true))(b => col("gen") =!= s"b$b"))
+      val corpusRaw = GenTable.hide(spark.read.parquet(path),
+        batchId.map(GenTable.batchGen))
       prune.foreach { _ =>
         require(corpusRaw.columns.contains("cell"),
           s"$path: pruned probe needs a cell column — build the code " +
@@ -274,17 +262,9 @@ object PqIndex {
       // UNCLUSTERED append (LSM write path): the per-batch delta skips
       // the range-shuffle + sort — compact() restores the clustered
       // layout for the accumulated generations (see writeGen).
-      val appendJob: () => Unit = () =>
-        writeGen(coded.drop("embedding"), path, files,
-          if (batchId.isDefined) "replace-gen" else "append", gen,
-          cluster = false)
-      var result: DataFrame = spark.emptyDataFrame
-      if (batchId.isDefined)
-        // one concurrent round — the ANN plan excludes gen=b<id>, the
-        // only partition the append writes (LshIndex.probeAppendCore
-        // rule); ad-hoc appends keep the strict order.
-        Par.all(() => { result = materialize(ann); () }, appendJob)
-      else { result = materialize(ann); appendJob() }
+      val result = GenTable.probeThenAppend(batchId, () => materialize(ann), Seq(
+        (mode, gen) => writeGen(coded.drop("embedding"), path, files, mode, gen,
+          cluster = false)))
       // this append carries cells whenever pruning is configured — mark
       // the post-append listing valid so the next batch skips the scan
       prune.foreach(_ => cellValidated.put(path, genListing(spark, path)))
@@ -293,42 +273,28 @@ object PqIndex {
   }
 
   /** Fold accumulated generations back into one tight `gen=base` table
-    * — [[IvfIndex.compactCorpus]]'s contract for the code table,
-    * including the `keepBatch` lag-1 in-stream form (the kept
-    * generation is rewritten verbatim so the in-flight batch's
-    * replace-gen retry still replaces exactly its own partitions).
-    * Takedown/tombstones compose via the same TombstoneLog pattern as
-    * the other families when the corpus needs it; the code table itself
-    * carries no text/floats, so a rewrite moves 4 ints per vector. */
+    * — the GenTable.fold lifecycle with no tombstone log (the code table
+    * takes no takedowns), including the `keepBatch` lag-1 in-stream form.
+    * The code table carries no text/floats, so a rewrite moves 4 ints per
+    * vector. */
   def compact(spark: SparkSession, path: String, files: Int = 4,
-      keepBatch: Option[Long] = None): Unit = IndexLock.withWriter(path) {
-    val keepGen = keepBatch.map(b => s"b$b")
-    // In-stream fold with no delta generation besides the kept batch:
-    // base is already clustered (build and every prior fold wrote it
-    // clustered), so the rewrite would be byte-identical — skipped, the
-    // LshIndex.compact rule (the offline form never skips)
-    // Heal a half-committed prior swap BEFORE the skip — a missing
-    // live dir globs as the empty generation set and the skip would
-    // silently no-op instead of restoring (r16 advice).
-    Layout.healRestore(spark, path)
-    if (keepGen.isDefined &&
-        GenTable.genNames(spark, path, nested = false)
-          .subsetOf(Set("base") ++ keepGen)) return
-    val staged = s"$path.compacting"
-    Layout.healSwap(spark, staged, path)
-    val all = spark.read.parquet(path)
-    val dataCols = all.columns.filter(_ != "gen").map(col)
-    // the compaction is WHERE clustering happens (the LSM pattern):
-    // folded base gets the tight cell-clustered layout probes prune on;
-    // the kept in-flight generation is rewritten verbatim-unclustered
-    // (it is one batch — the flat tail probes scan whole anyway)
-    writeGen(keepGen.fold(all)(g => all.where(col("gen") =!= g))
-      .select(dataCols: _*), staged, files, "overwrite", "base",
-      cluster = true)
-    keepGen.foreach { g =>
-      writeGen(all.where(col("gen") === g).select(dataCols: _*),
-        staged, files, "append", g, cluster = false)
+      keepBatch: Option[Long] = None): Unit =
+    GenTable.fold(spark, path, keepBatch, tables = Seq(path -> false),
+      heal = Seq(path), tombs = None) { f =>
+      val staged = s"$path.compacting"
+      Layout.healSwap(spark, staged, path)
+      val all = spark.read.parquet(path)
+      val dataCols = all.columns.filter(_ != "gen").map(col)
+      // the compaction is WHERE clustering happens (the LSM pattern):
+      // folded base gets the tight cell-clustered layout probes prune on;
+      // the kept in-flight generation is rewritten verbatim-unclustered
+      // (it is one batch — the flat tail probes scan whole anyway)
+      writeGen(GenTable.hide(all, f.keepGen).select(dataCols: _*), staged,
+        files, "overwrite", "base", cluster = true)
+      f.keepGen.foreach { g =>
+        writeGen(all.where(col("gen") === g).select(dataCols: _*),
+          staged, files, "append", g, cluster = false)
+      }
+      Layout.swapInto(spark, staged, path)
     }
-    Layout.swapInto(spark, staged, path)
-  }
 }

@@ -20,10 +20,9 @@ import org.apache.spark.sql.functions._
   * the joined rows. Storage is a single `<path>/bands` table
   * (band, key, doc_id, sh), hive-partitioned on
   * `pk = hash(band, key) mod indexPartitions` + `gen`, written through
-  * the same [[GenTable]] layout/commit machinery as LshIndex — so the
-  * probe's file-level pruning, the replace-gen exactly-once batch
-  * contract, the lag-1 `keepBatch` compaction, and the [[IndexLock]]
-  * writer fence all carry over unchanged.
+  * the same [[GenTable]] layout and lifecycle as LshIndex — so the
+  * probe's file-level pruning, the exactly-once batch contract, the
+  * lag-1 fold and the writer fence all carry over unchanged.
   *
   * Banding is q107's: `bands` disjoint `bandBits`-bit slices of the
   * 63-bit fingerprint — the pigeonhole guarantee (any pair within
@@ -40,8 +39,8 @@ object SimHashIndex {
       bands: Int = 4, bandBits: Int = 16, maxHamming: Int = 3,
       maxBucket: Option[Int] = Some(TextOps.DefaultMaxBucket),
       bandFiles: Int = 8,
-      /** Layout contract — persisted by build, adopted by probes (the
-        * LshIndex.Config rule; see there for the 100 TB sizing note). */
+      /** Layout contract — persisted by build, adopted by probes (see
+        * LshIndex.Config for the 100 TB sizing note). */
       indexPartitions: Int = 32) {
     require(maxHamming <= bands - 1,
       s"maxHamming=$maxHamming needs > ${bands - 1} bands to stay " +
@@ -58,10 +57,14 @@ object SimHashIndex {
       "bandFiles" -> cfg.bandFiles,
       "bands" -> cfg.bands, "bandBits" -> cfg.bandBits))
 
+  /** cfg with the persisted on-disk layout folded in; a meta file
+    * without the pk modulus fails loudly, as in LshIndex. */
   private def adoptMeta(spark: SparkSession, path: String, cfg: Config): Config = {
     val kv = GenTable.readMeta(spark, metaPath(path))
     cfg.copy(
-      indexPartitions = kv.getOrElse("indexPartitions", cfg.indexPartitions),
+      indexPartitions = kv.getOrElse("indexPartitions",
+        throw new IllegalStateException(
+          s"${metaPath(path)} has no indexPartitions entry — rebuild with SimHashIndex.build")),
       bandFiles = kv.getOrElse("bandFiles", cfg.bandFiles),
       bands = kv.getOrElse("bands", cfg.bands),
       bandBits = kv.getOrElse("bandBits", cfg.bandBits))
@@ -102,22 +105,23 @@ object SimHashIndex {
         col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
+  private def writeBands(bands: DataFrame, path: String, cfg: Config,
+      mode: String, gen: String): Unit =
+    GenTable.writePartitioned(bands.withColumn("__part", bandPk(cfg)),
+      bandsPath(path), cfg.bandFiles, mode, gen, col("band"), col("key"))
+
   /** Build the index at `path` from a base corpus. */
   def build(docs: DataFrame, path: String, cfg: Config = Config(),
       id: String = "doc_id", text: String = "text",
       hashCol: Option[String] = None): Unit = {
-    GenTable.writePartitioned(
-      bandRows(docs, cfg, id, text, hashCol).withColumn("__part", bandPk(cfg)),
-      bandsPath(path), cfg.bandFiles, "overwrite", "base",
-      col("band"), col("key"))
+    writeBands(bandRows(docs, cfg, id, text, hashCol), path, cfg, "overwrite", "base")
     writeMeta(docs.sparkSession, path, cfg)
   }
 
   /** Probe with an ingest batch and append it — LshIndex.probeAndAppend's
-    * contract verbatim (batchId = Some(b): exactly-once on storage,
-    * probe excludes its own generation; None: ad-hoc at-least-once), but
-    * with the in-row Hamming verify instead of a sigs fetch. Returns the
-    * verified new pairs (doc_a, doc_b, hamming), localized. */
+    * contract (the GenTable `batchId` delivery rule) with the in-row
+    * Hamming verify instead of a sigs fetch. Returns the verified new
+    * pairs (doc_a, doc_b, hamming), localized. */
   def probeAndAppend(spark: SparkSession, path: String, newDocs: DataFrame,
       cfg: Config = Config(), id: String = "doc_id", text: String = "text",
       batchId: Option[Long] = None,
@@ -126,29 +130,23 @@ object SimHashIndex {
       pairs => Caches.localize(pairs, maxRows = 1 << 20)
         .getOrElse(pairs.localCheckpoint()))
 
-  /** [[probeAndAppend]] with the verified pairs materialized DIRECTLY
-    * into a `batch_id`-partitioned pair-log parquet (dynamic partition
-    * overwrite — a retried batch replaces its own log partition)
-    * instead of a driver localize + second write job — the
-    * LshIndex.probeAndAppendToLog contract for the Hamming family (r15
-    * streaming-floor cut: one job per micro-batch instead of two). */
+  /** [[probeAndAppend]] with the verified pairs written DIRECTLY into
+    * the `batch_id`-partitioned pair log (GenTable.writeBatchLog) — the
+    * LshIndex.probeAndAppendToLog form, one job per micro-batch instead
+    * of two. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       newDocs: DataFrame, pairsDir: String, cfg: Config = Config(),
       id: String = "doc_id", text: String = "text", batchId: Long = 0L,
       hashCol: Option[String] = None): Unit = {
     probeAppendCore(spark, path, newDocs, cfg, id, text, Some(batchId),
       hashCol, { pairs =>
-        pairs.withColumn("batch_id", lit(batchId))
-          .write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(pairsDir)
-        spark.emptyDataFrame
+        GenTable.writeBatchLog(pairs, batchId, pairsDir); spark.emptyDataFrame
       }, needOrdered = false)
     ()
   }
 
   /** Shared probe/append body (`materialize` = the one action freezing
-    * the pairs before the append — LshIndex.probeAppendCore's rule). */
+    * the pairs, ordered by GenTable.probeThenAppend). */
   private def probeAppendCore(spark: SparkSession, path: String,
       newDocs: DataFrame, cfg: Config, id: String, text: String,
       batchId: Option[Long], hashCol: Option[String],
@@ -186,9 +184,8 @@ object SimHashIndex {
           (nb, tk, pk, Some(nb))
       }
     try {
-      val gen = batchId.map(b => s"b$b")
-      val indexBands = gen.fold(spark.read.parquet(bandsPath(path)))(g =>
-          spark.read.parquet(bandsPath(path)).where(col("gen") =!= g))
+      val indexBands = GenTable.hide(spark.read.parquet(bandsPath(path)),
+          batchId.map(GenTable.batchGen))
         .where(col("pk").isin(touchedPk: _*))
         .select(col("doc_id"), col("sh"), col("band"), col("key"))
         .join(broadcast(touchedKeys), Seq("band", "key"), "left_semi")
@@ -203,17 +200,16 @@ object SimHashIndex {
         col("doc_id").as("doc_a"), col("sh").as("ha"), col("is_new").as("na"))
       val b = pruned.select(col("band"), col("key"),
         col("doc_id").as("doc_b"), col("sh").as("hb"), col("is_new").as("nb"))
-      // tombstoned docs are dead on arrival (LshIndex's probe rule):
-      // their band rows survive until compact, but no pair names them
-      val tombs = TombstoneLog.read(spark,
-        TombstoneLog.snapshot(spark, tombsPath(path)), "doc_id")
+      // tombstoned docs are dead on arrival: their band rows survive
+      // until compact, but no pair names them
+      val tombs = TombstoneLog.readDir(spark, tombsPath(path), "doc_id")
       def dropTombstoned(df: DataFrame): DataFrame = tombs.fold(df) { t =>
         df.join(t, df("doc_a") === t("doc_id"), "left_anti")
           .join(t, df("doc_b") === t("doc_id"), "left_anti")
       }
       // unordered here; the global sort — a sampling job + range exchange
-      // per probe — applies only on the returning API below (the LshIndex
-      // probePairs rule; the streaming log sink's consumers sort on read)
+      // per probe — applies only on the returning API below (the
+      // streaming log sink's consumers sort on read)
       val pairsUnordered = dropTombstoned(a.join(b, Seq("band", "key"))
         .where(col("doc_a") < col("doc_b") && (col("na") || col("nb")))
         .select(col("doc_a"), col("doc_b"), col("ha"), col("hb")).distinct()
@@ -224,83 +220,39 @@ object SimHashIndex {
       val pairs = if (needOrdered)
         pairsUnordered.orderBy(col("doc_a"), col("doc_b"))
       else pairsUnordered
-      val appendJob: () => Unit = () => GenTable.writePartitioned(
-        newBands.withColumn("__part", bandPk(layout)),
-        bandsPath(path), layout.bandFiles,
-        if (batchId.isDefined) "replace-gen" else "append",
-        gen.getOrElse("adhoc"), col("band"), col("key"))
-      var result: DataFrame = spark.emptyDataFrame
-      if (batchId.isDefined)
-        // materialize and append in ONE concurrent round — the pairs
-        // plan's listing froze at construction and its partition filter
-        // excludes gen=b<id>, the only directories the append touches
-        // (the LshIndex.probeAppendCore rule; halves the per-batch job
-        // floor). Ad-hoc appends share gen=adhoc with the probe's scan,
-        // so they keep the strict order below.
-        Par.all(() => { result = materialize(pairs); () }, appendJob)
-      else { result = materialize(pairs); appendJob() }
-      result
+      GenTable.probeThenAppend(batchId, () => materialize(pairs), Seq(
+        (mode, gen) => writeBands(newBands, path, layout, mode, gen)))
     } finally cache.foreach(_.unpersist())
   }
 
-  /** Tombstone `docIds` — LshIndex.markDeleted's contract for this
-    * family: rows stay physically present until [[compact]], but no
-    * probe emits a pair naming them. O(deletions) writes. */
+  /** Tombstone `docIds`: rows stay physically present until [[compact]],
+    * but no probe emits a pair naming them. O(deletions) writes. */
   def markDeleted(spark: SparkSession, path: String, docIds: Seq[Long]): Unit =
     IndexLock.withWriter(path) {
-      import spark.implicits._
       adoptMeta(spark, path, Config()) // loud failure on a non-index path
-      docIds.toDF("doc_id").coalesce(1)
-        .write.mode("append").parquet(tombsPath(path))
+      TombstoneLog.append(spark, tombsPath(path), "doc_id", docIds)
     }
 
-  /** Fold accumulated generations back to one tight `gen=base` layout —
-    * LshIndex.compact's contract verbatim: same stage-then-swap commit,
-    * same lag-1 `keepBatch` rule for in-stream use, and the same
-    * TombstoneLog lifecycle (apply + delete exactly the start-of-run
-    * snapshot; RETAIN tombstones naming kept-generation docs so a
-    * kept-batch crash-retry cannot resurrect a takedown). */
+  /** Fold accumulated generations back to one tight `gen=base` layout
+    * (GenTable.fold; one stage-then-swap table). */
   def compact(spark: SparkSession, path: String,
-      keepBatch: Option[Long] = None): Unit = IndexLock.withWriter(path) {
+      keepBatch: Option[Long] = None): Unit = {
     val cfg = adoptMeta(spark, path, Config())
-    val keepGen = keepBatch.map(b => s"b$b")
     val tablePath = bandsPath(path)
-    val tombSnap = TombstoneLog.snapshot(spark, tombsPath(path))
-    val tombs = TombstoneLog.read(spark, tombSnap, "doc_id")
-    // Heal a half-committed prior swap BEFORE the skip — a missing
-    // live dir globs as the empty generation set and the skip would
-    // silently no-op instead of restoring (r16 advice).
-    Layout.healRestore(spark, tablePath)
-    // VERBATIM in-stream fold with nothing to fold — skipped, the
-    // LshIndex.compact rule (the offline form never skips)
-    if (keepGen.isDefined && tombs.isEmpty &&
-        GenTable.genNames(spark, tablePath, nested = true)
-          .subsetOf(Set("base") ++ keepGen)) return
-    val all = spark.read.parquet(tablePath)
-    val retained: Seq[Long] = (keepGen, tombs) match {
-      case (Some(g), Some(t)) =>
-        all.where(col("gen") === g).select(col("doc_id"))
-          .join(broadcast(t), Seq("doc_id"), "left_semi")
-          .distinct().collect().map(_.getLong(0)).toSeq
-      case _ => Seq.empty
+    GenTable.fold(spark, path, keepBatch, tables = Seq(tablePath -> true),
+      heal = Seq(tablePath),
+      tombs = Some(GenTable.Tombs(tombsPath(path), "doc_id", tablePath))) { f =>
+      val staged = s"$tablePath.compacting"
+      Layout.healSwap(spark, staged, tablePath)
+      // one pass, one write: the target generation derives in-row,
+      // GenTable.writeGens lands base + kept in a single job
+      GenTable.writeGens(
+        f.dropTombstoned(spark.read.parquet(tablePath))
+          .select(col("doc_id"), col("sh"), col("band"), col("key"),
+            f.target.as("__gen"))
+          .withColumn("__part", bandPk(cfg)),
+        staged, cfg.bandFiles, col("band"), col("key"))
+      Layout.swapInto(spark, staged, tablePath)
     }
-    def dropTombstoned(df: DataFrame): DataFrame =
-      tombs.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    val staged = s"$tablePath.compacting"
-    Layout.healSwap(spark, staged, tablePath)
-    // one pass, one write (the LshIndex.compact rule): the target
-    // generation derives in-row, GenTable.writeGens lands base + kept
-    // in a single shuffle + write job
-    val target = keepGen.fold(lit("base"))(g =>
-      when(col("gen") === g, col("gen")).otherwise("base"))
-    GenTable.writeGens(
-      dropTombstoned(all)
-        .select(col("doc_id"), col("sh"), col("band"), col("key"),
-          target.as("__gen"))
-        .withColumn("__part", bandPk(cfg)),
-      staged, cfg.bandFiles, col("band"), col("key"))
-    Layout.swapInto(spark, staged, tablePath)
-    if (retained.nonEmpty) markDeleted(spark, path, retained)
-    TombstoneLog.deleteSnapshot(spark, tombsPath(path), tombSnap)
   }
 }

@@ -3,8 +3,10 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** File-listing discipline for the index tombstone logs (LshIndex,
-  * IvfIndex). Two compaction races motivate it:
+/** File-listing discipline for the index tombstone logs of the five
+  * families that take takedowns (LshIndex, SimHashIndex, IvfIndex,
+  * GraphIndex, InvertedIndex; PqIndex keeps none). GenTable.fold is the
+  * one compactor that applies it. Two compaction races motivate it:
   *
   *  1. A `markDeleted` landing DURING a compaction — after the
   *     compaction's tombstone read but before its end-of-run cleanup —
@@ -80,6 +82,13 @@ object TombstoneLog {
     if (!fs.exists(p)) None
     else Some(hinted(spark,
       spark.read.parquet(dir).select(idCol).distinct(), dirBytes(spark, dir)))
+  }
+
+  /** Append `ids` to the log as one new file (a takedown, or a fold
+    * re-appending the ids it retains). */
+  def append(spark: SparkSession, dir: String, idCol: String, ids: Seq[Long]): Unit = {
+    import spark.implicits._
+    ids.toDF(idCol).coalesce(1).write.mode("append").parquet(dir)
   }
 
   /** The log's current file listing — the unit a compaction applies and

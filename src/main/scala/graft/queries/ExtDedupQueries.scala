@@ -313,7 +313,7 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
   /** The exactly-once pair-log CONSUMER contract under a replayed batch:
     * the downstream half of q92's streaming story. Same ingest shape as
     * q92 (base corpus indexed, stream docs delivered through
-    * `StreamingPipeline.nearDupIngestBatch`) in 2 batches — so the three
+    * `LshIndex.probeAndAppendToLog`) in 2 batches — so the three
     * probe/append cycles paid here match q92's cost envelope, with the
     * replay as the third delivery — except batch 1 is
     * RE-DELIVERED verbatim right after its first delivery — the
@@ -340,11 +340,11 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
       val per = math.max(1, math.ceil(rows.length / 2.0).toInt)
       val chunks = rows.grouped(per).toArray
       chunks.zipWithIndex.foreach { case (c, i) =>
-        graft.streaming.StreamingPipeline.nearDupIngestBatch(
-          c.toSeq.toDF("doc_id", "text"), i.toLong, s"$tmp/idx", s"$tmp/pairs")
+        graft.ops.LshIndex.probeAndAppendToLog(spark, s"$tmp/idx",
+          c.toSeq.toDF("doc_id", "text"), s"$tmp/pairs", batchId = i.toLong)
         if (i == 1) // the crash-retry: same batch id, same data, re-delivered
-          graft.streaming.StreamingPipeline.nearDupIngestBatch(
-            c.toSeq.toDF("doc_id", "text"), i.toLong, s"$tmp/idx", s"$tmp/pairs")
+          graft.ops.LshIndex.probeAndAppendToLog(spark, s"$tmp/idx",
+            c.toSeq.toDF("doc_id", "text"), s"$tmp/pairs", batchId = i.toLong)
       }
       val log = spark.read
         .schema("doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE, batch_id BIGINT")

@@ -45,7 +45,7 @@ object StageProfile {
 
   /** q92's phases — the streaming-LSH lifecycle floor (r14 verdict #1):
     * index build, then each micro-batch delivered BOTH through the bare
-    * batch body (`nearDupIngestBatch`, no streaming machinery) in one
+    * batch body (`LshIndex.probeAndAppendToLog`, no streaming machinery) in one
     * scratch index and through the full `startNearDupIngest` stream in
     * another, so the per-batch probe/append cost and the Structured-
     * Streaming fixed overhead (trigger, checkpoint commit, isEmpty
@@ -105,9 +105,8 @@ object StageProfile {
       val chunks = rows.grouped(per).toArray
       chunks.zipWithIndex.foreach { case (c, i) =>
         phase(s"bare batch $i (probe+append+log)")(
-          graft.streaming.StreamingPipeline.nearDupIngestBatch(
-            c.toSeq.toDF("doc_id", "text"), i.toLong, s"$tmp/idx",
-            s"$tmp/pairs"))
+          graft.ops.LshIndex.probeAndAppendToLog(spark, s"$tmp/idx",
+            c.toSeq.toDF("doc_id", "text"), s"$tmp/pairs", batchId = i.toLong))
       }
       val mem = MemoryStream[(Long, String)]
       val q = graft.streaming.StreamingPipeline.startNearDupIngest(

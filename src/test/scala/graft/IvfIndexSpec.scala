@@ -124,12 +124,10 @@ class IvfIndexSpec extends SparkSpecBase {
       .toDF("vec_id", "embedding")
     def snap(p: String): Seq[String] =
       spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
-    graft.streaming.StreamingPipeline.vectorIngestBatch(
-      b0, 0L, path, annDir, cents)
+    IvfIndex.probeAndAppendToLog(spark, path, b0, annDir, cents, batchId = 0L)
     val (corpus1, log1) = (snap(path), snap(annDir))
     // the crash-retry: same batch id, same data, re-delivered
-    graft.streaming.StreamingPipeline.vectorIngestBatch(
-      b0, 0L, path, annDir, cents)
+    IvfIndex.probeAndAppendToLog(spark, path, b0, annDir, cents, batchId = 0L)
     assert(snap(path) == corpus1, "retry must replace its generation, not append")
     assert(snap(annDir) == log1, "retry must replace its log partition")
     // and the retry's probe saw the pre-batch corpus: no self-pairs ever
@@ -149,8 +147,8 @@ class IvfIndexSpec extends SparkSpecBase {
     IvfIndex.buildCorpus(base, path, cents, files = 1)
     val b0 = Seq((10L, Seq(0.9f, 0.1f))).toDF("vec_id", "embedding")
     val b1 = Seq((11L, Seq(0.1f, 0.9f))).toDF("vec_id", "embedding")
-    graft.streaming.StreamingPipeline.vectorIngestBatch(b0, 0L, path, annDir, cents)
-    graft.streaming.StreamingPipeline.vectorIngestBatch(b1, 1L, path, annDir, cents)
+    IvfIndex.probeAndAppendToLog(spark, path, b0, annDir, cents, batchId = 0L)
+    IvfIndex.probeAndAppendToLog(spark, path, b1, annDir, cents, batchId = 1L)
     // what startVectorIngest(compactEvery=2) runs after batch 1
     IvfIndex.compactCorpus(spark, path, files = 1, keepBatch = Some(1L))
     val gens = spark.read.parquet(path)
@@ -160,7 +158,7 @@ class IvfIndexSpec extends SparkSpecBase {
       spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
     val (corpus1, log1) = (snap(path), snap(annDir))
     // the kept batch's crash-retry, landing AFTER the compaction
-    graft.streaming.StreamingPipeline.vectorIngestBatch(b1, 1L, path, annDir, cents)
+    IvfIndex.probeAndAppendToLog(spark, path, b1, annDir, cents, batchId = 1L)
     assert(snap(path) == corpus1, "retry after compact changed the corpus")
     assert(snap(annDir) == log1, "retry after compact changed the ANN log")
     // a later batch must see base + folded b0 + kept b1
@@ -182,8 +180,8 @@ class IvfIndexSpec extends SparkSpecBase {
     IvfIndex.buildCorpus(base, path, cents, files = 1)
     val b0 = Seq((10L, Seq(0.9f, 0.1f))).toDF("vec_id", "embedding")
     val b1 = Seq((11L, Seq(0.95f, 0.05f))).toDF("vec_id", "embedding")
-    graft.streaming.StreamingPipeline.vectorIngestBatch(b0, 0L, path, annDir, cents)
-    graft.streaming.StreamingPipeline.vectorIngestBatch(b1, 1L, path, annDir, cents)
+    IvfIndex.probeAndAppendToLog(spark, path, b0, annDir, cents, batchId = 0L)
+    IvfIndex.probeAndAppendToLog(spark, path, b1, annDir, cents, batchId = 1L)
     // takedown of vector 11 — the IN-FLIGHT batch's member — lands just
     // before the in-stream compaction (compactEvery=2 after batch 1)
     IvfIndex.markDeleted(spark, path, Seq(11L))
@@ -192,7 +190,7 @@ class IvfIndexSpec extends SparkSpecBase {
       "compactCorpus(keepBatch) cleared a tombstone naming a kept-gen vector")
     // the kept batch's crash-retry re-appends vector 11 from raw data —
     // the retained tombstone must keep masking it
-    graft.streaming.StreamingPipeline.vectorIngestBatch(b1, 1L, path, annDir, cents)
+    IvfIndex.probeAndAppendToLog(spark, path, b1, annDir, cents, batchId = 1L)
     val ann = IvfIndex.probeAndAppend(spark, path,
       Seq((20L, Seq(0.97f, 0.03f))).toDF("vec_id", "embedding"),
       cents, Some(2L), k = 4).collect()

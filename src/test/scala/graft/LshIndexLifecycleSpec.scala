@@ -5,7 +5,6 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import graft.ops.LshIndex
-import graft.streaming.StreamingPipeline
 
 /** Lifecycle contracts of the persisted LSH index beyond a single
   * build+probe: idempotent batch replay (the foreachBatch at-least-once →
@@ -103,8 +102,8 @@ class LshIndexLifecycleSpec extends SparkSpecBase {
     val b1 = docs(
       11L -> "totally unrelated fresh content never seen before",
       12L -> "totally unrelated fresh content never seen before!")
-    StreamingPipeline.nearDupIngestBatch(b0, 0L, idx, pairs)
-    StreamingPipeline.nearDupIngestBatch(b1, 1L, idx, pairs)
+    LshIndex.probeAndAppendToLog(spark, idx, b0, pairs, batchId = 0L)
+    LshIndex.probeAndAppendToLog(spark, idx, b1, pairs, batchId = 1L)
     def log() = spark.read.parquet(pairs)
       .select($"batch_id".cast("long"), $"doc_a", $"doc_b", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
@@ -112,7 +111,7 @@ class LshIndexLifecycleSpec extends SparkSpecBase {
     val counts1 = rowCounts(idx)
     assert(log1.exists(_._1 == 1L), "batch 1 logged no pairs - test is vacuous")
     // crash between index append and checkpoint commit → batch 1 re-delivered
-    StreamingPipeline.nearDupIngestBatch(b1, 1L, idx, pairs)
+    LshIndex.probeAndAppendToLog(spark, idx, b1, pairs, batchId = 1L)
     assert(log() === log1, "replay duplicated or changed pair-log rows")
     assert(rowCounts(idx) === counts1, "replay changed index row counts")
   }
@@ -182,7 +181,7 @@ class LshIndexLifecycleSpec extends SparkSpecBase {
       13L -> "the quick brown fox jumps over the lazy dog today!",
       14L -> "totally unrelated fresh content never seen right before")
     def ingest(i: String, p: String)(b: DataFrame, id: Long): Unit =
-      StreamingPipeline.nearDupIngestBatch(b, id, i, p)
+      LshIndex.probeAndAppendToLog(spark, i, b, p, batchId = id)
     ingest(idx, pairs)(b0, 0L); ingest(idx, pairs)(b1, 1L)
     // what the auto-compacting ingest runs after batch 1 (compactEvery=2)
     LshIndex.compact(spark, idx, keepBatch = Some(1L))
@@ -195,7 +194,7 @@ class LshIndexLifecycleSpec extends SparkSpecBase {
       .select($"batch_id".cast("long"), $"doc_a", $"doc_b", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
     val (counts1, log1) = (rowCounts(idx), log(pairs))
-    StreamingPipeline.nearDupIngestBatch(b1, 1L, idx, pairs)
+    LshIndex.probeAndAppendToLog(spark, idx, b1, pairs, batchId = 1L)
     assert(rowCounts(idx) === counts1,
       "retry after compact changed index row counts - keepBatch broken")
     assert(log(pairs) === log1, "retry after compact changed the pair log")
@@ -254,8 +253,8 @@ class LshIndexLifecycleSpec extends SparkSpecBase {
     val b1 = docs(
       11L -> "totally unrelated fresh content never seen before",
       12L -> "totally unrelated fresh content never seen before!")
-    StreamingPipeline.nearDupIngestBatch(b0, 0L, idx, pairs)
-    StreamingPipeline.nearDupIngestBatch(b1, 1L, idx, pairs)
+    LshIndex.probeAndAppendToLog(spark, idx, b0, pairs, batchId = 0L)
+    LshIndex.probeAndAppendToLog(spark, idx, b1, pairs, batchId = 1L)
     // takedown of doc 11 — a member of the IN-FLIGHT batch — lands just
     // before the in-stream compaction fires (compactEvery=2 after batch 1)
     LshIndex.markDeleted(spark, idx, Seq(11L))
@@ -267,7 +266,7 @@ class LshIndexLifecycleSpec extends SparkSpecBase {
     // the kept batch's crash-retry re-derives gen=b1 from RAW batch data,
     // physically re-appending doc 11's rows — the retained tombstone must
     // keep masking them
-    StreamingPipeline.nearDupIngestBatch(b1, 1L, idx, pairs)
+    LshIndex.probeAndAppendToLog(spark, idx, b1, pairs, batchId = 1L)
     val probeDoc = docs(
       20L -> "totally unrelated fresh content never seen before today")
     val afterRetry = {

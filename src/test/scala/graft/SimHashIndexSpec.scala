@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.SimHashIndex
-import graft.streaming.StreamingPipeline
 
 /** Lifecycle contracts of the persisted SimHash index (LshIndex's
   * Hamming twin): probe-before-append visibility, batchId replay
@@ -66,17 +65,17 @@ class SimHashIndexSpec extends SparkSpecBase {
     val b2 = docs(
       12L -> "the quick brown fox jumps over the lazy dog", // = 1, 10
       13L -> "totally unrelated fresh content never seen before") // = 11
-    StreamingPipeline.simHashIngestBatch(b0, 0L, idx, pairs)
-    StreamingPipeline.simHashIngestBatch(b1, 1L, idx, pairs)
+    SimHashIndex.probeAndAppendToLog(spark, idx, b0, pairs, batchId = 0L)
+    SimHashIndex.probeAndAppendToLog(spark, idx, b1, pairs, batchId = 1L)
     SimHashIndex.compact(spark, idx, keepBatch = Some(1L)) // compactEvery=2 firing
     val gens = spark.read.parquet(s"$idx/bands")
       .select($"gen".cast("string")).distinct().as[String].collect().toSet
     assert(gens === Set("base", "b1"), s"lag-1 fold broken: $gens")
     // twin without compaction; batch 2 must diverge in NOTHING
-    StreamingPipeline.simHashIngestBatch(b0, 0L, idx2, pairs2)
-    StreamingPipeline.simHashIngestBatch(b1, 1L, idx2, pairs2)
-    StreamingPipeline.simHashIngestBatch(b2, 2L, idx, pairs)
-    StreamingPipeline.simHashIngestBatch(b2, 2L, idx2, pairs2)
+    SimHashIndex.probeAndAppendToLog(spark, idx2, b0, pairs2, batchId = 0L)
+    SimHashIndex.probeAndAppendToLog(spark, idx2, b1, pairs2, batchId = 1L)
+    SimHashIndex.probeAndAppendToLog(spark, idx, b2, pairs, batchId = 2L)
+    SimHashIndex.probeAndAppendToLog(spark, idx2, b2, pairs2, batchId = 2L)
     def log(p: String) = spark.read.parquet(p)
       .select($"batch_id".cast("long"), $"doc_a", $"doc_b", $"hamming")
       .as[(Long, Long, Long, Int)].collect().toSet
@@ -96,7 +95,7 @@ class SimHashIndexSpec extends SparkSpecBase {
     val b1 = docs(
       11L -> "the quick brown fox jumps over the lazy dog", // = doc 1
       12L -> "totally unrelated fresh content never seen before")
-    StreamingPipeline.simHashIngestBatch(b1, 1L, idx, pairs)
+    SimHashIndex.probeAndAppendToLog(spark, idx, b1, pairs, batchId = 1L)
     // takedown of doc 11 (the in-flight batch's member), then the
     // in-stream lag-1 compaction fires
     SimHashIndex.markDeleted(spark, idx, Seq(11L))
@@ -105,7 +104,7 @@ class SimHashIndexSpec extends SparkSpecBase {
       "compact(keepBatch) cleared a tombstone naming a kept-gen doc")
     // the kept batch's crash-retry re-appends doc 11's band rows from
     // raw data — the retained tombstone must keep masking them
-    StreamingPipeline.simHashIngestBatch(b1, 1L, idx, pairs)
+    SimHashIndex.probeAndAppendToLog(spark, idx, b1, pairs, batchId = 1L)
     val probe = docs(20L -> "the quick brown fox jumps over the lazy dog")
     val after = pairsOf(SimHashIndex.probeAndAppend(spark, idx, probe,
       batchId = Some(2L)))
@@ -118,6 +117,35 @@ class SimHashIndexSpec extends SparkSpecBase {
       "full compact left the resurrected rows behind")
     assert(!new java.io.File(s"$idx/tombstones").exists,
       "full compact left the retained tombstone behind")
+  }
+
+  test("a damaged layout line in the persisted meta fails the probe " +
+    "loudly instead of re-deriving pk under a default modulus") {
+    val idx = tmpDir("simhash_badmeta")
+    SimHashIndex.build(base, idx, SimHashIndex.Config(indexPartitions = 8))
+    val meta = new org.apache.hadoop.fs.Path(idx, "_simhash_meta")
+    val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
+    def rewrite(f: String => String): Unit = {
+      val in = fs.open(meta)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      // through the Hadoop FS, so the local checksum stays valid and only
+      // the content is damaged
+      val out = fs.create(meta, true)
+      try out.write(f(text).getBytes("UTF-8")) finally out.close()
+    }
+    rewrite(_.replace("indexPartitions=8", "indexPartitions=8x"))
+    val e = intercept[IllegalStateException] {
+      SimHashIndex.probeAndAppend(spark, idx, batch)
+    }
+    assert(e.getMessage.contains("_simhash_meta") &&
+      e.getMessage.contains("indexPartitions=8x"), e.getMessage)
+    // a meta file that lost the line altogether fails as loudly
+    rewrite(_.linesIterator.filterNot(_.startsWith("indexPartitions"))
+      .map(_ + "\n").mkString)
+    val e2 = intercept[IllegalStateException] {
+      SimHashIndex.probeAndAppend(spark, idx, batch)
+    }
+    assert(e2.getMessage.contains("indexPartitions"), e2.getMessage)
   }
 
   test("probeAndAppend on an unbuilt path fails loudly") {

@@ -131,16 +131,7 @@ class StreamingSpec extends SparkSpecBase {
     val q = StreamingPipeline.startIngestWithCompaction(
       mem.toDF().select($"value".as("record")), staging, processed, ckpt,
       metrics, trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-    // Spark jobs per micro-batch of this query, from the batch id Spark
-    // stamps on every job a micro-batch runs
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).filter(p =>
-          p.getProperty("sql.streaming.queryId") == q.id.toString)
-          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach(b => jobs.merge(b.toLong, 1, _ + _))
-    }
+    val listener = new BatchJobs(q.id.toString)
     spark.sparkContext.addSparkListener(listener)
     spark.streams.addListener(progress)
     try {
@@ -165,7 +156,7 @@ class StreamingSpec extends SparkSpecBase {
 
       val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
       assert(dataBatches.length === 2)
-      val perBatch = dataBatches.map(b => b -> jobs.getOrDefault(b, 0)).toMap
+      val perBatch = dataBatches.map(b => b -> listener.of(b)).toMap
       assert(perBatch(dataBatches.head) > 0, s"no jobs seen: $perBatch")
       assert(perBatch.values.forall(_ <= 3), s"jobs per data micro-batch: $perBatch")
     } finally {
@@ -173,6 +164,19 @@ class StreamingSpec extends SparkSpecBase {
       spark.streams.removeListener(progress)
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  /** Spark jobs per micro-batch of one streaming query, from the batch id
+    * Spark stamps on every job a micro-batch runs. */
+  private class BatchJobs(queryId: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    private val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(e.properties).filter(p =>
+        p.getProperty("sql.streaming.queryId") == queryId)
+        .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+        .foreach(b => jobs.merge(b.toLong, 1, _ + _))
+    def of(batchId: Long): Int = jobs.getOrDefault(batchId, 0)
   }
 
   /** Wait until every event posted so far has reached the listeners. */
@@ -312,6 +316,66 @@ class StreamingSpec extends SparkSpecBase {
       .as[(Long, Seq[String], Int)].collect().toSet
     assert(bands(streamIdx) === bands(seqIdx))
     assert(sigs(streamIdx) === sigs(seqIdx))
+  }
+
+  test("a near-dup ingest data micro-batch runs at most 21 Spark jobs, " +
+    "and at most 27 when it also fires the lag-1 fold") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.ops.LshIndex
+    val idx = tmpDir("ndjobs_idx")
+    LshIndex.build(Seq(
+      1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "completely different text about spark engines here",
+      3L -> "totally unrelated fresh content never seen before")
+      .toDF("doc_id", "text"), idx)
+    val mem = MemoryStream[(Long, String)]
+    val q = StreamingPipeline.startNearDupIngest(
+      mem.toDS().toDF("doc_id", "text"), idx, tmpDir("ndjobs_pairs"),
+      tmpDir("ndjobs_ckpt"),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
+      compactEvery = Some(3))
+    val listener = new BatchJobs(q.id.toString)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // batch 0 warms up; batch 1 probes, logs and appends; batch 2 also
+      // fires the lag-1 fold
+      Seq(
+        Seq(10L -> "the quick brown fox jumps over the lazy dog today",
+          11L -> "totally unrelated fresh content never seen before!"),
+        Seq(20L -> "the quick brown fox jumps over the lazy dog today!",
+          21L -> "completely different text about spark engines here too"),
+        Seq(30L -> "totally unrelated fresh content never seen before!!",
+          31L -> "completely different text about spark engines there"))
+        .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      drainListenerBus()
+      val gens = spark.read.parquet(s"$idx/bands").select($"gen".cast("string"))
+        .distinct().as[String].collect().toSet
+      assert(gens === Set("base", "b2"), s"the fold did not run: $gens")
+      // the counts measured when these bounds were set: a change that
+      // adds a job to the per-batch path fails here
+      assert(listener.of(1L) <= 21, s"batch 1 ran ${listener.of(1L)} jobs")
+      assert(listener.of(2L) <= 27, s"batch 2 ran ${listener.of(2L)} jobs")
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("compactEvery must be positive: a non-positive cadence fails at " +
+    "start instead of silently never folding") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val idx = tmpDir("nd_cadence_idx")
+    graft.ops.LshIndex.build(
+      Seq(1L -> "the quick brown fox").toDF("doc_id", "text"), idx)
+    Seq(0, -1).foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        StreamingPipeline.startNearDupIngest(
+          MemoryStream[(Long, String)].toDS().toDF("doc_id", "text"), idx,
+          tmpDir("nd_cadence_pairs"), tmpDir("nd_cadence_ckpt"),
+          compactEvery = Some(n))
+      }
+      assert(e.getMessage.contains("compactEvery"), e.getMessage)
+    }
   }
 
   test("RocksDB bounded-memory posture: watermarked windowed agg runs " +
