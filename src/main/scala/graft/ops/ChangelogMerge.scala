@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Last-writer-wins changelog merge — the CDC/upsert primitive every
   * lakehouse table format runs (Delta/Iceberg/Hudi `MERGE`; Debezium →
@@ -61,11 +63,11 @@ object ChangelogMerge {
   //
   // The streaming/storage form (Hudi's MOR / Iceberg's merge-on-read
   // shape): a `base/` snapshot plus `delta/gen=N/` changelog appends —
-  // one generation per micro-batch, written with dynamic partition
-  // overwrite so a RETRIED batch replaces exactly its own generation
-  // (the exactly-once-on-storage contract the index families use,
-  // GenTable.writePartitioned). Reads merge base + deltas; compaction
-  // folds completed generations into a new base that KEEPS the winner
+  // one generation per micro-batch, written by the index families' one
+  // generation writer (GenTable.replace) so a RETRIED batch replaces
+  // exactly its own generation (their exactly-once-on-storage
+  // contract). Reads merge base + deltas; compaction folds completed
+  // generations into a new base that KEEPS the winner
   // seq per row, so replayed or straggling deltas at-or-below the
   // folded seq lose to the fold instead of reverting it. Contract the
   // stream must provide (the CDC reader's usual delivery guarantee):
@@ -75,85 +77,79 @@ object ChangelogMerge {
   // older-than-tombstone upsert arriving after the fold would
   // resurrect it; with monotone seqs that delta cannot exist).
 
+  private def basePath(tablePath: String) = s"$tablePath/base"
+  private def deltaPath(tablePath: String) = s"$tablePath/delta"
+
   /** Write the initial snapshot. `df` may carry [[SeqCol]] or not. */
   def writeBase(df: DataFrame, tablePath: String): Unit =
-    df.write.mode("overwrite").parquet(s"$tablePath/base")
+    df.write.mode("overwrite").parquet(basePath(tablePath))
 
-  /** Append one changelog generation (idempotent in `gen`: dynamic
-    * partition overwrite replaces exactly this generation on retry). */
+  /** Append one changelog generation (idempotent in `gen`: the one
+    * generation writer's replace mode, GenTable.replace, overwrites
+    * exactly this generation on retry). */
   def appendDelta(df: DataFrame, tablePath: String, gen: Long): Unit =
-    df.withColumn("gen", lit(gen))
-      .write.partitionBy("gen")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$tablePath/delta")
+    GenTable.replace(df, deltaPath(tablePath), GenTable.Spread.AsIs, gen.toString)
 
-  private def readDeltas(spark: SparkSession, tablePath: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$tablePath/delta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    // schema-bound: an all-empty generation (or a delta dir whose only
-    // gens were folded away) must read as the empty relation, not throw
-    spark.read.schema(schema.add("gen", "long")).parquet(p.toString)
-      .drop("gen")
+  /** A delta row's schema: `base`'s payload plus [[SeqCol]] and [[OpCol]]. */
+  private def deltaSchema(base: DataFrame): StructType =
+    StructType(base.schema.filterNot(f => f.name == SeqCol || f.name == OpCol))
+      .add(SeqCol, "long").add(OpCol, "string")
+
+  /** Every delta generation with its `gen`, or None when no delta was
+    * ever written. Schema-bound: an all-empty generation (or a delta dir
+    * whose only gens were folded away) reads as the empty relation
+    * instead of throwing. */
+  private def deltas(spark: SparkSession, tablePath: String,
+      base: DataFrame): Option[DataFrame] = {
+    val p = new HPath(deltaPath(tablePath))
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
+    else Some(spark.read.schema(deltaSchema(base).add("gen", "long")).parquet(p.toString))
   }
 
   /** The merged view of the table: base + every live delta generation.
     * This IS the read path — O(base + deltas), one shuffle. */
   def readMerged(spark: SparkSession, tablePath: String,
       key: Seq[String]): DataFrame = {
-    // self-heal a crash-interrupted compact (base/ renamed aside but
-    // base_next/ not yet in place) so reads never see a missing base.
-    // RESTORE-only (healRestore, not healSwap): the read path must not
-    // delete a racing writer's freshly staged base_next — stale-dir
-    // cleanup belongs to compact(), which runs the full healSwap under
-    // the single-writer serialization (r14 advice).
-    Layout.healRestore(spark, s"$tablePath/base")
-    val base = spark.read.parquet(s"$tablePath/base")
-    val deltaSchema = org.apache.spark.sql.types.StructType(
-      base.schema.filterNot(f => f.name == SeqCol || f.name == OpCol))
-      .add(SeqCol, "long").add(OpCol, "string")
-    merge(base, readDeltas(spark, tablePath, deltaSchema), key)
+    // self-heal a crash-interrupted compact (base/ renamed aside but its
+    // staged replacement not yet in place) so reads never see a missing
+    // base. RESTORE-only (healRestore, not the staged commit's healSwap):
+    // the read path must not delete a racing writer's freshly staged
+    // base (r14 advice).
+    Layout.healRestore(spark, basePath(tablePath))
+    val base = spark.read.parquet(basePath(tablePath))
+    val live = deltas(spark, tablePath, base).map(_.drop("gen")).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], deltaSchema(base)))
+    merge(base, live, key)
   }
 
   /** Fold every delta generation ≤ `uptoGen` into the base (keeping
     * the winner seq per row), then drop the folded generations. Fold
     * first, delete after: a crash between the two re-applies already-
     * folded deltas onto the folded base — same winners, so the retry
-    * converges (max-seq is a lattice join). */
+    * converges (max-seq is a lattice join). The base commits through
+    * the one staged commit (Layout.stagedCommit: staged beside base/,
+    * swapped in rename-aside), so every crash point leaves base/ or
+    * base.old/ present and re-running compact heals and retries. The
+    * swap window is still not atomic for concurrent readers —
+    * single-writer tables (foreachBatch is the only writer here) are
+    * safe; a multi-writer deployment puts the same IndexLock writer
+    * fence around this that the index families use for their folds. */
   def compact(spark: SparkSession, tablePath: String, key: Seq[String],
       uptoGen: Long): Unit = {
-    Layout.healSwap(spark, s"$tablePath/base_next", s"$tablePath/base")
-    val base = spark.read.parquet(s"$tablePath/base")
-    val deltaSchema = org.apache.spark.sql.types.StructType(
-      base.schema.filterNot(f => f.name == SeqCol || f.name == OpCol))
-      .add(SeqCol, "long").add(OpCol, "string")
-    val p = new org.apache.hadoop.fs.Path(s"$tablePath/delta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return
-    val live = spark.read.schema(deltaSchema.add("gen", "long"))
-      .parquet(p.toString)
-    val folded = merge(base, live.where(col("gen") <= uptoGen).drop("gen"),
-      key)
-    // Stage-then-swap via the shared rename-ASIDE commit (Layout
-    // .swapInto after a healSwap at entry, same as PqIndex/IvfIndex
-    // compactions): base → base.old, base_next → base, drop .old. Every
-    // crash point leaves base/ or base.old/ present, and re-running
-    // compact heals and retries — unlike a delete-then-rename, which
-    // has a window with NO base at all. The swap window is still not
-    // atomic for concurrent readers — single-writer tables
-    // (foreachBatch is the only writer here) are safe; a multi-writer
-    // deployment puts the same IndexLock writer fence around this that
-    // the index families use for their compactions.
-    folded.write.mode("overwrite").parquet(s"$tablePath/base_next")
-    Layout.swapInto(spark, s"$tablePath/base_next", s"$tablePath/base")
-    val st = fs.listStatus(p)
-    st.filter { s =>
-      val n = s.getPath.getName
-      n.startsWith("gen=") &&
-        scala.util.Try(n.stripPrefix("gen=").toLong).toOption
-          .exists(_ <= uptoGen)
-    }.foreach(s => fs.delete(s.getPath, true))
+    val target = basePath(tablePath)
+    Layout.healRestore(spark, target)
+    val base = spark.read.parquet(target)
+    deltas(spark, tablePath, base).foreach { live =>
+      Layout.stagedCommit(spark, Seq(target))(
+        merge(base, live.where(col("gen") <= uptoGen).drop("gen"), key)
+          .write.mode("overwrite").parquet(Layout.staged(target)))
+      val p = new HPath(deltaPath(tablePath))
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      fs.listStatus(p).filter { s =>
+        val n = s.getPath.getName
+        n.startsWith("gen=") &&
+          scala.util.Try(n.stripPrefix("gen=").toLong).toOption.exists(_ <= uptoGen)
+      }.foreach(s => fs.delete(s.getPath, true))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -153,8 +153,8 @@ object GraphIndex {
     val sym = g.unionByName(
         g.select(col("dst").as("src"), col("src").as("dst"), col("cos")))
       .groupBy(col("src"), col("dst")).agg(max(col("cos")).as("cos"))
-    writeNodesGen(e, path, files, "overwrite", "base")
-    writeEdgesGen(topPerSrc(sym, maxDeg), path, files, "overwrite", "base")
+    GenTable.build(nodeRows(e), nodesPath(path), nodesSpread(files))
+    GenTable.build(edgeRows(topPerSrc(sym, maxDeg)), edgesPath(path), edgesSpread(files))
   }
 
   private def topPerSrc(edges: DataFrame, n: Int): DataFrame = {
@@ -162,42 +162,14 @@ object GraphIndex {
     edges.withColumn("rn", row_number().over(w)).where(col("rn") <= n).drop("rn")
   }
 
-  /** One generation of either subtable — the IvfIndex.writeGen contract:
-    * `gen` is a hive partition level, rows clustered on `cluster` WITHIN
-    * the generation so per-file min/max stats keep pruned scans
-    * proportional to their touched keys; "replace-gen" uses dynamic
-    * partition overwrite so a foreachBatch retry converges. */
-  private def writeGen(df: DataFrame, path: String, files: Int,
-      mode: String, gen: String, cluster: Column): Unit = {
-    val w = df.withColumn("gen", lit(gen))
-      .repartitionByRange(files, cluster)
-      .sortWithinPartitions(cluster)
-      .write.partitionBy("gen")
-    mode match {
-      case "replace-gen" =>
-        w.option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(path)
-      case m => w.mode(m).parquet(path)
-    }
-  }
-  /** Multi-generation static write for the compaction fold: `gen` is a
-    * per-row column, so base + kept land in one shuffle + write job
-    * (GenTable.writeGens' rule for the range-clustered families). The
-    * (gen, cluster) task sort keeps each output file cluster-sorted
-    * within its generation. */
-  private def writeGensBy(df: DataFrame, path: String, files: Int,
-      cluster: Column): Unit =
-    df.repartitionByRange(files, cluster)
-      .sortWithinPartitions(col("gen"), cluster)
-      .write.partitionBy("gen").mode("overwrite").parquet(path)
-
-  private def writeNodesGen(nodes: DataFrame, path: String, files: Int,
-      mode: String, gen: String): Unit =
-    writeGen(nodes.select(col("vec_id"), col("embedding")),
-      nodesPath(path), files, mode, gen, col("vec_id"))
-  private def writeEdgesGen(edges: DataFrame, path: String, files: Int,
-      mode: String, gen: String): Unit =
-    writeGen(edges.select(col("src"), col("dst"), col("cos")),
-      edgesPath(path), files, mode, gen, col("src"))
+  /** How the two tables spread (the IvfIndex corpus layout): rows
+    * clustered on vec_id (nodes) or src (edges) WITHIN each generation,
+    * so per-file min/max stats keep pruned scans proportional to their
+    * touched keys. */
+  private def nodesSpread(files: Int) = GenTable.Spread.Range(files, col("vec_id"))
+  private def edgesSpread(files: Int) = GenTable.Spread.Range(files, col("src"))
+  private def nodeRows(df: DataFrame): DataFrame = df.select(col("vec_id"), col("embedding"))
+  private def edgeRows(df: DataFrame): DataFrame = df.select(col("src"), col("dst"), col("cos"))
 
   private def settleLineage(df: DataFrame, maxRows: Int = 1 << 22): DataFrame =
     Caches.localize(df, maxRows).getOrElse { val p = df.persist(); p.count(); p }
@@ -356,20 +328,17 @@ object GraphIndex {
       revCap: Int = 4, files: Int = 2, id: String = "vec_id",
       vec: String = "embedding"): DataFrame =
     probeAppendCore(spark, path, batch, batchId, k, beamW, hops, revCap,
-      files, id, vec, log => Caches.localize(log, maxRows = 1 << 22)
-        .getOrElse(log.localCheckpoint()))
+      files, id, vec, GenTable.localized(1 << 22))
 
   /** [[probeAndAppend]] with the ANN log written DIRECTLY into the
-    * `batch_id`-partitioned log (GenTable.writeBatchLog) — one job
+    * `batch_id`-partitioned log (GenTable.toBatchLog) — one job
     * instead of localize + write. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       batch: DataFrame, annDir: String, batchId: Long, k: Int = 4,
       beamW: Int = 8, hops: Int = 2, revCap: Int = 4, files: Int = 2,
       id: String = "vec_id", vec: String = "embedding"): Unit = {
     probeAppendCore(spark, path, batch, Some(batchId), k, beamW, hops,
-      revCap, files, id, vec, { log =>
-        GenTable.writeBatchLog(log, batchId, annDir); spark.emptyDataFrame
-      })
+      revCap, files, id, vec, GenTable.toBatchLog(batchId, annDir))
     ()
   }
 
@@ -378,7 +347,6 @@ object GraphIndex {
       hops: Int, revCap: Int, files: Int, id: String, vec: String,
       materialize: DataFrame => DataFrame): DataFrame =
     IndexLock.withWriter(path) {
-      val (gen, mode) = (GenTable.appendGen(batchId), GenTable.appendMode(batchId))
       val b = batch.select(col(id).as("vec_id"), col(vec).as("embedding"))
         .persist()
       try {
@@ -402,8 +370,9 @@ object GraphIndex {
         // independent targets (edges vs nodes), inputs settled (ann) or
         // persisted (b) — append concurrently
         Par.all(
-          () => writeEdgesGen(fwd.unionByName(rev), path, files, mode, gen),
-          () => writeNodesGen(b, path, files, mode, gen))
+          () => GenTable.append(edgeRows(fwd.unionByName(rev)), edgesPath(path),
+            edgesSpread(files), batchId),
+          () => GenTable.append(nodeRows(b), nodesPath(path), nodesSpread(files), batchId))
         result
       } finally { b.unpersist(); () }
     }
@@ -435,41 +404,21 @@ object GraphIndex {
     * instead — no re-prune — because a kept batch's crash-retry must
     * probe the exact pre-compaction adjacency to converge; the offline
     * re-prune runs at the next quiesced compaction. Both tables stage
-    * under one root and commit in ONE `Layout.swapInto` of the index
-    * root, so the root is what a crash leaves in `<path>.old`. */
+    * under one root and commit in ONE swap of the index root
+    * (Layout.stagedCommit), so the root is what a crash leaves in
+    * `<path>.old`. */
   def compact(spark: SparkSession, path: String, maxDeg: Int = 8,
       files: Int = 4, keepBatch: Option[Long] = None): Unit =
     GenTable.fold(spark, path, keepBatch,
       tables = Seq(nodesPath(path) -> false, edgesPath(path) -> false),
-      heal = Seq(path),
+      swap = Seq(path),
       tombs = Some(GenTable.Tombs(tombsPath(path), "vec_id", nodesPath(path)))) { f =>
-      val staged = s"$path.compacting"
-      Layout.healSwap(spark, staged, path)
-      val nodesAll = f.dropTombstoned(spark.read.parquet(nodesPath(path))
-        .select(col("vec_id"), col("embedding"), col("gen")))
-      val edgesAll = f.dropTombstoned(spark.read.parquet(edgesPath(path))
-        .select(col("src"), col("dst"), col("cos"), col("gen")), "src", "dst")
-      // nodes and edges are independent targets: fold them concurrently;
-      // with a kept generation each table lands base + kept in ONE
-      // shuffle + write job (gen derived in-row) instead of two
+      val nodes = f.dropTombstoned(spark.read.parquet(nodesPath(path)))
+      val edges = f.dropTombstoned(spark.read.parquet(edgesPath(path)), "src", "dst")
+      // independent targets: nodes and edges fold concurrently, one write each
       Par.all(
-        () => f.keepGen match {
-          case Some(_) =>
-            writeGensBy(nodesAll.select(col("vec_id"), col("embedding"),
-                f.target.as("gen")),
-              nodesPath(staged), files, col("vec_id"))
-          case None =>
-            writeNodesGen(nodesAll.drop("gen"), staged, files, "overwrite", "base")
-        },
-        () => f.keepGen match {
-          case Some(_) =>
-            writeGensBy(edgesAll.select(col("src"), col("dst"), col("cos"),
-                f.target.as("gen")),
-              edgesPath(staged), files, col("src"))
-          case None =>
-            writeEdgesGen(topPerSrc(edgesAll.drop("gen"), maxDeg), staged, files,
-              "overwrite", "base")
-        })
-      Layout.swapInto(spark, staged, path)
+        () => f.write(nodes, nodesPath(f.staged(path)), nodesSpread(files)),
+        () => f.write(if (f.keepGen.isEmpty) topPerSrc(edges, maxDeg) else edges,
+          edgesPath(f.staged(path)), edgesSpread(files)))
     }
 }

@@ -197,12 +197,11 @@ object InvertedIndex {
     positions.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
 
-  private def writePositions(positions: DataFrame, tablePath: String,
-      cfg: Config, mode: String, gen: String): Unit =
-    GenTable.writePartitioned(
-      positions.select(col("term"), col("doc_id"), col("pos"), col("dl"))
-        .withColumn("__part", termPk(cfg)),
-      tablePath, cfg.postFiles, mode, gen, col("term"), col("doc_id"), col("pos"))
+  private def positionRows(positions: DataFrame): DataFrame =
+    positions.select(col("term"), col("doc_id"), col("pos"), col("dl"))
+
+  private def positionsSpread(cfg: Config) = GenTable.Spread.Hash(cfg.postFiles,
+    termPk(cfg), col("term"), col("doc_id"), col("pos"))
 
   /** One (n_docs, sum_dl) row for a doc frame — the generation's
     * contribution to the corpus stats. */
@@ -210,18 +209,9 @@ object InvertedIndex {
     docs.agg(count(col(id)).as("n_docs"),
       sum(size(TextOps.words(col(text)))).as("sum_dl"))
 
-  /** docstats is one row per generation — a plain gen-partitioned write,
-    * no pk level (there is nothing to prune). */
-  private def writeStats(df: DataFrame, path: String, mode: String,
-      gen: String): Unit = {
-    val w = df.select(col("n_docs"), col("sum_dl"))
-      .withColumn("gen", lit(gen)).coalesce(1).write.partitionBy("gen")
-    (mode match {
-      case "replace-gen" =>
-        w.option("partitionOverwriteMode", "dynamic").mode("overwrite")
-      case m => w.mode(m)
-    }).parquet(path)
-  }
+  /** docstats is one row per generation — one file per generation, no
+    * pk level (there is nothing to prune). */
+  private val statsSpread = GenTable.Spread.Single
 
   /** Build the index at `path` from a base corpus (full recompute — run
     * once; subsequent batches go through [[probeAndAppend]]). */
@@ -232,12 +222,12 @@ object InvertedIndex {
     val post = pos.fold(postingsOf(docs, id, text))(postingsFromPositions)
       .persist()
     try {
-      writePartitioned(post, postingsPath(path), cfg, "overwrite", "base")
+      GenTable.build(postingRows(post, cfg), postingsPath(path), postingsSpread(cfg))
       if (cfg.impactOrdered)
-        writeTermDf(post, termdfPath(path), cfg, "overwrite", "base")
+        GenTable.build(termDfOf(post), termdfPath(path), termdfSpread(cfg))
       pos.foreach(p =>
-        writePositions(p, positionsPath(path), cfg, "overwrite", "base"))
-      writeStats(docStatsOf(docs, id, text), statsPath(path), "overwrite", "base")
+        GenTable.build(positionRows(p), positionsPath(path), positionsSpread(cfg)))
+      GenTable.build(docStatsOf(docs, id, text), statsPath(path), statsSpread)
       writeMeta(docs.sparkSession, path, cfg)
     } finally { post.unpersist(); pos.foreach(_.unpersist()); () }
   }
@@ -247,35 +237,33 @@ object InvertedIndex {
     * (build / append / compact), so probes never sort a term's postings
     * again. Cross-generation truncation stays exact because the global
     * top-m by (tf desc, doc_id) is always a subset of the union of
-    * per-generation top-m prefixes. */
-  private def withImpactRank(postings: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("term"))
+    * per-generation top-m prefixes. A fold ranks within each row's
+    * target generation (`gen`). */
+  private def withImpactRank(postings: DataFrame, gen: Column*): DataFrame = {
+    val w = Window.partitionBy(col("term") +: gen: _*)
       .orderBy(col("tf").desc, col("doc_id"))
     postings.withColumn("irn", row_number().over(w))
   }
 
-  private def writePartitioned(postings: DataFrame, tablePath: String,
-      cfg: Config, mode: String, gen: String): Unit = {
+  /** The postings rows a build or append writes: impact-ranked, or the
+    * pre-era layout for an index that predates the impact order. */
+  private def postingRows(postings: DataFrame, cfg: Config): DataFrame = {
     val data = postings.select(col("term"), col("doc_id"), col("tf"), col("dl"))
-    if (cfg.impactOrdered)
-      GenTable.writePartitioned(
-        withImpactRank(data).withColumn("__part", termPk(cfg)),
-        tablePath, cfg.postFiles, mode, gen, col("term"), col("irn"))
-    else
-      GenTable.writePartitioned(data.withColumn("__part", termPk(cfg)),
-        tablePath, cfg.postFiles, mode, gen, col("term"), col("doc_id"))
+    if (cfg.impactOrdered) withImpactRank(data) else data
   }
+
+  private def postingsSpread(cfg: Config) = GenTable.Spread.Hash(cfg.postFiles,
+    termPk(cfg), col("term"), if (cfg.impactOrdered) col("irn") else col("doc_id"))
 
   /** One generation's (term, df) sidecar rows — df is the TRUE posting
     * count per term in this generation (the idf numerator source once
     * truncated scans stop seeing every posting). Same (pk, gen)
     * partitioning as the postings, so one probe predicate prunes both. */
-  private def writeTermDf(postings: DataFrame, tablePath: String,
-      cfg: Config, mode: String, gen: String): Unit =
-    GenTable.writePartitioned(
-      postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .withColumn("__part", termPk(cfg)),
-      tablePath, cfg.postFiles, mode, gen, col("term"))
+  private def termDfOf(postings: DataFrame): DataFrame =
+    postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
+
+  private def termdfSpread(cfg: Config) =
+    GenTable.Spread.Hash(cfg.postFiles, termPk(cfg), col("term"))
 
   private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
     TombstoneLog.readDir(spark, tombsPath(path), "doc_id")
@@ -688,11 +676,10 @@ object InvertedIndex {
       text: String = "text",
       maxPostings: Option[Int] = Some(DefaultMaxPostings)): DataFrame =
     probeAppendCore(spark, path, batch, batchId, k, queryTerms, cfg, id,
-      text, maxPostings, log => Caches.localize(log, maxRows = 1 << 20)
-        .getOrElse(log.localCheckpoint()))
+      text, maxPostings, GenTable.localized(1 << 20))
 
   /** [[probeAndAppend]] with the match log written DIRECTLY into the
-    * `batch_id`-partitioned log (GenTable.writeBatchLog) — one job
+    * `batch_id`-partitioned log (GenTable.toBatchLog) — one job
     * instead of localize + write. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       batch: DataFrame, matchesDir: String, batchId: Long, k: Int = 3,
@@ -700,9 +687,7 @@ object InvertedIndex {
       text: String = "text",
       maxPostings: Option[Int] = Some(DefaultMaxPostings)): Unit = {
     probeAppendCore(spark, path, batch, Some(batchId), k, queryTerms, cfg,
-      id, text, maxPostings, { log =>
-        GenTable.writeBatchLog(log, batchId, matchesDir); spark.emptyDataFrame
-      })
+      id, text, maxPostings, GenTable.toBatchLog(batchId, matchesDir))
     ()
   }
 
@@ -739,15 +724,13 @@ object InvertedIndex {
         // independent targets (postings vs termdf vs stats) — appended
         // concurrently; the termdf sidecar exists only in the
         // impact-ordered era (appends adopt the index's layout)
-        GenTable.probeThenAppend(batchId, () => materialize(log),
-          Seq[Option[(String, String) => Unit]](
-            Some((mode, gen) => writePartitioned(post, postingsPath(path), layout, mode, gen)),
-            Some((mode, gen) =>
-              writeStats(docStatsOf(batch, id, text), statsPath(path), mode, gen)),
-            Option.when(layout.impactOrdered)((mode, gen) =>
-              writeTermDf(post, termdfPath(path), layout, mode, gen)),
-            pos.map(p => (mode, gen) =>
-              writePositions(p, positionsPath(path), layout, mode, gen))).flatten)
+        GenTable.probeThenAppend(batchId, () => materialize(log), Seq(
+          Some((postingRows(post, layout), postingsPath(path), postingsSpread(layout))),
+          Some((docStatsOf(batch, id, text), statsPath(path), statsSpread)),
+          Option.when(layout.impactOrdered)(
+            (termDfOf(post), termdfPath(path), termdfSpread(layout))),
+          pos.map(p => (positionRows(p), positionsPath(path), positionsSpread(layout)))
+        ).flatten: _*)
       } finally { post.unpersist(); pos.foreach(_.unpersist()); () }
     }
 
@@ -765,110 +748,52 @@ object InvertedIndex {
     * AND from the recomputed generation stats (df/N/avgdl snap to the
     * post-takedown corpus — the Lucene merge semantics). Every fold
     * rewrites into the impact-ordered era, so a PRE-ERA index never
-    * skips: the in-stream fold is also its upgrade. */
+    * skips: the in-stream fold is also its upgrade, stamped into the
+    * meta once every table has committed. */
   def compact(spark: SparkSession, path: String,
-      keepBatch: Option[Long] = None): Unit = {
+      keepBatch: Option[Long] = None): Unit = IndexLock.withWriter(path) {
     val cfg = adoptMeta(spark, path, Config())
+    // the LSM merge is where a pre-era index upgrades: irn materialized,
+    // termdf sidecar created (first committed by a rename), meta stamped
+    val upgraded = cfg.copy(impactOrdered = true)
     val pkTables = Seq(postingsPath(path), termdfPath(path)) ++
       (if (cfg.positions) Seq(positionsPath(path)) else Nil)
     GenTable.fold(spark, path, keepBatch,
       tables = pkTables.map(_ -> true) :+ (statsPath(path) -> false),
-      heal = pkTables :+ statsPath(path),
+      swap = pkTables :+ statsPath(path),
       tombs = Some(GenTable.Tombs(tombsPath(path), "doc_id", postingsPath(path))),
       skippable = cfg.impactOrdered) { f =>
-      // stats recompute below derives each gen's row from its REWRITTEN
-      // postings: one row per doc survives as distinct (doc_id, dl) —
-      // every doc has ≥ 1 token under string_split semantics, so no doc
-      // is lost there
-      // Every compact rewrites into the impact-ordered era (the LSM merge
-      // is where a pre-era index upgrades: irn materialized, termdf
-      // sidecar created, meta stamped) — probes adopt the new layout from
-      // the meta the moment the swaps land.
-      val upgraded = cfg.copy(impactOrdered = true)
-      val postStaged = s"${postingsPath(path)}.compacting"
-      Layout.healSwap(spark, postStaged, postingsPath(path))
-      val all = spark.read.parquet(postingsPath(path))
-      val dataCols = Seq("term", "doc_id", "tf", "dl").map(col)
-      // positions fold mirrors the postings fold verbatim (tombstoned docs
-      // drop, keepGen rewritten as its own generation) — the sidecar only
-      // exists on positions-enabled indexes; a positions-less index stays
-      // positions-less (there is nothing to derive them from).
-      val posStaged = s"${positionsPath(path)}.compacting"
-      val positionsFold: () => Unit = () => if (cfg.positions) {
-        Layout.healSwap(spark, posStaged, positionsPath(path))
-        val allPos = spark.read.parquet(positionsPath(path))
-        val posCols = Seq("term", "doc_id", "pos", "dl").map(col)
-        GenTable.writeGens(
-          f.dropTombstoned(allPos)
-            .select(posCols :+ f.target.as("__gen"): _*)
-            .withColumn("__part", termPk(upgraded)),
-          posStaged, upgraded.postFiles,
-          col("term"), col("doc_id"), col("pos"))
-      }
-      // the postings fold and the positions fold read and write DISJOINT
-      // tables — one concurrent round instead of two serial rewrites; each
-      // lands base + kept in ONE shuffle + write job (GenTable.writeGens)
+      val postStaged = f.staged(postingsPath(path))
+      // the postings fold and the positions fold (which exists only on a
+      // positions-enabled index) read and write DISJOINT tables — one
+      // concurrent round, one write each; the impact rank is a
+      // per-(term, GENERATION) property, so it ranks within each row's
+      // target generation
       Par.all(
-        () => {
-          val folded = f.dropTombstoned(all)
-            .select(dataCols :+ f.target.as("__gen"): _*)
-          // the impact rank is a per-(term, GENERATION) property — the
-          // multi-gen write ranks within __gen so each generation's prefix
-          // is exactly what its own writePartitioned would have produced
-          val wImp = Window.partitionBy(col("term"), col("__gen"))
-            .orderBy(col("tf").desc, col("doc_id"))
-          GenTable.writeGens(
-            folded.withColumn("irn", row_number().over(wImp))
-              .withColumn("__part", termPk(upgraded)),
-            postStaged, upgraded.postFiles, col("term"), col("irn"))
-        },
-        positionsFold)
+        () => f.write(
+          withImpactRank(f.dropTombstoned(spark.read.parquet(postingsPath(path)))
+            .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("gen")),
+            f.target),
+          postStaged, postingsSpread(upgraded)),
+        () => if (cfg.positions)
+          f.write(f.dropTombstoned(spark.read.parquet(positionsPath(path))),
+            f.staged(positionsPath(path)), positionsSpread(upgraded)))
       // termdf + stats recomputed from the STAGED rewrite (the committed
       // bytes, not the plan) — independent target tables over the same
-      // read-only staged rows, so the two derivations share one round too
-      // (each a single multi-gen write); then all tables swap
+      // read-only staged rows, so the two derivations share one round.
+      // A doc lives in exactly one generation and has ≥ 1 token under
+      // string_split semantics, so the distinct (doc_id, dl) rows per
+      // generation are its docs.
       val stagedRows = spark.read.parquet(postStaged)
-      val termdfStaged = s"${termdfPath(path)}.compacting"
-      val statsStaged = s"${statsPath(path)}.compacting"
       Par.all(
-        () => {
-          Layout.healSwap(spark, termdfStaged, termdfPath(path))
-          GenTable.writeGens(
-            stagedRows.groupBy(col("term"), col("gen").as("__gen"))
-              .agg(count(lit(1)).as("df"))
-              .withColumn("__part", termPk(upgraded)),
-            termdfStaged, upgraded.postFiles, col("term"))
-        },
-        () => {
-          Layout.healSwap(spark, statsStaged, statsPath(path))
-          // one distinct + one grouped agg across all generations — a doc
-          // lives in exactly one, so the per-gen rows equal the serial
-          // statsFromPostings spelling
-          stagedRows.select(col("doc_id"), col("dl"), col("gen")).distinct()
+        () => f.write(stagedRows.groupBy(col("term"), col("gen"))
+            .agg(count(lit(1)).as("df")),
+          f.staged(termdfPath(path)), termdfSpread(upgraded)),
+        () => f.write(stagedRows.select(col("doc_id"), col("dl"), col("gen")).distinct()
             .groupBy(col("gen"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-            .select(col("n_docs"), col("sum_dl"), col("gen"))
-            .coalesce(1).write.partitionBy("gen")
-            .mode("overwrite").parquet(statsStaged)
-        })
-      Layout.swapInto(spark, postStaged, postingsPath(path))
-      swapOrPlace(spark, termdfStaged, termdfPath(path))
-      if (cfg.positions) Layout.swapInto(spark, posStaged, positionsPath(path))
-      Layout.swapInto(spark, statsStaged, statsPath(path))
-      writeMeta(spark, path, upgraded)
+            .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
+          f.staged(statsPath(path)), statsSpread))
     }
-  }
-
-  /** [[Layout.swapInto]] when `target` exists; a plain rename otherwise —
-    * the legacy→impact-ordered upgrade creates the termdf table for the
-    * first time at compact. */
-  private def swapOrPlace(spark: SparkSession, staged: String,
-      target: String): Unit = {
-    val t = new org.apache.hadoop.fs.Path(target)
-    val fs = t.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(t)) Layout.swapInto(spark, staged, target)
-    else if (!fs.rename(new org.apache.hadoop.fs.Path(staged), t))
-      throw new IllegalStateException(
-        s"compact: cannot move $staged into $target — re-run compact")
+    if (!cfg.impactOrdered) writeMeta(spark, path, upgraded)
   }
 }

@@ -125,23 +125,11 @@ object IvfIndex {
 
   // ------------------------------------------------------ ingest corpus
 
-  /** One generation of the persisted IVF corpus (`gen` is a hive
-    * partition level, the GenTable lifecycle; "replace-gen" is dynamic
-    * partition overwrite), rows cell-clustered WITHIN the generation so
-    * per-file min/max on `cell` keeps a probe's scan proportional to its
-    * touched cells across every generation. */
-  private def writeGen(assigned: DataFrame, path: String, files: Int,
-      mode: String, gen: String): Unit = {
-    val w = assigned.withColumn("gen", lit(gen))
-      .repartitionByRange(files, col("cell"))
-      .sortWithinPartitions(col("cell"))
-      .write.partitionBy("gen")
-    mode match {
-      case "replace-gen" =>
-        w.option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(path)
-      case m => w.mode(m).parquet(path)
-    }
-  }
+  /** How the persisted IVF corpus spreads (the GenTable lifecycle): rows
+    * cell-clustered WITHIN each generation, so per-file min/max on `cell`
+    * keeps a probe's scan proportional to its touched cells across every
+    * generation. */
+  private def corpusSpread(files: Int) = GenTable.Spread.Range(files, col("cell"))
 
   /** Build the persisted cell-clustered corpus (`gen=base`) under a
     * FROZEN quantizer — the FAISS add-after-train contract's `train+add`
@@ -149,11 +137,11 @@ object IvfIndex {
   def buildCorpus(emb: DataFrame, path: String, cents: Seq[Seq[Float]],
       files: Int = 4, id: String = "vec_id", vec: String = "embedding"): Unit = {
     val spark = emb.sparkSession
-    writeGen(
+    GenTable.build(
       graft.sources.Tables.spread(emb)
         .select(col(id).as("vec_id"), col(vec).as("embedding"))
         .withColumn("cell", cellOf(spark, col("embedding"), cents)),
-      path, files, "overwrite", "base")
+      path, corpusSpread(files))
   }
 
   /** One ingest batch against the persisted corpus: ANN-probe the
@@ -174,20 +162,17 @@ object IvfIndex {
       nprobe: Int = 2, files: Int = 2, id: String = "vec_id",
       vec: String = "embedding"): DataFrame =
     probeAppendCore(spark, path, batch, cents, batchId, k, nprobe, files,
-      id, vec, ann => Caches.localize(ann, maxRows = 1 << 22)
-        .getOrElse(ann.localCheckpoint()))
+      id, vec, GenTable.localized(1 << 22))
 
   /** [[probeAndAppend]] with the ANN rows written DIRECTLY into the
-    * `batch_id`-partitioned log (GenTable.writeBatchLog) — one job per
+    * `batch_id`-partitioned log (GenTable.toBatchLog) — one job per
     * micro-batch instead of localize + write. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       batch: DataFrame, annDir: String, cents: Seq[Seq[Float]],
       batchId: Long, k: Int = 3, nprobe: Int = 2, files: Int = 2,
       id: String = "vec_id", vec: String = "embedding"): Unit = {
     probeAppendCore(spark, path, batch, cents, Some(batchId), k, nprobe,
-      files, id, vec, { ann =>
-        GenTable.writeBatchLog(ann, batchId, annDir); spark.emptyDataFrame
-      })
+      files, id, vec, GenTable.toBatchLog(batchId, annDir))
     ()
   }
 
@@ -227,10 +212,9 @@ object IvfIndex {
         .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
           round(col("cos"), 4).as("cos_sim"))
       // k rows per batch vector — bounded by construction
-      GenTable.probeThenAppend(batchId, () => materialize(ann), Seq(
-        (mode, gen) => writeGen(
-          assigned.select(col("vec_id"), col("embedding"), col("cell")),
-          path, files, mode, gen)))
+      GenTable.probeThenAppend(batchId, () => materialize(ann),
+        (assigned.select(col("vec_id"), col("embedding"), col("cell")), path,
+          corpusSpread(files)))
     } finally assigned.unpersist()
   }
 
@@ -263,30 +247,14 @@ object IvfIndex {
 
   /** Fold the corpus's accumulated generations back into one tight
     * `gen=base` layout (`files` globally cell-clustered files) — the
-    * GenTable.fold lifecycle, with `Layout.swapInto` as the commit. Run
-    * it at whatever cadence keeps per-cell file counts bounded. */
+    * GenTable.fold lifecycle, one write. Run it at whatever cadence keeps
+    * per-cell file counts bounded. */
   def compactCorpus(spark: SparkSession, path: String, files: Int = 4,
       keepBatch: Option[Long] = None): Unit =
     GenTable.fold(spark, path, keepBatch, tables = Seq(path -> false),
-      heal = Seq(path),
+      swap = Seq(path),
       tombs = Some(GenTable.Tombs(tombsPath(path), "vec_id", path))) { f =>
-      val staged = s"$path.compacting"
-      Layout.healSwap(spark, staged, path)
-      val all = f.dropTombstoned(spark.read.parquet(path)
-        .select(col("vec_id"), col("embedding"), col("cell"), col("gen")))
-      f.keepGen match {
-        case Some(_) =>
-          // one pass, one write: the target generation derives in-row,
-          // base + kept land in a single shuffle + write job; the (gen,
-          // cell) task sort keeps every output file cell-sorted within
-          // its generation, so min/max cell pruning is unchanged
-          all.select(col("vec_id"), col("embedding"), col("cell"), f.target.as("gen"))
-            .repartitionByRange(files, col("cell"))
-            .sortWithinPartitions(col("gen"), col("cell"))
-            .write.partitionBy("gen").mode("overwrite").parquet(staged)
-        case None =>
-          writeGen(all.drop("gen"), staged, files, "overwrite", "base")
-      }
-      Layout.swapInto(spark, staged, path)
+      f.write(f.dropTombstoned(spark.read.parquet(path)), f.staged(path),
+        corpusSpread(files))
     }
 }

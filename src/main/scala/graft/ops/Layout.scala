@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Write-side data layout for scan pruning — the storage half of the
@@ -44,10 +45,34 @@ object Layout {
       .sortWithinPartitions(cols: _*)
       .write.mode(mode).parquet(path)
 
-  /** The shared compaction commit, used by [[compact]] and by every
-    * index family's fold body (GenTable.fold): rename-ASIDE, not
-    * delete-first — `target` → `target.old`, `staged` → `target`, then
-    * drop `.old`. At no point is the data deleted before its
+  /** Where a staged rewrite of `target` is written before it commits
+    * (perfbench's tracer recognises fold writes by this name). */
+  def staged(target: String): String = s"$target.compacting"
+
+  /** The one staged commit, behind every compaction: [[compact]],
+    * ChangelogMerge.compact and GenTable.fold (every index family's
+    * fold). Heal each target ([[healSwap]]), run `write` — which writes
+    * each target's replacement to [[staged]]`(target)` — then commit the
+    * targets in order: [[swapInto]] when the target exists, a plain
+    * rename when it did not (a table the rewrite creates for the first
+    * time, e.g. BM25's termdf sidecar on a pre-era index). A crash at any
+    * point is recovered by re-running the compaction. */
+  def stagedCommit(spark: SparkSession, targets: Seq[String])(write: => Unit): Unit = {
+    targets.foreach(t => healSwap(spark, staged(t), t))
+    write
+    targets.foreach { t =>
+      val cur = new HPath(t)
+      val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(cur)) swapInto(spark, staged(t), t)
+      else if (!fs.rename(new HPath(staged(t)), cur))
+        throw new IllegalStateException(
+          s"stagedCommit: cannot move ${staged(t)} into $t - re-run compact")
+    }
+  }
+
+  /** The commit of one target, called only by [[stagedCommit]]:
+    * rename-ASIDE, not delete-first — `target` → `target.old`, `staged`
+    * → `target`, then drop `.old`. At no point is the data deleted before its
     * replacement is in place, so every crash point leaves a recoverable
     * state, and [[healSwap]] (run at the START of each compaction)
     * repairs it mechanically — which makes "re-run compact" a TRUE
@@ -65,12 +90,10 @@ object Layout {
     * and compaction on one serialized thread). Lifting that restriction
     * is the manifest-commit upgrade path: readers resolve a manifest
     * pointer and never dereference a renamed directory. */
-  def swapInto(spark: org.apache.spark.sql.SparkSession, staged: String,
-      target: String): Unit = {
+  private def swapInto(spark: SparkSession, staged: String, target: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val (cur, stg, old) = (new org.apache.hadoop.fs.Path(target),
-      new org.apache.hadoop.fs.Path(staged),
-      new org.apache.hadoop.fs.Path(s"$target.old"))
+    val (cur, stg, old) = (new HPath(target), new HPath(staged),
+      new HPath(s"$target.old"))
     val fs = cur.getFileSystem(conf)
     if (fs.exists(old)) fs.delete(old, true) // stale .old from a crash
     if (!fs.rename(cur, old))
@@ -91,14 +114,13 @@ object Layout {
     * that may race an in-flight writer-side compaction (outside the
     * documented single-writer serialization): a reader running the full
     * healSwap could delete the writer's freshly staged directory and
-    * fail its swapInto spuriously (r14 advice). Writers keep calling
-    * [[healSwap]] at compaction entry, where the single-writer fence
-    * makes the stale-dir cleanup safe. */
-  def healRestore(spark: org.apache.spark.sql.SparkSession,
-      target: String): Unit = {
+    * fail its swapInto spuriously (r14 advice). Writers heal with
+    * [[healSwap]] at compaction entry ([[stagedCommit]]), where the
+    * single-writer fence makes the stale-dir cleanup safe. */
+  def healRestore(spark: SparkSession, target: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val cur = new org.apache.hadoop.fs.Path(target)
-    val old = new org.apache.hadoop.fs.Path(s"$target.old")
+    val cur = new HPath(target)
+    val old = new HPath(s"$target.old")
     val fs = cur.getFileSystem(conf)
     if (!fs.exists(cur) && fs.exists(old)) {
       if (!fs.rename(old, cur))
@@ -113,12 +135,10 @@ object Layout {
     *  - stale `staged`/`target.old` next to an intact `target`: drop
     *    them (dead staging from an interrupted run).
     * Idempotent; call with the staged path a new compaction will use. */
-  def healSwap(spark: org.apache.spark.sql.SparkSession, staged: String,
-      target: String): Unit = {
+  private def healSwap(spark: SparkSession, staged: String, target: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val (cur, stg, old) = (new org.apache.hadoop.fs.Path(target),
-      new org.apache.hadoop.fs.Path(staged),
-      new org.apache.hadoop.fs.Path(s"$target.old"))
+    val (cur, stg, old) = (new HPath(target), new HPath(staged),
+      new HPath(s"$target.old"))
     val fs = cur.getFileSystem(conf)
     if (!fs.exists(cur) && fs.exists(old)) {
       if (!fs.rename(old, cur))
@@ -137,15 +157,11 @@ object Layout {
     * per key range. One full rewrite (the same one-pass range shuffle as
     * [[clusteredWrite]]) restores `files` globally-disjoint files — run
     * off the ingest path at whatever cadence keeps per-range file counts
-    * bounded. Commits via [[swapInto]] after a [[healSwap]], so a crash
-    * at any point is recovered by re-running compact. */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      files: Int, cols: Column*): Unit = {
-    val staged = s"$path.compacting"
-    healSwap(spark, staged, path)
-    clusteredWrite(spark.read.parquet(path), staged, files, "overwrite", cols: _*)
-    swapInto(spark, staged, path)
-  }
+    * bounded. Commits via [[stagedCommit]], so a crash at any point is
+    * recovered by re-running compact. */
+  def compact(spark: SparkSession, path: String, files: Int, cols: Column*): Unit =
+    stagedCommit(spark, Seq(path))(
+      clusteredWrite(spark.read.parquet(path), staged(path), files, cols: _*))
 
   /** Multi-column Z-ORDER write: single-column clustering serves one
     * predicate column and scatters every other — `clusteredWrite` on

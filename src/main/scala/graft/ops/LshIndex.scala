@@ -136,22 +136,19 @@ object LshIndex {
     TextOps.lshBands(sig, id, cfg.k, cfg.r)
       .select(col("band"), col("key"), col(id).as("doc_id"))
 
-  /** The bands table write (GenTable's bucketed layout, clustered on the
-    * bucket key). Bucket size is governed by `indexPartitions`
+  /** How the bands table spreads: GenTable's bucketed layout, clustered
+    * on the bucket key. Bucket size is governed by `indexPartitions`
     * ([[sizedConfig]] keeps a directory at a few GB), so the
     * one-task-per-bucket write is the scale-correct shape. */
-  private def writeBands(bands: DataFrame, path: String, cfg: Config,
-      mode: String, gen: String): Unit =
-    GenTable.writePartitioned(bands.withColumn("__part", bandPk(cfg)),
-      bandsPath(path), cfg.bandFiles, mode, gen, col("band"), col("key"))
+  private def bandsSpread(cfg: Config) =
+    GenTable.Spread.Hash(cfg.bandFiles, bandPk(cfg), col("band"), col("key"))
 
-  /** The sigs table write, bucketed and clustered on doc_id. */
-  private def writeSigs(sig: DataFrame, path: String, cfg: Config, id: String,
-      mode: String, gen: String): Unit =
-    GenTable.writePartitioned(
-      sig.select(col(id).as("doc_id"), col("sh"))
-        .withColumn("__part", sigPs(cfg, col("doc_id"))),
-      sigsPath(path), cfg.sigFiles, mode, gen, col("doc_id"))
+  /** How the sigs table spreads: bucketed and clustered on doc_id. */
+  private def sigsSpread(cfg: Config) =
+    GenTable.Spread.Hash(cfg.sigFiles, sigPs(cfg, col("doc_id")), col("doc_id"))
+
+  private def sigRows(sig: DataFrame, id: String): DataFrame =
+    sig.select(col(id).as("doc_id"), col("sh"))
 
   /** Build the index at `path` from a base corpus (full recompute — run
     * once; subsequent batches go through [[probeAndAppend]]). */
@@ -165,8 +162,8 @@ object LshIndex {
     * frame — shared by [[build]] and [[buildSized]]. */
   private def buildFromSig(sig: DataFrame, path: String, cfg: Config,
       id: String): Unit = {
-    writeBands(bandsOf(sig, cfg, id), path, cfg, "overwrite", "base")
-    writeSigs(sig, path, cfg, id, "overwrite", "base")
+    GenTable.build(bandsOf(sig, cfg, id), bandsPath(path), bandsSpread(cfg))
+    GenTable.build(sigRows(sig, id), sigsPath(path), sigsSpread(cfg))
     writeMeta(sig.sparkSession, path, cfg)
   }
 
@@ -353,11 +350,10 @@ object LshIndex {
       cfg: Config = Config(), id: String = "doc_id",
       text: String = "text", batchId: Option[Long] = None): DataFrame =
     probeAppendCore(spark, path, newDocs, cfg, id, text, batchId,
-      pairs => Caches.localize(pairs, maxRows = 1 << 20)
-        .getOrElse(pairs.localCheckpoint()))
+      GenTable.localized(1 << 20))
 
   /** [[probeAndAppend]] with the verified pairs written DIRECTLY into
-    * the `batch_id`-partitioned pair log (GenTable.writeBatchLog) instead
+    * the `batch_id`-partitioned pair log (GenTable.toBatchLog) instead
     * of a driver-side localize followed by a second write job: the log
     * write IS the pre-append materialization — one job where the
     * streaming ingest paid two per micro-batch. This is the body
@@ -367,9 +363,7 @@ object LshIndex {
       id: String = "doc_id", text: String = "text",
       batchId: Long = 0L): Unit = {
     probeAppendCore(spark, path, newDocs, cfg, id, text, Some(batchId),
-      { pairs =>
-        GenTable.writeBatchLog(pairs, batchId, pairsDir); spark.emptyDataFrame
-      }, needOrdered = false)
+      GenTable.toBatchLog(batchId, pairsDir), needOrdered = false)
     ()
   }
 
@@ -392,9 +386,9 @@ object LshIndex {
       val pairsOut = if (needOrdered) probe.pairs else probe.pairsUnordered
       // independent targets (bands vs sigs), shared input persisted
       // (sig) or driver-local (newBands) — appended concurrently
-      GenTable.probeThenAppend(batchId, () => materialize(pairsOut), Seq(
-        (mode, gen) => writeBands(newBands, path, layout, mode, gen),
-        (mode, gen) => writeSigs(sig, path, layout, id, mode, gen)))
+      GenTable.probeThenAppend(batchId, () => materialize(pairsOut),
+        (newBands, bandsPath(path), bandsSpread(layout)),
+        (sigRows(sig, id), sigsPath(path), sigsSpread(layout)))
     } finally probeCaches.foreach(_.unpersist())
   }
 
@@ -414,37 +408,26 @@ object LshIndex {
     * file per pk directory — the shape a fresh [[build]] produces — so
     * probes stop paying one extra file per past ingest batch. Run it at
     * whatever cadence keeps per-directory file counts bounded (e.g. the
-    * ingest's `compactEvery`). Each table commits via Layout.swapInto
+    * ingest's `compactEvery`). The tables commit via Layout.stagedCommit
     * (rename-aside: a crash at any point is recovered by re-running
     * compact); out-of-band READERS of a mid-fold index may see a
-    * transient path-not-found — see swapInto's scaladoc. */
+    * transient path-not-found — see Layout.swapInto's scaladoc. */
   def compact(spark: SparkSession, path: String,
       keepBatch: Option[Long] = None): Unit = {
     val cfg = adoptMeta(spark, path, Config())
     GenTable.fold(spark, path, keepBatch,
       tables = Seq(bandsPath(path) -> true, sigsPath(path) -> true),
-      heal = Seq(bandsPath(path), sigsPath(path)),
+      swap = Seq(bandsPath(path), sigsPath(path)),
       tombs = Some(GenTable.Tombs(tombsPath(path), "doc_id", sigsPath(path)))) { f =>
-      // ONE pass, one write per table: every surviving row maps to its
-      // target generation in-row and GenTable.writeGens lands base + kept
-      // in a single shuffle + write job; __part is recomputed rather than
+      // ONE pass, one write per table: every surviving row lands in its
+      // target generation; the pk bucket is recomputed rather than
       // trusting the read-back pk (identical by construction, but the
-      // hash is the layout's source of truth)
-      def rewrite(tablePath: String, files: Int, dataCols: Seq[String],
-          part: Column, cluster: Column*): Unit = {
-        val staged = s"$tablePath.compacting"
-        Layout.healSwap(spark, staged, tablePath)
-        val out = f.dropTombstoned(spark.read.parquet(tablePath))
-          .select(dataCols.map(col) :+ f.target.as("__gen"): _*)
-        GenTable.writeGens(out.withColumn("__part", part), staged, files, cluster: _*)
-        Layout.swapInto(spark, staged, tablePath)
-      }
-      // independent targets: their fold jobs run concurrently
-      Par.all(
-        () => rewrite(bandsPath(path), cfg.bandFiles,
-          Seq("band", "key", "doc_id"), bandPk(cfg), col("band"), col("key")),
-        () => rewrite(sigsPath(path), cfg.sigFiles, Seq("doc_id", "sh"),
-          sigPs(cfg, col("doc_id")), col("doc_id")))
+      // hash is the layout's source of truth). Independent targets: their
+      // fold jobs run concurrently.
+      def rewrite(t: String, spread: GenTable.Spread): () => Unit = () =>
+        f.write(f.dropTombstoned(spark.read.parquet(t)), f.staged(t), spread)
+      Par.all(rewrite(bandsPath(path), bandsSpread(cfg)),
+        rewrite(sigsPath(path), sigsSpread(cfg)))
     }
   }
 }

@@ -32,24 +32,17 @@ object PqIndex {
   val K = 16
 
   /** Null-cell precondition cache: table path → the GENERATION LISTING
-    * under which the check last passed. The pruned probe's guard is a
-    * corpus-column scan job; its answer only changes when the table's
-    * generations change, so a probe re-pays the scan only when the
-    * listing differs from the validated one (one FS metadata listStatus
-    * per batch instead of a data pass — r14 advice), and the writer
-    * pre-marks its own cell-carrying appends valid. An out-of-band
-    * append (e.g. a cell-less or null-cell generation written by
-    * another tool) changes the listing and forces a fresh check. */
+    * (GenTable.genNames) under which the check last passed. The pruned
+    * probe's guard is a corpus-column scan job; its answer only changes
+    * when the table's generations change, so a probe re-pays the scan
+    * only when the listing differs from the validated one (one FS
+    * metadata glob per batch instead of a data pass — r14 advice), and
+    * the writer pre-marks its own cell-carrying appends valid. An
+    * out-of-band append (e.g. a cell-less or null-cell generation
+    * written by another tool) changes the listing and forces a fresh
+    * check. */
   private val cellValidated =
     new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
-
-  /** The table's current generation directory names — the cache key for
-    * [[cellValidated]]. */
-  private def genListing(spark: SparkSession, path: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith("gen=")).toSet
-  }
 
   /** Centroid `k`'s sub-vector for subspace `m`, as a plan literal. */
   def centLit(base: Seq[Seq[Float]], m: Int, k: Int): Column =
@@ -87,54 +80,39 @@ object PqIndex {
         cellCents.map(c => IvfIndex.cellOf(
           vectors.sparkSession, col(vec), c).as("cell")).toSeq): _*)
 
-  /** Generation writer. With `cluster = true`, code tables carrying a
-    * `cell` column are cell-CLUSTERED within the generation
-    * (range-partition + sort on `cell`, the IvfIndex.writeGen layout)
-    * so parquet min/max stats on `cell` are tight per row group and per
-    * file: a pruned probe's pushed `cell IN (touched)` filter skips
-    * every non-matching row group, reducing an untouched file to a
-    * footer read — the data-bytes-scale-with-touched-cells property the
-    * IVFPQ probe relies on. (Spark's file LISTING is pruned only by
-    * hive-partition columns — `gen` here; within a generation the stats
-    * do the skipping.)
+  /** How a rewrite of the code table spreads: tables carrying a `cell`
+    * column are cell-CLUSTERED within each generation (the IvfIndex
+    * corpus layout) so parquet min/max stats on `cell` are tight per row
+    * group and per file: a pruned probe's pushed `cell IN (touched)`
+    * filter skips every non-matching row group, reducing an untouched
+    * file to a footer read — the data-bytes-scale-with-touched-cells
+    * property the IVFPQ probe relies on. (Spark's file LISTING is pruned
+    * only by hive-partition columns — `gen` here; within a generation the
+    * stats do the skipping.) Cell-less tables keep the plain round-robin
+    * spread (flat ADC scans read everything anyway).
     *
-    * WHO clusters is the LSM split (the r14 q138 lesson): the base
-    * build and the COMPACTION cluster (`cluster = true` — they are the
-    * offline, amortized rewrites), but a per-batch streaming APPEND
-    * does NOT (`cluster = false`) — the range shuffle's sampling pass +
-    * sort per micro-batch made the ingest pay at write time, on every
-    * batch, what probes save at read time (q138 sf1 regressed
-    * 34.6 → 44.7 s from exactly that). Probes row-group-prune the
-    * compacted generations and scan the small uncompacted batch tail
-    * flat — `cell IN (touched)` still row-filters the tail, it just
-    * reads its few small files whole, which is O(batches-since-
-    * compaction), bounded by the compactEvery cadence. Cell-less
-    * tables keep the plain hash spread (flat ADC scans read
-    * everything anyway). */
-  private def writeGen(codes: DataFrame, path: String, files: Int,
-      mode: String, gen: String, cluster: Boolean): Unit = {
-    val clustered =
-      if (cluster && codes.columns.contains("cell"))
-        codes.repartitionByRange(files, col("cell"))
-          .sortWithinPartitions(col("cell"))
-      else codes.repartition(files)
-    val w = clustered.withColumn("gen", lit(gen))
-      .write.partitionBy("gen")
-    mode match {
-      case "replace-gen" =>
-        w.option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(path)
-      case m => w.mode(m).parquet(path)
-    }
-  }
+    * WHO clusters is the LSM split (the r14 q138 lesson): the base build
+    * and the fold cluster (they are the offline, amortized rewrites),
+    * but a per-batch streaming APPEND does NOT — it spreads round-robin:
+    * the range shuffle's sampling pass + sort per micro-batch made the
+    * ingest pay at write time, on every batch, what probes save at read
+    * time (q138 sf1 regressed 34.6 → 44.7 s from exactly that). Probes
+    * row-group-prune the folded generations and scan the small unfolded
+    * batch tail flat — `cell IN (touched)` still row-filters the tail, it
+    * just reads its few small files whole, which is
+    * O(batches-since-fold), bounded by the compactEvery cadence. */
+  private def clustered(codes: DataFrame, files: Int): GenTable.Spread =
+    if (codes.columns.contains("cell")) GenTable.Spread.Range(files, col("cell"))
+    else GenTable.Spread.RoundRobin(files)
 
   /** Build the persisted code table (`gen=base`) under frozen codebooks
     * — the train+add half. One map-side encode, one narrow write. */
   def buildCodes(vectors: DataFrame, path: String, base: Seq[Seq[Float]],
       files: Int = 4, id: String = "vec_id", vec: String = "embedding",
-      cellCents: Option[Seq[Seq[Float]]] = None): Unit =
-    writeGen(graft.sources.Tables.spread(
-        encode(vectors, base, id, vec, cellCents)), path, files,
-      "overwrite", "base", cluster = true)
+      cellCents: Option[Seq[Seq[Float]]] = None): Unit = {
+    val codes = graft.sources.Tables.spread(encode(vectors, base, id, vec, cellCents))
+    GenTable.build(codes, path, clustered(codes, files))
+  }
 
   /** One ingest batch against the persisted code table: ADC-probe the
     * PRE-batch state for each batch vector's top-`k` neighbors (probe's
@@ -159,8 +137,8 @@ object PqIndex {
     * pruning restores the ≤ nprobe/K fraction). The scan prunes at two
     * levels: the batch's DISTINCT probed cells (a bounded ≤ K-int
     * collect, IvfIndex's pattern) push into the parquet scan as
-    * `cell IN (touched)` — row-group pruning against writeGen's
-    * cell-clustered layout — and each surviving (probe, candidate)
+    * `cell IN (touched)` — row-group pruning against the
+    * cell-clustered layout ([[clustered]]) — and each surviving (probe, candidate)
     * pair still checks `array_contains(pcells, cell)`, so the pair
     * enumeration is probes × touched-cell rows, never probes ×
     * corpus. */
@@ -170,11 +148,10 @@ object PqIndex {
       vec: String = "embedding",
       prune: Option[(Seq[Seq[Float]], Int)] = None): DataFrame =
     probeAppendCore(spark, path, batch, base, batchId, k, files, id, vec,
-      prune, ann => Caches.localize(ann, maxRows = 1 << 22)
-        .getOrElse(ann.localCheckpoint()))
+      prune, GenTable.localized(1 << 22))
 
   /** [[probeAndAppend]] with the ANN rows written DIRECTLY into the
-    * `batch_id`-partitioned log (GenTable.writeBatchLog) — one job per
+    * `batch_id`-partitioned log (GenTable.toBatchLog) — one job per
     * micro-batch instead of localize + write. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
       batch: DataFrame, annDir: String, base: Seq[Seq[Float]],
@@ -182,9 +159,7 @@ object PqIndex {
       vec: String = "embedding",
       prune: Option[(Seq[Seq[Float]], Int)] = None): Unit = {
     probeAppendCore(spark, path, batch, base, Some(batchId), k, files, id,
-      vec, prune, { ann =>
-        GenTable.writeBatchLog(ann, batchId, annDir); spark.emptyDataFrame
-      })
+      vec, prune, GenTable.toBatchLog(batchId, annDir))
     ()
   }
 
@@ -226,7 +201,7 @@ object PqIndex {
         // generations changed since the last clean check — the writer's
         // own appends below re-mark the new listing valid for free, so
         // a streaming ingest pays the scan once, not per micro-batch.
-        val gens = genListing(spark, path)
+        val gens = GenTable.genNames(spark, path, nested = false)
         if (!Option(cellValidated.get(path)).contains(gens)) {
           val nullCells = corpusRaw.where(col("cell").isNull).limit(1).count()
           require(nullCells == 0L,
@@ -238,7 +213,7 @@ object PqIndex {
       }
       // bounded collect (≤ K cell ids): the batch's distinct probed
       // cells, pushed into the parquet scan as `cell IN (touched)` —
-      // with writeGen's cell-clustered layout this prunes at row-group
+      // with the folds' cell-clustered layout this prunes at row-group
       // level, so the pair enumeration below runs over probes ×
       // (touched-cell rows), not probes × corpus (IvfIndex's shape)
       val corpusScan = prune.fold(corpusRaw) { _ =>
@@ -261,13 +236,13 @@ object PqIndex {
       // k rows per batch vector — bounded
       // UNCLUSTERED append (LSM write path): the per-batch delta skips
       // the range-shuffle + sort — compact() restores the clustered
-      // layout for the accumulated generations (see writeGen).
-      val result = GenTable.probeThenAppend(batchId, () => materialize(ann), Seq(
-        (mode, gen) => writeGen(coded.drop("embedding"), path, files, mode, gen,
-          cluster = false)))
+      // layout for the accumulated generations (see clustered).
+      val result = GenTable.probeThenAppend(batchId, () => materialize(ann),
+        (coded.drop("embedding"), path, GenTable.Spread.RoundRobin(files)))
       // this append carries cells whenever pruning is configured — mark
       // the post-append listing valid so the next batch skips the scan
-      prune.foreach(_ => cellValidated.put(path, genListing(spark, path)))
+      prune.foreach(_ =>
+        cellValidated.put(path, GenTable.genNames(spark, path, nested = false)))
       result
     } finally coded.unpersist()
   }
@@ -275,26 +250,15 @@ object PqIndex {
   /** Fold accumulated generations back into one tight `gen=base` table
     * — the GenTable.fold lifecycle with no tombstone log (the code table
     * takes no takedowns), including the `keepBatch` lag-1 in-stream form.
-    * The code table carries no text/floats, so a rewrite moves 4 ints per
-    * vector. */
+    * The fold is WHERE clustering happens (the LSM pattern): one write
+    * lands the folded base and the kept generation, both cell-clustered
+    * ([[clustered]]). The code table carries no text/floats, so a rewrite
+    * moves 4 ints per vector. */
   def compact(spark: SparkSession, path: String, files: Int = 4,
       keepBatch: Option[Long] = None): Unit =
     GenTable.fold(spark, path, keepBatch, tables = Seq(path -> false),
-      heal = Seq(path), tombs = None) { f =>
-      val staged = s"$path.compacting"
-      Layout.healSwap(spark, staged, path)
+      swap = Seq(path), tombs = None) { f =>
       val all = spark.read.parquet(path)
-      val dataCols = all.columns.filter(_ != "gen").map(col)
-      // the compaction is WHERE clustering happens (the LSM pattern):
-      // folded base gets the tight cell-clustered layout probes prune on;
-      // the kept in-flight generation is rewritten verbatim-unclustered
-      // (it is one batch — the flat tail probes scan whole anyway)
-      writeGen(GenTable.hide(all, f.keepGen).select(dataCols: _*), staged,
-        files, "overwrite", "base", cluster = true)
-      f.keepGen.foreach { g =>
-        writeGen(all.where(col("gen") === g).select(dataCols: _*),
-          staged, files, "append", g, cluster = false)
-      }
-      Layout.swapInto(spark, staged, path)
+      f.write(all, f.staged(path), clustered(all, files))
     }
 }

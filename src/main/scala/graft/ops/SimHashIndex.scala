@@ -105,16 +105,15 @@ object SimHashIndex {
         col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  private def writeBands(bands: DataFrame, path: String, cfg: Config,
-      mode: String, gen: String): Unit =
-    GenTable.writePartitioned(bands.withColumn("__part", bandPk(cfg)),
-      bandsPath(path), cfg.bandFiles, mode, gen, col("band"), col("key"))
+  private def bandsSpread(cfg: Config) =
+    GenTable.Spread.Hash(cfg.bandFiles, bandPk(cfg), col("band"), col("key"))
 
   /** Build the index at `path` from a base corpus. */
   def build(docs: DataFrame, path: String, cfg: Config = Config(),
       id: String = "doc_id", text: String = "text",
       hashCol: Option[String] = None): Unit = {
-    writeBands(bandRows(docs, cfg, id, text, hashCol), path, cfg, "overwrite", "base")
+    GenTable.build(bandRows(docs, cfg, id, text, hashCol), bandsPath(path),
+      bandsSpread(cfg))
     writeMeta(docs.sparkSession, path, cfg)
   }
 
@@ -127,11 +126,10 @@ object SimHashIndex {
       batchId: Option[Long] = None,
       hashCol: Option[String] = None): DataFrame =
     probeAppendCore(spark, path, newDocs, cfg, id, text, batchId, hashCol,
-      pairs => Caches.localize(pairs, maxRows = 1 << 20)
-        .getOrElse(pairs.localCheckpoint()))
+      GenTable.localized(1 << 20))
 
   /** [[probeAndAppend]] with the verified pairs written DIRECTLY into
-    * the `batch_id`-partitioned pair log (GenTable.writeBatchLog) — the
+    * the `batch_id`-partitioned pair log (GenTable.toBatchLog) — the
     * LshIndex.probeAndAppendToLog form, one job per micro-batch instead
     * of two. */
   def probeAndAppendToLog(spark: SparkSession, path: String,
@@ -139,9 +137,7 @@ object SimHashIndex {
       id: String = "doc_id", text: String = "text", batchId: Long = 0L,
       hashCol: Option[String] = None): Unit = {
     probeAppendCore(spark, path, newDocs, cfg, id, text, Some(batchId),
-      hashCol, { pairs =>
-        GenTable.writeBatchLog(pairs, batchId, pairsDir); spark.emptyDataFrame
-      }, needOrdered = false)
+      hashCol, GenTable.toBatchLog(batchId, pairsDir), needOrdered = false)
     ()
   }
 
@@ -220,8 +216,8 @@ object SimHashIndex {
       val pairs = if (needOrdered)
         pairsUnordered.orderBy(col("doc_a"), col("doc_b"))
       else pairsUnordered
-      GenTable.probeThenAppend(batchId, () => materialize(pairs), Seq(
-        (mode, gen) => writeBands(newBands, path, layout, mode, gen)))
+      GenTable.probeThenAppend(batchId, () => materialize(pairs),
+        (newBands, bandsPath(path), bandsSpread(layout)))
     } finally cache.foreach(_.unpersist())
   }
 
@@ -234,25 +230,16 @@ object SimHashIndex {
     }
 
   /** Fold accumulated generations back to one tight `gen=base` layout
-    * (GenTable.fold; one stage-then-swap table). */
+    * (GenTable.fold; one table, one write). */
   def compact(spark: SparkSession, path: String,
       keepBatch: Option[Long] = None): Unit = {
     val cfg = adoptMeta(spark, path, Config())
     val tablePath = bandsPath(path)
     GenTable.fold(spark, path, keepBatch, tables = Seq(tablePath -> true),
-      heal = Seq(tablePath),
+      swap = Seq(tablePath),
       tombs = Some(GenTable.Tombs(tombsPath(path), "doc_id", tablePath))) { f =>
-      val staged = s"$tablePath.compacting"
-      Layout.healSwap(spark, staged, tablePath)
-      // one pass, one write: the target generation derives in-row,
-      // GenTable.writeGens lands base + kept in a single job
-      GenTable.writeGens(
-        f.dropTombstoned(spark.read.parquet(tablePath))
-          .select(col("doc_id"), col("sh"), col("band"), col("key"),
-            f.target.as("__gen"))
-          .withColumn("__part", bandPk(cfg)),
-        staged, cfg.bandFiles, col("band"), col("key"))
-      Layout.swapInto(spark, staged, tablePath)
+      f.write(f.dropTombstoned(spark.read.parquet(tablePath)), f.staged(tablePath),
+        bandsSpread(cfg))
     }
   }
 }

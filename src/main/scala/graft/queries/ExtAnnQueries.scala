@@ -307,8 +307,8 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
         .select(col("embedding")).collect().map(_.getSeq[Float](0).toSeq).toSeq
       // memoized deterministic base build (the lshBaseInto rule; q191's
       // dense leg shares the same base corpus + first-16 quantizer)
-      GraphFixtures.cloneIntoFor("ivfbase", dir, s"$tmp/corpus")(p =>
-        IvfIndex.buildCorpus(base, p, cents))
+      GraphFixtures.cloneIntoFor("ivfbase", dir, s"$tmp/corpus", cents, 4)(p =>
+        IvfIndex.buildCorpus(base, p, cents, files = 4))
       // stream feed: 2 micro-batches in vec_id order (q100's chunking)
       val rows = fixtureSlice(emb.where(isStream).as[(Long, Seq[Float])]).sortBy(_._1)
       val per = math.max(1, math.ceil(rows.length / 2.0).toInt)
@@ -386,7 +386,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       val path = s"$tmp/corpus"
       // memoized deterministic base build shared with q105/q191 (same
       // split, same quantizer, same files=4 layout — the lshBaseInto rule)
-      GraphFixtures.cloneIntoFor("ivfbase", dir, path)(p =>
+      GraphFixtures.cloneIntoFor("ivfbase", dir, path, cents, 4)(p =>
         IvfIndex.buildCorpus(emb.where(!isBatch), p, cents, files = 4))
       // one production ingest generation (its ANN log is not this query's
       // contract; the lifecycle below is)
@@ -1199,8 +1199,8 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       val prune = Some((base, 2))
       // memoized deterministic base build (the lshBaseInto rule): codes
       // under the frozen codebooks are bit-identical per corpus
-      GraphFixtures.cloneIntoFor("pqbase", dir, s"$tmp/codes")(p =>
-        graft.ops.PqIndex.buildCodes(baseCorpus, p, base,
+      GraphFixtures.cloneIntoFor("pqbase", dir, s"$tmp/codes", base, 4)(p =>
+        graft.ops.PqIndex.buildCodes(baseCorpus, p, base, files = 4,
           cellCents = Some(base)))
       val rows = fixtureSlice(emb.where(isStream).as[(Long, Seq[Float])]).sortBy(_._1)
       val per = math.max(1, math.ceil(rows.length / 2.0).toInt)

@@ -573,8 +573,8 @@ private[queries] trait ExtRetrievalQueries extends ExtQueryHelpers {
         .select(col("embedding")).collect().map(_.getSeq[Float](0).toSeq).toSeq
       // memoized deterministic base build shared with q105 (same split,
       // same first-16 quantizer, same layout — the lshBaseInto rule)
-      GraphFixtures.cloneIntoFor("ivfbase", dir, s"$tmp/ivf")(p =>
-        IvfIndex.buildCorpus(base, p, cents))
+      GraphFixtures.cloneIntoFor("ivfbase", dir, s"$tmp/ivf", cents, 4)(p =>
+        IvfIndex.buildCorpus(base, p, cents, files = 4))
       val rows = fixtureSlice(
         docs.where(pmod(col("doc_id"), lit(4)) === 0)
           .join(emb.withColumnRenamed("vec_id", "doc_id"), "doc_id")

@@ -50,15 +50,31 @@ private[queries] object GraphFixtures {
       new java.io.File(destPath))
 
   /** [[cloneInto]] with the memo key derived from (family, canonical
-    * data dir) — the generic entry point for gate-local deterministic
-    * base builds whose build lambda lives at the call site (e.g. the
-    * dHash/media fingerprint stages defined in the query traits). Same
+    * data dir, `inputs`) — the generic entry point for gate-local
+    * deterministic base builds whose build lambda lives at the call site
+    * (e.g. the dHash/media fingerprint stages defined in the query
+    * traits). `inputs` are the build's parameters that do not derive
+    * from the data dir (a quantizer or codebook, a file count): two
+    * builds that differ in any of them get distinct clones, so call sites
+    * sharing a family name cannot silently share a differing build. Same
     * amortization contract as every named helper below: the build is
-    * bit-identical per (family, dir) by construction, each gate mutates
-    * its own clone. */
-  def cloneIntoFor(family: String, dir: String, destPath: String)(
+    * bit-identical per key by construction, each gate mutates its own
+    * clone. */
+  def cloneIntoFor(family: String, dir: String, destPath: String, inputs: Any*)(
       build: String => Unit): Unit =
-    cloneInto(s"$family|${canon(dir)}", destPath)(build)
+    cloneInto(s"$family|${canon(dir)}|${digest(inputs)}", destPath)(build)
+
+  /** SHA-256 of a structural rendering of `inputs` — any Seq type, same
+    * elements, same digest. */
+  private def digest(inputs: Seq[Any]): String = {
+    def render(x: Any): String = x match {
+      case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(render(inputs).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+  }
 
   // ----------------------------------------------------- graph family
 

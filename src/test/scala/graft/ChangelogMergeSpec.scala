@@ -114,7 +114,7 @@ class ChangelogMergeSpec extends SparkSpecBase {
     // regression (round-14 ADVICE medium): compact used to commit via
     // delete(base) + rename(base_next, base) — a crash between the two
     // left the table with NO base and nothing self-healed. Now it
-    // commits via Layout.healSwap + swapInto (rename-aside).
+    // commits via Layout.stagedCommit (rename-aside).
     val tmp = graft.ops.Scratch.tempDir("graft_clm_crash_")
     try {
       ChangelogMerge.writeBase(base, tmp)
@@ -137,7 +137,7 @@ class ChangelogMergeSpec extends SparkSpecBase {
       ChangelogMerge.compact(spark, tmp, Seq("k"), uptoGen = 0L)
       assert(snapshot(tmp) == expect)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/base.old")))
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/base_next")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/base.compacting")))
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)

@@ -18,6 +18,11 @@ import graft.ops.{GraphIndex, InvertedIndex, IvfIndex, LshIndex, PqIndex, SimHas
   *    LshIndexLifecycleSpec, SimHashIndexSpec and IvfIndexSpec pin this
   *    for their families; it runs here for the graph and BM25 families,
   *    and PqIndex takes no takedowns.
+  *  - Fold layout: after two appended batches and a takedown, the
+  *    in-stream fold (one kept batch) and the offline fold leave every
+  *    generation directory with the pre-fold rows minus the tombstoned
+  *    ones, in the table's column order, each file sorted on the table's
+  *    cluster key, and no more files than the fold writes per generation.
   */
 class GenIndexLifecycleSpec extends SparkSpecBase {
   import spark.implicits._
@@ -33,7 +38,18 @@ class GenIndexLifecycleSpec extends SparkSpecBase {
       probe: (String, DataFrame, Long) => DataFrame,
       compact: (String, Option[Long]) => Unit,
       swapTargets: String => Seq[String],
+      tables: Seq[Table],
+      markDeleted: Option[((String, Seq[Long]) => Unit, Long)],
       takedown: Option[Takedown] = None)
+
+  /** A generation table as a fold must lay it out: its path under the
+    * index, the cluster key each file sorts on, the most files one
+    * generation directory (`pk=*` / `gen=*` for bucketed tables) may
+    * hold after the fold, the columns compared against the pre-fold rows
+    * (empty for a table the fold derives, e.g. BM25's termdf and
+    * docstats), and the id columns a tombstone removes rows by. */
+  private case class Table(path: String => String, cluster: Seq[String],
+      maxFiles: Int, rowCols: Seq[String] = Nil, ids: Seq[String] = Nil)
 
   /** The takedown scenario's inputs: `ingest` is the streaming per-batch
     * body (result log at `<root>/log`); `keptId` is a doc of `batch1` and
@@ -76,13 +92,21 @@ class GenIndexLifecycleSpec extends SparkSpecBase {
       batch0 = textBatch0,
       probe = (p, b, id) => LshIndex.probeAndAppend(spark, p, b, batchId = Some(id)),
       compact = (p, k) => LshIndex.compact(spark, p, keepBatch = k),
-      swapTargets = p => Seq(s"$p/bands", s"$p/sigs")),
+      swapTargets = p => Seq(s"$p/bands", s"$p/sigs"),
+      tables = Seq(
+        Table(p => s"$p/bands", Seq("band", "key"), 1, Seq("band", "key", "doc_id"),
+          Seq("doc_id")),
+        Table(p => s"$p/sigs", Seq("doc_id"), 1, Seq("doc_id", "sh"), Seq("doc_id"))),
+      markDeleted = Some((LshIndex.markDeleted(spark, _, _), 1L))),
     Family("SimHashIndex",
       build = SimHashIndex.build(textBase, _),
       batch0 = textBatch0,
       probe = (p, b, id) => SimHashIndex.probeAndAppend(spark, p, b, batchId = Some(id)),
       compact = (p, k) => SimHashIndex.compact(spark, p, keepBatch = k),
-      swapTargets = p => Seq(s"$p/bands")),
+      swapTargets = p => Seq(s"$p/bands"),
+      tables = Seq(Table(p => s"$p/bands", Seq("band", "key"), 1,
+        Seq("doc_id", "sh", "band", "key"), Seq("doc_id"))),
+      markDeleted = Some((SimHashIndex.markDeleted(spark, _, _), 1L))),
     Family("InvertedIndex",
       build = InvertedIndex.build(textBase, _),
       batch0 = textBatch0,
@@ -90,6 +114,14 @@ class GenIndexLifecycleSpec extends SparkSpecBase {
       compact = (p, k) => InvertedIndex.compact(spark, p, keepBatch = k),
       swapTargets = p => Seq(InvertedIndex.postingsPath(p),
         InvertedIndex.termdfPath(p), InvertedIndex.statsPath(p)),
+      // irn is re-ranked per generation by the fold, so rows compare
+      // without it
+      tables = Seq(
+        Table(InvertedIndex.postingsPath, Seq("term", "irn"), 1,
+          Seq("term", "doc_id", "tf", "dl"), Seq("doc_id")),
+        Table(InvertedIndex.termdfPath, Seq("term"), 1),
+        Table(InvertedIndex.statsPath, Nil, 1)),
+      markDeleted = Some((InvertedIndex.markDeleted(spark, _, _), 1L)),
       takedown = Some(Takedown(
         batch1 = texts(11L -> "totally unrelated fresh content never seen before",
           12L -> "totally unrelated fresh content never seen before"),
@@ -105,16 +137,27 @@ class GenIndexLifecycleSpec extends SparkSpecBase {
       batch0 = vecs(10L -> Seq(0.9f, 0.1f)),
       probe = (p, b, id) => IvfIndex.probeAndAppend(spark, p, b, cents, Some(id)),
       compact = (p, k) => IvfIndex.compactCorpus(spark, p, files = 1, keepBatch = k),
-      swapTargets = p => Seq(p)),
+      swapTargets = p => Seq(p),
+      tables = Seq(Table(p => p, Seq("cell"), 1, Seq("vec_id", "embedding", "cell"),
+        Seq("vec_id"))),
+      markDeleted = Some((IvfIndex.markDeleted(spark, _, _), 0L))),
     Family("GraphIndex",
       build = p => GraphIndex.build(vecs((0L until 8L).map(i => i -> graphVec(i.toInt)): _*),
         p, k = 3, maxDeg = 6),
       batch0 = vecs(8L -> graphVec(8), 9L -> graphVec(9)),
       probe = (p, b, id) => GraphIndex.probeAndAppend(spark, p, b, Some(id),
         k = 3, beamW = 16, hops = 4),
-      compact = (p, k) => GraphIndex.compact(spark, p, keepBatch = k),
+      // maxDeg above any node's degree here, so the offline fold's
+      // re-prune keeps every edge and the fold-layout rows compare exactly
+      compact = (p, k) => GraphIndex.compact(spark, p, maxDeg = 64, keepBatch = k),
       // nodes and edges stage under one root and swap together
       swapTargets = p => Seq(p),
+      tables = Seq(
+        Table(GraphIndex.nodesPath, Seq("vec_id"), 4, Seq("vec_id", "embedding"),
+          Seq("vec_id")),
+        Table(GraphIndex.edgesPath, Seq("src"), 4, Seq("src", "dst", "cos"),
+          Seq("src", "dst"))),
+      markDeleted = Some((GraphIndex.markDeleted(spark, _, _), 0L)),
       takedown = Some(Takedown(
         batch1 = vecs(11L -> graphVec(10), 12L -> graphVec(10)),
         probeBatch = vecs(20L -> graphVec(10)),
@@ -124,18 +167,45 @@ class GenIndexLifecycleSpec extends SparkSpecBase {
         markDeleted = GraphIndex.markDeleted(spark, _, _), keptId = 11L, twinId = 12L,
         tombsDir = p => s"$p.tombstones", idTable = GraphIndex.nodesPath,
         idCol = "vec_id"))),
+    // the IVFPQ composition: cells ride next to the codes, so folds
+    // cell-cluster every generation they write
     Family("PqIndex",
       build = PqIndex.buildCodes(vecs((0L until 32L).map(i => i -> pqVec(i.toInt)): _*),
-        _, pqBook, files = 2),
-      batch0 = vecs((40L until 44L).map(i => i -> pqVec(i.toInt)): _*),
-      probe = (p, b, id) => PqIndex.probeAndAppend(spark, p, b, pqBook, Some(id)),
+        _, pqBook, files = 2, cellCents = Some(pqBook)),
+      batch0 = vecs((40L until 56L).map(i => i -> pqVec(i.toInt)): _*),
+      probe = (p, b, id) => PqIndex.probeAndAppend(spark, p, b, pqBook, Some(id),
+        prune = Some((pqBook, 2))),
       compact = (p, k) => PqIndex.compact(spark, p, keepBatch = k),
-      swapTargets = p => Seq(p)))
+      swapTargets = p => Seq(p),
+      tables = Seq(Table(p => p, Seq("cell"), 4,
+        Seq("vec_id", "c0", "c1", "c2", "c3", "cell"))),
+      markDeleted = None))
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
   private def exists(p: String): Boolean = new java.io.File(p).exists
+
+  /** (generation, row) pairs of a table's `cols`. */
+  private def genRows(table: String, cols: Seq[String]): Seq[(String, String)] =
+    spark.read.parquet(table).select((cols :+ "gen").map(col): _*).collect()
+      .map(r => r.getString(cols.size) -> r.toSeq.init.mkString("|")).toSeq.sorted
+
+  /** The data files of a table, grouped by their leaf directory. */
+  private def filesByDir(table: String): Map[String, Seq[java.io.File]] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    walk(new java.io.File(table)).groupBy(_.getParent)
+  }
+
+  private def cmpKey(a: Seq[Any], b: Seq[Any]): Int =
+    a.zip(b).iterator.map {
+      case (x: Int, y: Int) => x compare y
+      case (x: Long, y: Long) => x compare y
+      case (x: String, y: String) => x compare y
+      case (x, y) => fail(s"unexpected cluster key types: $x, $y")
+    }.find(_ != 0).getOrElse(0)
 
   families.foreach { f =>
     test(s"${f.name}: the in-stream fold heals a half-committed swap " +
@@ -191,6 +261,52 @@ class GenIndexLifecycleSpec extends SparkSpecBase {
         "the full fold left the taken-down rows behind")
       assert(!exists(t.tombsDir(idx)), "the full fold left the tombstone behind")
       assert(!matched(3L).contains(t.keptId))
+    }
+  }
+
+  for (f <- families; keep <- Seq(Some(1L), None)) {
+    test(s"${f.name}: the ${keep.fold("offline")(_ => "in-stream")} fold writes each " +
+      "generation once: pre-fold rows minus tombstones, files sorted on the " +
+      "cluster key, within the fold's file count") {
+      val idx = tmpDir(s"fold_layout_${f.name}") + "/idx"
+      f.build(idx)
+      val id = f.batch0.columns.head
+      f.probe(idx, f.batch0, 0L)
+      f.probe(idx, f.batch0.withColumn(id, col(id) + 100L), 1L)
+      val dead = f.markDeleted.map { case (mark, doc) => mark(idx, Seq(doc)); doc }.toSet
+      val target = (g: String) => if (keep.map(b => s"b$b").contains(g)) g else "base"
+      val fileCols = f.tables.map(t =>
+        spark.read.parquet(t.path(idx)).columns.filterNot(Set("pk", "gen")).toSeq)
+      val before = f.tables.map { t =>
+        if (t.rowCols.isEmpty) Nil
+        else {
+          val idIdx = t.ids.map(t.rowCols.indexOf(_))
+          spark.read.parquet(t.path(idx)).select((t.rowCols :+ "gen").map(col): _*)
+            .collect().filterNot(r => idIdx.exists(i => dead.contains(r.getLong(i))))
+            .map(r => target(r.getString(t.rowCols.size)) -> r.toSeq.init.mkString("|"))
+            .toSeq.sorted
+        }
+      }
+      f.compact(idx, keep)
+      f.tables.zip(before).zip(fileCols).foreach { case ((t, expected), cols) =>
+        val table = t.path(idx)
+        assert(spark.read.parquet(table).select("gen").distinct().collect()
+          .map(_.getString(0)).toSet === Set("base") ++ keep.map(b => s"b$b"), table)
+        if (t.rowCols.nonEmpty) assert(genRows(table, t.rowCols) === expected, table)
+        filesByDir(table).foreach { case (dir, files) =>
+          assert(files.size <= t.maxFiles, s"$dir holds ${files.size} files")
+          files.foreach(file => assert(spark.read.parquet(file.getPath).columns.toSeq === cols,
+            s"$file changed the table's column order"))
+          if (t.cluster.nonEmpty) files.foreach { file =>
+            val keys = spark.read.parquet(file.getPath).select(t.cluster.map(col): _*)
+              .collect().map(_.toSeq)
+            assert(keys.sliding(2).forall {
+              case Array(a, b) => cmpKey(a, b) <= 0
+              case _ => true
+            }, s"$file is not sorted on ${t.cluster.mkString(", ")}")
+          }
+        }
+      }
     }
   }
 }
