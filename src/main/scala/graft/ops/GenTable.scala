@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The generation-index lifecycle, owned in one place for all six
   * persisted index families (LshIndex, SimHashIndex, IvfIndex, PqIndex,
@@ -16,8 +18,8 @@ import org.apache.spark.sql.functions._
   * own generation instead of duplicating rows; an append without one
   * accumulates into the shared `gen=adhoc` (at-least-once, for one-shot
   * jobs that never retry a write). A batch's probe HIDES its own
-  * generation ([[hide]] — a partition filter, pruned at listing), so a
-  * retried batch probes the identical pre-batch state and emits the
+  * generation ([[visible]] — a partition filter, pruned at listing), so
+  * a retried batch probes the identical pre-batch state and emits the
   * identical result. Together with the batch-keyed result log
   * ([[writeBatchLog]]) that is exactly-once on storage for the streaming
   * ingests (StreamingPipeline's `start*Ingest`).
@@ -37,9 +39,20 @@ import org.apache.spark.sql.functions._
   * between two admissible states; quiesce takedowns for bit-stable
   * replay.
   *
+  * Probe ([[visible]], [[touched]]). Every probe reads an index table
+  * through [[visible]]: the table minus the hidden generation, and, for
+  * the bucketed tables, only the `pk` directories the batch touches. The
+  * touched set comes from [[touched]]: ONE bounded localize of the
+  * batch's key rows with their `pk` yields the batch rows, the touched
+  * keys (the row-level broadcast semi join that keeps every member of a
+  * touched bucket) and the `pk` partition predicate — one job, not one
+  * per derivation, on a per-micro-batch path made of small jobs. LSH,
+  * SimHash and both BM25 probes use it; IVF and PQ collect their touched
+  * cells from batch rows they have already persisted.
+  *
   * Takedowns ([[TombstoneLog]]). `markDeleted` appends ids to the
-  * family's tombstone log; probes anti-join them out at once, and the
-  * next fold drops their rows physically.
+  * family's tombstone log; probes anti-join them out at once
+  * (`TombstoneLog.mask`), and the next fold drops their rows physically.
   *
   * Fold ([[fold]]). Folds every generation back into one tight
   * `gen=base` under the [[IndexLock]] writer fence: snapshot the
@@ -71,10 +84,51 @@ private[graft] object GenTable {
   /** The generation micro-batch `batchId` owns. */
   def batchGen(batchId: Long): String = s"b$batchId"
 
-  /** `df` with generation `gen` hidden — a retried batch's probe must
-    * not see its own earlier append. */
-  def hide(df: DataFrame, gen: Option[String]): DataFrame =
-    gen.fold(df)(g => df.where(col("gen") =!= g))
+  /** Generation table `table` as a probe sees it: generation `hidden`
+    * hidden (a retried batch's probe must not see its own earlier
+    * append), and with `pk` given only those bucket directories (an empty
+    * list reads none) — both partition filters, pruned at listing. */
+  def visible(spark: SparkSession, table: String, hidden: Option[String],
+      pk: Option[Seq[Any]] = None): DataFrame = {
+    val all = spark.read.parquet(table)
+    val df = hidden.fold(all)(g => all.where(col("gen") =!= g))
+    pk.fold(df)(p => df.where(col("pk").isin(p: _*)))
+  }
+
+  /** The batch side of a touched-bucket probe ([[touched]]): the batch
+    * rows, the distinct touched keys, the touched `pk` values, the
+    * driver-local batch rows (with `pk`; None over the cap) and the
+    * over-cap fallback's cache, which [[release]] drops. */
+  case class Touched(rows: DataFrame, keys: DataFrame, pk: Seq[Any],
+      local: Option[Array[Row]], cache: Option[DataFrame]) {
+    /** Call once every frame built on [[rows]] has run (or been
+      * abandoned); a frame run later recomputes the batch rows. */
+    def release(): Unit = cache.foreach(_.unpersist())
+  }
+
+  /** The probe front end of the bucketed families: ONE bounded localize
+    * of the batch's key rows `plan` with their bucket `pk` (a function of
+    * the `keys` columns) — the touched keys, the `pk` partition predicate
+    * and the batch rows all derive from the same driver-local rows. Over
+    * the cap the batch rows persist instead and one more job collects
+    * the `pk` values; the caller [[Touched.release]]s them. */
+  def touched(plan: DataFrame, pk: Column, keys: String*): Touched =
+    Caches.localize(plan.withColumn("pk", pk), maxRows = 1 << 20) match {
+      case Some(local) =>
+        val rows = local.collect() // LocalRelation: driver-side, no job
+        val schema = local.schema
+        val (ki, pi) = (keys.map(schema.fieldIndex), schema.fieldIndex("pk"))
+        val keyRows = rows.map(r => Row.fromSeq(ki.map(r.get))).distinct.toSeq
+        val tk = plan.sparkSession.createDataFrame(
+          new java.util.ArrayList(keyRows.asJava), StructType(keys.map(schema(_))))
+        Touched(local.drop("pk"), tk, rows.map(_.get(pi)).distinct.toSeq,
+          Some(rows), None)
+      case None =>
+        val p = plan.persist()
+        val tk = p.select(keys.map(col): _*).distinct()
+        val pks = tk.select(pk).distinct().collect().map(_.get(0)).toSeq
+        Touched(p, tk, pks, None, Some(p))
+    }
 
   /** How a family's rows spread over one write's files — the only
     * storage choice a family makes; [[write]] adds the `gen` level, the
@@ -210,15 +264,10 @@ private[graft] object GenTable {
       GenTable.write(df, path, spread, target, fold = true, "overwrite")
 
     /** `df` without rows whose `cols` (default: the id column) name a
-      * tombstoned id, in `df`'s column order (a USING join moves its key
-      * first, and a fold must write the columns as the build did). */
+      * tombstoned id, in `df`'s column order (a fold must write the
+      * columns as the build did). */
     def dropTombstoned(df: DataFrame, cols: String*): DataFrame =
-      tombs.fold(df) { t =>
-        val id = t.columns.head
-        (if (cols.isEmpty) Seq(id) else cols).foldLeft(df) { (d, c) =>
-          d.join(if (c == id) t else t.withColumnRenamed(id, c), Seq(c), "left_anti")
-        }.select(df.columns.map(col): _*)
-      }
+      TombstoneLog.mask(df, tombs, cols: _*)
   }
 
   /** The fold kernel (see the object scaladoc for the lifecycle).

@@ -196,7 +196,7 @@ object GraphIndex {
     * prune (beam ∪ neighbors-of-beam, cosine vs the probe, top-`beamW`
     * by cos desc / vertex asc), and returns the final per-probe top-`k`
     * as (probe_id, rn, neighbor_id, cos) — cos unrounded, self excluded.
-    * `excludeGen` is hidden (GenTable.hide, the retry contract);
+    * `excludeGen` is hidden (GenTable.visible, the retry contract);
     * tombstoned nodes are invisible to entry, traversal and results. See
     * the object scaladoc for the two execution paths (driver-localized
     * beams with pruned scans vs the distributed fallback). */
@@ -204,15 +204,12 @@ object GraphIndex {
       k: Int = 4, beamW: Int = 8, hops: Int = 2,
       excludeGen: Option[String] = None, maxLocal: Int = 1 << 20,
       id: String = "probe_id", vec: String = "probe"): DataFrame = {
-    val tombs = tombstones(spark, path)
-    def dropT(df: DataFrame, cols: String*): DataFrame =
-      tombs.fold(df)(t => cols.foldLeft(df)((d, c) =>
-        d.join(t.withColumnRenamed("vec_id", c), Seq(c), "left_anti")))
-    def visible(sub: String): DataFrame =
-      GenTable.hide(spark.read.parquet(sub), excludeGen)
-    val nodes = dropT(visible(nodesPath(path)), "vec_id")
+    val tombs = TombstoneLog.readDir(spark, tombsPath(path), "vec_id")
+    val nodes = TombstoneLog.mask(GenTable.visible(spark, nodesPath(path), excludeGen),
+        tombs, "vec_id")
       .select(col("vec_id"), col("embedding"))
-    val edges = dropT(visible(edgesPath(path)), "src", "dst")
+    val edges = TombstoneLog.mask(GenTable.visible(spark, edgesPath(path), excludeGen),
+        tombs, "src", "dst")
       .select(col("src"), col("dst"))
     val p = probes.select(col(id).as("probe_id"), col(vec).as("probe")).persist()
     try {
@@ -378,9 +375,6 @@ object GraphIndex {
     }
 
   // ------------------------------------------- takedown + compaction
-
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    TombstoneLog.readDir(spark, tombsPath(path), "vec_id")
 
   /** Tombstone `vecIds` — nodes stay physically present until the next
     * [[compact]] but disappear from entry selection, traversal and

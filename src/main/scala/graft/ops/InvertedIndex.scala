@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * partition `IN` predicate from its query terms (≤ indexPartitions
   * ints, bounded regardless of batch size), and a broadcast semi join on
   * `term` keeps row-level exactness inside the touched directories —
-  * the LshIndex bands discipline applied to text postings.
+  * the probe front end the bucketed families share (GenTable.touched,
+  * GenTable.visible).
   *
   * Storage layout (`<path>/postings`, `<path>/termdf`, `<path>/docstats`):
   *   - `postings` (term, doc_id, tf, dl, irn), partitioned (pk, gen) and
@@ -265,9 +266,6 @@ object InvertedIndex {
   private def termdfSpread(cfg: Config) =
     GenTable.Spread.Hash(cfg.postFiles, termPk(cfg), col("term"))
 
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    TombstoneLog.readDir(spark, tombsPath(path), "doc_id")
-
   /** Rank `queries` — a (query_id, term) frame, one row per query term —
     * against the visible index: BM25 top-`k` docs per query as
     * (query_id, rn, doc_id, score). The postings scan is partition-
@@ -276,7 +274,7 @@ object InvertedIndex {
     * pruned scan; N/avgdl from the generation stats rows. Tombstoned
     * docs never appear in results (they still count toward df/N/avgdl —
     * see the object scaladoc for why that is the Lucene contract).
-    * `excludeGen` is hidden (GenTable.hide, the retry contract).
+    * `excludeGen` is hidden (GenTable.visible, the retry contract).
     *
     * `maxPostings = Some(m)` applies IMPACT-ORDERED truncation (the
     * public Anh–Moffat impact-ordering / Lucene max-score family): each
@@ -297,111 +295,110 @@ object InvertedIndex {
       cfg: Config = Config(),
       maxPostings: Option[Int] = None): DataFrame = {
     val layout = adoptMeta(spark, path, cfg)
-    val qcols = queries.select(col("query_id"), col("term"))
-    // touched pk values + the term semi-join list from ONE bounded
-    // localize (the LshIndex probe shape); over-cap falls back to a
-    // distinct-pk collect with the terms staying distributed
-    val (q, touchedTerms, touchedPk, localQ) =
-      Caches.localize(qcols.withColumn("pk", termPk(layout)),
-        maxRows = 1 << 20) match {
-        case Some(local) =>
-          val rows = local.collect() // LocalRelation — driver-side, no job
-          val terms = rows.map(_.getString(1)).distinct.toSeq
-          val tt = spark.createDataFrame(
-            new java.util.ArrayList(
-              terms.map(t => org.apache.spark.sql.Row(t)).asJava),
-            org.apache.spark.sql.types.StructType(Seq(local.schema("term"))))
-          (local.drop("pk"), tt,
-            rows.map(_.getInt(2)).distinct.map(Int.box).toSeq, Some(rows))
-        case None =>
-          val tt = qcols.select(col("term")).distinct()
-          val pk = tt.select(termPk(layout).as("pk")).distinct()
-            .collect().map(r => Int.box(r.getInt(0))).toSeq
-          (qcols, tt, pk, None)
+    // the probe front end (GenTable.touched): the touched pk values and
+    // the term semi-join list; the local query rows also feed max-score.
+    // The result is lazy, so a released over-cap cache is recomputed.
+    val t = GenTable.touched(queries.select(col("query_id"), col("term")),
+      termPk(layout), "term")
+    try {
+      val (q, touchedTerms, localQ) = (t.rows, t.keys, t.local)
+      val rawPost = GenTable.visible(spark, postingsPath(path), excludeGen, Some(t.pk))
+      // materialized truncation: on an impact-ordered index the per-term
+      // cut is a pushed parquet predicate on the rank column — the scan
+      // reads ≤ m rows per (term, generation) and prunes a hot term's
+      // tail row groups; legacy indexes scan whole and cut below
+      val scanCut =
+        if (layout.impactOrdered) maxPostings.fold(rawPost)(m =>
+          rawPost.where(col("irn") <= m))
+        else rawPost
+      val post = scanCut
+        .select(col("term"), col("doc_id"), col("tf"), col("dl"))
+        .join(broadcast(touchedTerms), Seq("term"), "left_semi")
+      // TRUE df per probed term: from the termdf sidecar (same pk pruning;
+      // per-generation rows sum to the global count) — the scan can no
+      // longer supply it once truncated. Legacy era: count the full scan.
+      val df =
+        if (layout.impactOrdered)
+          GenTable.visible(spark, termdfPath(path), excludeGen, Some(t.pk))
+            .join(broadcast(touchedTerms), Seq("term"), "left_semi")
+            .groupBy(col("term")).agg(sum(col("df")).as("df"))
+        else post.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val stats = corpusStats(spark, path, excludeGen)
+      // the residual cross-generation merge: the scan already returned the
+      // per-generation top-m prefixes (≤ m·|gens| rows per term on an
+      // impact-ordered index), this window keeps the exact global top-m of
+      // their union — bit-identical to the single-window legacy cut, which
+      // is also what this same expression computes on a pre-era index.
+      // With a SINGLE visible generation on an impact-ordered index the
+      // per-generation prefix already IS the global top-m (`irn <= m` was
+      // pushed to the scan), so the merge window — one whole exchange on
+      // the probe's hot path — is skipped outright.
+      val singleVisibleGen = layout.impactOrdered && maxPostings.isDefined && {
+        val gens = GenTable.genNames(spark, postingsPath(path), nested = true)
+        (gens -- excludeGen.toSet).size <= 1
       }
-    def visible(table: String): DataFrame =
-      GenTable.hide(spark.read.parquet(table), excludeGen)
-    val rawPost = visible(postingsPath(path)).where(col("pk").isin(touchedPk: _*))
-    // materialized truncation: on an impact-ordered index the per-term
-    // cut is a pushed parquet predicate on the rank column — the scan
-    // reads ≤ m rows per (term, generation) and prunes a hot term's
-    // tail row groups; legacy indexes scan whole and cut below
-    val scanCut =
-      if (layout.impactOrdered) maxPostings.fold(rawPost)(m =>
-        rawPost.where(col("irn") <= m))
-      else rawPost
-    val post = scanCut
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-      .join(broadcast(touchedTerms), Seq("term"), "left_semi")
-    // TRUE df per probed term: from the termdf sidecar (same pk pruning;
-    // per-generation rows sum to the global count) — the scan can no
-    // longer supply it once truncated. Legacy era: count the full scan.
-    val df =
-      if (layout.impactOrdered)
-        visible(termdfPath(path)).where(col("pk").isin(touchedPk: _*))
-          .join(broadcast(touchedTerms), Seq("term"), "left_semi")
-          .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      else post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = visible(statsPath(path))
+      val scoredPost =
+        if (singleVisibleGen) post
+        else maxPostings.fold(post) { m =>
+          val wImp = Window.partitionBy(col("term"))
+            .orderBy(col("tf").desc, col("doc_id"))
+          post.withColumn("prn", row_number().over(wImp))
+            .where(col("prn") <= m).drop("prn")
+        }
+      val tombs = TombstoneLog.readDir(spark, tombsPath(path), "doc_id")
+      // max-score pruning (the Turtle–Flood / Lucene max-score family in
+      // batch-relational form): on the single-generation impact-ordered
+      // fast path, a bounded PREFIX often already settles the top-k — see
+      // [[maxScoreScored]]. Engages only when exactness is provable;
+      // anything else falls back to the plain full-cap scoring below.
+      val prunedScored: Option[DataFrame] =
+        if (!singleVisibleGen || localQ.isEmpty || tombs.isDefined) None
+        else maxPostings.flatMap { m =>
+          val m0 = math.max(k, MaxScorePrefix)
+          // engagement gate, both sides: the one extra job must pay for
+          // itself in skipped scoring-join volume, AND phase A's driver
+          // round-trip must stay small (see MaxScorePhaseACap)
+          val saved = (m - m0).toLong * localQ.get.length
+          val phaseA = m0.toLong * localQ.get.length
+          if (m0 >= m || saved < maxScoreMinSaved(spark) ||
+              phaseA > MaxScorePhaseACap) None
+          else maxScoreScored(spark, rawPost, q, localQ.get, touchedTerms,
+            df, stats, k, m, m0)
+        }
+      val scored = prunedScored.getOrElse(
+        scoredPost.join(broadcast(q), "term")
+          .join(broadcast(df), "term")
+          .crossJoin(broadcast(stats))
+          .withColumn("s", bm25())
+          .groupBy(col("query_id"), col("doc_id"))
+          .agg(sum(col("s")).as("score")))
+      topK(TombstoneLog.mask(scored, tombs, "doc_id"), k)
+    } finally t.release()
+  }
+
+  /** The exact q130 BM25 term weight idf · tfn — bit-pinned against
+    * DuckDB there — over the columns n, df and avgdl and the given tf and
+    * dl (a posting's own by default). */
+  private def bm25(tf: Column = col("tf"), dl: Column = col("dl")): Column = {
+    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+    val tfn = (tf * 2.2) / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * dl / col("avgdl")))
+    idf * tfn
+  }
+
+  /** The corpus statistics (n, avgdl) of the visible generations, from
+    * their docstats rows. */
+  private def corpusStats(spark: SparkSession, path: String,
+      excludeGen: Option[String]): DataFrame =
+    GenTable.visible(spark, statsPath(path), excludeGen)
       .agg(sum(col("n_docs")).as("n"),
         (sum(col("sum_dl")).cast("double") / sum(col("n_docs"))).as("avgdl"))
-    // the exact q130 BM25 spelling — bit-pinned against DuckDB there
-    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    val tfn = (col("tf") * 2.2) /
-      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-    // the residual cross-generation merge: the scan already returned the
-    // per-generation top-m prefixes (≤ m·|gens| rows per term on an
-    // impact-ordered index), this window keeps the exact global top-m of
-    // their union — bit-identical to the single-window legacy cut, which
-    // is also what this same expression computes on a pre-era index.
-    // With a SINGLE visible generation on an impact-ordered index the
-    // per-generation prefix already IS the global top-m (`irn <= m` was
-    // pushed to the scan), so the merge window — one whole exchange on
-    // the probe's hot path — is skipped outright.
-    val singleVisibleGen = layout.impactOrdered && maxPostings.isDefined && {
-      val gens = GenTable.genNames(spark, postingsPath(path), nested = true)
-      (gens -- excludeGen.toSet).size <= 1
-    }
-    val scoredPost =
-      if (singleVisibleGen) post
-      else maxPostings.fold(post) { m =>
-        val wImp = Window.partitionBy(col("term"))
-          .orderBy(col("tf").desc, col("doc_id"))
-        post.withColumn("prn", row_number().over(wImp))
-          .where(col("prn") <= m).drop("prn")
-      }
-    val tombs = tombstones(spark, path)
-    // max-score pruning (the Turtle–Flood / Lucene max-score family in
-    // batch-relational form): on the single-generation impact-ordered
-    // fast path, a bounded PREFIX often already settles the top-k — see
-    // [[maxScoreScored]]. Engages only when exactness is provable;
-    // anything else falls back to the plain full-cap scoring below.
-    val prunedScored: Option[DataFrame] =
-      if (!singleVisibleGen || localQ.isEmpty || tombs.isDefined) None
-      else maxPostings.flatMap { m =>
-        val m0 = math.max(k, MaxScorePrefix)
-        // engagement gate, both sides: the one extra job must pay for
-        // itself in skipped scoring-join volume, AND phase A's driver
-        // round-trip must stay small (see MaxScorePhaseACap)
-        val saved = (m - m0).toLong * localQ.get.length
-        val phaseA = m0.toLong * localQ.get.length
-        if (m0 >= m || saved < maxScoreMinSaved(spark) ||
-            phaseA > MaxScorePhaseACap) None
-        else maxScoreScored(spark, rawPost, q, localQ.get, touchedTerms,
-          df, stats, k, m, m0)
-      }
-    val scored = prunedScored.getOrElse(
-      scoredPost.join(broadcast(q), "term")
-        .join(broadcast(df), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("s", idf * tfn)
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(sum(col("s")).as("score")))
-    val alive = tombs.fold(scored)(t =>
-      scored.join(t, Seq("doc_id"), "left_anti"))
+
+  /** Top-`k` (query_id, rn, doc_id, score) per query by (score desc,
+    * doc_id). */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
-    alive.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
       .select(col("query_id"), col("rn"), col("doc_id"), col("score"))
   }
 
@@ -457,9 +454,6 @@ object InvertedIndex {
       k: Int, m: Int, m0: Int): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    val tfn = (col("tf") * 2.2) /
-      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
     val prefix = rawPost.where(col("irn") <= m0)
       .select(col("term"), col("doc_id"), col("tf"), col("dl"))
       .join(broadcast(touchedTerms), Seq("term"), "left_semi")
@@ -467,8 +461,6 @@ object InvertedIndex {
     // included — they are physical postings until compact, and the tail
     // bound is about physical rows)
     val btf = prefix.groupBy(col("term")).agg(min(col("tf")).as("btf"))
-    val tfnUb = (col("btf") * 2.2) /
-      (col("btf") + lit(1.2) * (lit(0.25) + lit(0.75) * lit(1.0) / col("avgdl")))
     // the single phase-A frame: exact prefix score AND the row's term
     // tail bound (0 for terms fully inside the prefix — df <= m0 means
     // no tail exists)
@@ -476,8 +468,9 @@ object InvertedIndex {
       .join(broadcast(df), "term").join(broadcast(btf), "term")
       .crossJoin(broadcast(stats))
       .select(col("query_id"), col("term"), col("doc_id"),
-        (idf * tfn).as("s"),
-        when(col("df") > m0, idf * tfnUb).otherwise(lit(0.0)).as("bmax"))
+        bm25().as("s"),
+        // the tail bound: boundary tf at dl = 1
+        when(col("df") > m0, bm25(col("btf"), lit(1.0))).otherwise(lit(0.0)).as("bmax"))
     val localDetail = Caches.localize(detail, maxRows = 1 << 22)
       .map(_.collect())
     if (localDetail.isEmpty) return None
@@ -534,7 +527,7 @@ object InvertedIndex {
         .join(broadcast(touchedTerms), Seq("term"), "left_semi")
         .join(broadcast(q), "term")
         .join(broadcast(df), "term").crossJoin(broadcast(stats))
-        .select(col("query_id"), col("doc_id"), (idf * tfn).as("s"))
+        .select(col("query_id"), col("doc_id"), bm25().as("s"))
       Some(
         if (pushIn) scored0
         else {
@@ -600,66 +593,41 @@ object InvertedIndex {
         s"$path carries no positions sidecar — phrase probes need a " +
           "positions-enabled index (InvertedIndex.Config(positions = " +
           "true) at build); term probes keep working")
-    val qterms0 = phrases.select(col("query_id"), col("phrase"))
+    val qterms = phrases.select(col("query_id"), col("phrase"))
       .select(col("query_id"), col("phrase"),
         posexplode(split(col("phrase"), " ")).as(Seq("ti", "term")))
-    val (qt, touchedTerms, touchedPk) =
-      Caches.localize(qterms0.withColumn("pk", termPk(layout)),
-        maxRows = 1 << 20) match {
-        case Some(local) =>
-          val rows = local.collect() // LocalRelation — driver-side, no job
-          val terms = rows.map(_.getAs[String]("term")).distinct.toSeq
-          val tt = spark.createDataFrame(
-            new java.util.ArrayList(
-              terms.map(t => org.apache.spark.sql.Row(t)).asJava),
-            org.apache.spark.sql.types.StructType(Seq(local.schema("term"))))
-          (local.drop("pk"), tt,
-            rows.map(_.getAs[Int]("pk")).distinct.map(Int.box).toSeq)
-        case None =>
-          val tt = qterms0.select(col("term")).distinct()
-          val pk = tt.select(termPk(layout).as("pk")).distinct()
-            .collect().map(r => Int.box(r.getInt(0))).toSeq
-          (qterms0, tt, pk)
-      }
-    def visible(table: String): DataFrame =
-      GenTable.hide(spark.read.parquet(table), excludeGen)
-    val posScan = visible(positionsPath(path)).where(col("pk").isin(touchedPk: _*))
-      .select(col("term"), col("doc_id"), col("pos"), col("dl"))
-      .join(broadcast(touchedTerms), Seq("term"), "left_semi")
-    // phrase length per query — the alignment-completeness target
-    val nt = qt.groupBy(col("query_id"), col("phrase"))
-      .agg((max(col("ti")) + 1).as("nt"))
-    // one row per (query term-slot, matching position); an occurrence of
-    // the phrase at base position b puts term-slot ti at pos b + ti, so
-    // grouping on bp = pos − ti and demanding ALL slots present is the
-    // in-order adjacency intersect
-    val occ = posScan.join(broadcast(qt), "term")
-      .withColumn("bp", col("pos") - col("ti"))
-      .groupBy(col("query_id"), col("phrase"), col("doc_id"), col("bp"))
-      .agg(countDistinct(col("ti")).as("nm"), max(col("dl")).as("dl"))
-      .join(broadcast(nt), Seq("query_id", "phrase"))
-      .where(col("nm") === col("nt"))
-    val ptf = occ.groupBy(col("query_id"), col("phrase"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    // phrase df over the visible corpus — computed BEFORE the tombstone
-    // filter (deleted docs count toward statistics until compact)
-    val pdf = ptf.groupBy(col("query_id"), col("phrase"))
-      .agg(count(lit(1)).as("df"))
-    val stats = visible(statsPath(path))
-      .agg(sum(col("n_docs")).as("n"),
-        (sum(col("sum_dl")).cast("double") / sum(col("n_docs"))).as("avgdl"))
-    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    val tfn = (col("tf") * 2.2) /
-      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-    val scored = ptf.join(broadcast(pdf), Seq("query_id", "phrase"))
-      .crossJoin(broadcast(stats))
-      .withColumn("score", idf * tfn)
-    val alive = tombstones(spark, path).fold(scored)(t =>
-      scored.join(t, Seq("doc_id"), "left_anti"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    alive.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("doc_id"), col("score"))
+    // the probe front end (GenTable.touched, GenTable.visible)
+    val t = GenTable.touched(qterms, termPk(layout), "term")
+    try {
+      val qt = t.rows
+      val posScan = GenTable.visible(spark, positionsPath(path), excludeGen, Some(t.pk))
+        .select(col("term"), col("doc_id"), col("pos"), col("dl"))
+        .join(broadcast(t.keys), Seq("term"), "left_semi")
+      // phrase length per query — the alignment-completeness target
+      val nt = qt.groupBy(col("query_id"), col("phrase"))
+        .agg((max(col("ti")) + 1).as("nt"))
+      // one row per (query term-slot, matching position); an occurrence of
+      // the phrase at base position b puts term-slot ti at pos b + ti, so
+      // grouping on bp = pos − ti and demanding ALL slots present is the
+      // in-order adjacency intersect
+      val occ = posScan.join(broadcast(qt), "term")
+        .withColumn("bp", col("pos") - col("ti"))
+        .groupBy(col("query_id"), col("phrase"), col("doc_id"), col("bp"))
+        .agg(countDistinct(col("ti")).as("nm"), max(col("dl")).as("dl"))
+        .join(broadcast(nt), Seq("query_id", "phrase"))
+        .where(col("nm") === col("nt"))
+      val ptf = occ.groupBy(col("query_id"), col("phrase"), col("doc_id"))
+        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+      // phrase df over the visible corpus — computed BEFORE the tombstone
+      // filter (deleted docs count toward statistics until compact)
+      val pdf = ptf.groupBy(col("query_id"), col("phrase"))
+        .agg(count(lit(1)).as("df"))
+      val scored = ptf.join(broadcast(pdf), Seq("query_id", "phrase"))
+        .crossJoin(broadcast(corpusStats(spark, path, excludeGen)))
+        .withColumn("score", bm25())
+      topK(TombstoneLog.mask(scored,
+        TombstoneLog.readDir(spark, tombsPath(path), "doc_id"), "doc_id"), k)
+    } finally t.release()
   }
 
   /** One ingest batch: each batch doc DISTILLS its own retrieval query —

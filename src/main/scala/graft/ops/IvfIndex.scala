@@ -198,9 +198,10 @@ object IvfIndex {
         .distinct().collect().map(_.getInt(0)).toSeq
       val probes = assigned.select(col("vec_id").as("probe_id"),
         col("embedding").as("probe"), col("pcells"))
-      val corpus = dropTombstoned(spark, path,
-        GenTable.hide(spark.read.parquet(path), batchId.map(GenTable.batchGen))
-          .where(col("cell").isin(touched: _*)))
+      val corpus = TombstoneLog.mask(
+        GenTable.visible(spark, path, batchId.map(GenTable.batchGen))
+          .where(col("cell").isin(touched: _*)),
+        TombstoneLog.readDir(spark, tombsPath(path), "vec_id"))
       val cand = corpus.crossJoin(broadcast(probes))
         .where(array_contains(col("pcells"), col("cell")) &&
           col("vec_id") =!= col("probe_id"))
@@ -218,19 +219,10 @@ object IvfIndex {
     } finally assigned.unpersist()
   }
 
+  /** The tombstone log. Sibling path (`<corpus>.tombstones`) rather than
+    * a subdirectory: the corpus path is itself a parquet table and a
+    * nested foreign table would corrupt its reads. */
   private def tombsPath(path: String) = s"$path.tombstones"
-
-  /** Tombstoned vec_ids as a (tiny) broadcastable table, if any. Sibling
-    * path (`<corpus>.tombstones`) rather than a subdirectory: the corpus
-    * path is itself a parquet table and a nested foreign table would
-    * corrupt its reads. */
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    TombstoneLog.readDir(spark, tombsPath(path), "vec_id")
-
-  private def dropTombstoned(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame =
-    tombstones(spark, path).fold(df)(t =>
-      df.join(t, Seq("vec_id"), "left_anti"))
 
   /** Tombstone `vecIds`: the vectors stay physically present until the
     * next [[compactCorpus]], but no subsequent probe returns them as

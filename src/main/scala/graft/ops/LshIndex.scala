@@ -1,6 +1,5 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +26,8 @@ import org.apache.spark.sql.functions._
   *     distinct pk values (bounded by `indexPartitions`, never by batch
   *     size) into a partition `IN` predicate — file-level pruning — and
   *     keeps a broadcast row-level semi join on (band, key) for
-  *     exactness within the touched directories.
+  *     exactness within the touched directories (the probe front end,
+  *     GenTable.touched and GenTable.visible).
   *   - `sigs` (doc_id, sh), hive-partitioned on its own
   *     `pk = hash(doc_id) mod indexPartitions` and clustered on doc_id:
   *     exact-jaccard verification derives the candidate docs' ps values
@@ -205,64 +205,20 @@ object LshIndex {
       rawCfg: Config, id: String, extraCaches: Seq[DataFrame],
       hiddenGen: Option[String] = None): (Probe, DataFrame, Config) = {
     val cfg = adoptMeta(spark, path, rawCfg)
-    val caches = scala.collection.mutable.Buffer[DataFrame](extraCaches: _*)
-    val newBandsPlan = bandsOf(sig, cfg, id)
-    // Only buckets the batch touches can yield new pairs. The batch's
-    // distinct pk values (≤ indexPartitions ints — bounded regardless of
-    // batch size) become a partition predicate, so the bands scan LISTS
-    // only touched directories; the broadcast semi join then keeps, row
-    // level, every member of a touched bucket (so the hot-bucket count
-    // below is the bucket's FULL size). The index side never shuffles.
-    //
-    // ONE bounded job instead of two (the r15 streaming-floor work: the
-    // per-micro-batch cost is a stack of tiny jobs, so each removed job
-    // is a direct cut): the batch's band rows — |batch| × k/r rows,
-    // batch-sized by construction — localize WITH their pk, and the
-    // touched-key broadcast list, the pk partition predicate AND the
-    // union/append side all derive from the same driver-local rows. The
-    // over-cap fallback keeps the original two-job spelling.
-    val (newBands, touchedKeys, touchedPk) =
-      Caches.localize(newBandsPlan.withColumn("pk", bandPk(cfg)),
-        maxRows = 1 << 20) match {
-        case Some(local) =>
-          val rows = local.collect() // LocalRelation: driver-side, no job
-          val schema = local.schema
-          val (bi, ki, pi) = (schema.fieldIndex("band"),
-            schema.fieldIndex("key"), schema.fieldIndex("pk"))
-          val keyRows = rows.map(r =>
-            org.apache.spark.sql.Row(r.get(bi), r.get(ki))).distinct.toSeq
-          val tk = spark.createDataFrame(
-            new java.util.ArrayList(keyRows.asJava),
-            org.apache.spark.sql.types.StructType(
-              Seq(schema("band"), schema("key"))))
-          val pk = rows.map(_.getInt(pi)).distinct.map(Int.box).toSeq
-          (local.drop("pk"), tk, pk)
-        case None =>
-          val tk = newBandsPlan.select(col("band"), col("key")).distinct()
-          val pk = tk.select(bandPk(cfg).as("pk")).distinct()
-            .collect().map(r => Int.box(r.getInt(0))).toSeq
-          (newBandsPlan, tk, pk)
-      }
-    val indexBands = GenTable.hide(spark.read.parquet(bandsPath(path))
-        .where(col("pk").isin(touchedPk: _*)), hiddenGen)
+    // Only buckets the batch touches can yield new pairs: the bands scan
+    // lists only their pk directories, and the broadcast semi join keeps,
+    // row level, every member of a touched bucket (so the hot-bucket cap
+    // counts the bucket's FULL size). The index side never shuffles.
+    val t = GenTable.touched(bandsOf(sig, cfg, id), bandPk(cfg), "band", "key")
+    val caches = extraCaches ++ t.cache
+    val indexBands = GenTable.visible(spark, bandsPath(path), hiddenGen, Some(t.pk))
       .select(col("band"), col("key"), col("doc_id"))
-      .join(broadcast(touchedKeys), Seq("band", "key"), "left_semi")
-    val combined = indexBands.withColumn("is_new", lit(false))
-      .unionByName(newBands.withColumn("is_new", lit(true)))
-    val pruned = cfg.maxBucket match {
-      case Some(m) =>
-        TextOps.capHotBuckets(combined, Seq("band", "key"), m, "lsh_index_hot_buckets")
-      case None => combined
-    }
-    val a = pruned.select(col("band"), col("key"),
-      col("doc_id").as("doc_a"), col("is_new").as("na"))
-    val b = pruned.select(col("band"), col("key"),
-      col("doc_id").as("doc_b"), col("is_new").as("nb"))
+      .join(broadcast(t.keys), Seq("band", "key"), "left_semi")
     // The candidate plan carries each side's sigs partition bucket so ONE
     // materialization yields both the broadcast list and the sigs
     // partition predicate (formerly a second collect job per probe).
-    val candPlan = a.join(b, Seq("band", "key"))
-      .where(col("doc_a") < col("doc_b") && (col("na") || col("nb")))
+    val candPlan = TextOps.newVsIndexPairs(indexBands, t.rows, cfg.maxBucket,
+        "lsh_index_hot_buckets")
       .select(col("doc_a"), col("doc_b"),
         sigPs(cfg, col("doc_a")).as("ps_a"), sigPs(cfg, col("doc_b")).as("ps_b"))
       .distinct()
@@ -270,24 +226,23 @@ object LshIndex {
     // broadcast below ships a LocalRelation and the ps predicate comes
     // from the already-collected rows, job-free. The over-cap fallback
     // persists (released via Probe.release) and pays one extra ps job.
-    val (cand, candPs) = Caches.localize(candPlan, maxRows = 1 << 20) match {
+    val (cand, candPs, candCache) = Caches.localize(candPlan, maxRows = 1 << 20) match {
       case Some(local) =>
         val ps = local.collect() // LocalRelation: driver-side, no job
           .flatMap(r => Seq(r.getInt(2), r.getInt(3))).distinct.toSeq
-        (local.select(col("doc_a"), col("doc_b")), ps.map(Int.box))
+        (local.select(col("doc_a"), col("doc_b")), ps.map(Int.box), None)
       case None =>
-        val p = candPlan.persist(); p.count(); caches += p
+        val p = candPlan.persist(); p.count()
         val ps = p.select(explode(array(col("ps_a"), col("ps_b"))).as("ps"))
           .distinct().collect().map(r => Int.box(r.getInt(0))).toSeq
-        (p.select(col("doc_a"), col("doc_b")), ps)
+        (p.select(col("doc_a"), col("doc_b")), ps, Some(p))
     }
     // Exact verification: shingle sets come from the index for old docs,
     // from the in-memory batch for new ones. The candidate docs' ps
     // values (again ≤ indexPartitions ints) prune the sigs scan to the
     // touched directories — at 100 TB sigs are corpus-sized, so this is
     // the pruning that matters most.
-    val indexSets = GenTable.hide(spark.read.parquet(sigsPath(path))
-        .where(col("pk").isin(candPs: _*)), hiddenGen)
+    val indexSets = GenTable.visible(spark, sigsPath(path), hiddenGen, Some(candPs))
       .select(col("doc_id"), col("sh"))
     val sets = indexSets
       .unionByName(sig.select(col(id).as("doc_id"), col("sh")))
@@ -297,27 +252,16 @@ object LshIndex {
     val j = TextOps.jaccardFromSets(col("sa"), col("sb"))
     // Tombstoned docs are dead on arrival: their index rows survive until
     // the next compact, but no probe may emit a pair naming them. The
-    // tombstone frame carries its size-bounded join hint (TombstoneLog:
-    // broadcast while takedown-sized, shuffle-hash above the budget).
-    val tombs = tombstones(spark, path)
-    def dropTombstoned(df: DataFrame): DataFrame = tombs.fold(df) { t =>
-      df.join(t, df("doc_a") === t("doc_id"), "left_anti")
-        .join(t, df("doc_b") === t("doc_id"), "left_anti")
-    }
-    // unordered: the global (doc_a, doc_b) sort — a sampling job + range
+    // pairs stay unordered: the global (doc_a, doc_b) sort — a sampling job + range
     // exchange per probe — is applied only where row order is part of the
     // contract (Probe.pairs, the returning API); the streaming log sink
     // writes unordered and its consumers sort on read
-    val pairs = dropTombstoned(withSets.where(j >= cfg.jaccardThreshold)
-      .select(col("doc_a"), col("doc_b"), round(j, 4).as("jaccard")))
+    val pairs = TombstoneLog.mask(withSets.where(j >= cfg.jaccardThreshold)
+        .select(col("doc_a"), col("doc_b"), round(j, 4).as("jaccard")),
+      TombstoneLog.readDir(spark, tombsPath(path), "doc_id"), "doc_a", "doc_b")
     (Probe(pairs.orderBy(col("doc_a"), col("doc_b")), indexBands, indexSets,
-      caches.toSeq, pairsUnordered = pairs), newBands, cfg)
+      caches ++ candCache, pairsUnordered = pairs), t.rows, cfg)
   }
-
-  /** The tombstone log as a (doc_id) frame, or None when no doc was ever
-    * deleted (the common case — probes then pay zero extra plan nodes). */
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    TombstoneLog.readDir(spark, tombsPath(path), "doc_id")
 
   /** Probe-only entry point for the plan-health spec: returns the probe
     * plans WITHOUT appending, so the spec can execute them and pin the

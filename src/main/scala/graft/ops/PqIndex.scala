@@ -186,8 +186,7 @@ object PqIndex {
         prune.map { case (cents, np) =>
           IvfIndex.topCellsOf(spark, col("embedding"), cents, np).as("pcells")
         }.toSeq: _*)
-      val corpusRaw = GenTable.hide(spark.read.parquet(path),
-        batchId.map(GenTable.batchGen))
+      val corpusRaw = GenTable.visible(spark, path, batchId.map(GenTable.batchGen))
       prune.foreach { _ =>
         require(corpusRaw.columns.contains("cell"),
           s"$path: pruned probe needs a cell column — build the code " +

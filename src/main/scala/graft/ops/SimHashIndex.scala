@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   * (band, key, doc_id, sh), hive-partitioned on
   * `pk = hash(band, key) mod indexPartitions` + `gen`, written through
   * the same [[GenTable]] layout and lifecycle as LshIndex — so the
-  * probe's file-level pruning, the exactly-once batch contract, the
-  * lag-1 fold and the writer fence all carry over unchanged.
+  * probe front end (GenTable.touched, GenTable.visible, the new-vs-index
+  * self-join TextOps.newVsIndexPairs), the exactly-once batch contract,
+  * the lag-1 fold and the writer fence all carry over unchanged.
   *
   * Banding is q107's: `bands` disjoint `bandBits`-bit slices of the
   * 63-bit fingerprint — the pigeonhole guarantee (any pair within
@@ -149,76 +150,35 @@ object SimHashIndex {
       materialize: DataFrame => DataFrame,
       needOrdered: Boolean = true): DataFrame = IndexLock.withWriter(path) {
     val layout = adoptMeta(spark, path, cfg)
-    val bandsPlan = bandRows(newDocs, layout, id, text, hashCol)
-    // One bounded job instead of two (LshIndex.probePairs' r15 rule):
-    // the batch's band rows localize WITH their pk, so the touched-key
-    // broadcast, the pk partition predicate and the union/append side
-    // all come from the same driver-local rows; over the cap, the
-    // original persist + collect spelling.
-    val (newBands, touchedKeys, touchedPk, cache) =
-      Caches.localize(bandsPlan.withColumn("pk", bandPk(layout)),
-        maxRows = 1 << 20) match {
-        case Some(local) =>
-          val rows = local.collect() // LocalRelation: driver-side, no job
-          val schema = local.schema
-          val (bi, ki, pi) = (schema.fieldIndex("band"),
-            schema.fieldIndex("key"), schema.fieldIndex("pk"))
-          val keyRows = rows.map(r =>
-            org.apache.spark.sql.Row(r.get(bi), r.get(ki))).distinct.toSeq
-          val tk = spark.createDataFrame(
-            new java.util.ArrayList(scala.jdk.CollectionConverters
-              .SeqHasAsJava(keyRows).asJava),
-            org.apache.spark.sql.types.StructType(
-              Seq(schema("band"), schema("key"))))
-          val pk = rows.map(_.getInt(pi)).distinct.map(Int.box).toSeq
-          (local.drop("pk"), tk, pk, None)
-        case None =>
-          val nb = bandsPlan.persist()
-          val tk = nb.select(col("band"), col("key")).distinct()
-          val pk = tk.select(bandPk(layout).as("pk")).distinct()
-            .collect().map(r => Int.box(r.getInt(0))).toSeq
-          (nb, tk, pk, Some(nb))
-      }
+    // the probe front end (GenTable.touched, GenTable.visible): the
+    // touched buckets' index rows, every member of each
+    val t = GenTable.touched(bandRows(newDocs, layout, id, text, hashCol),
+      bandPk(layout), "band", "key")
     try {
-      val indexBands = GenTable.hide(spark.read.parquet(bandsPath(path)),
-          batchId.map(GenTable.batchGen))
-        .where(col("pk").isin(touchedPk: _*))
+      val indexBands = GenTable.visible(spark, bandsPath(path),
+          batchId.map(GenTable.batchGen), Some(t.pk))
         .select(col("doc_id"), col("sh"), col("band"), col("key"))
-        .join(broadcast(touchedKeys), Seq("band", "key"), "left_semi")
-      val combined = indexBands.withColumn("is_new", lit(false))
-        .unionByName(newBands.withColumn("is_new", lit(true)))
-      val pruned = layout.maxBucket match {
-        case Some(m) => TextOps.capHotBuckets(
-          combined, Seq("band", "key"), m, "simhash_index_hot_buckets")
-        case None => combined
-      }
-      val a = pruned.select(col("band"), col("key"),
-        col("doc_id").as("doc_a"), col("sh").as("ha"), col("is_new").as("na"))
-      val b = pruned.select(col("band"), col("key"),
-        col("doc_id").as("doc_b"), col("sh").as("hb"), col("is_new").as("nb"))
+        .join(broadcast(t.keys), Seq("band", "key"), "left_semi")
       // tombstoned docs are dead on arrival: their band rows survive
-      // until compact, but no pair names them
-      val tombs = TombstoneLog.readDir(spark, tombsPath(path), "doc_id")
-      def dropTombstoned(df: DataFrame): DataFrame = tombs.fold(df) { t =>
-        df.join(t, df("doc_a") === t("doc_id"), "left_anti")
-          .join(t, df("doc_b") === t("doc_id"), "left_anti")
-      }
-      // unordered here; the global sort — a sampling job + range exchange
-      // per probe — applies only on the returning API below (the
-      // streaming log sink's consumers sort on read)
-      val pairsUnordered = dropTombstoned(a.join(b, Seq("band", "key"))
-        .where(col("doc_a") < col("doc_b") && (col("na") || col("nb")))
-        .select(col("doc_a"), col("doc_b"), col("ha"), col("hb")).distinct()
-        .withColumn("hamming",
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
-        .where(col("hamming") <= layout.maxHamming)
-        .select(col("doc_a"), col("doc_b"), col("hamming")))
+      // until compact, but no pair names them. Unordered here; the global
+      // sort — a sampling job + range exchange per probe — applies only
+      // on the returning API below (the streaming log sink's consumers
+      // sort on read)
+      val pairsUnordered = TombstoneLog.mask(
+        TextOps.newVsIndexPairs(indexBands, t.rows, layout.maxBucket,
+            "simhash_index_hot_buckets", "sh")
+          .select(col("doc_a"), col("doc_b"), col("sh_a"), col("sh_b")).distinct()
+          .withColumn("hamming",
+            bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int"))
+          .where(col("hamming") <= layout.maxHamming)
+          .select(col("doc_a"), col("doc_b"), col("hamming")),
+        TombstoneLog.readDir(spark, tombsPath(path), "doc_id"), "doc_a", "doc_b")
       val pairs = if (needOrdered)
         pairsUnordered.orderBy(col("doc_a"), col("doc_b"))
       else pairsUnordered
       GenTable.probeThenAppend(batchId, () => materialize(pairs),
-        (newBands, bandsPath(path), bandsSpread(layout)))
-    } finally cache.foreach(_.unpersist())
+        (t.rows, bandsPath(path), bandsSpread(layout)))
+    } finally t.release()
   }
 
   /** Tombstone `docIds`: rows stay physically present until [[compact]],

@@ -160,6 +160,26 @@ object TextOps {
       .select(col("doc_a"), col("doc_b")).distinct()
   }
 
+  /** The new-vs-index bucket self-join of a persisted band index's probe
+    * (LshIndex, SimHashIndex): `index` holds the index rows of the touched
+    * buckets and `batch` the batch's rows, both (band, key, doc_id,
+    * `payload`…). Hot buckets are capped over the COMBINED bucket (index +
+    * batch), as the one-shot [[lshCandidatePairs]] caps them; the result
+    * keeps the pairs doc_a < doc_b with at least one batch side, as
+    * (band, key, doc_a, <payload>_a…, na, doc_b, <payload>_b…, nb). */
+  def newVsIndexPairs(index: DataFrame, batch: DataFrame,
+      maxBucket: Option[Int], metric: String, payload: String*): DataFrame = {
+    val combined = index.withColumn("is_new", lit(false))
+      .unionByName(batch.withColumn("is_new", lit(true)))
+    val pruned = maxBucket.fold(combined)(m =>
+      capHotBuckets(combined, Seq("band", "key"), m, metric))
+    def side(s: String): DataFrame = pruned.select(
+      Seq(col("band"), col("key"), col("doc_id").as(s"doc_$s")) ++
+        payload.map(p => col(p).as(s"${p}_$s")) :+ col("is_new").as(s"n$s"): _*)
+    side("a").join(side("b"), Seq("band", "key"))
+      .where(col("doc_a") < col("doc_b") && (col("na") || col("nb")))
+  }
+
   /** Exact jaccard on candidate pairs: |A∩B| via a shingle-equijoin
     * restricted to candidates, |A∪B| from per-doc set sizes. Only
     * candidate pairs pay the set-intersection cost. */

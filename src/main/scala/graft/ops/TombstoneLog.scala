@@ -27,6 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     kept generation; probes keep masking the doc, and a later
   *     compaction with no keepBatch removes rows and log entry for good.
   *
+  * Probes and folds mask takedowns the same way ([[mask]]): an anti join
+  * of the log's ids, size-hinted ([[hinted]]), out of each id column.
+  *
   * Only non-hidden files count as log content (`_SUCCESS` markers and
   * dot-files are ignored for reads but swept with their snapshot).
   */
@@ -76,13 +79,26 @@ object TombstoneLog {
 
   /** The whole log directory's ids as a size-hinted one-column frame
     * ([[hinted]]), or None when no log exists — the PROBE-side read
-    * every family's `tombstones` helper delegates to. */
+    * every family's [[mask]] takes. */
   def readDir(spark: SparkSession, dir: String, idCol: String): Option[DataFrame] = {
     val (fs, p) = fsOf(spark, dir)
     if (!fs.exists(p)) None
     else Some(hinted(spark,
       spark.read.parquet(dir).select(idCol).distinct(), dirBytes(spark, dir)))
   }
+
+  /** `df` without rows whose `cols` (default: the log's id column) name
+    * a tombstoned id — one anti join per column against `tombs` (a
+    * [[readDir]] / [[read]] frame, whose join hint each join keeps), in
+    * `df`'s column order (a USING join moves its key first). No log
+    * (`None`) leaves `df` as it is. */
+  def mask(df: DataFrame, tombs: Option[DataFrame], cols: String*): DataFrame =
+    tombs.fold(df) { t =>
+      val id = t.columns.head
+      (if (cols.isEmpty) Seq(id) else cols).foldLeft(df) { (d, c) =>
+        d.join(if (c == id) t else t.withColumnRenamed(id, c), Seq(c), "left_anti")
+      }.select(df.columns.map(org.apache.spark.sql.functions.col): _*)
+    }
 
   /** Append `ids` to the log as one new file (a takedown, or a fold
     * re-appending the ids it retains). */

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.{ChangelogMerge, EventOps, GenTable, GraphIndex, InvertedIndex,
   IvfIndex, LshIndex, Par, PqIndex, SimHashIndex}
 
@@ -365,19 +365,4 @@ object StreamingPipeline {
       // lag-1: fold only generations strictly OLDER than this batch
       if (b > 0) ChangelogMerge.compact(spark, tablePath, key, uptoGen = b - 1)
     }
-
-  /** Partitioned streaming file sink with the reference's 60 s cadence
-    * (run_toy_example.py:25). Time partitions derive from EVENT time; the
-    * reference's processing-time partitioning (toy_lambda_function.py:9-19)
-    * would put late events in wrong partitions silently. */
-  def sink(events: DataFrame, outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): DataStreamWriter[Row] = {
-    EventOps.withTimePartitions(events, col("ts"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("year", "month", "day", "hour")
-      .trigger(trigger)
-  }
 }

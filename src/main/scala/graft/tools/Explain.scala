@@ -8,8 +8,7 @@ object Explain {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // extra confs for plan experiments, StageProfile's knob verbatim —
-    // e.g. GRAFT_PROFILE_CONF=spark.graft.localize.maxRows=0 exposes the
+    // extra confs for plan experiments — e.g. GRAFT_PROFILE_CONF=spark.graft.localize.maxRows=0 exposes the
     // pre-localization plan of queries that collect driver-side
     sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(',').foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

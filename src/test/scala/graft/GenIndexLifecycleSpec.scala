@@ -23,6 +23,10 @@ import graft.ops.{GraphIndex, InvertedIndex, IvfIndex, LshIndex, PqIndex, SimHas
   *    generation directory with the pre-fold rows minus the tombstoned
   *    ones, in the table's column order, each file sorted on the table's
   *    cluster key, and no more files than the fold writes per generation.
+  *  - Probe front end: after an append and a takedown, each probe that
+  *    goes through `GenTable.touched` returns the same rows on the
+  *    over-cap fallback (`spark.graft.localize.maxRows = 0`) as on the
+  *    driver-local path.
   */
 class GenIndexLifecycleSpec extends SparkSpecBase {
   import spark.implicits._
@@ -307,6 +311,54 @@ class GenIndexLifecycleSpec extends SparkSpecBase {
           }
         }
       }
+    }
+  }
+
+  /** A probe through the touched-bucket front end, run on an index of
+    * `family` (built by `build` when given, else by the family's own
+    * build) after the family's batch 0 and a takedown of doc 2;
+    * `docCols` name the result's doc ids. LSH and SimHash probe-and-append
+    * as batch 1, so a second run is the batch's retry and sees the same
+    * index. */
+  private case class FrontEnd(name: String, family: String,
+      probe: String => DataFrame, docCols: Seq[String],
+      build: Option[String => Unit] = None)
+
+  private val dupBatch = texts(20L -> "the quick brown fox jumps over the lazy dog today")
+  private val frontEnds = Seq(
+    FrontEnd("LshIndex probe", "LshIndex",
+      LshIndex.probeAndAppend(spark, _, dupBatch, batchId = Some(1L)), Seq("doc_a", "doc_b")),
+    FrontEnd("SimHashIndex probe", "SimHashIndex",
+      SimHashIndex.probeAndAppend(spark, _, dupBatch, batchId = Some(1L)),
+      Seq("doc_a", "doc_b")),
+    FrontEnd("InvertedIndex term probe", "InvertedIndex",
+      InvertedIndex.probe(spark, _,
+        Seq(1L -> "quick", 1L -> "fox", 2L -> "spark", 2L -> "lazy")
+          .toDF("query_id", "term"), k = 3),
+      Seq("doc_id")),
+    FrontEnd("InvertedIndex phrase probe", "InvertedIndex",
+      InvertedIndex.phraseProbe(spark, _,
+        Seq(1L -> "quick brown fox", 2L -> "lazy dog").toDF("query_id", "phrase"), k = 3),
+      Seq("doc_id"),
+      build = Some(InvertedIndex.build(textBase, _, InvertedIndex.Config(positions = true)))))
+
+  frontEnds.foreach { f =>
+    test(s"${f.name}: the over-cap fallback of the probe front end returns " +
+      "the driver-local path's rows after an append and a takedown") {
+      val fam = families.find(_.name == f.family).get
+      val idx = tmpDir("front_end") + "/idx"
+      f.build.getOrElse(fam.build)(idx)
+      fam.probe(idx, fam.batch0, 0L)
+      fam.markDeleted.get._1(idx, Seq(2L))
+      val key = graft.ops.Caches.MaxRowsConf
+      val fallback =
+        try { spark.conf.set(key, "0"); f.probe(idx).collect() }
+        finally spark.conf.unset(key)
+      val local = f.probe(idx).collect()
+      val docs = local.flatMap(r => f.docCols.map(c => r.getAs[Long](c))).toSet
+      assert(docs.contains(10L), s"fixture is vacuous: $docs")
+      assert(!docs.contains(2L), s"the taken-down doc 2 was returned: $docs")
+      assert(fallback.map(_.toString).sorted.toSeq === local.map(_.toString).sorted.toSeq)
     }
   }
 }

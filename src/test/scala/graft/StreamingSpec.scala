@@ -318,27 +318,23 @@ class StreamingSpec extends SparkSpecBase {
     assert(sigs(streamIdx) === sigs(seqIdx))
   }
 
-  test("a near-dup ingest data micro-batch runs at most 21 Spark jobs, " +
-    "and at most 27 when it also fires the lag-1 fold") {
+  /** Spark jobs of data micro-batches 1 and 2 of an index ingest over an
+    * index `build` at a fresh path, started by `start(input, indexPath,
+    * compactEvery = Some(3))` over three text batches: batch 0 warms up,
+    * batch 1 probes, logs and appends, batch 2 also fires the lag-1 fold,
+    * which must leave `table` (under the index) with only `base` and
+    * `b2`. */
+  private def indexIngestJobs(build: String => Unit, table: String,
+      start: (org.apache.spark.sql.DataFrame, String, Option[Int]) =>
+        org.apache.spark.sql.streaming.StreamingQuery): (Int, Int) = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.ops.LshIndex
-    val idx = tmpDir("ndjobs_idx")
-    LshIndex.build(Seq(
-      1L -> "the quick brown fox jumps over the lazy dog",
-      2L -> "completely different text about spark engines here",
-      3L -> "totally unrelated fresh content never seen before")
-      .toDF("doc_id", "text"), idx)
+    val idx = tmpDir("idxjobs_idx")
+    build(idx)
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.startNearDupIngest(
-      mem.toDS().toDF("doc_id", "text"), idx, tmpDir("ndjobs_pairs"),
-      tmpDir("ndjobs_ckpt"),
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
-      compactEvery = Some(3))
+    val q = start(mem.toDS().toDF("doc_id", "text"), idx, Some(3))
     val listener = new BatchJobs(q.id.toString)
     spark.sparkContext.addSparkListener(listener)
     try {
-      // batch 0 warms up; batch 1 probes, logs and appends; batch 2 also
-      // fires the lag-1 fold
       Seq(
         Seq(10L -> "the quick brown fox jumps over the lazy dog today",
           11L -> "totally unrelated fresh content never seen before!"),
@@ -348,16 +344,47 @@ class StreamingSpec extends SparkSpecBase {
           31L -> "completely different text about spark engines there"))
         .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
       drainListenerBus()
-      val gens = spark.read.parquet(s"$idx/bands").select($"gen".cast("string"))
+      val gens = spark.read.parquet(s"$idx/$table").select($"gen".cast("string"))
         .distinct().as[String].collect().toSet
       assert(gens === Set("base", "b2"), s"the fold did not run: $gens")
-      // the counts measured when these bounds were set: a change that
-      // adds a job to the per-batch path fails here
-      assert(listener.of(1L) <= 21, s"batch 1 ran ${listener.of(1L)} jobs")
-      assert(listener.of(2L) <= 27, s"batch 2 ran ${listener.of(2L)} jobs")
+      (listener.of(1L), listener.of(2L))
     } finally {
       q.stop()
       spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  private val ingestBase = Seq(
+    1L -> "the quick brown fox jumps over the lazy dog",
+    2L -> "completely different text about spark engines here",
+    3L -> "totally unrelated fresh content never seen before").toDF("doc_id", "text")
+
+  private val trigger0 = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)
+
+  // (family, plain-batch cap, fold-batch cap, build, folded table, start):
+  // the caps are the counts measured when they were set, so a change that
+  // adds a job to a family's per-batch path fails here
+  Seq[(String, Int, Int, String => Unit, String,
+      (org.apache.spark.sql.DataFrame, String, Option[Int]) =>
+        org.apache.spark.sql.streaming.StreamingQuery)](
+    ("near-dup", 21, 27, graft.ops.LshIndex.build(ingestBase, _), "bands",
+      (in, idx, every) => StreamingPipeline.startNearDupIngest(in, idx,
+        tmpDir("ndjobs_pairs"), tmpDir("ndjobs_ckpt"), trigger = trigger0,
+        compactEvery = every)),
+    ("SimHash", 13, 16, graft.ops.SimHashIndex.build(ingestBase, _), "bands",
+      (in, idx, every) => StreamingPipeline.startSimHashIngest(in, idx,
+        tmpDir("shjobs_pairs"), tmpDir("shjobs_ckpt"), trigger = trigger0,
+        compactEvery = every)),
+    ("BM25", 27, 38, graft.ops.InvertedIndex.build(ingestBase, _), "postings",
+      (in, idx, every) => StreamingPipeline.startBm25Ingest(in, idx,
+        tmpDir("bm25jobs_matches"), tmpDir("bm25jobs_ckpt"), trigger = trigger0,
+        compactEvery = every))
+  ).foreach { case (family, plainCap, foldCap, build, table, start) =>
+    test(s"a $family ingest data micro-batch runs at most $plainCap Spark jobs, " +
+      s"and at most $foldCap when it also fires the lag-1 fold") {
+      val (plain, fold) = indexIngestJobs(build, table, start)
+      assert(plain <= plainCap, s"batch 1 ran $plain jobs")
+      assert(fold <= foldCap, s"batch 2 ran $fold jobs")
     }
   }
 
