@@ -1,7 +1,7 @@
 package graft.ops
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cache-lifetime helpers. Spark's `Dataset.persist` goes through the
   * CacheManager, which holds the entry until an explicit `unpersist` —
@@ -35,25 +35,30 @@ object Caches {
     * defaults. */
   val MaxRowsConf = "spark.graft.localize.maxRows"
 
-  /** The effective cap: the [[MaxRowsConf]] session override when set,
-    * else the call site's `default`. Rejects malformed/negative
-    * overrides with an error NAMING the conf key (a bare toInt deep
-    * inside a query's plan was undiagnosable — r14 advice); values
-    * above Int.MaxValue clamp (a cap that large never localizes in
-    * practice anyway). */
-  def effectiveMaxRows(df: DataFrame, default: Int): Int =
-    df.sparkSession.conf.getOption(MaxRowsConf).map { s =>
+  /** Session conf `key` read as a non-negative integer, None when
+    * unset. Rejects malformed/negative values with an error NAMING the
+    * key (a bare toLong deep inside a query's plan was undiagnosable —
+    * r14 advice); `meaning` says what the value is. Every graft session
+    * knob reads through here. */
+  def nonNegativeConf(spark: SparkSession, key: String, meaning: String): Option[Long] =
+    spark.conf.getOption(key).map { s =>
       val v =
         try s.trim.toLong
         catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(
-            s"$MaxRowsConf must be a non-negative integer row cap " +
-              s"(0 disables localization), got '$s'")
+            s"$key must be a non-negative integer ($meaning), got '$s'")
         }
-      require(v >= 0,
-        s"$MaxRowsConf must be >= 0 (0 disables localization), got $s")
-      math.min(v, Int.MaxValue.toLong).toInt
-    }.getOrElse(default)
+      require(v >= 0, s"$key must be >= 0 ($meaning), got $s")
+      v
+    }
+
+  /** The effective cap: the [[MaxRowsConf]] session override when set,
+    * else the call site's `default`. Values above Int.MaxValue clamp (a
+    * cap that large never localizes in practice anyway). */
+  def effectiveMaxRows(df: DataFrame, default: Int): Int =
+    nonNegativeConf(df.sparkSession, MaxRowsConf,
+      "a row cap; 0 disables localization")
+      .fold(default)(v => math.min(v, Int.MaxValue.toLong).toInt)
 
   /** Collect `df` into a LocalRelation-backed DataFrame iff it has at
     * most `maxRows` rows (as overridden by [[MaxRowsConf]]); None when

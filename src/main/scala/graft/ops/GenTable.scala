@@ -96,11 +96,10 @@ private[graft] object GenTable {
   }
 
   /** The batch side of a touched-bucket probe ([[touched]]): the batch
-    * rows, the distinct touched keys, the touched `pk` values, the
-    * driver-local batch rows (with `pk`; None over the cap) and the
+    * rows, the distinct touched keys, the touched `pk` values and the
     * over-cap fallback's cache, which [[release]] drops. */
   case class Touched(rows: DataFrame, keys: DataFrame, pk: Seq[Any],
-      local: Option[Array[Row]], cache: Option[DataFrame]) {
+      cache: Option[DataFrame]) {
     /** Call once every frame built on [[rows]] has run (or been
       * abandoned); a frame run later recomputes the batch rows. */
     def release(): Unit = cache.foreach(_.unpersist())
@@ -121,13 +120,12 @@ private[graft] object GenTable {
         val keyRows = rows.map(r => Row.fromSeq(ki.map(r.get))).distinct.toSeq
         val tk = plan.sparkSession.createDataFrame(
           new java.util.ArrayList(keyRows.asJava), StructType(keys.map(schema(_))))
-        Touched(local.drop("pk"), tk, rows.map(_.get(pi)).distinct.toSeq,
-          Some(rows), None)
+        Touched(local.drop("pk"), tk, rows.map(_.get(pi)).distinct.toSeq, None)
       case None =>
         val p = plan.persist()
         val tk = p.select(keys.map(col): _*).distinct()
         val pks = tk.select(pk).distinct().collect().map(_.get(0)).toSeq
-        Touched(p, tk, pks, None, Some(p))
+        Touched(p, tk, pks, Some(p))
     }
 
   /** How a family's rows spread over one write's files — the only

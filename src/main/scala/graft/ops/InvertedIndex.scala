@@ -1,6 +1,5 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,44 +98,6 @@ object InvertedIndex {
     * (quadratic in corpus for common terms once |batch| ∝ corpus; the
     * r16 sf1 sweep measured exactly that blowup). */
   val DefaultMaxPostings = 256
-
-  /** Prefix depth of the max-score pruned probe (see [[maxScoreScored]]):
-    * how many highest-impact postings per term the first phase scores
-    * before deciding whether the tail can matter at all. */
-  val MaxScorePrefix = 32
-
-  /** Above this many candidate docs the tail filter joins instead of
-    * riding the scan as a pushed IN predicate. */
-  private val MaxScoreIsinCap = 1024
-
-  /** Session conf gating max-score engagement: the pruning pays one
-    * extra bounded job (the prefix phase), so it engages only when the
-    * scoring volume it can SKIP — (m − m0) · |query-term pairs| rows
-    * that would otherwise enter the scoring join — is at least this
-    * many rows (default 1M ≈ the work one small job costs; the r18
-    * closing bench measured the always-on spelling taxing the sf0.1
-    * gates ~0.7 s per ingest probe for nothing). Set it to 0 to force
-    * the pruned path (the spec spelling), or very high to disable. */
-  val MaxScoreMinSavedConf = "spark.graft.bm25.maxscore.minSavedRows"
-
-  /** Upper bound on phase A itself (|query-term pairs| · m0 rows):
-    * phase A localizes its detail to the driver and ships the partial
-    * scores back as a LocalRelation, so past a few hundred thousand
-    * rows the round-trip costs more than the skipped join (measured:
-    * a 12.5k-doc ingest batch at sf1 ran 18.9 s pruned vs ~11 s plain).
-    * Together with [[MaxScoreMinSavedConf]] this brackets the regime
-    * the pruning genuinely wins: moderate query batches against
-    * hot-term-heavy postings, where the tail dwarfs the prefix. */
-  private val MaxScorePhaseACap = 1L << 18
-
-  private def maxScoreMinSaved(spark: SparkSession): Long =
-    spark.conf.getOption(MaxScoreMinSavedConf).map { s =>
-      try s.trim.toLong
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$MaxScoreMinSavedConf must be a row count, got '$s'")
-      }
-    }.getOrElse(1L << 20)
 
   def postingsPath(path: String): String = s"$path/postings"
   def termdfPath(path: String): String = s"$path/termdf"
@@ -277,11 +238,11 @@ object InvertedIndex {
     * `excludeGen` is hidden (GenTable.visible, the retry contract).
     *
     * `maxPostings = Some(m)` applies IMPACT-ORDERED truncation (the
-    * public Anh–Moffat impact-ordering / Lucene max-score family): each
-    * term SCORES against only its top-`m` postings by (tf desc,
-    * doc_id), while idf keeps the TRUE df — so a common term's
-    * contribution is both honest (its idf is tiny) and bounded (its
-    * join fan-out is ≤ m rows instead of ≤ corpus). Mandatory for
+    * public Anh–Moffat impact ordering): each term SCORES against only
+    * its top-`m` postings by (tf desc, doc_id), while idf keeps the
+    * TRUE df — so a common term's contribution is both honest (its idf
+    * is tiny) and bounded (its join fan-out is ≤ m rows instead of ≤
+    * corpus). Mandatory for
     * probes whose query count scales with the corpus (the ingest path
     * defaults to [[DefaultMaxPostings]]). On an impact-ordered index the
     * cut is a PUSHED SCAN PREDICATE (`irn <= m` against the materialized
@@ -296,12 +257,12 @@ object InvertedIndex {
       maxPostings: Option[Int] = None): DataFrame = {
     val layout = adoptMeta(spark, path, cfg)
     // the probe front end (GenTable.touched): the touched pk values and
-    // the term semi-join list; the local query rows also feed max-score.
-    // The result is lazy, so a released over-cap cache is recomputed.
+    // the term semi-join list. The result is lazy, so a released
+    // over-cap cache is recomputed.
     val t = GenTable.touched(queries.select(col("query_id"), col("term")),
       termPk(layout), "term")
     try {
-      val (q, touchedTerms, localQ) = (t.rows, t.keys, t.local)
+      val (q, touchedTerms) = (t.rows, t.keys)
       val rawPost = GenTable.visible(spark, postingsPath(path), excludeGen, Some(t.pk))
       // materialized truncation: on an impact-ordered index the per-term
       // cut is a pushed parquet predicate on the rank column — the scan
@@ -345,41 +306,21 @@ object InvertedIndex {
           post.withColumn("prn", row_number().over(wImp))
             .where(col("prn") <= m).drop("prn")
         }
-      val tombs = TombstoneLog.readDir(spark, tombsPath(path), "doc_id")
-      // max-score pruning (the Turtle–Flood / Lucene max-score family in
-      // batch-relational form): on the single-generation impact-ordered
-      // fast path, a bounded PREFIX often already settles the top-k — see
-      // [[maxScoreScored]]. Engages only when exactness is provable;
-      // anything else falls back to the plain full-cap scoring below.
-      val prunedScored: Option[DataFrame] =
-        if (!singleVisibleGen || localQ.isEmpty || tombs.isDefined) None
-        else maxPostings.flatMap { m =>
-          val m0 = math.max(k, MaxScorePrefix)
-          // engagement gate, both sides: the one extra job must pay for
-          // itself in skipped scoring-join volume, AND phase A's driver
-          // round-trip must stay small (see MaxScorePhaseACap)
-          val saved = (m - m0).toLong * localQ.get.length
-          val phaseA = m0.toLong * localQ.get.length
-          if (m0 >= m || saved < maxScoreMinSaved(spark) ||
-              phaseA > MaxScorePhaseACap) None
-          else maxScoreScored(spark, rawPost, q, localQ.get, touchedTerms,
-            df, stats, k, m, m0)
-        }
-      val scored = prunedScored.getOrElse(
-        scoredPost.join(broadcast(q), "term")
-          .join(broadcast(df), "term")
-          .crossJoin(broadcast(stats))
-          .withColumn("s", bm25())
-          .groupBy(col("query_id"), col("doc_id"))
-          .agg(sum(col("s")).as("score")))
-      topK(TombstoneLog.mask(scored, tombs, "doc_id"), k)
+      val scored = scoredPost.join(broadcast(q), "term")
+        .join(broadcast(df), "term")
+        .crossJoin(broadcast(stats))
+        .withColumn("s", bm25)
+        .groupBy(col("query_id"), col("doc_id"))
+        .agg(sum(col("s")).as("score"))
+      topK(TombstoneLog.mask(scored,
+        TombstoneLog.readDir(spark, tombsPath(path), "doc_id"), "doc_id"), k)
     } finally t.release()
   }
 
   /** The exact q130 BM25 term weight idf · tfn — bit-pinned against
-    * DuckDB there — over the columns n, df and avgdl and the given tf and
-    * dl (a posting's own by default). */
-  private def bm25(tf: Column = col("tf"), dl: Column = col("dl")): Column = {
+    * DuckDB there — over the columns n, df, avgdl, tf and dl. */
+  private def bm25: Column = {
+    val (tf, dl) = (col("tf"), col("dl"))
     val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
     val tfn = (tf * 2.2) / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * dl / col("avgdl")))
     idf * tfn
@@ -400,152 +341,6 @@ object InvertedIndex {
       .orderBy(col("score").desc, col("doc_id"))
     scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
       .select(col("query_id"), col("rn"), col("doc_id"), col("score"))
-  }
-
-  /** Max-score / block-max pruned scoring (Turtle & Flood's max-score,
-    * Lucene's `MAXSCORE` family, adapted to the batch-relational probe):
-    * instead of scoring every `irn <= m` posting of every probed term,
-    * score a bounded PREFIX (`irn <= m0`) first, bound what the tail
-    * (`m0 < irn <= m`) could still contribute, and read the tail ONLY
-    * for docs that can still reach the top-k.
-    *
-    * Soundness (why the result is BIT-IDENTICAL to full-cap scoring):
-    *   - every prefix posting is in the final sum (single generation ⇒
-    *     `irn` IS the global impact rank), so a doc's prefix score `p`
-    *     LOWER-bounds its final score;
-    *   - a tail posting of term t has tf ≤ the term's boundary tf (the
-    *     minimum tf in its prefix — the impact order guarantees it) and
-    *     tfn is increasing in tf and maximal at dl = 1, so its
-    *     contribution is ≤ bmax_t = idf_t · tfn(btf_t, dl = 1); terms
-    *     with df ≤ m0 have NO tail (bmax = 0);
-    *   - θ_q = the k-th best prefix score lower-bounds the k-th best
-    *     FINAL score (final ≥ prefix pointwise, all contributions > 0);
-    *   - an UNSEEN doc's final score is ≤ B_q = Σ_t bmax_t < θ_q (the
-    *     query-safety test, strict) ⇒ it cannot enter the top-k;
-    *   - a SEEN doc's final score is ≤ p + Σ_{t where unseen} bmax_t =
-    *     p + B_q − Σ_{t where seen} bmax_t; below θ_q (strict) ⇒ out.
-    * Docs that survive those bounds get their tail postings scored for
-    * real (a superset filter — extra tail rows only make non-winners'
-    * partial scores more exact, never change the top-k), so every
-    * EMITTED row carries the exact full-cap score. Queries that fail
-    * the safety test (θ undefined, or B_q ≥ θ_q) keep their whole tail.
-    *
-    * Engages only when (a) the skippable scoring volume clears
-    * [[MaxScoreMinSavedConf]] — the pruning pays one extra bounded job,
-    * which must pay for itself — (b) the index carries NO tombstone log
-    * (a tombstoned prefix doc would inflate θ and over-prune alive
-    * docs; tombstones are transient between takedown and compact), and
-    * (c) the phase-A prefix localizes (bounded driver work — the
-    * ingest path's batch-sized probes); returns None to fall back
-    * otherwise. Phase A is ONE job: the localized detail rows carry
-    * both the exact prefix score and the row's term tail bound, and
-    * every tail-bearing term necessarily has prefix rows (irn starts
-    * at 1), so the per-query budget derives driver-side.
-    * The candidate-doc tail filter rides the SCAN as a
-    * pushed IN predicate when the list is small (≤ [[MaxScoreIsinCap]],
-    * no unsafe queries — on a skewed corpus the tail scan then reads
-    * near-zero rows), and joins otherwise. Sum-order caveat: per-doc
-    * partials add driver-side; for the ≤ 2-term distilled queries the
-    * families use, IEEE addition is commutative so scores stay
-    * bit-stable (the object-scaladoc short-query discipline). */
-  private def maxScoreScored(spark: SparkSession, rawPost: DataFrame,
-      q: DataFrame, qRows: Array[org.apache.spark.sql.Row],
-      touchedTerms: DataFrame, df: DataFrame, stats: DataFrame,
-      k: Int, m: Int, m0: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val prefix = rawPost.where(col("irn") <= m0)
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-      .join(broadcast(touchedTerms), Seq("term"), "left_semi")
-    // boundary tf per term over the PHYSICAL prefix (tombstoned docs
-    // included — they are physical postings until compact, and the tail
-    // bound is about physical rows)
-    val btf = prefix.groupBy(col("term")).agg(min(col("tf")).as("btf"))
-    // the single phase-A frame: exact prefix score AND the row's term
-    // tail bound (0 for terms fully inside the prefix — df <= m0 means
-    // no tail exists)
-    val detail = prefix.join(broadcast(q), "term")
-      .join(broadcast(df), "term").join(broadcast(btf), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("term"), col("doc_id"),
-        bm25().as("s"),
-        // the tail bound: boundary tf at dl = 1
-        when(col("df") > m0, bm25(col("btf"), lit(1.0))).otherwise(lit(0.0)).as("bmax"))
-    val localDetail = Caches.localize(detail, maxRows = 1 << 22)
-      .map(_.collect())
-    if (localDetail.isEmpty) return None
-    // every tail-bearing (query, term) has prefix rows (irn starts at
-    // 1), so the per-query tail budget derives from the detail itself
-    val bmaxByQt = localDetail.get
-      .map(r => (r.get(0), r.getString(1)) -> r.getDouble(4)).toMap
-    val bByQ = bmaxByQt.toSeq.groupBy(_._1._1)
-      .map { case (qid, rs) => qid -> rs.map(_._2).sum }
-    // p (exact prefix partial) and covered-bound per (query, doc)
-    val pd = scala.collection.mutable.LinkedHashMap
-      .empty[(Any, Any), (Double, Double)]
-    localDetail.get.foreach { r =>
-      val key = (r.get(0), r.get(2))
-      val bm = bmaxByQt.getOrElse((r.get(0), r.getString(1)), 0.0)
-      val (p0, c0) = pd.getOrElse(key, (0.0, 0.0))
-      pd(key) = (p0 + r.getDouble(3), c0 + bm)
-    }
-    val byQ = pd.toSeq.groupBy(_._1._1)
-    val keepDocs = scala.collection.mutable.LinkedHashSet.empty[Any]
-    val unsafeQ = scala.collection.mutable.LinkedHashSet.empty[Any]
-    qRows.map(_.get(0)).distinct.foreach { qid =>
-      val docs = byQ.getOrElse(qid, Seq.empty)
-      val b = bByQ.getOrElse(qid, 0.0)
-      if (docs.size < k && b > 0.0) { unsafeQ += qid; () }
-      else if (docs.size >= k) {
-        val th = docs.map(_._2._1).sorted(Ordering[Double].reverse)(k - 1)
-        if (b < th)
-          docs.foreach { case ((_, d), (p, cov)) =>
-            if (p + b - cov >= th) { keepDocs += d; () }
-          }
-        else { unsafeQ += qid; () }
-      }
-      // docs.size < k with b == 0: nothing beyond the prefix exists for
-      // this query — safe with no candidates
-    }
-    // phase-A partials as a LocalRelation — reused, not recomputed
-    val qidField = detail.schema("query_id")
-    val docField = detail.schema("doc_id")
-    val pRows: Seq[Row] =
-      pd.toSeq.map { case ((qid, d), (p, _)) => Row(qid, d, p) }
-    val pref = spark.createDataFrame(
-      new java.util.ArrayList(pRows.asJava),
-      StructType(Seq(qidField, docField, StructField("s", DoubleType))))
-    val tailNeeded = unsafeQ.nonEmpty || keepDocs.nonEmpty
-    val tailScored: Option[DataFrame] = if (!tailNeeded) None else {
-      val tailBase = rawPost.where(col("irn") > m0 && col("irn") <= m)
-      val pushIn = unsafeQ.isEmpty && keepDocs.size <= MaxScoreIsinCap
-      val tailCut =
-        if (pushIn) tailBase.where(col("doc_id").isin(keepDocs.toSeq: _*))
-        else tailBase
-      val scored0 = tailCut
-        .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-        .join(broadcast(touchedTerms), Seq("term"), "left_semi")
-        .join(broadcast(q), "term")
-        .join(broadcast(df), "term").crossJoin(broadcast(stats))
-        .select(col("query_id"), col("doc_id"), bm25().as("s"))
-      Some(
-        if (pushIn) scored0
-        else {
-          val kd = spark.createDataFrame(
-            new java.util.ArrayList(keepDocs.toSeq.map(Row(_)).asJava),
-            StructType(Seq(docField))).withColumn("__kd", lit(1))
-          val uq = spark.createDataFrame(
-            new java.util.ArrayList(unsafeQ.toSeq.map(Row(_)).asJava),
-            StructType(Seq(qidField))).withColumn("__kq", lit(1))
-          scored0.join(broadcast(kd), Seq("doc_id"), "left")
-            .join(broadcast(uq), Seq("query_id"), "left")
-            .where(col("__kd") === 1 || col("__kq") === 1)
-            .drop("__kd", "__kq")
-        })
-    }
-    Some(tailScored.fold(pref)(t => pref.unionByName(t))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("s")).as("score")))
   }
 
   /** GLOBAL document frequency per term — all visible generations
@@ -624,7 +419,7 @@ object InvertedIndex {
         .agg(count(lit(1)).as("df"))
       val scored = ptf.join(broadcast(pdf), Seq("query_id", "phrase"))
         .crossJoin(broadcast(corpusStats(spark, path, excludeGen)))
-        .withColumn("score", bm25())
+        .withColumn("score", bm25)
       topK(TombstoneLog.mask(scored,
         TombstoneLog.readDir(spark, tombsPath(path), "doc_id"), "doc_id"), k)
     } finally t.release()
@@ -680,9 +475,7 @@ object InvertedIndex {
         // gen=b<id> files the append is about to REPLACE) must freeze
         // before any dynamic-overwrite delete — deferring it into the
         // round races readParquetFootersInParallel against the retry's
-        // partition replacement. probe() now also runs its bounded
-        // max-score phase-A jobs here, serial before the appends — two
-        // small prefix-sized jobs, a price worth the retry safety.
+        // partition replacement.
         val log = probe(spark, path, q, k,
           excludeGen = batchId.map(GenTable.batchGen), cfg = layout,
           maxPostings = maxPostings)

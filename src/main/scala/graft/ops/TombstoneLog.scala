@@ -71,8 +71,9 @@ object TombstoneLog {
     * renamed pair-key — inherits the bounded posture without each call
     * site re-deciding. */
   private def hinted(spark: SparkSession, df: DataFrame, bytes: Long): DataFrame = {
-    val cap = spark.conf.get(BroadcastMaxBytesKey,
-      DefaultBroadcastMaxBytes.toString).toLong
+    val cap = Caches.nonNegativeConf(spark, BroadcastMaxBytesKey,
+      "bytes of on-disk log; a larger log shuffles")
+      .getOrElse(DefaultBroadcastMaxBytes)
     if (bytes <= cap) org.apache.spark.sql.functions.broadcast(df)
     else df.hint("shuffle_hash")
   }

@@ -20,9 +20,10 @@ import graft.sources.Tables
   * read-only form (probe-only gates need no copy).
   *
   * Correctness is untouched: every memoized build is deterministic
-  * (ties totally ordered), so the cached artifact is bit-identical to a
-  * per-query rebuild, and the oracles replay the same closed form
-  * either way. Nothing in ops/ knows about this memo — production
+  * (ties totally ordered), so the cached artifact is row-identical to a
+  * per-query rebuild (range-clustered builds — IVF, graph, PQ — may
+  * split those rows over files differently between runs), and the
+  * oracles replay the same closed form either way. Nothing in ops/ knows about this memo — production
   * pipelines call the build APIs directly on durable storage. */
 private[queries] object GraphFixtures {
 
@@ -58,7 +59,7 @@ private[queries] object GraphFixtures {
     * builds that differ in any of them get distinct clones, so call sites
     * sharing a family name cannot silently share a differing build. Same
     * amortization contract as every named helper below: the build is
-    * bit-identical per key by construction, each gate mutates its own
+    * row-identical per key by construction, each gate mutates its own
     * clone. */
   def cloneIntoFor(family: String, dir: String, destPath: String, inputs: Any*)(
       build: String => Unit): Unit =

@@ -305,10 +305,10 @@ object StreamingPipeline {
     * the batch appends to BOTH indexes. The two legs run CONCURRENTLY
     * (different index paths, independent locks), each already
     * overlapping its own probe with its generation appends. */
-  def hybridIngestBatch(batch: DataFrame, batchId: Long, bm25Path: String,
-      ivfPath: String, cents: Seq[Seq[Float]], fusedDir: String,
-      sideK: Int = 10, fuseK: Int = 5, rrfC: Int = 60,
-      queryTerms: Int = 2, nprobe: Int = 2): Unit = {
+  private def hybridIngestBatch(batch: DataFrame, batchId: Long,
+      bm25Path: String, ivfPath: String, cents: Seq[Seq[Float]],
+      fusedDir: String, sideK: Int, fuseK: Int, rrfC: Int,
+      queryTerms: Int, nprobe: Int): Unit = {
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
     val cached = batch.persist()

@@ -375,85 +375,10 @@ class InvertedIndexSpec extends SparkSpecBase {
     assert(nWindows(multi.queryExecution.optimizedPlan) == 2)
   }
 
-  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: QueryStageExec        => fileScans(q.plan)
-      case s: FileSourceScanExec    => Seq(s)
-      case other                    => other.children.flatMap(fileScans)
-    }
-  }
-
-  test("max-score pruning: the prefix settles top-k and the tail scan " +
-    "reads (almost) nothing on a skewed corpus") {
-    val path = tmpDir("bm25_maxscore")
-    // skewed single-term corpus: 3 strong docs (tf = 50), 97 weak
-    // (tf = 1), constant dl — the 32-posting prefix decides the top-3
-    // and every candidate's postings live inside it, so the tail scan
-    // (irn in (32, 64], candidate-filtered) must read ZERO rows
-    val docs = (0 until 100).map { i =>
-      val c = if (i < 3) 50 else 1
-      (i.toLong, (("common " * c) + ("pad " * (64 - c))).trim)
-    }.toDF("doc_id", "text")
-    InvertedIndex.build(docs, path)
-    val q = Seq((0L, "common")).toDF("query_id", "term")
-    // force the engagement gate open: a 1-query fixture never clears the
-    // saved-volume threshold that keeps gate-scale probes on the plain
-    // path (the conf is the spec spelling its scaladoc names)
-    spark.conf.set(InvertedIndex.MaxScoreMinSavedConf, "0")
-    val res =
-      try InvertedIndex.probe(spark, path, q, 3, maxPostings = Some(64))
-      finally spark.conf.unset(InvertedIndex.MaxScoreMinSavedConf)
-    val got = res.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-      math.rint(r.getDouble(3) * 1e6) / 1e6)).toSeq.sorted
-    // bit-identical to the untruncated from-scratch ranking (the top-3
-    // sits comfortably inside any cap)
-    assert(got == brute(docs, q, 3))
-    assert(got.map(_._3).toSet == Set(0L, 1L, 2L))
-    // scan evidence: the probe's own plan holds only the TAIL postings
-    // scan (phase A ran as its own bounded job), carrying BOTH the
-    // (m0, m] rank window and the candidate IN predicate as pushed scan
-    // filters — at real scale those prune row groups by min/max; at
-    // fixture scale (one tiny row group) the exact cut lands in the
-    // Filter directly above the vectorized scan, which must emit ZERO
-    // rows into the scoring join — strictly below the 64-row irn <= m
-    // volume the unpruned probe scores
-    val postScans = fileScans(res.queryExecution.executedPlan)
-      .filter(_.output.exists(_.name == "tf"))
-    assert(postScans.nonEmpty, "expected the candidate-filtered tail scan")
-    postScans.foreach { s =>
-      val pushed = s.metadata.getOrElse("PushedFilters", "")
-      assert(pushed.contains("GreaterThan(irn,32)") &&
-        pushed.contains("In(doc_id"),
-        s"tail cut not pushed to the scan: $pushed")
-    }
-    def tailFilters(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FilterExec] = {
-      import org.apache.spark.sql.execution.FilterExec
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      p match {
-        case a: AdaptiveSparkPlanExec => tailFilters(a.executedPlan)
-        case q: QueryStageExec        => tailFilters(q.plan)
-        case f: FilterExec if f.condition.toString.contains("irn") =>
-          Seq(f) ++ f.children.flatMap(tailFilters)
-        case other => other.children.flatMap(tailFilters)
-      }
-    }
-    val tailRows = tailFilters(res.queryExecution.executedPlan)
-      .map(_.metrics("numOutputRows").value).sum
-    assert(tailRows == 0L,
-      s"tail filter emitted $tailRows rows — the max-score skip did not engage")
-  }
-
-  test("max-score pruning falls back exactly where it must: unsafe " +
-    "queries and short prefixes keep full-cap parity") {
-    val path = tmpDir("bm25_maxscore_parity")
-    // adversarial mix: a flat-tf common term (every posting ties, so the
-    // tail bound CANNOT clear the threshold → unsafe), a prefix-decided
-    // skewed term, and rare terms with no tail at all
+  test("truncated probe matches the capped reference on a tie-heavy corpus") {
+    // adversarial mix: a flat-tf common term (every posting ties on tf,
+    // so the cut falls inside a tie run and doc_id decides it), a skewed
+    // term whose top postings dominate, and rare terms below the cap
     val rnd = new scala.util.Random(7)
     val docs = (0 until 120).map { i =>
       val common = "common " * (1 + rnd.nextInt(3))
@@ -461,16 +386,11 @@ class InvertedIndexSpec extends SparkSpecBase {
       val rare = if (i % 17 == 0) s"rare$i " else ""
       (i.toLong, (common + skew + rare + "pad " * (8 + rnd.nextInt(5))).trim)
     }.toDF("doc_id", "text")
-    InvertedIndex.build(docs, path)
     val q = Seq((0L, "common"), (1L, "skewed"), (2L, "common"), (2L, "skewed"),
       (3L, "rare0"), (3L, "rare17"), (4L, "absent"))
       .toDF("query_id", "term")
-    // the pruned probe must equal the merge-window spelling of the SAME
-    // truncation contract: compare against a multi-gen clone of the same
-    // corpus (its probe takes the unpruned path) posting-for-posting is
-    // impossible — instead pin against the explicitly-computed capped
-    // reference: per term keep the top-m postings by (tf desc, doc_id),
-    // score, then top-k
+    // the explicitly-computed capped reference: per term keep the top-m
+    // postings by (tf desc, doc_id), score, then top-k
     val m = 48
     def cappedBrute(): Seq[(Long, Int, Long, Double)] = {
       val tok = docs.select(col("doc_id"),
@@ -497,13 +417,22 @@ class InvertedIndexSpec extends SparkSpecBase {
         .collect().map(r => (r.getLong(0), r.getInt(3), r.getLong(1),
           math.rint(r.getDouble(2) * 1e6) / 1e6)).toSeq.sorted
     }
-    spark.conf.set(InvertedIndex.MaxScoreMinSavedConf, "0")
-    val pruned =
-      try InvertedIndex.probe(spark, path, q, 3, maxPostings = Some(m))
+    def truncated(path: String) =
+      InvertedIndex.probe(spark, path, q, 3, maxPostings = Some(m))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
           math.rint(r.getDouble(3) * 1e6) / 1e6)).toSeq.sorted
-      finally spark.conf.unset(InvertedIndex.MaxScoreMinSavedConf)
-    assert(pruned == cappedBrute())
+    val expected = cappedBrute()
+    // one generation: the pushed `irn <= m` cut alone
+    val single = tmpDir("bm25_trunc_ties")
+    InvertedIndex.build(docs, single)
+    assert(truncated(single) == expected)
+    // half the corpus as base, the other half appended as generation b0:
+    // the cross-generation merge window over the same tie runs
+    val twoGens = tmpDir("bm25_trunc_ties_gens")
+    InvertedIndex.build(docs.where(col("doc_id") < 60), twoGens)
+    InvertedIndex.probeAndAppend(spark, twoGens, docs.where(col("doc_id") >= 60),
+      Some(0L))
+    assert(truncated(twoGens) == expected)
   }
 
   test("probing a non-index path fails loudly") {

@@ -63,6 +63,22 @@ class TombstoneBoundSpec extends SparkSpecBase {
       "tombstoned docs must stay hidden under both strategies")
   }
 
+  test("a malformed or negative broadcast budget fails naming its key") {
+    val path = tmpDir("tomb_bound_conf")
+    InvertedIndex.build(docs, path)
+    InvertedIndex.markDeleted(spark, path, Seq(3L))
+    val q = Seq((0L, "alpha")).toDF("query_id", "term")
+    val key = TombstoneLog.BroadcastMaxBytesKey
+    val old = spark.conf.getOption(key)
+    try Seq("10MB", "-1").foreach { v =>
+      spark.conf.set(key, v)
+      val e = intercept[IllegalArgumentException] {
+        InvertedIndex.probe(spark, path, q, 8).collect()
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains(v), e.getMessage)
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("IVF compact applies a forced-large tombstone set via shuffle and " +
     "still drops the vectors physically") {
     val path = tmpDir("tomb_bound_ivf")
