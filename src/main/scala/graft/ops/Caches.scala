@@ -1,7 +1,7 @@
 package graft.ops
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Cache-lifetime helpers. Spark's `Dataset.persist` goes through the
   * CacheManager, which holds the entry until an explicit `unpersist` —
@@ -16,10 +16,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * SCALE NOTE (the deployment contract for the call-site caps —
   * IvfIndex / LshIndex / PqIndex probe results, NN-Descent round edges):
-  * every caller treats `None` as "too big to localize" and falls back
-  * to `persist()`/`localCheckpoint`, so correctness NEVER depends on
-  * localization succeeding — the cap only trades driver heap for
-  * avoiding a cluster-side materialization. On a real cluster the
+  * a result that must outlive the caches it reads goes through
+  * [[settle]], whose over-cap fallback is an eager `localCheckpoint()`
+  * — outside the CacheManager, reclaimed with the returned frame by the
+  * ContextCleaner — so correctness NEVER depends on localization
+  * succeeding and the fallback pins nothing for the session's lifetime;
+  * the cap only trades driver heap for avoiding a cluster-side
+  * materialization. An aggregate bounded by construction does not go
+  * through the cap at all ([[collectExact]]). On a real cluster the
   * default caps (typically `1 << 22` rows ≈ 4 M) assume driver heap in
   * the tens of GiB for wide rows; a deployment sizes the cap to its
   * driver via [[MaxRowsConf]] (one setting governs every call site)
@@ -60,15 +64,38 @@ object Caches {
       "a row cap; 0 disables localization")
       .fold(default)(v => math.min(v, Int.MaxValue.toLong).toInt)
 
-  /** Collect `df` into a LocalRelation-backed DataFrame iff it has at
-    * most `maxRows` rows (as overridden by [[MaxRowsConf]]); None when
-    * it is too large to localize — callers fall back to persist /
-    * localCheckpoint. Row order is preserved (single local partition). */
-  def localize(df: DataFrame, maxRows: Int): Option[DataFrame] = {
+  /** ONE bounded probe: `df`'s rows and a LocalRelation-backed frame
+    * over them iff it has at most `maxRows` rows (as overridden by
+    * [[MaxRowsConf]]), None when it is too large to localize. Row order
+    * is preserved (single local partition). */
+  def localizeWithRows(df: DataFrame,
+      maxRows: Int): Option[(DataFrame, Array[Row])] = {
     val cap = effectiveMaxRows(df, maxRows)
     if (cap <= 0) return None
     val rows = df.limit(cap + 1).collect()
-    if (rows.length > cap) None
-    else Some(df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema))
+    if (rows.length > cap) None else Some((local(df, rows), rows))
   }
+
+  /** [[localizeWithRows]]'s frame alone. */
+  def localize(df: DataFrame, maxRows: Int): Option[DataFrame] =
+    localizeWithRows(df, maxRows).map(_._1)
+
+  /** `df` materialized so that it outlives every cache and scratch file
+    * its plan reads: [[localize]]d under the cap, else an eager
+    * `localCheckpoint()` — lineage cut, kept outside the CacheManager,
+    * its blocks reclaimed with the returned frame. */
+  def settle(df: DataFrame, maxRows: Int): DataFrame =
+    localize(df, maxRows).getOrElse(df.localCheckpoint())
+
+  /** A result bounded by construction (a global aggregate, a fixed
+    * grid) collected into a local frame regardless of the cap, with its
+    * known row count checked. */
+  def collectExact(df: DataFrame, rows: Int): DataFrame = {
+    val got = df.collect()
+    require(got.length == rows, s"expected exactly $rows rows, got ${got.length}")
+    local(df, got)
+  }
+
+  private def local(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
 }

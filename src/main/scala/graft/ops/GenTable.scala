@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Probe, then append ([[probeThenAppend]]). The probe's result is
   * materialized by one action BEFORE any append it must not observe:
-  * [[localized]] for the returning APIs, [[toBatchLog]] for the
+  * [[Caches.settle]] for the returning APIs, [[toBatchLog]] for the
   * streaming ones. A batch that owns a generation runs that action and
   * its appends in ONE concurrent `Par.all` round: the probe plan's
   * listing froze at construction and it hides `gen=b<id>`, the only
@@ -214,13 +214,6 @@ private[graft] object GenTable {
     else { result = materialize(); Par.all(jobs: _*) }
     result
   }
-
-  /** Materializer of the returning probe APIs: the result localized to
-    * the driver under `maxRows`, else eagerly localCheckpoint-ed —
-    * frozen pre-append, outside the CacheManager, reclaimed with the RDD
-    * by the context cleaner. */
-  def localized(maxRows: Int): DataFrame => DataFrame =
-    df => Caches.localize(df, maxRows).getOrElse(df.localCheckpoint())
 
   /** Materializer of the streaming probe APIs: the result written
     * straight into the batch log ([[writeBatchLog]]) — the log write IS

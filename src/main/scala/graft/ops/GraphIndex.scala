@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -171,24 +171,9 @@ object GraphIndex {
   private def nodeRows(df: DataFrame): DataFrame = df.select(col("vec_id"), col("embedding"))
   private def edgeRows(df: DataFrame): DataFrame = df.select(col("src"), col("dst"), col("cos"))
 
-  private def settleLineage(df: DataFrame, maxRows: Int = 1 << 22): DataFrame =
-    Caches.localize(df, maxRows).getOrElse { val p = df.persist(); p.count(); p }
+  private def settleLineage(df: DataFrame): DataFrame = Caches.settle(df, 1 << 22)
 
   // ------------------------------------------------------------- probe
-
-  /** Bounded settle that keeps the collected rows for driver-side
-    * expansion: Some(localFrame, rows) under the cap (conf-sized, the
-    * Caches.effectiveMaxRows rule), None over it — the caller's signal
-    * to stay distributed. */
-  private def settleBeam(df: DataFrame,
-      maxRows: Int): Option[(DataFrame, Array[Row])] = {
-    val cap = Caches.effectiveMaxRows(df, maxRows)
-    if (cap <= 0) return None
-    val rows = df.limit(cap + 1).collect()
-    if (rows.length > cap) None
-    else Some((df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema), rows))
-  }
 
   /** Best-first beam search over the persisted graph: every probe starts
     * at the deterministic entry vertex (minimum visible vec_id — the
@@ -234,7 +219,7 @@ object GraphIndex {
               spark, col("ve"), col("probe")).as("cos"))
       }
       // hop 0: every probe's beam = the entry vertex (no window needed)
-      var settled = settleBeam(scored(
+      var settled = Caches.localizeWithRows(scored(
         p.select(col("probe_id")).withColumn("v", lit(entryId)),
         Some(Seq(entryId)), candLocal = false), maxLocal)
       var beamDist: DataFrame = null // only used on the over-cap path
@@ -277,7 +262,7 @@ object GraphIndex {
                 candLocal = true)
               .withColumn("rn", row_number().over(wBeam))
               .where(col("rn") <= beamW).drop("rn")
-            settled = settleBeam(topped, maxLocal)
+            settled = Caches.localizeWithRows(topped, maxLocal)
             if (settled.isEmpty) beamDist = settleLineage(topped)
             hopDone = true
           }
@@ -325,7 +310,7 @@ object GraphIndex {
       revCap: Int = 4, files: Int = 2, id: String = "vec_id",
       vec: String = "embedding"): DataFrame =
     probeAppendCore(spark, path, batch, batchId, k, beamW, hops, revCap,
-      files, id, vec, GenTable.localized(1 << 22))
+      files, id, vec, Caches.settle(_, 1 << 22))
 
   /** [[probeAndAppend]] with the ANN log written DIRECTLY into the
     * `batch_id`-partitioned log (GenTable.toBatchLog) — one job

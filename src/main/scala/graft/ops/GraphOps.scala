@@ -93,13 +93,9 @@ object GraphOps {
     val assign = cur.select(col("src").as("node"), col("dst").as("component"))
       .union(cur.select(col("dst").as("node"), col("dst").as("component")))
       .distinct()
-    // Localize the (small) assignment table so the caller holds a plain
-    // local result rather than a plan pinned to round RDDs (q20's
-    // localize-or-persist pattern; the fallback keeps a self-owned
-    // cache).
-    Caches.localize(assign, maxRows = 1 << 22).getOrElse {
-      val p = assign.persist(); p.count(); p
-    }
+    // Settle the (small) assignment table so the caller holds a plain
+    // result rather than a plan pinned to round RDDs.
+    Caches.settle(assign, maxRows = 1 << 22)
   }
 
   /** Undirected edge set as a canonical directed form (src < dst),

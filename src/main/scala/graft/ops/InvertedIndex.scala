@@ -439,7 +439,7 @@ object InvertedIndex {
       text: String = "text",
       maxPostings: Option[Int] = Some(DefaultMaxPostings)): DataFrame =
     probeAppendCore(spark, path, batch, batchId, k, queryTerms, cfg, id,
-      text, maxPostings, GenTable.localized(1 << 20))
+      text, maxPostings, Caches.settle(_, 1 << 20))
 
   /** [[probeAndAppend]] with the match log written DIRECTLY into the
     * `batch_id`-partitioned log (GenTable.toBatchLog) — one job

@@ -162,7 +162,7 @@ object IvfIndex {
       nprobe: Int = 2, files: Int = 2, id: String = "vec_id",
       vec: String = "embedding"): DataFrame =
     probeAppendCore(spark, path, batch, cents, batchId, k, nprobe, files,
-      id, vec, GenTable.localized(1 << 22))
+      id, vec, Caches.settle(_, 1 << 22))
 
   /** [[probeAndAppend]] with the ANN rows written DIRECTLY into the
     * `batch_id`-partitioned log (GenTable.toBatchLog) — one job per

@@ -294,7 +294,7 @@ object LshIndex {
       cfg: Config = Config(), id: String = "doc_id",
       text: String = "text", batchId: Option[Long] = None): DataFrame =
     probeAppendCore(spark, path, newDocs, cfg, id, text, batchId,
-      GenTable.localized(1 << 20))
+      Caches.settle(_, 1 << 20))
 
   /** [[probeAndAppend]] with the verified pairs written DIRECTLY into
     * the `batch_id`-partitioned pair log (GenTable.toBatchLog) instead

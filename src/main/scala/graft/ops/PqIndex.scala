@@ -148,7 +148,7 @@ object PqIndex {
       vec: String = "embedding",
       prune: Option[(Seq[Seq[Float]], Int)] = None): DataFrame =
     probeAppendCore(spark, path, batch, base, batchId, k, files, id, vec,
-      prune, GenTable.localized(1 << 22))
+      prune, Caches.settle(_, 1 << 22))
 
   /** [[probeAndAppend]] with the ANN rows written DIRECTLY into the
     * `batch_id`-partitioned log (GenTable.toBatchLog) — one job per

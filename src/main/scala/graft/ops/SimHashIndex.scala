@@ -127,7 +127,7 @@ object SimHashIndex {
       batchId: Option[Long] = None,
       hashCol: Option[String] = None): DataFrame =
     probeAppendCore(spark, path, newDocs, cfg, id, text, batchId, hashCol,
-      GenTable.localized(1 << 20))
+      Caches.settle(_, 1 << 20))
 
   /** [[probeAndAppend]] with the verified pairs written DIRECTLY into
     * the `batch_id`-partitioned pair log (GenTable.toBatchLog) — the

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Caches, EventOps, TextOps}
@@ -115,22 +116,22 @@ object CurationPipeline {
 
   /** Stage 3: MinHash+LSH near-dup removal — drops the higher-id doc of
     * every verified (jaccard >= threshold) candidate pair. The drop-id
-    * set is materialized eagerly (while the signature table is cached) so
-    * BOTH caches can be released before returning: a drop set within
-    * `maxLocalDropIds` becomes a driver-local relation (ids only — a
-    * curation drop set is orders of magnitude smaller than its corpus)
-    * feeding a broadcast anti-join; a larger one stays a distributed
-    * cached table whose handle `curate()` (or the caller, via
-    * [[nearDedupStaged]]) unpersists after consuming the result. The
-    * multi-job / 100 TB form writes the drop set to storage instead. */
+    * set is settled eagerly (while the signature table is cached), so
+    * the signature cache is released before returning and no cache
+    * outlives the call: a drop set under the cap becomes a driver-local
+    * relation (ids only — a curation drop set is orders of magnitude
+    * smaller than its corpus) feeding a broadcast anti-join; a larger one
+    * is checkpointed ([[Caches.settle]]) and joined distributed. */
   def nearDedup(docs: DataFrame, cfg: Config, id: String = "doc_id",
-      text: String = "text"): DataFrame =
-    // persistLargeDropSet = false: this convenience form has nobody to
-    // hand a cleanup handle to, so a drop set too large to localize stays
-    // UNPERSISTED — it recomputes if the result is consumed twice, but it
-    // can never pin the CacheManager for the session lifetime. Multi-pass
-    // callers should use nearDedupStaged and own the handle.
-    nearDedupStaged(docs, cfg, id, text, persistLargeDropSet = false)._1
+      text: String = "text"): DataFrame = {
+    val sig = sigTable(docs, cfg, id, text).persist()
+    try {
+      val drop = Caches.settle(verifiedPairs(sig, cfg, id)
+        .select(col("doc_b").as(id)).distinct(), maxRows = 1 << 20)
+      val local = drop.queryExecution.logical.isInstanceOf[LocalRelation]
+      docs.join(if (local) broadcast(drop) else drop, Seq(id), "left_anti")
+    } finally sig.unpersist()
+  }
 
   /** The (id, shingle-set, minhash signature) table — the shared front
     * half of every MinHash consumer in the pipeline. */
@@ -153,46 +154,15 @@ object CurationPipeline {
   }
 
   /** Verified near-dup pair EDGES (doc_a, doc_b) over `docs` — the input
-    * [[canonicalSelect]] clusters. The pair list is localized when small
-    * (the common case — candidates are capped upstream) so no cache
-    * outlives the call; a larger one stays persisted and the returned
-    * cleanup releases it after the consumer is done. */
+    * [[canonicalSelect]] clusters. The pair list is settled
+    * ([[Caches.settle]]: localized when small, the common case —
+    * candidates are capped upstream) so no cache outlives the call. */
   def nearDupEdges(docs: DataFrame, cfg: Config, id: String = "doc_id",
-      text: String = "text",
-      maxLocalPairs: Int = 1 << 20): (DataFrame, () => Unit) = {
+      text: String = "text"): DataFrame = {
     val sig = sigTable(docs, cfg, id, text).persist()
-    try {
-      val pairs = verifiedPairs(sig, cfg, id)
-        .select(col("doc_a"), col("doc_b"))
-      Caches.localize(pairs, maxLocalPairs) match {
-        case Some(local) => (local, () => ())
-        case None =>
-          val p = pairs.persist(); p.count()
-          (p, () => { p.unpersist(); () })
-      }
-    } finally sig.unpersist()
-  }
-
-  /** [[nearDedup]] plus a cleanup handle releasing any cache the drop set
-    * still holds — call it after the returned DataFrame is consumed. */
-  def nearDedupStaged(docs: DataFrame, cfg: Config, id: String = "doc_id",
-      text: String = "text",
-      maxLocalDropIds: Int = 1 << 20,
-      persistLargeDropSet: Boolean = true): (DataFrame, () => Unit) = {
-    val sig = sigTable(docs, cfg, id, text).persist()
-    try {
-      val drop = verifiedPairs(sig, cfg, id)
-        .select(col("doc_b").as(id)).distinct()
-      Caches.localize(drop, maxLocalDropIds) match {
-        case Some(local) =>
-          (docs.join(broadcast(local), Seq(id), "left_anti"), () => ())
-        case None if persistLargeDropSet =>
-          val d = drop.persist(); d.count()
-          (docs.join(d, Seq(id), "left_anti"), () => { d.unpersist(); () })
-        case None =>
-          (docs.join(drop, Seq(id), "left_anti"), () => ())
-      }
-    } finally sig.unpersist()
+    try Caches.settle(verifiedPairs(sig, cfg, id)
+      .select(col("doc_a"), col("doc_b")), maxRows = 1 << 20)
+    finally sig.unpersist()
   }
 
   /** Stage 2b: bigram-repetition gate — drop docs whose repetition ratio
@@ -454,7 +424,7 @@ object CurationPipeline {
       (ann.where(col("lang_agree")).drop("lang_pred", "lang_agree"), rel)
     } else (qualityOnly, () => ())
     val quality = audited.persist()
-    val (near, nearCleanup) = nearDedupStaged(quality, cfg)
+    val near = nearDedup(quality, cfg)
     val curated = withTokenCounts(near).persist()
     try {
       val report = docs.agg(count(lit(1)).as("input_docs"))
@@ -465,11 +435,9 @@ object CurationPipeline {
           sum(col("bpe_tokens")).as("total_bpe_tokens")))
       // one-row funnel: collect it locally so the stage caches it reads
       // can be dropped before returning
-      val localReport = Caches.localize(report, maxRows = 1)
-        .getOrElse(sys.error("funnel report must be one row"))
-      (curated, localReport)
+      (curated, Caches.collectExact(report, rows = 1))
     } finally {
-      exact.unpersist(); quality.unpersist(); nearCleanup(); auditCleanup()
+      exact.unpersist(); quality.unpersist(); auditCleanup()
     }
   }
 }

@@ -237,12 +237,10 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
         .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
           round(col("cos"), 4).as("cos_sim"))
         .orderBy(col("probe_id"), col("rn"))
-      // Fallback is localCheckpoint, NOT persist: the finally below deletes
-      // the scratch parquet this plan reads, and a persisted frame can be
-      // evicted/recomputed after cleanup — a checkpoint severs the lineage.
-      Caches.localize(out, maxRows = 1 << 16)
-        .getOrElse(out.localCheckpoint())
-    } finally rmRecursive(tmp) // result is localized (15 rows); safe now
+      // settled (Caches.settle): the finally below deletes the scratch
+      // parquet this plan reads, and a settled frame reads no file
+      Caches.settle(out, maxRows = 1 << 16)
+    } finally rmRecursive(tmp)
   }
   private[queries] val q97Sql =
     """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -409,8 +407,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
         .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
           round(col("cos"), 4).as("cos_sim"))
         .orderBy(col("probe_id"), col("rn"))
-      Caches.localize(out, maxRows = 1 << 16)
-        .getOrElse(out.localCheckpoint())
+      Caches.settle(out, maxRows = 1 << 16)
     } finally rmRecursive(tmp)
   }
   private[queries] val q109Sql =
@@ -590,8 +587,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
         .select(lit(5).as("n_probes"),
           round(col("h") / 15.0, 4).as("recall_at_3"),
           round(col("nc") / (lit(5.0) * col("ne")), 4).as("avg_scan_frac"))
-      Caches.localize(out, maxRows = 1)
-        .getOrElse(sys.error("q87 audit must be one row"))
+      Caches.collectExact(out, rows = 1)
     } finally cand.unpersist()
   }
   private[queries] val q87Sql =
@@ -1081,8 +1077,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
         round(col("h2") / 15.0, 4).as("rerank_recall_at_3"),
         round(col("nsl") / (lit(5.0) * col("ne")), 4).as("rerank_scan_frac"),
         col("n_codes").as("n_distinct_codes"))
-    Caches.localize(out, maxRows = 1)
-      .getOrElse(sys.error("q125 audit must be one row"))
+    Caches.collectExact(out, rows = 1)
   }
   /** Shared two-stage CTEs (the shortlist + re-rank of q125/q126). */
   private[queries] lazy val pqRerankCtes: String =
@@ -1547,10 +1542,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
     val k = 4; val beamW = 8; val hops = 3; val nProbes = 30
     val emb = Tables.spread(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("embedding"))
-    def settle(df: DataFrame): DataFrame =
-      graft.ops.Caches.localize(df, maxRows = 1 << 22).getOrElse {
-        val p = df.persist(); p.count(); p
-      }
+    def settle(df: DataFrame): DataFrame = Caches.settle(df, maxRows = 1 << 22)
     val graph = nnDescentGraph(spark, dir)
     val adj = settle(graph.select(col("src"), col("dst"))
       .unionByName(graph.select(col("dst").as("src"), col("src").as("dst")))

@@ -27,16 +27,11 @@ private[queries] trait ExtCurationQueries extends ExtQueryHelpers {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val exact = CurationPipeline.exactDedup(docs)
     val quality = CurationPipeline.qualityGate(exact, cfg)
-    val (near, cleanup) = CurationPipeline.nearDedupStaged(quality, cfg)
-    try {
-      val out = CurationPipeline.withTokenCounts(near)
-        .select(col("doc_id"), col("ws_tokens"),
-          col("bpe_tokens").cast("long").as("bpe_tokens"))
-        .orderBy(col("doc_id"))
-      Caches.localize(out, maxRows = 1 << 22).getOrElse {
-        val p = out.persist(); p.count(); p
-      }
-    } finally cleanup()
+    val near = CurationPipeline.nearDedup(quality, cfg)
+    Caches.settle(CurationPipeline.withTokenCounts(near)
+      .select(col("doc_id"), col("ws_tokens"),
+        col("bpe_tokens").cast("long").as("bpe_tokens"))
+      .orderBy(col("doc_id")), maxRows = 1 << 22)
   }
   private[queries] val q64Sql = {
     val norm = "regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')"
@@ -421,17 +416,13 @@ private[queries] trait ExtCurationQueries extends ExtQueryHelpers {
     val quality = CurationPipeline.qualityGate(exact, cfg)
     val rep = CurationPipeline.repetitionGate(quality, maxRepetition = 0.2)
     val red = CurationPipeline.piiScrub(rep)
-    val (near, cleanup) = CurationPipeline.nearDedupStaged(red, cfg)
-    try {
-      val toks = near.withColumn("ws_tokens", size(TextOps.words(col("text"))))
-      val out = CurationPipeline
-        .packed(toks, col("lang"), col("doc_id"), col("ws_tokens"))
-        .select(col("doc_id"), col("lang"), col("ws_tokens"), col("bin"))
-        .orderBy(col("doc_id"))
-      Caches.localize(out, maxRows = 1 << 22).getOrElse {
-        val p = out.persist(); p.count(); p
-      }
-    } finally cleanup()
+    val near = CurationPipeline.nearDedup(red, cfg)
+    val toks = near.withColumn("ws_tokens", size(TextOps.words(col("text"))))
+    val out = CurationPipeline
+      .packed(toks, col("lang"), col("doc_id"), col("ws_tokens"))
+      .select(col("doc_id"), col("lang"), col("ws_tokens"), col("bin"))
+      .orderBy(col("doc_id"))
+    Caches.settle(out, maxRows = 1 << 22)
   }
   private[queries] val q72Sql = {
     val norm = "regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')"
@@ -776,9 +767,7 @@ private[queries] trait ExtCurationQueries extends ExtQueryHelpers {
         .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
         .agg(count(lit(1)).as("shared_fps"))
         .orderBy(col("src_a"), col("src_b"))
-      Caches.localize(out, maxRows = 1 << 20).getOrElse {
-        val p = out.persist(); p.count(); p
-      }
+      Caches.settle(out, maxRows = 1 << 20)
     } finally { fps.unpersist(); () }
   }
   private[queries] val q81Sql =
@@ -1211,12 +1200,10 @@ private[queries] trait ExtCurationQueries extends ExtQueryHelpers {
       .select(col("doc_id"), col("n_tok_before"), col("n_tok_after"),
         col("enc_md5"))
       .orderBy(col("doc_id"))
-    // materialize before releasing the encoded-corpus cache the plan
-    // reads (the nearDupPairs rule): per-doc 4 narrow columns localize
-    // within the cap; past it the fallback keeps the cluster-side cache
-    val res = Caches.localize(out, maxRows = 1 << 22).getOrElse {
-      val p = out.persist(); p.count(); p
-    }
+    // settle before releasing the encoded-corpus cache the plan reads
+    // (the nearDupPairs rule): per-doc 4 narrow columns localize within
+    // the cap; past it the fallback checkpoints cluster-side
+    val res = Caches.settle(out, maxRows = 1 << 22)
     encoded.unpersist()
     res
   }
@@ -1335,27 +1322,23 @@ private[queries] trait ExtCurationQueries extends ExtQueryHelpers {
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
     val quality = CurationPipeline.qualityGate(
       CurationPipeline.exactDedup(docs), cfg)
-    val (edges, cleanup) = CurationPipeline.nearDupEdges(quality, cfg)
-    try {
-      val canon = CurationPipeline
-        .canonicalSelect(quality,
-          edges.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-          length(col("text")))
-        .where(col("kept") === 1).drop("cluster_id", "kept")
-      val capped = CurationPipeline
-        .sourceCap(canon, cap = 10, priority = length(col("text")))
-        .withColumn("ws_tokens", size(TextOps.words(col("text"))))
-      val manifest = CurationPipeline
-        .packed(capped, col("lang"), col("doc_id"), col("ws_tokens"))
-        .withColumn("shard",
-          substring(md5(col("doc_id").cast("string").cast("binary")), 1, 2))
-        .select(col("doc_id"), col("lang"), col("source"),
-          col("ws_tokens"), col("bin"), col("shard"))
-        .orderBy(col("doc_id"))
-      Caches.localize(manifest, maxRows = 1 << 22).getOrElse {
-        val p = manifest.persist(); p.count(); p
-      }
-    } finally cleanup()
+    val edges = CurationPipeline.nearDupEdges(quality, cfg)
+    val canon = CurationPipeline
+      .canonicalSelect(quality,
+        edges.select(col("doc_a").as("src"), col("doc_b").as("dst")),
+        length(col("text")))
+      .where(col("kept") === 1).drop("cluster_id", "kept")
+    val capped = CurationPipeline
+      .sourceCap(canon, cap = 10, priority = length(col("text")))
+      .withColumn("ws_tokens", size(TextOps.words(col("text"))))
+    val manifest = CurationPipeline
+      .packed(capped, col("lang"), col("doc_id"), col("ws_tokens"))
+      .withColumn("shard",
+        substring(md5(col("doc_id").cast("string").cast("binary")), 1, 2))
+      .select(col("doc_id"), col("lang"), col("source"),
+        col("ws_tokens"), col("bin"), col("shard"))
+      .orderBy(col("doc_id"))
+    Caches.settle(manifest, maxRows = 1 << 22)
   }
   private[queries] val q96Sql =
     s"""WITH RECURSIVE $curationV3Ctes,
@@ -1669,22 +1652,18 @@ private[queries] trait ExtCurationQueries extends ExtQueryHelpers {
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
     val quality = CurationPipeline.qualityGate(
       CurationPipeline.exactDedup(docs), cfg)
-    val (edges, cleanup) = CurationPipeline.nearDupEdges(quality, cfg)
-    try {
-      val canon = CurationPipeline
-        .canonicalSelect(quality,
-          edges.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-          length(col("text")))
-        .where(col("kept") === 1).drop("cluster_id", "kept")
-      val out = CurationPipeline
-        .sourceCap(canon, cap = 10, priority = length(col("text")))
-        .select(col("doc_id"), col("lang"), col("source"),
-          size(TextOps.words(col("text"))).as("ws_tokens"))
-        .orderBy(col("doc_id"))
-      Caches.localize(out, maxRows = 1 << 22).getOrElse {
-        val p = out.persist(); p.count(); p
-      }
-    } finally cleanup()
+    val edges = CurationPipeline.nearDupEdges(quality, cfg)
+    val canon = CurationPipeline
+      .canonicalSelect(quality,
+        edges.select(col("doc_a").as("src"), col("doc_b").as("dst")),
+        length(col("text")))
+      .where(col("kept") === 1).drop("cluster_id", "kept")
+    val out = CurationPipeline
+      .sourceCap(canon, cap = 10, priority = length(col("text")))
+      .select(col("doc_id"), col("lang"), col("source"),
+        size(TextOps.words(col("text"))).as("ws_tokens"))
+      .orderBy(col("doc_id"))
+    Caches.settle(out, maxRows = 1 << 22)
   }
   /** The curation-v3 chain's CTEs through the source-capped corpus —
     * shared by q89 (token accounting tail) and q96 (pack + shard tail)

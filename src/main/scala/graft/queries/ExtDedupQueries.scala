@@ -114,30 +114,14 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
     * the cap only once the batch lands is dropped on both sides). */
   private[queries] def q62(spark: SparkSession, dir: String): DataFrame = {
     val tmp = graft.ops.Scratch.tempDir("graft_q62_")
-    var deferCleanup = false
     try {
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val isBatch = pmod(col("doc_id"), lit(4)) === 0
       GraphFixtures.lshBaseInto(spark, dir, tmp)
-      val pairs = LshIndex.probeAndAppend(spark, tmp, docs.where(isBatch))
-      // probeAndAppend localizes unless the pair list is improbably huge;
-      // in that fallback its (cached) plan still reads the scratch index
-      // parquet, so deletion must wait for JVM exit (same rule as q61).
-      deferCleanup = !pairs.queryExecution.logical
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-      pairs
-    } finally {
-      def rmNow(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmNow)
-        f.delete(); ()
-      }
-      def rmAtExit(f: java.io.File): Unit = {
-        f.deleteOnExit()
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmAtExit)
-      }
-      val root = new java.io.File(tmp)
-      if (deferCleanup) rmAtExit(root) else rmNow(root)
-    }
+      // probeAndAppend settles its pair list (Caches.settle), which
+      // reads no scratch file, so the index is deleted at once
+      LshIndex.probeAndAppend(spark, tmp, docs.where(isBatch))
+    } finally rmRecursive(tmp)
   }
   private[queries] val q62Sql =
     s"""WITH ${pairCtesWith(" AND (a.doc_id % 4 = 0 OR b.doc_id % 4 = 0)")}
@@ -384,7 +368,6 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
   private[queries] def q101(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tmp = graft.ops.Scratch.tempDir("graft_q101_")
-    var deferCleanup = false
     try {
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val isBatch = pmod(col("doc_id"), lit(4)) === 0
@@ -395,22 +378,8 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
         .select(col("doc_id")).as[Long].collect().sorted
       LshIndex.markDeleted(spark, tmp, deleted.toSeq)
       LshIndex.compact(spark, tmp)
-      val pairs = LshIndex.probeAndAppend(spark, tmp, docs.where(isBatch))
-      deferCleanup = !pairs.queryExecution.logical
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-      pairs
-    } finally {
-      def rmNow(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmNow)
-        f.delete(); ()
-      }
-      def rmAtExit(f: java.io.File): Unit = {
-        f.deleteOnExit()
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmAtExit)
-      }
-      val root = new java.io.File(tmp)
-      if (deferCleanup) rmAtExit(root) else rmNow(root)
-    }
+      LshIndex.probeAndAppend(spark, tmp, docs.where(isBatch))
+    } finally rmRecursive(tmp)
   }
   private[queries] val q101Sql =
     s"""WITH live AS (SELECT doc_id, text FROM documents WHERE doc_id % 16 <> 9),
@@ -465,11 +434,8 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
       .where(col("hamming") <= 3)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))
-    // materialize (driver-local when bounded, cached otherwise) so the
-    // fingerprint cache can be released before returning — q72's rule
-    try Caches.localize(out, maxRows = 1 << 22).getOrElse {
-      val p = out.persist(); p.count(); p
-    } finally h.unpersist()
+    // settle so the fingerprint cache can be released before returning
+    try Caches.settle(out, maxRows = 1 << 22) finally h.unpersist()
   }
   /** The 63-bit SimHash fingerprint as one DuckDB expression over a
     * per-doc `word` stream — shared by q107's and q112's oracles. LAZY:
@@ -557,8 +523,7 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
             .as("pair_precision"),
           round(col("n_predicted_true") / col("n_true_pairs"), 4).as("recall"))
         .orderBy(col("t"))
-      Caches.localize(curve, maxRows = 8)
-        .getOrElse(sys.error("q108 audit must reduce to 4 rows"))
+      Caches.collectExact(curve, rows = 4)
     } finally sample.unpersist()
   }
   private[queries] val q108Sql = {
@@ -887,7 +852,7 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
       val tagged = cand.withColumn("c", lit(1L))
         .join(exact.withColumn("e", lit(1L)), Seq("doc_a", "doc_b"), "full_outer")
         .join(verified.withColumn("v", lit(1L)), Seq("doc_a", "doc_b"), "left")
-      Caches.localize(tagged.agg(
+      Caches.collectExact(tagged.agg(
           sum(coalesce(col("e"), lit(0L))).as("n_exact_pairs"),
           sum(coalesce(col("c"), lit(0L))).as("n_candidates"),
           sum(when(col("c") === 1 && col("e") === 1, 1L).otherwise(0L))
@@ -897,8 +862,7 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
           col("n_candidates_true"), col("n_verified"),
           round(col("n_verified") / col("n_exact_pairs"), 4).as("recall"),
           round(col("n_candidates_true") / col("n_candidates"), 4)
-            .as("cand_precision")), maxRows = 2)
-        .getOrElse(sys.error("q84 audit must reduce to one row"))
+            .as("cand_precision")), rows = 1)
     } finally sig.unpersist()
   }
   private[queries] val q84Sql =
@@ -1156,18 +1120,15 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
       // as per-iteration cost GROWING 3→5 s at sf1 on a 48k-vertex
       // graph. Vertex-sized ranks localize to a LocalRelation (free
       // broadcast fodder for the next join); past the cap they settle
-      // cluster-side via localCheckpoint.
-      ranks = Caches.localize(next, maxRows = 1 << 20)
-        .getOrElse(next.localCheckpoint())
+      // cluster-side via localCheckpoint (Caches.settle).
+      ranks = Caches.settle(next, maxRows = 1 << 20)
     }
     val out = ranks.join(deg, ranks("doc_id") === deg("src"))
       .select(col("doc_id"), col("deg").as("degree"),
         round(col("pr"), 6).as("pagerank"))
       .orderBy(col("doc_id"))
-    // vertex-sized output; materialize, then release the edge cache
-    val res = Caches.localize(out, maxRows = 1 << 20).getOrElse {
-      val p = out.persist(); p.count(); p
-    }
+    // vertex-sized output; settle, then release the edge cache
+    val res = Caches.settle(out, maxRows = 1 << 20)
     edges.unpersist(); deg.unpersist()
     res
   }
@@ -1318,8 +1279,7 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
         .select(verts("doc_id"),
           (lit(0.15 / n) + lit(0.85) * coalesce(col("s"), lit(0.0))).as("pr"))
       // settle each round — q133's rule (plan-tree bloat otherwise)
-      ranks = Caches.localize(next, maxRows = 1 << 20)
-        .getOrElse(next.localCheckpoint())
+      ranks = Caches.settle(next, maxRows = 1 << 20)
     }
     // rename before the double join: deg and cdeg share lineage (both
     // derive from edges) AND a column name — unaliased, the second
@@ -1330,11 +1290,9 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
       .select(col("doc_id"), col("deg").as("degree"),
         col("cdeg").as("capped_degree"), round(col("pr"), 6).as("pagerank"))
       .orderBy(col("doc_id"))
-    // vertex-sized output; materialize so the edge caches can be
-    // released before returning (the nearDupPairs rule)
-    val res = Caches.localize(out, maxRows = 1 << 20).getOrElse {
-      val p = out.persist(); p.count(); p
-    }
+    // vertex-sized output; settle so the edge caches can be released
+    // before returning (the nearDupPairs rule)
+    val res = Caches.settle(out, maxRows = 1 << 20)
     capped.unpersist(); edges.unpersist(); deg.unpersist()
     res
   }

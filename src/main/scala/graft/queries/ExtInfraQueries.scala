@@ -64,15 +64,11 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
     * predicate (the layout every file/row-group min-max stat now serves,
     * LayoutSpec proves the disjointness), and the roundtrip — including
     * micros timestamps through the parquet writer — must match the plain
-    * filtered table. The (small) filtered result is localized so the
-    * scratch dir can be deleted before returning. */
+    * filtered table. The filtered result is settled (localized, or
+    * checkpointed over the cap — either way it reads no scratch file)
+    * so the scratch dir is deleted before returning. */
   private[queries] def q61(spark: SparkSession, dir: String): DataFrame = {
     val tmp = graft.ops.Scratch.tempDir("graft_q61_")
-    // Deleting eagerly is only safe when localize SUCCEEDED (result is a
-    // plan-free local relation). The persist() fallback's lineage still
-    // reads the scratch parquet — a cache-block eviction would recompute
-    // against deleted files — so that path defers deletion to JVM exit.
-    var deferCleanup = false
     try {
       Layout.clusteredWrite(
         Tables.events(spark, dir)
@@ -85,24 +81,8 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           round(col("value"), 2).as("value_r"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"))
         .orderBy(col("event_id"))
-      Caches.localize(filtered, maxRows = 1 << 22).getOrElse {
-        deferCleanup = true
-        val p = filtered.persist(); p.count(); p
-      }
-    } finally {
-      // deleteOnExit runs LIFO, so registering each directory before its
-      // children deletes children first, directories last.
-      def rmNow(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmNow)
-        f.delete(); ()
-      }
-      def rmAtExit(f: java.io.File): Unit = {
-        f.deleteOnExit()
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmAtExit)
-      }
-      val root = new java.io.File(tmp)
-      if (deferCleanup) rmAtExit(root) else rmNow(root)
-    }
+      Caches.settle(filtered, maxRows = 1 << 22)
+    } finally rmRecursive(tmp)
   }
   private[queries] val q61Sql =
     """SELECT event_id, user_id, event_type, round(value, 2) AS value_r,
@@ -121,7 +101,6 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
     * bit-exact). */
   private[queries] def q63(spark: SparkSession, dir: String): DataFrame = {
     val tmp = graft.ops.Scratch.tempDir("graft_q63_")
-    var deferCleanup = false
     try {
       Layout.zorderWrite(
         Tables.events(spark, dir)
@@ -135,22 +114,8 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           round(col("value"), 2).as("value_r"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"))
         .orderBy(col("event_id"))
-      Caches.localize(filtered, maxRows = 1 << 22).getOrElse {
-        deferCleanup = true
-        val p = filtered.persist(); p.count(); p
-      }
-    } finally {
-      def rmNow(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmNow)
-        f.delete(); ()
-      }
-      def rmAtExit(f: java.io.File): Unit = {
-        f.deleteOnExit()
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmAtExit)
-      }
-      val root = new java.io.File(tmp)
-      if (deferCleanup) rmAtExit(root) else rmNow(root)
-    }
+      Caches.settle(filtered, maxRows = 1 << 22)
+    } finally rmRecursive(tmp)
   }
   private[queries] val q63Sql =
     """SELECT event_id, user_id, event_type, round(value, 2) AS value_r,
@@ -1186,10 +1151,8 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         .where(col("hamming") <= 3)
         .select(col("doc_a"), col("doc_b"), col("hamming"))
         .orderBy(col("doc_a"), col("doc_b"))
-      // Localized so the returned plan does not outlive the unpersist
-      // (bounded: caps keep the pair set ≪ maxRows at declared SFs).
-      Caches.localize(pairs, maxRows = 1 << 20)
-        .getOrElse(sys.error("q127 pair set exceeded the localize bound"))
+      // Settled so the returned plan does not outlive the unpersist.
+      Caches.settle(pairs, maxRows = 1 << 20)
     } finally h.unpersist()
   }
   /** The 63-bit dHash as one DuckDB expression straight off the cell

@@ -79,13 +79,10 @@ private[queries] trait ExtQueryHelpers {
       val pairs = withSets.where(j >= 0.5)
         .select(col("doc_a"), col("doc_b"), round(j, 4).as("jaccard"))
         .orderBy(col("doc_a"), col("doc_b"))
-      // Materialize the (tiny) verified-pair list so the signature cache
-      // is released before returning — a lazily-returned DataFrame would
-      // pin the ~1%-of-corpus cache for the session lifetime. Falls back
-      // to the still-cached plan only if the pair list is improbably huge.
-      Caches.localize(pairs, maxRows = 1 << 20).getOrElse {
-        val p = pairs.persist(); p.count(); p
-      }
+      // Settle the (tiny) verified-pair list so the signature cache is
+      // released before returning — a lazily-returned DataFrame would
+      // pin the ~1%-of-corpus cache for the session lifetime.
+      Caches.settle(pairs, maxRows = 1 << 20)
     } finally sig.unpersist()
   }
   /** CTE chain ending in `pairs` = the verified near-dup pairs — shared

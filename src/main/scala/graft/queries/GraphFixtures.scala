@@ -107,12 +107,10 @@ private[queries] object GraphFixtures {
     val g = GraphIndex.nnDescent(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
       k = 4, rounds = 2)
-    val cap = Caches.effectiveMaxRows(g, 1 << 22)
-    if (cap <= 0) return g
-    val rows = g.limit(cap + 1).collect()
-    if (rows.length > cap) return g
-    edgeCache.putIfAbsent(key, (g.schema, rows))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), g.schema)
+    Caches.localizeWithRows(g, 1 << 22).fold(g) { case (local, rows) =>
+      edgeCache.putIfAbsent(key, (g.schema, rows))
+      local
+    }
   }
 
   // ------------------------------------------------------ bm25 family

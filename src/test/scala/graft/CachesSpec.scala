@@ -33,4 +33,28 @@ class CachesSpec extends SparkSpecBase {
     } finally spark.conf.unset(Caches.MaxRowsConf)
     assert(Caches.localize(df(3), maxRows = 3).isDefined)
   }
+
+  test("settle localizes under the cap and checkpoints over it, same " +
+    "rows and no CacheManager entry either way") {
+    val capped = spark.newSession()
+    capped.conf.set(Caches.MaxRowsConf, "0")
+    spark.catalog.clearCache()
+    val want = (1 to 10).reverse
+    val v = org.apache.spark.sql.functions.col("v")
+    val local = Caches.settle(df(10).orderBy(v.desc), maxRows = 10)
+    val over = Caches.settle(capped.range(1, 11).toDF("v").orderBy(v.desc), maxRows = 10)
+    assert(local.queryExecution.logical.nodeName == "LocalRelation")
+    assert(over.queryExecution.logical.nodeName != "LocalRelation")
+    assert(local.collect().map(_.getInt(0)).toSeq == want)
+    assert(over.collect().map(_.getLong(0)).toSeq == want)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("collectExact ignores the cap and checks the row count") {
+    val capped = spark.newSession()
+    capped.conf.set(Caches.MaxRowsConf, "0")
+    val one = capped.range(5).toDF("v").agg(org.apache.spark.sql.functions.sum("v"))
+    assert(Caches.collectExact(one, rows = 1).collect().head.getLong(0) == 10L)
+    assertThrows[IllegalArgumentException](Caches.collectExact(df(2), rows = 1))
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+import graft.ops.Caches
 import graft.pipeline.CurationPipeline
 import graft.sources.Tables
 
@@ -195,7 +198,7 @@ class CurationPipelineSpec extends SparkSpecBase {
   }
 
   test("nearDupEdges emits the verified pair edges nearDedup acts on, " +
-    "in both the localized and persisted branches") {
+    "in both the localized and checkpointed branches") {
     // one near-dup chain (1–2 share a long prefix) plus a distinct doc
     val words = (0 until 40).map(i => s"w$i").mkString(" ")
     val docs = Seq(
@@ -204,21 +207,22 @@ class CurationPipelineSpec extends SparkSpecBase {
       .toDF("doc_id", "text")
     val cfg = CurationPipeline.Config(jaccardThreshold = 0.5)
 
-    val (edges, cleanup) = CurationPipeline.nearDupEdges(docs, cfg)
-    val got = edges.select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    cleanup()
+    val got = CurationPipeline.nearDupEdges(docs, cfg)
+      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 2L)), s"expected the one verified pair, got $got")
 
-    // maxLocalPairs=0 forces the persisted branch; same edges, and the
-    // cleanup handle must release the cache it held
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val (big, bigCleanup) = CurationPipeline.nearDupEdges(docs, cfg,
-      maxLocalPairs = 0)
-    val got2 = big.select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    assert(got2 == got)
-    bigCleanup()
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "persisted-branch cleanup must release the cache it held")
+    // a cap-0 session forces the over-cap (checkpointed) branch: same
+    // edges, and no CacheManager entry outlives the call
+    val capped = spark.newSession()
+    capped.conf.set(Caches.MaxRowsConf, "0")
+    spark.catalog.clearCache()
+    val big = CurationPipeline.nearDupEdges(
+      capped.createDataFrame(docs.collect().toSeq.asJava, docs.schema), cfg)
+    assert(!big.queryExecution.logical.isInstanceOf[LocalRelation],
+      "cap 0 must take the checkpointed branch")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the checkpointed branch must leave no cache entry")
+    assert(big.select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet == got)
   }
 
   test("sourceCap keeps at most cap docs per source, highest priority " +

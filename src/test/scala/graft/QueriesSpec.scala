@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Caches
 import graft.queries.Queries
 
 /** Every declared query must run, return rows, and keep its oracle
@@ -19,6 +20,29 @@ class QueriesSpec extends SparkSpecBase {
       val df = d.fn(spark, sf0001)
       assert(df.columns.nonEmpty)
       assert(df.count() > 0, s"${d.name} returned no rows")
+    }
+  }
+
+  /** The queries whose results outlive a cache or scratch dir they read
+    * — every one settles through Caches.settle or collects a bounded
+    * aggregate (Caches.collectExact). */
+  private val settling = Set(20, 59, 61, 63, 64, 72, 81, 84, 85, 87, 89, 96,
+    107, 108, 125, 127, 133, 148, 158, 160, 162, 163, 165, 166, 167, 172)
+
+  test("at localize cap 0 the settling queries return their default-cap " +
+    "rows and leave no cache entry") {
+    val capped = spark.newSession()
+    capped.conf.set(Caches.MaxRowsConf, "0")
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val decls = Queries.all.filter(d => settling(d.name.drop(1).takeWhile(_.isDigit).toInt))
+    assert(decls.size === settling.size)
+    decls.foreach { d =>
+      val want = d.fn(spark, sf0001).collect().toSeq
+      assert(cacheManager.isEmpty, s"${d.name} left a cache entry")
+      val got = d.fn(capped, sf0001).collect().toSeq
+      assert(cacheManager.isEmpty, s"${d.name} left a cache entry at cap 0")
+      assert(got == want, s"${d.name} rows differ at cap 0")
     }
   }
 
