@@ -102,7 +102,8 @@ object CosineSimilarity {
 }
 
 /** SparkSessionExtensions hook for ALL graft custom functions
-  * (`cosine_sim`, `minhash_sig`, `kmv_distinct`). Register with
+  * (`cosine_sim`, `minhash_sig`, `bloom_might_contain`,
+  * `nfc_normalize`, `kmv_distinct`). Register with
   * `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

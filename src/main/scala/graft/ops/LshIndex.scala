@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   *     sets and are corpus-sized, where bands are ~1-2% of the corpus.
   *
   * Probe semantics match the one-shot operator exactly: the hot-bucket
-  * cap (TextOps.capHotBuckets) counts the FULL combined bucket (index +
+  * cap (TextOps.bucketPairs) counts the FULL combined bucket (index +
   * batch members) — partition + semi-join pruning keeps every member of
   * a touched bucket, so a bucket that crosses the cap only after the
   * batch lands is dropped just as a full recompute would drop it.
@@ -219,8 +219,8 @@ object LshIndex {
     // partition predicate (formerly a second collect job per probe).
     val candPlan = TextOps.newVsIndexPairs(indexBands, t.rows, cfg.maxBucket,
         "lsh_index_hot_buckets")
-      .select(col("doc_a"), col("doc_b"),
-        sigPs(cfg, col("doc_a")).as("ps_a"), sigPs(cfg, col("doc_b")).as("ps_b"))
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+        sigPs(cfg, col("doc_id_a")).as("ps_a"), sigPs(cfg, col("doc_id_b")).as("ps_b"))
       .distinct()
     // Candidates are rare (capped buckets bound them) — localize so the
     // broadcast below ships a LocalRelation and the ps predicate comes
@@ -246,18 +246,15 @@ object LshIndex {
       .select(col("doc_id"), col("sh"))
     val sets = indexSets
       .unionByName(sig.select(col(id).as("doc_id"), col("sh")))
-    val withSets = sets.select(col("doc_id").as("doc_a"), col("sh").as("sa"))
-      .join(broadcast(cand), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
-    val j = TextOps.jaccardFromSets(col("sa"), col("sb"))
     // Tombstoned docs are dead on arrival: their index rows survive until
     // the next compact, but no probe may emit a pair naming them. The
     // pairs stay unordered: the global (doc_a, doc_b) sort — a sampling job + range
     // exchange per probe — is applied only where row order is part of the
     // contract (Probe.pairs, the returning API); the streaming log sink
     // writes unordered and its consumers sort on read
-    val pairs = TombstoneLog.mask(withSets.where(j >= cfg.jaccardThreshold)
-        .select(col("doc_a"), col("doc_b"), round(j, 4).as("jaccard")),
+    val pairs = TombstoneLog.mask(
+      TextOps.verifyJaccard(cand, sets, "doc_id", "sh", cfg.jaccardThreshold)
+        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard")),
       TombstoneLog.readDir(spark, tombsPath(path), "doc_id"), "doc_a", "doc_b")
     (Probe(pairs.orderBy(col("doc_a"), col("doc_b")), indexBands, indexSets,
       caches ++ candCache, pairsUnordered = pairs), t.rows, cfg)

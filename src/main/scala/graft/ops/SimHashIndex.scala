@@ -25,10 +25,11 @@ import org.apache.spark.sql.functions._
   * self-join TextOps.newVsIndexPairs), the exactly-once batch contract,
   * the lag-1 fold and the writer fence all carry over unchanged.
   *
-  * Banding is q107's: `bands` disjoint `bandBits`-bit slices of the
-  * 63-bit fingerprint — the pigeonhole guarantee (any pair within
-  * Hamming ≤ bands−1 shares ≥ 1 band, PropertySpec proves it for 4×16)
-  * makes maxHamming ≤ bands−1 candidate-complete. Hot buckets are
+  * Banding is q107's ([[TextOps.hashBands]]): `bands` disjoint
+  * `bandBits`-bit slices of the 63-bit fingerprint — the pigeonhole
+  * guarantee (any pair within Hamming ≤ bands−1 shares ≥ 1 band,
+  * PropertySpec proves it for 4×16) makes maxHamming ≤ bands−1
+  * candidate-complete. Hot buckets are
   * capped on the FULL combined bucket (index + batch), mirroring the
   * one-shot operator exactly.
   */
@@ -83,10 +84,6 @@ object SimHashIndex {
     * fingerprinting `text` in-row. */
   private def bandRows(docs: DataFrame, cfg: Config,
       id: String, text: String, hashCol: Option[String] = None): DataFrame = {
-    val bandArr = array((0 until cfg.bands).map(b =>
-      struct(lit(b).as("band"),
-        shiftright(col("sh"), cfg.bandBits * b)
-          .bitwiseAND(lit((1L << cfg.bandBits) - 1)).as("key"))): _*)
     // the distinct-word array is projected in its own select so the 63
     // aggregate() leaves of the fingerprint read an attribute — the
     // simhash63InRow caller contract (a computed argument re-splits the
@@ -100,10 +97,7 @@ object SimHashIndex {
           array_distinct(TextOps.words(col(text))).as("dw"))
         .select(col("doc_id"), TextOps.simhash63InRow(col("dw")).as("sh"))
     }
-    fingerprinted
-      .select(col("doc_id"), col("sh"), explode(bandArr).as("bk"))
-      .select(col("doc_id"), col("sh"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
+    TextOps.hashBands(fingerprinted, cfg.bands, cfg.bandBits)
   }
 
   private def bandsSpread(cfg: Config) =
@@ -165,13 +159,9 @@ object SimHashIndex {
       // on the returning API below (the streaming log sink's consumers
       // sort on read)
       val pairsUnordered = TombstoneLog.mask(
-        TextOps.newVsIndexPairs(indexBands, t.rows, layout.maxBucket,
-            "simhash_index_hot_buckets", "sh")
-          .select(col("doc_a"), col("doc_b"), col("sh_a"), col("sh_b")).distinct()
-          .withColumn("hamming",
-            bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int"))
-          .where(col("hamming") <= layout.maxHamming)
-          .select(col("doc_a"), col("doc_b"), col("hamming")),
+        TextOps.hammingPairs(TextOps.newVsIndexPairs(indexBands, t.rows,
+            layout.maxBucket, "simhash_index_hot_buckets", "sh"))
+          .where(col("hamming") <= layout.maxHamming),
         TombstoneLog.readDir(spark, tombsPath(path), "doc_id"), "doc_a", "doc_b")
       val pairs = if (needOrdered)
         pairsUnordered.orderBy(col("doc_a"), col("doc_b"))

@@ -89,20 +89,13 @@ object TextOps {
     inter.cast("double") / (size(a) + size(b) - inter)
   }
 
-  /** Explode a doc table into DISTINCT (id, shingle) rows — the shared
-    * input of minhash signatures and exact-jaccard verification. One
-    * narrow pass; the distinct is a shuffle on (id, shingle). */
+  /** Explode a doc table into DISTINCT (id, shingle) rows — the input of
+    * the exact inverted-index verifiers ([[exactNearDupPairs]],
+    * [[containmentPairs]]). One narrow pass; the distinct is a shuffle on
+    * (id, shingle). */
   def shingleRows(df: DataFrame, id: String, text: String, n: Int): DataFrame =
     df.select(col(id), explode(wordShingles(col(text), n)).as("shingle"))
       .distinct()
-
-  /** k-column MinHash signature per id: m_s = min over shingles of
-    * md5("s|" + shingle). One hash-aggregate (map-side partial min →
-    * final), k hashes per shingle — linear in corpus size. */
-  def minhashSignature(shingles: DataFrame, id: String, k: Int): DataFrame =
-    shingles.groupBy(col(id))
-      .agg(min(seededHash(0, col("shingle"))).as("m0"),
-        (1 until k).map(s => min(seededHash(s, col("shingle"))).as(s"m$s")): _*)
 
   /** LSH band rows (band_id, band_key) from a k-signature with bands of
     * `r` consecutive minhashes. Docs sharing any band key are candidate
@@ -130,8 +123,8 @@ object TextOps {
     * observable without an extra pass via the `metric` observe() metric
     * (`dropped_buckets` / `dropped_rows`) on the bucket-size subplan —
     * read it from QueryExecution.observedMetrics or a listener. */
-  def capHotBuckets(df: DataFrame, keys: Seq[String], max: Int,
-      metric: String = "hot_buckets"): DataFrame = {
+  private def capHotBuckets(df: DataFrame, keys: Seq[String], max: Int,
+      metric: String): DataFrame = {
     val kcols = keys.map(col)
     val sizes = df.groupBy(kcols: _*)
       .agg(count(lit(1)).as("__bn"))
@@ -143,47 +136,96 @@ object TextOps {
     df.join(sizes, keys)
   }
 
-  /** Distinct candidate pairs (a < b) sharing an LSH band key, with a
-    * hot-bucket cap: keys with > maxBucket members are dropped before
-    * the self-join (they are almost always boilerplate, and each
-    * contributes O(n²) candidates). */
-  def lshCandidatePairs(bands: DataFrame, id: String,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame = {
-    val pruned = maxBucket match {
-      case Some(m) => capHotBuckets(bands, Seq("band", "key"), m, "lsh_hot_buckets")
-      case None    => bands
-    }
-    val a = pruned.select(col("band"), col("key"), col(id).as("doc_a"))
-    val b = pruned.select(col("band"), col("key"), col(id).as("doc_b"))
-    a.join(b, Seq("band", "key"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+  /** The one candidate kernel: every pair of rows sharing a bucket (the
+    * tuple of `keys` values), `<id>_a < <id>_b`, as (keys…, <id>_a,
+    * <p>_a…, <id>_b, <p>_b…) for each `payload` column p. With
+    * `maxBucket`, a bucket holding more rows is dropped first
+    * ([[capHotBuckets]], observed as `metric`): hot buckets are almost
+    * always boilerplate, and each contributes O(n²) pairs. A row's id
+    * may sit in several buckets, so callers project and `distinct` the
+    * pairs they keep. */
+  def bucketPairs(df: DataFrame, keys: Seq[String], id: String,
+      maxBucket: Option[Int], metric: String, payload: String*): DataFrame = {
+    val kept = maxBucket.fold(df)(m => capHotBuckets(df, keys, m, metric))
+    def side(s: String): DataFrame = kept.select(
+      keys.map(col) ++ (id +: payload).map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), keys).where(col(s"${id}_a") < col(s"${id}_b"))
   }
+
+  /** Distinct candidate pairs (doc_a < doc_b) sharing an LSH band key,
+    * hot buckets capped ([[bucketPairs]]). */
+  def lshCandidatePairs(bands: DataFrame, id: String,
+      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
+    bucketPairs(bands, Seq("band", "key"), id, maxBucket, "lsh_hot_buckets")
+      .select(col(s"${id}_a").as("doc_a"), col(s"${id}_b").as("doc_b")).distinct()
 
   /** The new-vs-index bucket self-join of a persisted band index's probe
     * (LshIndex, SimHashIndex): `index` holds the index rows of the touched
     * buckets and `batch` the batch's rows, both (band, key, doc_id,
     * `payload`…). Hot buckets are capped over the COMBINED bucket (index +
     * batch), as the one-shot [[lshCandidatePairs]] caps them; the result
-    * keeps the pairs doc_a < doc_b with at least one batch side, as
-    * (band, key, doc_a, <payload>_a…, na, doc_b, <payload>_b…, nb). */
+    * is [[bucketPairs]]' (band, key, doc_id_a, <payload>_a…, is_new_a,
+    * doc_id_b, …, is_new_b), kept where at least one side is from the
+    * batch. */
   def newVsIndexPairs(index: DataFrame, batch: DataFrame,
       maxBucket: Option[Int], metric: String, payload: String*): DataFrame = {
     val combined = index.withColumn("is_new", lit(false))
       .unionByName(batch.withColumn("is_new", lit(true)))
-    val pruned = maxBucket.fold(combined)(m =>
-      capHotBuckets(combined, Seq("band", "key"), m, metric))
-    def side(s: String): DataFrame = pruned.select(
-      Seq(col("band"), col("key"), col("doc_id").as(s"doc_$s")) ++
-        payload.map(p => col(p).as(s"${p}_$s")) :+ col("is_new").as(s"n$s"): _*)
-    side("a").join(side("b"), Seq("band", "key"))
-      .where(col("doc_a") < col("doc_b") && (col("na") || col("nb")))
+    bucketPairs(combined, Seq("band", "key"), "doc_id", maxBucket, metric,
+        payload :+ "is_new": _*)
+      .where(col("is_new_a") || col("is_new_b"))
   }
 
-  /** Exact jaccard on candidate pairs: |A∩B| via a shingle-equijoin
-    * restricted to candidates, |A∪B| from per-doc set sizes. Only
-    * candidate pairs pay the set-intersection cost. */
-  def jaccardOnCandidates(cand: DataFrame, shingles: DataFrame, id: String): DataFrame = {
+  /** The SimHash band split: `bands` disjoint `bandBits`-bit slices of
+    * each row's 63-bit fingerprint `sh`, one (…, band, key) row per slice,
+    * every input column kept. Pigeonhole: a pair within Hamming
+    * ≤ bands − 1 shares at least one slice. */
+  def hashBands(h: DataFrame, bands: Int = 4, bandBits: Int = 16): DataFrame = {
+    val bandArr = array((0 until bands).map(b =>
+      struct(lit(b).as("band"),
+        shiftright(col("sh"), bandBits * b)
+          .bitwiseAND(lit((1L << bandBits) - 1)).as("key"))): _*)
+    val cols = h.columns.map(col).toSeq
+    h.select(cols :+ explode(bandArr).as("bk"): _*)
+      .select(cols ++ Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
+  }
+
+  /** Hamming verify of SimHash band pairs: [[bucketPairs]]' output over
+    * (doc_id, payload `sh`) → the DISTINCT (doc_a, doc_b, hamming =
+    * popcount(sh_a xor sh_b)); callers keep their own distance bound. */
+  def hammingPairs(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+        col("sh_a"), col("sh_b")).distinct()
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int").as("hamming"))
+
+  /** One-shot banded-SimHash pairs over a (doc_id, sh) fingerprint frame:
+    * 4×16-bit [[hashBands]] → [[bucketPairs]] capped at
+    * [[DefaultMaxBucket]] (observed as `metric`) → [[hammingPairs]]. */
+  def simhashPairs(h: DataFrame, metric: String): DataFrame =
+    hammingPairs(bucketPairs(hashBands(h), Seq("band", "key"), "doc_id",
+      Some(DefaultMaxBucket), metric, "sh"))
+
+  /** Exact-jaccard verify of candidate pairs against in-row shingle sets:
+    * `broadcast(cand)` (doc_a, doc_b) — candidates are rare, capped
+    * buckets bound them — joins `sets` (id, set) once per side, and the
+    * jaccard is in-row on the two set arrays. Returns (doc_a, doc_b,
+    * jaccard) for the pairs with jaccard ≥ `threshold`. */
+  def verifyJaccard(cand: DataFrame, sets: DataFrame, id: String,
+      set: String, threshold: Double): DataFrame = {
+    val j = jaccardFromSets(col("sa"), col("sb"))
+    sets.select(col(id).as("doc_a"), col(set).as("sa"))
+      .join(broadcast(cand), "doc_a")
+      .join(sets.select(col(id).as("doc_b"), col(set).as("sb")), "doc_b")
+      .where(j >= threshold)
+      .select(col("doc_a"), col("doc_b"), j.as("jaccard"))
+  }
+
+  /** |A∩B| (`n_inter`) and the set sizes (`na`, `nb`) of candidate pairs
+    * over (id, shingle) rows: a shingle-equijoin restricted to
+    * candidates, so only candidate pairs pay the set-intersection cost. */
+  private def candidateOverlap(cand: DataFrame, shingles: DataFrame,
+      id: String): DataFrame = {
     val sa = shingles.select(col(id).as("doc_a"), col("shingle"))
     val sb = shingles.select(col(id).as("doc_b"), col("shingle"))
     val inter = cand.join(sa, "doc_a").join(sb, Seq("doc_b", "shingle"))
@@ -192,10 +234,24 @@ object TextOps {
     inter
       .join(sizes.select(col(id).as("doc_a"), col("n").as("na")), "doc_a")
       .join(sizes.select(col(id).as("doc_b"), col("n").as("nb")), "doc_b")
+  }
+
+  /** Exact jaccard on candidate pairs: |A∩B| and |A∪B| from
+    * [[candidateOverlap]]. */
+  def jaccardOnCandidates(cand: DataFrame, shingles: DataFrame, id: String): DataFrame =
+    candidateOverlap(cand, shingles, id)
       .select(col("doc_a"), col("doc_b"),
         (col("n_inter").cast("double") /
           (col("na") + col("nb") - col("n_inter"))).as("jaccard"))
-  }
+
+  /** Distinct (doc_a, doc_b) pairs sharing a shingle, over the shingle
+    * inverted index with a DOCUMENT-FREQUENCY cap of `dfCap` — the
+    * candidate discovery of [[exactNearDupPairs]] and
+    * [[containmentPairs]]. */
+  private def sharedShinglePairs(shingles: DataFrame, id: String, dfCap: Int,
+      metric: String): DataFrame =
+    bucketPairs(shingles, Seq("shingle"), id, Some(dfCap), metric)
+      .select(col(s"${id}_a").as("doc_a"), col(s"${id}_b").as("doc_b")).distinct()
 
   /** EXACT near-duplicate ground truth, at scale: candidate pairs come
     * from the shingle inverted index with a DOCUMENT-FREQUENCY cap — a
@@ -209,14 +265,10 @@ object TextOps {
     * above the cap, i.e. the docs overlap on nothing but boilerplate —
     * exactly the pairs a near-dup audit should not count. */
   def exactNearDupPairs(shingles: DataFrame, id: String, threshold: Double,
-      dfCap: Int = DefaultMaxBucket): DataFrame = {
-    val rare = capHotBuckets(shingles, Seq("shingle"), dfCap, "exact_hot_shingles")
-    val a = rare.select(col("shingle"), col(id).as("doc_a"))
-    val b = rare.select(col("shingle"), col(id).as("doc_b"))
-    val cooc = a.join(b, "shingle").where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    jaccardOnCandidates(cooc, shingles, id).where(col("jaccard") >= threshold)
-  }
+      dfCap: Int = DefaultMaxBucket): DataFrame =
+    jaccardOnCandidates(
+        sharedShinglePairs(shingles, id, dfCap, "exact_hot_shingles"), shingles, id)
+      .where(col("jaccard") >= threshold)
 
   /** ASYMMETRIC containment dedup — the quote-inclusion case Jaccard
     * misses: a short doc fully quoted inside a long one has
@@ -230,20 +282,10 @@ object TextOps {
     * containment-dedup pass drops `doc_sub`, keeping the superset
     * document. */
   def containmentPairs(shingles: DataFrame, id: String, threshold: Double,
-      dfCap: Int = DefaultMaxBucket): DataFrame = {
-    val rare = capHotBuckets(shingles, Seq("shingle"), dfCap, "containment_hot_shingles")
-    val a = rare.select(col("shingle"), col(id).as("doc_a"))
-    val b = rare.select(col("shingle"), col(id).as("doc_b"))
-    val cooc = a.join(b, "shingle").where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val sa = shingles.select(col(id).as("doc_a"), col("shingle"))
-    val sb = shingles.select(col(id).as("doc_b"), col("shingle"))
-    val inter = cooc.join(sa, "doc_a").join(sb, Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
-    val sizes = shingles.groupBy(col(id)).agg(count(lit(1)).as("n"))
-    inter
-      .join(sizes.select(col(id).as("doc_a"), col("n").as("na")), "doc_a")
-      .join(sizes.select(col(id).as("doc_b"), col("n").as("nb")), "doc_b")
+      dfCap: Int = DefaultMaxBucket): DataFrame =
+    candidateOverlap(
+        sharedShinglePairs(shingles, id, dfCap, "containment_hot_shingles"),
+        shingles, id)
       .withColumn("containment",
         col("n_inter").cast("double") / least(col("na"), col("nb")))
       .where(col("containment") >= threshold)
@@ -253,7 +295,6 @@ object TextOps {
         when(col("na") <= col("nb"), col("doc_b")).otherwise(col("doc_a"))
           .as("doc_sup"),
         col("containment"))
-  }
 
   /** 16-bit SimHash over the DISTINCT words of a doc, as aggregate
     * expressions: bit j of md5(word)'s first 4 hex chars votes ±1; the

@@ -22,7 +22,7 @@ import graft.ops.{Caches, EventOps, TextOps}
   */
 object CurationPipeline {
 
-  /** `maxBucket` caps LSH band buckets (TextOps.capHotBuckets): a bucket
+  /** `maxBucket` caps LSH band buckets (TextOps.bucketPairs): a bucket
     * with more members is dropped from CANDIDATE generation, which means
     * its documents are all KEPT by near-dedup — hot buckets are usually
     * boilerplate, but a >maxBucket cluster of true near-duplicates
@@ -133,25 +133,23 @@ object CurationPipeline {
     } finally sig.unpersist()
   }
 
-  /** The (id, shingle-set, minhash signature) table — the shared front
-    * half of every MinHash consumer in the pipeline. */
+  /** The (id, sh shingle set, m0..m(k-1) minhash signature) table — the
+    * shared front half of every MinHash consumer in the pipeline. */
   private def sigTable(docs: DataFrame, cfg: Config, id: String,
       text: String): DataFrame =
-    docs.select(col(id), TextOps.shingleSet(col(text), cfg.shingleN).as("__sh"))
-      .select(col(id) +: col("__sh") +:
-        TextOps.minhashFromSet(col("__sh"), cfg.minhashK): _*)
+    docs.select(col(id), TextOps.shingleSet(col(text), cfg.shingleN).as("sh"))
+      .select(col(id) +: col("sh") +:
+        TextOps.minhashFromSet(col("sh"), cfg.minhashK): _*)
 
-  /** The verified near-dup pair plan over an in-scope (persisted)
-    * signature table: LSH candidates → broadcast → exact jaccard gate. */
-  private def verifiedPairs(sig: DataFrame, cfg: Config,
-      id: String): DataFrame = {
-    val cand = TextOps.lshCandidatePairs(
-      TextOps.lshBands(sig, id, cfg.minhashK, cfg.bandR), id, cfg.maxBucket)
-    sig.select(col(id).as("doc_a"), col("__sh").as("sa"))
-      .join(broadcast(cand), "doc_a")
-      .join(sig.select(col(id).as("doc_b"), col("__sh").as("sb")), "doc_b")
-      .where(TextOps.jaccardFromSets(col("sa"), col("sb")) >= cfg.jaccardThreshold)
-  }
+  /** The verified near-dup pairs (doc_a, doc_b, jaccard) over an in-scope
+    * (persisted) signature table: LSH candidates → exact jaccard gate
+    * (TextOps.verifyJaccard). */
+  private[graft] def verifiedPairs(sig: DataFrame, cfg: Config,
+      id: String): DataFrame =
+    TextOps.verifyJaccard(
+      TextOps.lshCandidatePairs(
+        TextOps.lshBands(sig, id, cfg.minhashK, cfg.bandR), id, cfg.maxBucket),
+      sig, id, "sh", cfg.jaccardThreshold)
 
   /** Verified near-dup pair EDGES (doc_a, doc_b) over `docs` — the input
     * [[canonicalSelect]] clusters. The pair list is settled

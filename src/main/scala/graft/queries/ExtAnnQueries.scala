@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.ops.{Caches, EventOps, GraphOps, IvfIndex, Layout, LogReg, LshIndex, TextOps}
 import graft.sources.Tables
 import graft.pipeline.CurationPipeline
-import graft.functions.{BloomMightContain, CosineSimilarity, MinHashSignature, VectorOps}
+import graft.functions.{BloomMightContain, CosineSimilarity, VectorOps}
 
 /** Vector/ANN family: brute-force kNN, LSH buckets, IVF (one-shot,
   * persisted, incremental), quantization, random projection,
@@ -98,16 +98,13 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
     // hot-bucket cap: within-bucket pairing is quadratic in bucket size,
     // so a degenerate bucket (e.g. all-zero embeddings) is dropped rather
     // than paid — mirrored in the oracle SQL below.
-    val emb = TextOps.capHotBuckets(
-      Tables.embeddings(spark, dir)
-        .withColumn("bucket", VectorOps.signBucket(col("embedding"), 8)),
-      Seq("bucket"), TextOps.DefaultMaxBucket, "ann_hot_buckets")
-    val a = emb.select(col("bucket"), col("vec_id").as("vec_a"), col("embedding").as("ea"))
-    val b = emb.select(col("bucket"), col("vec_id").as("vec_b"), col("embedding").as("eb"))
-    a.join(b, Seq("bucket"))
-      .where(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(CosineSimilarity.cosineSim(spark, col("ea"), col("eb")), 4).as("cos_sim"))
+    val emb = Tables.embeddings(spark, dir)
+      .withColumn("bucket", VectorOps.signBucket(col("embedding"), 8))
+    TextOps.bucketPairs(emb, Seq("bucket"), "vec_id",
+        Some(TextOps.DefaultMaxBucket), "ann_hot_buckets", "embedding")
+      .select(col("vec_id_a").as("vec_a"), col("vec_id_b").as("vec_b"),
+        round(CosineSimilarity.cosineSim(spark, col("embedding_a"),
+          col("embedding_b")), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_a"), col("vec_b"))
       .limit(20)
   }

@@ -403,9 +403,6 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
     * intersection, which is exactly why production pipelines run simhash
     * next to minhash. */
   private[queries] def q107(spark: SparkSession, dir: String): DataFrame = {
-    val bandArr = array((0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        shiftright(col("sh"), 16 * b).bitwiseAND(lit(65535L)).as("key"))): _*)
     // fingerprints persisted: 16 bytes/doc, and the plan below consumes
     // them THREE times (bucket-size agg + both self-join sides) — without
     // the cache each consumer re-runs the 63-aggregate simhash over the
@@ -416,23 +413,8 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
       .select(col("doc_id"), array_distinct(TextOps.words(col("text"))).as("dw"))
       .select(col("doc_id"), TextOps.simhash63InRow(col("dw")).as("sh"))
       .persist()
-    val bands = h
-      .select(col("doc_id"), col("sh"), explode(bandArr).as("bk"))
-      .select(col("doc_id"), col("sh"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    val kept = TextOps.capHotBuckets(
-      bands, Seq("band", "key"), TextOps.DefaultMaxBucket, "simhash_hot_buckets")
-    val a = kept.select(col("band"), col("key"),
-      col("doc_id").as("doc_a"), col("sh").as("ha"))
-    val b = kept.select(col("band"), col("key"),
-      col("doc_id").as("doc_b"), col("sh").as("hb"))
-    val out = a.join(b, Seq("band", "key"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("ha"), col("hb")).distinct()
-      .withColumn("hamming",
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
+    val out = TextOps.simhashPairs(h, "simhash_hot_buckets")
       .where(col("hamming") <= 3)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))
     // settle so the fingerprint cache can be released before returning
     try Caches.settle(out, maxRows = 1 << 22) finally h.unpersist()
@@ -488,23 +470,8 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
       .persist()
     try {
       val h = sample.select(col("doc_id"), TextOps.simhash63InRow(col("dw")).as("sh"))
-      val bandArr = array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sh"), 16 * b).bitwiseAND(lit(65535L)).as("key"))): _*)
-      val bands = h.select(col("doc_id"), col("sh"), explode(bandArr).as("bk"))
-        .select(col("doc_id"), col("sh"),
-          col("bk.band").as("band"), col("bk.key").as("key"))
-      val kept = TextOps.capHotBuckets(
-        bands, Seq("band", "key"), TextOps.DefaultMaxBucket, "simhash_audit_hot")
-      val a = kept.select(col("band"), col("key"),
-        col("doc_id").as("doc_a"), col("sh").as("ha"))
-      val b = kept.select(col("band"), col("key"),
-        col("doc_id").as("doc_b"), col("sh").as("hb"))
-      val ham = a.join(b, Seq("band", "key"))
-        .where(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("ha"), col("hb")).distinct()
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int").as("d"))
+      val ham = TextOps.simhashPairs(h, "simhash_audit_hot")
+        .select(col("doc_a"), col("doc_b"), col("hamming").as("d"))
       val exact = TextOps.exactNearDupPairs(
           sample.select(col("doc_id"), explode(col("dw")).as("shingle")),
           "doc_id", 0.5)
@@ -768,17 +735,14 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
       array_max(transform(sequence(lit(1), lit(K)), i => struct(
         CosineSimilarity.cosineSim(spark, v, element_at(centArr, i)).as("c"),
         (i - 1).as("i")))).getField("i")
-    val asg = TextOps.capHotBuckets(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-          cellOf(col("embedding")).as("cell")),
-      Seq("cell"), 4 * TextOps.DefaultMaxBucket, "semdedup_hot_cells")
-    val a = asg.select(col("cell"), col("vec_id").as("va"), col("embedding").as("ea"))
-    val b = asg.select(col("cell"), col("vec_id").as("vb"), col("embedding").as("eb"))
-    val cos = CosineSimilarity.cosineSim(spark, col("ea"), col("eb"))
-    val pairs = a.join(b, Seq("cell"))
-      .where(col("va") < col("vb") && cos >= 0.35)
-      .select(col("cell"), col("va"), col("vb"), round(cos, 4).as("cos_sim"))
+    val asg = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"), cellOf(col("embedding")).as("cell"))
+    val cos = CosineSimilarity.cosineSim(spark, col("embedding_a"), col("embedding_b"))
+    val pairs = TextOps.bucketPairs(asg, Seq("cell"), "vec_id",
+        Some(4 * TextOps.DefaultMaxBucket), "semdedup_hot_cells", "embedding")
+      .where(cos >= 0.35)
+      .select(col("cell"), col("vec_id_a").as("va"), col("vec_id_b").as("vb"),
+        round(cos, 4).as("cos_sim"))
     val firstKeeper = Window.partitionBy(col("vb")).orderBy(col("va"))
     pairs.withColumn("rn", row_number().over(firstKeeper))
       .where(col("rn") === 1)
@@ -827,21 +791,14 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
     val docs = Tables.spread(Tables.documents(spark, dir))
       .orderBy(md5(col("doc_id").cast("string").cast("binary")), col("doc_id"))
       .limit(Q84_SAMPLE)
-    val sigArr = MinHashSignature.minhashSig(spark, col("sh"), K)
-    val sig = docs
-      .select(col("doc_id"), TextOps.shingleSet(col("text"), SHINGLE_N).as("sh"))
-      .select(col("doc_id") +: col("sh") +:
-        (0 until K).map(i => element_at(sigArr, i + 1).as(s"m$i")): _*)
+    val sig = minhashSigTable(spark,
+      docs.select(col("doc_id"), TextOps.shingleSet(col("text"), SHINGLE_N).as("sh")))
       .persist()
     try {
       val cand = TextOps.lshCandidatePairs(
-        TextOps.lshBands(sig, "doc_id", K, R), "doc_id",
-        maxBucket = Some(TextOps.DefaultMaxBucket))
-      val withSets = sig.select(col("doc_id").as("doc_a"), col("sh").as("sa"))
-        .join(broadcast(cand), "doc_a")
-        .join(sig.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
-      val verified = withSets
-        .where(TextOps.jaccardFromSets(col("sa"), col("sb")) >= 0.5)
+        TextOps.lshBands(sig, "doc_id", K, R), "doc_id", NearDup.maxBucket)
+      val verified = TextOps.verifyJaccard(cand, sig, "doc_id", "sh",
+          NearDup.jaccardThreshold)
         .select(col("doc_a"), col("doc_b"))
       // exact ground truth: df-capped inverted-index candidates, true
       // jaccard from the full sets (TextOps.exactNearDupPairs)

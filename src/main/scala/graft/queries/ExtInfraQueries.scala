@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.ops.{Caches, EventOps, GraphOps, IvfIndex, Layout, LogReg, LshIndex, TextOps}
 import graft.sources.Tables
 import graft.pipeline.CurationPipeline
-import graft.functions.{BloomMightContain, CosineSimilarity, MinHashSignature, VectorOps}
+import graft.functions.{BloomMightContain, CosineSimilarity, VectorOps}
 
 /** Storage/wire/multimodal family: clustered and z-order layout
   * scans, wire-format round-trip, image/audio decode. */
@@ -1130,26 +1130,8 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Tables.spread(Tables.documents(spark, dir)).select(col("doc_id")))
       .persist()
     try {
-      val bandArr = array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sh"), 16 * b).bitwiseAND(lit(65535L)).as("key"))): _*)
-      val bands = h
-        .select(col("doc_id"), col("sh"), explode(bandArr).as("bk"))
-        .select(col("doc_id"), col("sh"),
-          col("bk.band").as("band"), col("bk.key").as("key"))
-      val kept = TextOps.capHotBuckets(
-        bands, Seq("band", "key"), TextOps.DefaultMaxBucket, "dhash_hot_buckets")
-      val a = kept.select(col("band"), col("key"),
-        col("doc_id").as("doc_a"), col("sh").as("ha"))
-      val b = kept.select(col("band"), col("key"),
-        col("doc_id").as("doc_b"), col("sh").as("hb"))
-      val pairs = a.join(b, Seq("band", "key"))
-        .where(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("ha"), col("hb")).distinct()
-        .withColumn("hamming",
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
+      val pairs = TextOps.simhashPairs(h, "dhash_hot_buckets")
         .where(col("hamming") <= 3)
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
         .orderBy(col("doc_a"), col("doc_b"))
       // Settled so the returned plan does not outlive the unpersist.
       Caches.settle(pairs, maxRows = 1 << 20)

@@ -48,6 +48,22 @@ private[queries] trait ExtQueryHelpers {
       .mkString(" + ")
 
 
+  /** The one-shot near-dup knobs of q20/q59/q84: CurationPipeline's
+    * verify at this registry's shingle/minhash/band constants
+    * (jaccard ≥ 0.5, hot-bucket cap DefaultMaxBucket). */
+  private[queries] val NearDup = CurationPipeline.Config(
+    shingleN = SHINGLE_N, minhashK = K, bandR = R)
+
+  /** (doc_id, sh, m0..m(K-1)) over a (doc_id, sh shingle set) frame: the
+    * K minima of the fused one-pass MinHashSignature expression, read
+    * from the set column. */
+  private[queries] def minhashSigTable(spark: SparkSession,
+      shingled: DataFrame): DataFrame = {
+    val sigArr = MinHashSignature.minhashSig(spark, col("sh"), K)
+    shingled.select(col("doc_id") +: col("sh") +:
+      (0 until K).map(i => element_at(sigArr, i + 1).as(s"m$i")): _*)
+  }
+
   /** Verified near-dup pairs (doc_a, doc_b, jaccard >= 0.5), localized —
     * the shared front half of q20 (pair listing) and q59 (transitive
     * clustering of the same pairs). */
@@ -60,24 +76,12 @@ private[queries] trait ExtQueryHelpers {
     // the signature table is ~1% the corpus size. At 100 TB the same op
     // writes the signature table to storage once and joins against it
     // (see TextOps scaladoc); in-memory cache is the single-job form.
-    val sigArr = MinHashSignature.minhashSig(spark, col("sh"), K)
-    val sig = Tables.spread(Tables.documents(spark, dir)
-        .select(col("doc_id"), TextOps.shingleSet(col("text"), SHINGLE_N).as("sh")))
-      .select(col("doc_id") +: col("sh") +:
-        (0 until K).map(i => element_at(sigArr, i + 1).as(s"m$i")): _*)
+    val sig = minhashSigTable(spark, Tables.spread(Tables.documents(spark, dir)
+        .select(col("doc_id"), TextOps.shingleSet(col("text"), SHINGLE_N).as("sh"))))
       .persist()
     try {
-      val cand = TextOps.lshCandidatePairs(
-        TextOps.lshBands(sig, "doc_id", K, R), "doc_id",
-        maxBucket = Some(TextOps.DefaultMaxBucket))
-      // candidates are rare -> broadcast them back onto the signature table
-      // (map-side joins); jaccard is then in-row on the two set arrays
-      val withSets = sig.select(col("doc_id").as("doc_a"), col("sh").as("sa"))
-        .join(broadcast(cand), "doc_a")
-        .join(sig.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
-      val j = TextOps.jaccardFromSets(col("sa"), col("sb"))
-      val pairs = withSets.where(j >= 0.5)
-        .select(col("doc_a"), col("doc_b"), round(j, 4).as("jaccard"))
+      val pairs = CurationPipeline.verifiedPairs(sig, NearDup, "doc_id")
+        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy(col("doc_a"), col("doc_b"))
       // Settle the (tiny) verified-pair list so the signature cache is
       // released before returning — a lazily-returned DataFrame would

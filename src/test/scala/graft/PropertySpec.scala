@@ -139,6 +139,62 @@ class PropertySpec extends SparkSpecBase {
     }, trials = 8)
   }
 
+  test("bucketPairs and newVsIndexPairs equal brute-force enumeration " +
+    "on random buckets, caps, payloads and is_new flags, and observe " +
+    "exactly the dropped buckets") {
+    // one row: (band, key, doc_id, payload, is_new); ids are distinct
+    // within a bucket (a doc has one key per band) and repeat across them
+    val bucketGen = for {
+      band <- Gen.choose(0, 1); key <- Gen.choose(0L, 2L)
+      ids <- Gen.nonEmptyContainerOf[Set, Long](Gen.choose(0L, 9L))
+      cells <- Gen.listOfN(ids.size,
+        Gen.zip(Gen.oneOf("x", "y", "z"), Gen.oneOf(true, false)))
+    } yield ids.toList.zip(cells).map { case (id, (p, n)) => (band, key, id, p, n) }
+    // buckets drawn twice merge; the first row of a repeated (bucket, id) wins
+    val rowsGen = Gen.nonEmptyListOf(bucketGen)
+      .map(_.flatten.groupBy(r => (r._1, r._2, r._3)).values.map(_.head).toList)
+    val capGen = Gen.option(Gen.choose(1, 6))
+    // no shrinking: a shrunk case breaks the generator's invariants
+    check(Prop.forAllNoShrink(rowsGen, capGen) { (rows, cap) =>
+      val buckets = rows.groupBy(r => (r._1, r._2))
+      val kept = buckets.filter { case (_, m) => cap.forall(m.size <= _) }
+      val want: List[(Int, Long, Long, String, Boolean, Long, String, Boolean)] =
+        (for {
+          ((band, key), m) <- kept.toList; a <- m; b <- m if a._3 < b._3
+        } yield (band, key, a._3, a._4, a._5, b._3, b._4, b._5)).sorted
+      val dropped = buckets.values.filterNot(m => cap.forall(m.size <= _))
+      val df = rows.toDF("band", "key", "doc_id", "p", "is_new")
+      val all = TextOps.bucketPairs(df, Seq("band", "key"), "doc_id", cap,
+        "prop_pairs", "p", "is_new")
+      // rows straight off `all`: its own QueryExecution holds the metric
+      def tuples(f: org.apache.spark.sql.DataFrame) = f.collect().toList
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getString(3),
+          r.getBoolean(4), r.getLong(5), r.getString(6), r.getBoolean(7)))
+        .sorted
+      val gotAll = tuples(all)
+      val observed = all.queryExecution.observedMetrics.get("prop_pairs")
+      def counts(m: org.apache.spark.sql.Row): Boolean =
+        m.getAs[Long]("dropped_buckets") == dropped.size.toLong &&
+          m.getAs[Long]("dropped_rows") == dropped.map(_.size.toLong).sum
+      val metricOk = cap match {
+        case None => observed.isEmpty
+        // When the cap drops EVERY bucket, adaptive execution replaces the
+        // empty join with an empty relation and the CollectMetrics node
+        // leaves the final plan: the metric can be absent, never wrong.
+        case Some(_) if kept.isEmpty => observed.forall(counts)
+        case Some(_) => observed.exists(counts)
+      }
+      // the probe form: index rows (is_new = false) and batch rows, one
+      // bucket kernel, pairs with at least one batch side
+      val side = (n: Boolean) =>
+        df.where($"is_new" === n).select($"band", $"key", $"doc_id", $"p")
+      val gotNew = tuples(TextOps.newVsIndexPairs(side(false), side(true), cap,
+        "prop_new_pairs", "p"))
+      val wantNew = want.filter(r => r._5 || r._8)
+      gotAll == want && metricOk && gotNew == wantNew
+    }, trials = 12)
+  }
+
   test("EventGen is deterministic: same n generates the identical relation") {
     check(Prop.forAll(Gen.choose(50L, 400L)) { n =>
       val a = graft.pipeline.EventGen.events(spark, n)
@@ -163,15 +219,14 @@ class PropertySpec extends SparkSpecBase {
       java.lang.Long.bitCount(a ^ b) <= 3 &&
         bandKeys(a).zip(bandKeys(b)).exists(p => p._1 == p._2)
     }, trials = 200)
-    // and the Column spelling q107 builds its buckets from extracts the
-    // same 4 keys as the pure-integer model (one sampled check ties the
-    // property to the production expressions)
+    // and the band split q107 and SimHashIndex build their buckets from
+    // (TextOps.hashBands) extracts the same 4 keys as the pure-integer
+    // model (one sampled check ties the property to the product code)
     val samples = Seq(0L, 1L, (1L << 63) - 1, 0x123456789abcdefL,
       0x7edcba9876543210L)
-    val sparkKeys = samples.toDF("sh")
-      .select(col("sh") +: (0 until 4).map(b =>
-        shiftright(col("sh"), 16 * b).bitwiseAND(lit(65535L)).as(s"k$b")): _*)
-      .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getLong(_))).toMap
+    val sparkKeys = TextOps.hashBands(samples.toDF("sh"))
+      .select($"sh", $"band", $"key").as[(Long, Int, Long)].collect()
+      .groupBy(_._1).map { case (h, rows) => h -> rows.sortBy(_._2).map(_._3).toSeq }
     samples.foreach(h => assert(sparkKeys(h) == bandKeys(h),
       s"band spelling diverges for $h"))
   }
@@ -186,26 +241,14 @@ class PropertySpec extends SparkSpecBase {
       case i => s"completely different content number $i about spark"
     }
     def pairsOf(ids: Seq[Long]): Set[(String, String)] = {
-      val df = ids.zip(texts).toDF("doc_id", "text")
-      val bandArr = array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftright($"sh", 16 * b).bitwiseAND(lit(65535L)).as("key"))): _*)
-      val bands = df
-        .select($"doc_id", $"text",
+      val textOf = ids.zip(texts).toMap
+      val h = textOf.toSeq.toDF("doc_id", "text")
+        .select($"doc_id",
           TextOps.simhash63InRow(array_distinct(TextOps.words($"text"))).as("sh"))
-        .select($"doc_id", $"text", $"sh", explode(bandArr).as("bk"))
-        .select($"doc_id", $"text", $"sh",
-          $"bk.band".as("band"), $"bk.key".as("key"))
-      val kept = TextOps.capHotBuckets(
-        bands, Seq("band", "key"), TextOps.DefaultMaxBucket, "prop_hot")
-      val a = kept.select($"band", $"key", $"doc_id".as("ia"),
-        $"text".as("ta"), $"sh".as("ha"))
-      val b = kept.select($"band", $"key", $"doc_id".as("ib"),
-        $"text".as("tb"), $"sh".as("hb"))
-      a.join(b, Seq("band", "key")).where($"ia" < $"ib")
-        .where(bit_count($"ha".bitwiseXOR($"hb")) <= 3)
-        .select($"ta", $"tb").distinct()
-        .as[(String, String)].collect()
+      TextOps.simhashPairs(h, "prop_hot")
+        .where($"hamming" <= 3)
+        .select($"doc_a", $"doc_b").as[(Long, Long)].collect()
+        .map { case (a, b) => (textOf(a), textOf(b)) }
         .map(p => if (p._1 <= p._2) p else p.swap).toSet
     }
     val identity = pairsOf(texts.indices.map(_.toLong))

@@ -20,12 +20,15 @@ class TextOpsSpec extends SparkSpecBase {
     assert(got === Seq("abcd", "bcde", "cdef"))
   }
 
+  /** (doc_id, m0..m(k-1)) over word-2-gram shingle sets. */
+  private def signatures(df: org.apache.spark.sql.DataFrame, k: Int) =
+    df.select($"doc_id" +: TextOps.minhashFromSet(TextOps.shingleSet($"text", 2), k): _*)
+
   test("minhash signature: identical docs get identical signatures; " +
     "disjoint docs differ") {
     val df = Seq((1L, "x y z w"), (2L, "x y z w"), (3L, "p q r s"))
       .toDF("doc_id", "text")
-    val sh = TextOps.shingleRows(df, "doc_id", "text", 2)
-    val sig = TextOps.minhashSignature(sh, "doc_id", 4).collect()
+    val sig = signatures(df, 4).collect()
       .map(r => r.getLong(0) -> r.toSeq.tail).toMap
     assert(sig(1L) === sig(2L))
     assert(sig(1L) !== sig(3L))
@@ -35,7 +38,7 @@ class TextOpsSpec extends SparkSpecBase {
     val df = Seq((1L, "x y z w v u t s"), (2L, "x y z w v u t s"),
       (3L, "p q r s t u v w")).toDF("doc_id", "text")
     val sh = TextOps.shingleRows(df, "doc_id", "text", 2)
-    val sig = TextOps.minhashSignature(sh, "doc_id", 8)
+    val sig = signatures(df, 8)
     val pairs = TextOps.lshCandidatePairs(
       TextOps.lshBands(sig, "doc_id", 8, 2), "doc_id")
       .as[(Long, Long)].collect().toSet
@@ -119,8 +122,7 @@ class TextOpsSpec extends SparkSpecBase {
   test("hot-bucket cap drops oversized buckets") {
     // 5 docs all sharing one band key via identical text
     val df = (1L to 5L).map(i => (i, "x y z")).toDF("doc_id", "text")
-    val sh = TextOps.shingleRows(df, "doc_id", "text", 2)
-    val bands = TextOps.lshBands(TextOps.minhashSignature(sh, "doc_id", 4), "doc_id", 4, 2)
+    val bands = TextOps.lshBands(signatures(df, 4), "doc_id", 4, 2)
     assert(TextOps.lshCandidatePairs(bands, "doc_id").count() === 10) // C(5,2)
     assert(TextOps.lshCandidatePairs(bands, "doc_id", maxBucket = Some(4)).count() === 0)
   }
@@ -134,8 +136,7 @@ class TextOpsSpec extends SparkSpecBase {
     val near = Seq((2001L, "alpha beta gamma delta epsilon zeta"),
       (2002L, "alpha beta gamma delta epsilon zeta"))
     val df = (boiler ++ near).toDF("doc_id", "text")
-    val sh = TextOps.shingleRows(df, "doc_id", "text", 2)
-    val bands = TextOps.lshBands(TextOps.minhashSignature(sh, "doc_id", 8), "doc_id", 8, 2)
+    val bands = TextOps.lshBands(signatures(df, 8), "doc_id", 8, 2)
     val capped = TextOps.lshCandidatePairs(bands, "doc_id") // default cap 64
     val got = capped.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSet === Set((2001L, 2002L)))
