@@ -4,7 +4,8 @@ import java.io.ByteArrayInputStream
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftExpressions.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -68,33 +69,11 @@ case class BloomMightContain(child: Expression, bloomBytes: Array[Byte])
 }
 
 object BloomMightContain {
-  /** Column-API entry point (same registry bridge as cosine_sim: the
-    * Expression→Column constructor is private[sql] in Spark 4). The
-    * filter is passed pre-serialized so the registered builder stays a
-    * pure Seq[Expression] function (bytes ride a foldable binary
-    * literal). */
-  def mightContain(spark: SparkSession, bloom: BloomFilter, key: Column): Column = {
+  /** Column entry point: `key` probed against `bloom`, whose serialized
+    * bytes ride the expression. */
+  def mightContain(bloom: BloomFilter, key: Column): Column = {
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "bloom_might_contain", org.apache.spark.sql.functions.lit(bos.toByteArray), key)
+    column(BloomMightContain(expression(key), bos.toByteArray))
   }
-
-  private[graft] def fromExprs(exprs: Seq[Expression]): Expression = {
-    val bytes = exprs.head match {
-      case l if l.foldable => l.eval() match {
-        case b: Array[Byte] => b
-        case other => throw new IllegalArgumentException(
-          s"bloom_might_contain: filter must be binary, got $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "bloom_might_contain: filter must be a literal")
-    }
-    BloomMightContain(exprs(1), bytes)
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", fromExprs, "built-in")
 }

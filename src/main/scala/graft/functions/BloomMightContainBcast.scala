@@ -4,7 +4,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftExpressions.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -19,10 +20,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * `handle.value` once per operator instance (mutable-state init), so
   * the per-row cost is the same single hash probe as the inline variant.
   *
-  * The Column bridge registers a per-broadcast temp function whose
-  * builder CLOSES OVER the handle (a broadcast cannot ride a literal the
-  * way the inline variant's bytes do); `release` drops the registry
-  * entry and the broadcast together when the filter is retired.
+  * It has no SQL name: a broadcast cannot ride a literal the way the
+  * inline variant's bytes do, so only the Column entry point builds it.
   */
 case class BloomMightContainBcast(child: Expression, handle: Broadcast[BloomFilter])
     extends UnaryExpression {
@@ -66,29 +65,9 @@ case class BloomMightContainBcast(child: Expression, handle: Broadcast[BloomFilt
 }
 
 object BloomMightContainBcast {
-
-  private def fnName(handle: Broadcast[BloomFilter]): String =
-    s"bloom_might_contain_bcast_${handle.id}"
-
-  /** Broadcast `bloom` and return (handle, probe-Column factory). */
-  def broadcastFilter(spark: SparkSession, bloom: BloomFilter): Broadcast[BloomFilter] =
-    spark.sparkContext.broadcast(bloom)
-
-  /** Probe `key` against an already-broadcast filter. */
-  def mightContain(spark: SparkSession, handle: Broadcast[BloomFilter], key: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName(handle),
-      (exprs: Seq[Expression]) => BloomMightContainBcast(exprs.head, handle),
-      "built-in")
-    org.apache.spark.sql.functions.call_function(fnName(handle), key)
-  }
-
-  /** Retire a filter: drop its temp function and release executor-side
-    * broadcast blocks. Queries planned against the handle must have
+  /** Probe `key` against an already-broadcast filter. Retire the filter
+    * with `handle.unpersist()` once the queries planned against it have
     * finished executing. */
-  def release(spark: SparkSession, handle: Broadcast[BloomFilter]): Unit = {
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fnName(handle)))
-    handle.unpersist()
-  }
+  def mightContain(handle: Broadcast[BloomFilter], key: Column): Column =
+    column(BloomMightContainBcast(expression(key), handle))
 }

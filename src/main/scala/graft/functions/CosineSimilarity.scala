@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftExpressions.{column, expression}
 
 /** Native fused cosine similarity over two `array<float>` columns.
   *
@@ -92,64 +91,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Column-API entry point. The Expression→Column bridge is private[sql]
-    * in Spark 4, so we go through the public function registry +
-    * `call_function` (idempotent per-session registration). */
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    GraftFunctions.register(spark)
-    org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
-  }
-}
-
-/** SparkSessionExtensions hook for ALL graft custom functions
-  * (`cosine_sim`, `minhash_sig`, `bloom_might_contain`,
-  * `nfc_normalize`, `kmv_distinct`). Register with
-  * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def intLit(e: Expression, fn: String): Int = e match {
-    case l if l.foldable => l.eval() match {
-      case i: Int => i
-      case l2: Long => l2.toInt
-      case other => throw new IllegalArgumentException(
-        s"$fn: k must be an integer literal, got $other")
-    }
-    case _ => throw new IllegalArgumentException(s"$fn: k must be a literal")
-  }
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) =>
-        MinHashSignature(exprs.head, intLit(exprs(1), "minhash_sig"))))
-    e.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (exprs: Seq[Expression]) => BloomMightContain.fromExprs(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("kmv_distinct"),
-      new ExpressionInfo(classOf[KMVSketch].getName, "kmv_distinct"),
-      (exprs: Seq[Expression]) =>
-        KMVSketch(exprs.head, intLit(exprs(1), "kmv_distinct"))
-          .toAggregateExpression()))
-  }
-}
-
-/** Runtime registration for an existing session (tests, Verify). */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
-  }
+  /** Column entry point. */
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

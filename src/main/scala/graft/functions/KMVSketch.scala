@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftExpressions.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -94,29 +94,7 @@ case class KMVSketch(child: Expression, k: Int,
 }
 
 object KMVSketch {
-  /** Column entry point via the function registry. */
-  def kmvDistinct(spark: SparkSession, value: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "kmv_distinct", value, org.apache.spark.sql.functions.lit(k))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_distinct",
-      (exprs: Seq[Expression]) => {
-        val k = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"kmv_distinct(value, k): k must be an integer literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "kmv_distinct(value, k): k must be a literal")
-        }
-        KMVSketch(exprs.head, k).toAggregateExpression()
-      },
-      "built-in")
-  }
+  /** Column entry point. */
+  def kmvDistinct(value: Column, k: Int): Column =
+    column(KMVSketch(expression(value), k).toAggregateExpression())
 }

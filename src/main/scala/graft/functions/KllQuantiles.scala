@@ -2,7 +2,8 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftExpressions.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -209,44 +210,7 @@ object KllQuantiles {
     }
   }
 
-  /** Column entry point via the function registry (the
-    * Expression→Column bridge pattern shared with space_saving_topk). */
-  def quantiles(spark: SparkSession, value: Column, capacity: Int,
-      qs: Seq[Double]): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("kll_quantiles",
-      value, org.apache.spark.sql.functions.lit(capacity),
-      org.apache.spark.sql.functions.array(
-        qs.map(org.apache.spark.sql.functions.lit): _*))
-  }
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case l if l.foldable => l.eval() match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"kll_quantiles: $what must be an integer literal, got $other")
-    }
-    case _ => throw new IllegalArgumentException(
-      s"kll_quantiles: $what must be a literal")
-  }
-
-  private def doubleArrayLit(e: Expression): Seq[Double] = e match {
-    case l if l.foldable => l.eval() match {
-      case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-        a.toDoubleArray().toSeq
-      case other => throw new IllegalArgumentException(
-        s"kll_quantiles: quantiles must be an array<double> literal, got $other")
-    }
-    case _ => throw new IllegalArgumentException(
-      "kll_quantiles: quantiles must be a literal array")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantiles",
-      (exprs: Seq[Expression]) => KllQuantiles(exprs.head,
-        intLit(exprs(1), "capacity"),
-        doubleArrayLit(exprs(2))).toAggregateExpression(),
-      "built-in")
+  /** Column entry point. */
+  def quantiles(value: Column, capacity: Int, qs: Seq[Double]): Column =
+    column(KllQuantiles(expression(value), capacity, qs).toAggregateExpression())
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftExpressions.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused k-way MinHash signature over a shingle-set array.
@@ -89,30 +90,7 @@ object MinHashSignature {
     new GenericArrayData(out)
   }
 
-  /** Column entry point via the public function-registry bridge. */
-  def minhashSig(spark: SparkSession, shingles: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "minhash_sig", shingles, org.apache.spark.sql.functions.lit(k))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      (exprs: Seq[Expression]) => {
-        val k = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case s: Short => s.toInt
-            case other => throw new IllegalArgumentException(
-              s"minhash_sig(shingles, k): k must be an integer literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "minhash_sig(shingles, k): k must be a literal, not a column")
-        }
-        MinHashSignature(exprs.head, k)
-      },
-      "built-in")
-  }
+  /** Column entry point. */
+  def minhashSig(shingles: Column, k: Int): Column =
+    column(MinHashSignature(expression(shingles), k))
 }

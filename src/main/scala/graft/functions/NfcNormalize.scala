@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftExpressions.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode NFC normalization as a native codegen'd Catalyst expression.
@@ -62,14 +63,6 @@ object NfcNormalize {
     }
   }
 
-  /** Column-API entry point (same registry bridge as
-    * [[CosineSimilarity.cosineSim]] — the Expression→Column constructor
-    * is private[sql] in Spark 4). */
-  def nfc(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head),
-      "built-in")
-    org.apache.spark.sql.functions.call_function("nfc_normalize", c)
-  }
+  /** Column entry point. */
+  def nfc(c: Column): Column = column(NfcNormalize(expression(c)))
 }

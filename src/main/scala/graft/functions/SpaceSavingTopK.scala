@@ -2,7 +2,8 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftExpressions.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -226,30 +227,7 @@ object SpaceSavingTopK {
     }
   }
 
-  /** Column entry point via the function registry (the
-    * Expression→Column bridge pattern shared with kmv_distinct). */
-  def topK(spark: SparkSession, value: Column, capacity: Int, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("space_saving_topk",
-      value, org.apache.spark.sql.functions.lit(capacity),
-      org.apache.spark.sql.functions.lit(k))
-  }
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case l if l.foldable => l.eval() match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"space_saving_topk: $what must be an integer literal, got $other")
-    }
-    case _ => throw new IllegalArgumentException(
-      s"space_saving_topk: $what must be a literal")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "space_saving_topk",
-      (exprs: Seq[Expression]) => SpaceSavingTopK(exprs.head,
-        intLit(exprs(1), "capacity"), intLit(exprs(2), "k")).toAggregateExpression(),
-      "built-in")
+  /** Column entry point. */
+  def topK(value: Column, capacity: Int, k: Int): Column =
+    column(SpaceSavingTopK(expression(value), capacity, k).toAggregateExpression())
 }

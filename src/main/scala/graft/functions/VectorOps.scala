@@ -65,9 +65,4 @@ object VectorOps {
     struct(scale.as("scale"),
       transform(a, x => round(x.cast("double") / scale).cast("tinyint")).as("codes"))
   }
-
-  /** Reconstruct a float vector from [[quantizeInt8]] output. */
-  def dequantizeInt8(q: Column): Column =
-    transform(q.getField("codes"),
-      c => (c.cast("double") * q.getField("scale")).cast("float"))
 }

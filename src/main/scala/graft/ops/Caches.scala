@@ -1,7 +1,7 @@
 package graft.ops
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Cache-lifetime helpers. Spark's `Dataset.persist` goes through the
   * CacheManager, which holds the entry until an explicit `unpersist` —
@@ -39,30 +39,19 @@ object Caches {
     * defaults. */
   val MaxRowsConf = "spark.graft.localize.maxRows"
 
-  /** Session conf `key` read as a non-negative integer, None when
-    * unset. Rejects malformed/negative values with an error NAMING the
-    * key (a bare toLong deep inside a query's plan was undiagnosable —
-    * r14 advice); `meaning` says what the value is. Every graft session
-    * knob reads through here. */
-  def nonNegativeConf(spark: SparkSession, key: String, meaning: String): Option[Long] =
-    spark.conf.getOption(key).map { s =>
-      val v =
-        try s.trim.toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$key must be a non-negative integer ($meaning), got '$s'")
-        }
-      require(v >= 0, s"$key must be >= 0 ($meaning), got $s")
-      v
-    }
-
   /** The effective cap: the [[MaxRowsConf]] session override when set,
-    * else the call site's `default`. Values above Int.MaxValue clamp (a
+    * else the call site's `default`. A malformed or negative override
+    * fails with an error NAMING the key (a bare toLong deep inside a
+    * query's plan was undiagnosable). Values above Int.MaxValue clamp (a
     * cap that large never localizes in practice anyway). */
   def effectiveMaxRows(df: DataFrame, default: Int): Int =
-    nonNegativeConf(df.sparkSession, MaxRowsConf,
-      "a row cap; 0 disables localization")
-      .fold(default)(v => math.min(v, Int.MaxValue.toLong).toInt)
+    df.sparkSession.conf.getOption(MaxRowsConf).fold(default) { s =>
+      val v = s.trim.toLongOption.filter(_ >= 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$MaxRowsConf must be a non-negative integer (a row cap; 0 disables " +
+            s"localization), got '$s'"))
+      math.min(v, Int.MaxValue.toLong).toInt
+    }
 
   /** ONE bounded probe: `df`'s rows and a LocalRelation-backed frame
     * over them iff it has at most `maxRows` rows (as overridden by

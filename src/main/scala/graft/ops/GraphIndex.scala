@@ -115,8 +115,7 @@ object GraphIndex {
       .join(e.select(col("vec_id").as("src"), col("embedding").as("se")), "src")
       .join(e.select(col("vec_id").as("dst"), col("embedding").as("de")), "dst")
       .select(col("src"), col("dst"),
-        graft.functions.CosineSimilarity.cosineSim(
-          spark, col("se"), col("de")).as("cos"))
+        graft.functions.CosineSimilarity.cosineSim(col("se"), col("de")).as("cos"))
     def topK(scored: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
       scored.groupBy(col("src"), col("dst")).agg(max(col("cos")).as("cos"))
@@ -215,8 +214,7 @@ object GraphIndex {
           .select(col("probe_id"), col("v"), col("embedding").as("ve"))
         p.join(if (candLocal) broadcast(withVe) else withVe, "probe_id")
           .select(col("probe_id"), col("v"),
-            graft.functions.CosineSimilarity.cosineSim(
-              spark, col("ve"), col("probe")).as("cos"))
+            graft.functions.CosineSimilarity.cosineSim(col("ve"), col("probe")).as("cos"))
       }
       // hop 0: every probe's beam = the entry vertex (no window needed)
       var settled = Caches.localizeWithRows(scored(

@@ -39,14 +39,13 @@ object IvfIndex {
   def kmeansTrain(emb: DataFrame, k: Int, iters: Int,
       id: String = "vec_id", vec: String = "embedding",
       seed: Option[Seq[Seq[Float]]] = None): Seq[Seq[Float]] = {
-    val spark = emb.sparkSession
     val spread = graft.sources.Tables.spread(emb)
     var cents: Seq[Seq[Float]] = seed.getOrElse(
       emb.orderBy(col(id)).select(col(vec)).limit(k).collect()
         .map(_.getSeq[Number](0).map(_.floatValue()).toSeq).toSeq)
     require(cents.size == k, s"seed has ${cents.size} centroids, want $k")
     for (_ <- 1 to iters) {
-      val assigned = spread.withColumn("cell", cellOf(spark, col(vec), cents))
+      val assigned = spread.withColumn("cell", cellOf(col(vec), cents))
       val means = assigned
         .select(col("cell"), posexplode(col(vec)))
         .groupBy(col("cell"), col("pos")).agg(avg(col("col")).as("m"))
@@ -63,43 +62,27 @@ object IvfIndex {
   /** Per-cell (cosine, id) score structs — the shared kernel of
     * [[cellOf]] and [[topCellsOf]]; struct ordering gives the ANN path's
     * tie rule (cosine desc, ties to the higher centroid id) for free. */
-  private def cellScores(spark: SparkSession, v: org.apache.spark.sql.Column,
+  private def cellScores(v: org.apache.spark.sql.Column,
       cents: Seq[Seq[Float]]): org.apache.spark.sql.Column = {
     val centArr = typedLit(cents)
     transform(sequence(lit(1), lit(cents.size)), i => struct(
-      graft.functions.CosineSimilarity.cosineSim(spark, v, element_at(centArr, i)).as("c"),
+      graft.functions.CosineSimilarity.cosineSim(v, element_at(centArr, i)).as("c"),
       (i - 1).as("i")))
   }
 
   /** Map-side cell assignment under the ANN path's tie rule (cosine
     * desc, ties to the higher centroid id) — the centroids ride the plan
     * as a literal, so this is a pure per-row expression. */
-  def cellOf(spark: SparkSession, v: org.apache.spark.sql.Column,
+  def cellOf(v: org.apache.spark.sql.Column,
       cents: Seq[Seq[Float]]): org.apache.spark.sql.Column =
-    array_max(cellScores(spark, v, cents)).getField("i")
+    array_max(cellScores(v, cents)).getField("i")
 
   /** The probe's `nprobe` nearest cells (same tie rule) — map-side, the
     * IVF query's cell short-list. */
-  def topCellsOf(spark: SparkSession, v: org.apache.spark.sql.Column,
+  def topCellsOf(v: org.apache.spark.sql.Column,
       cents: Seq[Seq[Float]], nprobe: Int): org.apache.spark.sql.Column =
-    transform(slice(reverse(array_sort(cellScores(spark, v, cents))), 1, nprobe),
+    transform(slice(reverse(array_sort(cellScores(v, cents))), 1, nprobe),
       s => s.getField("i"))
-
-  /** Train a quantizer with [[kmeansTrain]] and persist it — the full
-    * production flow: train once, [[loadCentroids]] + annIvfPersisted
-    * per query. Returns the trained centroids. */
-  def trainAndWrite(emb: DataFrame, path: String, k: Int, iters: Int,
-      id: String = "vec_id", vec: String = "embedding"): Seq[Seq[Float]] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cents = kmeansTrain(emb, k, iters, id, vec)
-    writeCentroids(
-      cents.zipWithIndex.map { case (cv, i) => (i, cv) }
-        .toDF("centroid_id", "embedding")
-        .select(col("centroid_id"), col("embedding").cast("array<float>")),
-      path)
-    cents
-  }
 
   /** Persist `centroids` (centroid_id, embedding) at `path` — one
     * clusteredWrite, single file (the table is K rows). */
@@ -135,14 +118,12 @@ object IvfIndex {
     * FROZEN quantizer — the FAISS add-after-train contract's `train+add`
     * half. Map-side cell assignment; one range shuffle on `cell`. */
   def buildCorpus(emb: DataFrame, path: String, cents: Seq[Seq[Float]],
-      files: Int = 4, id: String = "vec_id", vec: String = "embedding"): Unit = {
-    val spark = emb.sparkSession
+      files: Int = 4, id: String = "vec_id", vec: String = "embedding"): Unit =
     GenTable.build(
       graft.sources.Tables.spread(emb)
         .select(col(id).as("vec_id"), col(vec).as("embedding"))
-        .withColumn("cell", cellOf(spark, col("embedding"), cents)),
+        .withColumn("cell", cellOf(col("embedding"), cents)),
       path, corpusSpread(files))
-  }
 
   /** One ingest batch against the persisted corpus: ANN-probe the
     * PRE-batch state for each batch vector's top-`k` cosine neighbors
@@ -189,8 +170,8 @@ object IvfIndex {
     // upstream batch plan.
     val assigned = batch
       .select(col(id).as("vec_id"), col(vec).as("embedding"))
-      .withColumn("cell", cellOf(spark, col("embedding"), cents))
-      .withColumn("pcells", topCellsOf(spark, col("embedding"), cents, nprobe))
+      .withColumn("cell", cellOf(col("embedding"), cents))
+      .withColumn("pcells", topCellsOf(col("embedding"), cents, nprobe))
       .persist()
     try {
       // bounded collect: the DISTINCT union of probed cells, ≤ K ints
@@ -205,8 +186,8 @@ object IvfIndex {
       val cand = corpus.crossJoin(broadcast(probes))
         .where(array_contains(col("pcells"), col("cell")) &&
           col("vec_id") =!= col("probe_id"))
-        .withColumn("cos", graft.functions.CosineSimilarity.cosineSim(
-          spark, col("embedding"), col("probe")))
+        .withColumn("cos",
+          graft.functions.CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       val w = Window.partitionBy(col("probe_id"))
         .orderBy(col("cos").desc, col("vec_id"))
       val ann = cand.withColumn("rn", row_number().over(w)).where(col("rn") <= k)

@@ -131,20 +131,16 @@ object Layout {
 
   /** Repair a half-committed [[swapInto]] before compacting again:
     *  - `target` missing but `target.old` present (crash between the two
-    *    renames): restore the original — the compaction simply re-runs;
+    *    renames): restore the original ([[healRestore]]) — the
+    *    compaction simply re-runs;
     *  - stale `staged`/`target.old` next to an intact `target`: drop
     *    them (dead staging from an interrupted run).
     * Idempotent; call with the staged path a new compaction will use. */
   private def healSwap(spark: SparkSession, staged: String, target: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
+    healRestore(spark, target)
     val (cur, stg, old) = (new HPath(target), new HPath(staged),
       new HPath(s"$target.old"))
-    val fs = cur.getFileSystem(conf)
-    if (!fs.exists(cur) && fs.exists(old)) {
-      if (!fs.rename(old, cur))
-        throw new IllegalStateException(
-          s"healSwap: cannot restore $target from $target.old")
-    }
+    val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(cur)) {
       if (fs.exists(stg)) { fs.delete(stg, true); () }
       if (fs.exists(old)) { fs.delete(old, true); () }

@@ -77,8 +77,7 @@ object PqIndex {
       cellCents: Option[Seq[Seq[Float]]] = None): DataFrame =
     vectors.select(col(id).as("vec_id") +:
       ((0 until M).map(m => codeOf(col(vec), base, m).as(s"c$m")) ++
-        cellCents.map(c => IvfIndex.cellOf(
-          vectors.sparkSession, col(vec), c).as("cell")).toSeq): _*)
+        cellCents.map(c => IvfIndex.cellOf(col(vec), c).as("cell")).toSeq): _*)
 
   /** How a rewrite of the code table spreads: tables carrying a `cell`
     * column are cell-CLUSTERED within each generation (the IvfIndex
@@ -177,14 +176,14 @@ object PqIndex {
       .select(col(id).as("vec_id") +: col(vec).as("embedding") +:
         ((0 until M).map(m => codeOf(col(vec), base, m).as(s"c$m")) ++
           prune.map { case (cents, _) =>
-            IvfIndex.cellOf(spark, col(vec), cents).as("cell")
+            IvfIndex.cellOf(col(vec), cents).as("cell")
           }.toSeq): _*)
       .persist()
     try {
       val probes = coded.select(col("vec_id").as("probe_id") +:
         col("embedding").as("probe") +:
         prune.map { case (cents, np) =>
-          IvfIndex.topCellsOf(spark, col("embedding"), cents, np).as("pcells")
+          IvfIndex.topCellsOf(col("embedding"), cents, np).as("pcells")
         }.toSeq: _*)
       val corpusRaw = GenTable.visible(spark, path, batchId.map(GenTable.batchGen))
       prune.foreach { _ =>

@@ -18,10 +18,6 @@ object Sampling {
     (conv(substring(md5(id.cast("string")), 1, 13), 16, 10).cast("double")
       / math.pow(16, 13))
 
-  /** Keep ~`fraction` of rows, deterministically by id. */
-  def deterministicSample(df: DataFrame, id: Column, fraction: Double): DataFrame =
-    df.where(hashFraction(id) < fraction)
-
   /** Stratified (per-class) sampling: keep ~`fractions(class)` of each
     * class's rows (1.0 for unlisted classes). One map-side pass — the
     * class column never shuffles. */

@@ -35,16 +35,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TombstoneLog {
 
-  /** Runtime-conf key bounding the tombstone set a probe/compaction may
-    * BROADCAST into its anti/semi joins, in bytes of on-disk log parquet
-    * (the same currency as Spark's own autoBroadcastJoinThreshold, and
-    * the same 10 MB default). The family contract assumes takedown
-    * volume ≪ compaction cadence; nothing enforces it, so above the
-    * bound the joins DEGRADE to a shuffle hash join instead of shipping
-    * an unbounded hash relation to every executor. */
-  val BroadcastMaxBytesKey = "spark.graft.tombstones.broadcastMaxBytes"
-  val DefaultBroadcastMaxBytes: Long = 10L << 20
-
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, HPath) = {
     val p = new HPath(dir)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
@@ -65,18 +55,18 @@ object TombstoneLog {
   }
 
   /** Attach the join-strategy hint the log's SIZE justifies: broadcast
-    * while the on-disk log is within the configured budget (the
-    * overwhelmingly common case), shuffle-hash once it isn't. The hint
-    * rides the frame, so every downstream anti/semi join — single-key or
-    * renamed pair-key — inherits the bounded posture without each call
-    * site re-deciding. */
-  private def hinted(spark: SparkSession, df: DataFrame, bytes: Long): DataFrame = {
-    val cap = Caches.nonNegativeConf(spark, BroadcastMaxBytesKey,
-      "bytes of on-disk log; a larger log shuffles")
-      .getOrElse(DefaultBroadcastMaxBytes)
-    if (bytes <= cap) org.apache.spark.sql.functions.broadcast(df)
+    * while the on-disk log fits Spark's `autoBroadcastJoinThreshold`
+    * (10 MB by default; `-1` never broadcasts), shuffle-hash once it
+    * doesn't. The family contract assumes takedown volume ≪ compaction
+    * cadence; nothing enforces it, so above the budget the joins DEGRADE
+    * to a shuffle hash join instead of shipping an unbounded hash
+    * relation to every executor. The hint rides the frame, so every
+    * downstream anti/semi join — single-key or renamed pair-key —
+    * inherits the bounded posture without each call site re-deciding. */
+  private def hinted(spark: SparkSession, df: DataFrame, bytes: Long): DataFrame =
+    if (bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold)
+      org.apache.spark.sql.functions.broadcast(df)
     else df.hint("shuffle_hash")
-  }
 
   /** The whole log directory's ids as a size-hinted one-column frame
     * ([[hinted]]), or None when no log exists — the PROBE-side read

@@ -181,7 +181,7 @@ object AggQueries {
     Tables.events(spark, dir)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("event_id")).as("exact_distinct"),
-        round(graft.functions.KMVSketch.kmvDistinct(spark,
+        round(graft.functions.KMVSketch.kmvDistinct(
           col("event_id").cast("string"), KMV_K), 4).as("kmv_estimate"))
       .orderBy(col("event_type"))
   }
@@ -228,7 +228,7 @@ object AggQueries {
       16 * math.ceil(math.sqrt(events.count().toDouble)).toInt)
     events
       .groupBy(col("event_type"))
-      .agg(graft.functions.SpaceSavingTopK.topK(spark,
+      .agg(graft.functions.SpaceSavingTopK.topK(
         col("user_id").cast("string"), cap, SS_K).as("top"))
       .select(col("event_type"), explode(col("top")).as("e"))
       .select(col("event_type"), col("e.key").as("user_id"), col("e.n").as("n"))
@@ -363,7 +363,7 @@ object AggQueries {
       .where(col("value").isNotNull)
       .select(col("event_type"), col("value"))
     val sk = ev.groupBy(col("event_type"))
-      .agg(KllQuantiles.quantiles(spark, col("value"), 256, qs).as("est"))
+      .agg(KllQuantiles.quantiles(col("value"), 256, qs).as("est"))
     val aggCols = count(lit(1)).as("n") +:
       qs.indices.flatMap { i =>
         Seq(

@@ -24,7 +24,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       .orderBy(col("cos").desc, col("vec_id"))
     emb.crossJoin(broadcast(probes))
       .where(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+      .withColumn("cos", CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 3)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
@@ -68,7 +68,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       .orderBy(col("cos").desc, col("vec_id"))
     emb.join(broadcast(probes), Seq("bucket"))
       .where(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+      .withColumn("cos", CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 3)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
@@ -103,7 +103,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
     TextOps.bucketPairs(emb, Seq("bucket"), "vec_id",
         Some(TextOps.DefaultMaxBucket), "ann_hot_buckets", "embedding")
       .select(col("vec_id_a").as("vec_a"), col("vec_id_b").as("vec_b"),
-        round(CosineSimilarity.cosineSim(spark, col("embedding_a"),
+        round(CosineSimilarity.cosineSim(col("embedding_a"),
           col("embedding_b")), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_a"), col("vec_b"))
       .limit(20)
@@ -207,7 +207,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
         .select(col("embedding")).collect().map(_.getSeq[Float](0).toSeq).toSeq
       // cell assignment + probe short-list come from the PRODUCTION
       // index helpers (one source of truth for the tie rule)
-      def cellOf(v: Column): Column = IvfIndex.cellOf(spark, v, cents)
+      def cellOf(v: Column): Column = IvfIndex.cellOf(v, cents)
       val path = s"$tmp/corpus"
       // build: base generation, cell-clustered
       Layout.clusteredWrite(
@@ -223,12 +223,12 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       val corpus = spark.read.parquet(path)
       val probes = corpus.where(col("vec_id") >= K && col("vec_id") < K + 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"),
-          IvfIndex.topCellsOf(spark, col("embedding"), cents, NPROBE).as("pcells"))
+          IvfIndex.topCellsOf(col("embedding"), cents, NPROBE).as("pcells"))
       val cand = corpus.crossJoin(broadcast(probes))
         .where(array_contains(col("pcells"), col("cell")) &&
           col("vec_id") =!= col("probe_id"))
         .withColumn("cos",
-          CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+          CosineSimilarity.cosineSim(col("embedding"), col("probe")))
         .select(col("probe_id"), col("vec_id"), col("cos"))
       val out = topNeighbors(cand, 3)
         .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
@@ -393,12 +393,12 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       val corpus = spark.read.parquet(path)
       val probes = corpus.where(col("vec_id") >= K && col("vec_id") < K + 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"),
-          IvfIndex.topCellsOf(spark, col("embedding"), cents, NPROBE).as("pcells"))
+          IvfIndex.topCellsOf(col("embedding"), cents, NPROBE).as("pcells"))
       val cand = corpus.crossJoin(broadcast(probes))
         .where(array_contains(col("pcells"), col("cell")) &&
           col("vec_id") =!= col("probe_id"))
         .withColumn("cos",
-          CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+          CosineSimilarity.cosineSim(col("embedding"), col("probe")))
         .select(col("probe_id"), col("vec_id"), col("cos"))
       val out = topNeighbors(cand, 3)
         .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
@@ -574,7 +574,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       val bfCand = emb.crossJoin(broadcast(probes))
         .where(col("vec_id") =!= col("probe_id"))
         .withColumn("cos",
-          CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+          CosineSimilarity.cosineSim(col("embedding"), col("probe")))
         .select(col("probe_id"), col("vec_id"), col("cos"))
       val bf = topNeighbors(bfCand, 3).select(col("probe_id"), col("vec_id"))
       val out = ivf.join(bf, Seq("probe_id", "vec_id"))
@@ -640,7 +640,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
     val emb = Tables.embeddings(spark, dir)
     val cents = IvfIndex.kmeansTrain(emb, k = 8, iters = 2)
     val counts = Tables.spread(emb)
-      .withColumn("c_id", IvfIndex.cellOf(spark, col("embedding"), cents))
+      .withColumn("c_id", IvfIndex.cellOf(col("embedding"), cents))
       .groupBy(col("c_id")).agg(count(lit(1)).as("n_members"))
     val norms = cents.zipWithIndex
       .map { case (cv, i) => (i, math.sqrt(cv.map(x => x.toDouble * x).sum)) }
@@ -869,7 +869,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       (0 until PqIndex.M).map(m =>
         PqIndex.codeOf(col("embedding"), base, m).as(s"c$m")) ++
       (if (withCell)
-        Seq(graft.ops.IvfIndex.cellOf(spark, col("embedding"), base).as("cell"))
+        Seq(graft.ops.IvfIndex.cellOf(col("embedding"), base).as("cell"))
       else Nil)
     Tables.spread(Tables.embeddings(spark, dir)).select(cols: _*)
       .withColumn("recon", PqIndex.reconOf(m => col(s"c$m"), base))
@@ -952,7 +952,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
     val probes = Tables.embeddings(spark, dir)
       .where(col("vec_id") >= K && col("vec_id") < K + 5)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe"),
-        graft.ops.IvfIndex.topCellsOf(spark, col("embedding"), base, NPROBE)
+        graft.ops.IvfIndex.topCellsOf(col("embedding"), base, NPROBE)
           .as("pcells"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("adc"), col("vec_id"))
@@ -1305,7 +1305,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
     val truth = emb.crossJoin(broadcast(probes))
       .where(col("vec_id") =!= col("src"))
       .select(col("src"), col("vec_id").as("dst"),
-        CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")).as("cos"))
+        CosineSimilarity.cosineSim(col("embedding"), col("probe")).as("cos"))
       .withColumn("rn", row_number().over(wTrue)).where(col("rn") <= k)
       .select(col("src"), col("dst"), lit(true).as("is_true"))
     val wOut = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
@@ -1410,7 +1410,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
     emb.crossJoin(broadcast(anchors))
       .where(col("label") =!= col("anchor_label"))
       .withColumn("cos",
-        CosineSimilarity.cosineSim(spark, col("embedding"), col("anchor")))
+        CosineSimilarity.cosineSim(col("embedding"), col("anchor")))
       .where(col("cos") < 0.95)
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 3)
@@ -1463,12 +1463,12 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       .map(_.getSeq[Float](0).toSeq).toSeq
     val emb = Tables.spread(Tables.embeddings(spark, dir))
       .withColumn("cell",
-        graft.ops.IvfIndex.cellOf(spark, col("embedding"), cents))
+        graft.ops.IvfIndex.cellOf(col("embedding"), cents))
     val probes = Tables.embeddings(spark, dir)
       .where(col("vec_id") >= K && col("vec_id") < K + 20)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe"),
         col("label").as("probe_label"),
-        graft.ops.IvfIndex.topCellsOf(spark, col("embedding"), cents, NPROBE)
+        graft.ops.IvfIndex.topCellsOf(col("embedding"), cents, NPROBE)
           .as("pcells"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -1477,7 +1477,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
         col("vec_id") =!= col("probe_id") &&
         col("label") === col("probe_label")) // the pre-filter predicate
       .withColumn("cos",
-        CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+        CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       .withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
       .select(col("probe_id"), col("probe_label").as("label"), col("rn"),
         col("vec_id").as("neighbor_id"), round(col("cos"), 4).as("cos_sim"))
@@ -1551,7 +1551,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       .join(emb.select(col("vec_id").as("v"), col("embedding").as("ve")), "v")
       .join(probes, "probe_id")
       .select(col("probe_id"), col("v"),
-        CosineSimilarity.cosineSim(spark, col("ve"), col("probe")).as("cos"))
+        CosineSimilarity.cosineSim(col("ve"), col("probe")).as("cos"))
     val wBeam = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("v"))
     var beam = settle(scored(
@@ -1569,7 +1569,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
     val truth = emb.crossJoin(broadcast(probes))
       .where(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("v"),
-        CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")).as("cos"))
+        CosineSimilarity.cosineSim(col("embedding"), col("probe")).as("cos"))
       .withColumn("rn", row_number().over(wBeam.orderBy(col("cos").desc, col("v"))))
       .where(col("rn") <= k)
       .select(col("probe_id"), col("v"), lit(true).as("is_true"))
@@ -1655,18 +1655,18 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       .orderBy(col("cos").desc, col("vec_id"))
     val short = emb.crossJoin(broadcast(probes))
       .where(col("vec_id") =!= col("probe_id"))
-      .withColumn("pcos", CosineSimilarity.cosineSim(spark,
+      .withColumn("pcos", CosineSimilarity.cosineSim(
         slice(col("embedding"), 1, PDIM), slice(col("probe"), 1, PDIM)))
       .withColumn("srn", row_number().over(wPref))
       .where(col("srn") <= SHORTLIST)
     val reranked = short
       .withColumn("cos",
-        CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+        CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       .withColumn("rn", row_number().over(wFull)).where(col("rn") <= K)
     val truth = emb.crossJoin(broadcast(probes))
       .where(col("vec_id") =!= col("probe_id"))
       .withColumn("cos",
-        CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+        CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       .withColumn("rn", row_number().over(wFull)).where(col("rn") <= K)
       .select(col("probe_id"), col("vec_id"), lit(true).as("is_true"))
     reranked.join(truth, Seq("probe_id", "vec_id"), "left")
@@ -1706,11 +1706,11 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
       graft.ops.Layout.clusteredWrite(
         Tables.spread(emb)
           .select(col("vec_id"), slice(col("embedding"), 1, PDIM).as("pemb"))
-          .withColumn("cell", graft.ops.IvfIndex.cellOf(spark, col("pemb"), pcents)),
+          .withColumn("cell", graft.ops.IvfIndex.cellOf(col("pemb"), pcents)),
         path, files = 4, col("cell"))
       val probes = emb.where(col("vec_id") < 20)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"),
-          graft.ops.IvfIndex.topCellsOf(spark,
+          graft.ops.IvfIndex.topCellsOf(
             slice(col("embedding"), 1, PDIM), pcents, NPROBE).as("pcells"))
         .persist()
       try {
@@ -1725,8 +1725,8 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
         val short = pref.crossJoin(broadcast(probes))
           .where(array_contains(col("pcells"), col("cell")) &&
             col("vec_id") =!= col("probe_id"))
-          .withColumn("pcos", CosineSimilarity.cosineSim(spark,
-            col("pemb"), slice(col("probe"), 1, PDIM)))
+          .withColumn("pcos",
+            CosineSimilarity.cosineSim(col("pemb"), slice(col("probe"), 1, PDIM)))
           .withColumn("srn", row_number().over(wPref))
           .where(col("srn") <= SHORTLIST)
           .select(col("probe_id"), col("vec_id"), col("probe"))
@@ -1734,13 +1734,13 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
           .orderBy(col("cos").desc, col("vec_id"))
         val reranked = emb.join(broadcast(short), "vec_id")
           .withColumn("cos",
-            CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+            CosineSimilarity.cosineSim(col("embedding"), col("probe")))
           .withColumn("rn", row_number().over(wFull)).where(col("rn") <= K)
         val truth = emb.crossJoin(
             broadcast(probes.select(col("probe_id"), col("probe"))))
           .where(col("vec_id") =!= col("probe_id"))
           .withColumn("cos",
-            CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+            CosineSimilarity.cosineSim(col("embedding"), col("probe")))
           .withColumn("rn", row_number().over(wFull)).where(col("rn") <= K)
           .select(col("probe_id"), col("vec_id"), lit(true).as("is_true"))
         val out = reranked.join(truth, Seq("probe_id", "vec_id"), "left")

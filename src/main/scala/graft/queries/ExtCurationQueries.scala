@@ -2090,8 +2090,8 @@ private[queries] trait ExtCurationQueries extends ExtQueryHelpers {
       .select(col("doc_id"), aug.as("aug"))
       .select(col("doc_id"),
         length(col("aug")).as("raw_len"),
-        length(graft.functions.NfcNormalize.nfc(spark, col("aug"))).as("norm_len"),
-        md5(graft.functions.NfcNormalize.nfc(spark, col("aug")).cast("binary"))
+        length(graft.functions.NfcNormalize.nfc(col("aug"))).as("norm_len"),
+        md5(graft.functions.NfcNormalize.nfc(col("aug")).cast("binary"))
           .as("norm_md5"))
       .orderBy(col("doc_id"))
   }

@@ -51,7 +51,7 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
     val withSh = Tables.spread(Tables.documents(spark, dir)
       .select(col("doc_id"), TextOps.shingleSet(col("text"), SHINGLE_N).as("sh")))
       .where(size(col("sh")) > 0) // oracle's sig CTE omits shingle-less docs
-    val sig = MinHashSignature.minhashSig(spark, col("sh"), K)
+    val sig = MinHashSignature.minhashSig(col("sh"), K)
     withSh.select(col("doc_id") +:
         (0 until K).map(i => element_at(sig, i + 1).as(s"m$i")): _*)
       .orderBy(col("doc_id"))
@@ -615,7 +615,7 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
     val probe = Tables.spread(docs)
       .select(col("doc_id"), col("lang"), col("n_chars"), key.as("k"))
     val bloom = corpusKeys.stat.bloomFilter("k", 100000L, 0.03)
-    val might = BloomMightContain.mightContain(spark, bloom, col("k"))
+    val might = BloomMightContain.mightContain(bloom, col("k"))
     probe.where(!might)
       .unionByName(probe.where(might).join(corpusKeys, Seq("k"), "left_anti"))
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -733,11 +733,11 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
     // nearest centroid, ties to the higher id — exactly q54's rule
     def cellOf(v: Column): Column =
       array_max(transform(sequence(lit(1), lit(K)), i => struct(
-        CosineSimilarity.cosineSim(spark, v, element_at(centArr, i)).as("c"),
+        CosineSimilarity.cosineSim(v, element_at(centArr, i)).as("c"),
         (i - 1).as("i")))).getField("i")
     val asg = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), cellOf(col("embedding")).as("cell"))
-    val cos = CosineSimilarity.cosineSim(spark, col("embedding_a"), col("embedding_b"))
+    val cos = CosineSimilarity.cosineSim(col("embedding_a"), col("embedding_b"))
     val pairs = TextOps.bucketPairs(asg, Seq("cell"), "vec_id",
         Some(4 * TextOps.DefaultMaxBucket), "semdedup_hot_cells", "embedding")
       .where(cos >= 0.35)
@@ -791,7 +791,7 @@ private[queries] trait ExtDedupQueries extends ExtQueryHelpers {
     val docs = Tables.spread(Tables.documents(spark, dir))
       .orderBy(md5(col("doc_id").cast("string").cast("binary")), col("doc_id"))
       .limit(Q84_SAMPLE)
-    val sig = minhashSigTable(spark,
+    val sig = minhashSigTable(
       docs.select(col("doc_id"), TextOps.shingleSet(col("text"), SHINGLE_N).as("sh")))
       .persist()
     try {

@@ -290,7 +290,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
       .orderBy(col("cos").desc, col("doc_id"))
     corpus.crossJoin(broadcast(probes))
       .where(col("doc_id") =!= col("probe_id"))
-      .withColumn("cos", CosineSimilarity.cosineSim(spark, col("features"), col("probe")))
+      .withColumn("cos", CosineSimilarity.cosineSim(col("features"), col("probe")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 3)
       .select(col("probe_id"), col("rn"), col("doc_id").as("neighbor_id"),
@@ -673,7 +673,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
       .orderBy(col("cos").desc, col("doc_id"))
     corpus.crossJoin(broadcast(probes))
       .where(col("doc_id") =!= col("probe_id"))
-      .withColumn("cos", CosineSimilarity.cosineSim(spark, col("features"), col("probe")))
+      .withColumn("cos", CosineSimilarity.cosineSim(col("features"), col("probe")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 3)
       .select(col("probe_id"), col("rn"), col("doc_id").as("neighbor_id"),

@@ -57,9 +57,8 @@ private[queries] trait ExtQueryHelpers {
   /** (doc_id, sh, m0..m(K-1)) over a (doc_id, sh shingle set) frame: the
     * K minima of the fused one-pass MinHashSignature expression, read
     * from the set column. */
-  private[queries] def minhashSigTable(spark: SparkSession,
-      shingled: DataFrame): DataFrame = {
-    val sigArr = MinHashSignature.minhashSig(spark, col("sh"), K)
+  private[queries] def minhashSigTable(shingled: DataFrame): DataFrame = {
+    val sigArr = MinHashSignature.minhashSig(col("sh"), K)
     shingled.select(col("doc_id") +: col("sh") +:
       (0 until K).map(i => element_at(sigArr, i + 1).as(s"m$i")): _*)
   }
@@ -76,7 +75,7 @@ private[queries] trait ExtQueryHelpers {
     // the signature table is ~1% the corpus size. At 100 TB the same op
     // writes the signature table to storage once and joins against it
     // (see TextOps scaladoc); in-memory cache is the single-job form.
-    val sig = minhashSigTable(spark, Tables.spread(Tables.documents(spark, dir)
+    val sig = minhashSigTable(Tables.spread(Tables.documents(spark, dir)
         .select(col("doc_id"), TextOps.shingleSet(col("text"), SHINGLE_N).as("sh"))))
       .persist()
     try {
@@ -180,16 +179,16 @@ private[queries] trait ExtQueryHelpers {
     // helpers (ops.IvfIndex) — one source of truth for the tie rule
     // (cosine desc, ties to the higher centroid id)
     val emb = Tables.spread(Tables.embeddings(spark, dir))
-      .withColumn("cell", graft.ops.IvfIndex.cellOf(spark, col("embedding"), cents))
+      .withColumn("cell", graft.ops.IvfIndex.cellOf(col("embedding"), cents))
     val probes = Tables.embeddings(spark, dir)
       .where(col("vec_id") >= K && col("vec_id") < K + 5)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe"),
-        graft.ops.IvfIndex.topCellsOf(spark, col("embedding"), cents, NPROBE)
+        graft.ops.IvfIndex.topCellsOf(col("embedding"), cents, NPROBE)
           .as("pcells"))
     emb.crossJoin(broadcast(probes))
       .where(array_contains(col("pcells"), col("cell")) &&
         col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+      .withColumn("cos", CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       .select(col("probe_id"), col("vec_id"), col("cos"))
   }
 

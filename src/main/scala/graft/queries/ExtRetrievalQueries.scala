@@ -315,7 +315,7 @@ private[queries] trait ExtRetrievalQueries extends ExtQueryHelpers {
       .where(col("vec_id") >= 16 && col("vec_id") < 21)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
       .withColumn("pcells",
-        IvfIndex.topCellsOf(spark, col("probe"), cents, NProbe))
+        IvfIndex.topCellsOf(col("probe"), cents, NProbe))
     val touched = probes.select(explode(col("pcells")).as("c"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val wd = Window.partitionBy(col("probe_id"))
@@ -326,7 +326,7 @@ private[queries] trait ExtRetrievalQueries extends ExtQueryHelpers {
       .where(array_contains(col("pcells"), col("cell")) &&
         col("vec_id") =!= col("probe_id"))
       .withColumn("cos",
-        CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")))
+        CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       .withColumn("drn", row_number().over(wd))
       .where(col("drn") <= HybridSideK)
       .select(col("probe_id").as("query_id"), col("vec_id").as("doc_id"),

@@ -339,7 +339,7 @@ object Queries {
       .select(col("embedding").as("probe"))
     emb.crossJoin(broadcast(probe))
       .select(col("vec_id"),
-        round(CosineSimilarity.cosineSim(spark, col("embedding"), col("probe")), 4).as("cos_sim"))
+        round(CosineSimilarity.cosineSim(col("embedding"), col("probe")), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(20)
   }

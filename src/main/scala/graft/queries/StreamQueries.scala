@@ -92,28 +92,28 @@ object StreamQueries {
     val ckpt = newCheckpointDir()
     // The stream captures its state-partition count from the session conf
     // when its first micro-batch is constructed (on the stream thread), so
-    // the setting must hold across the whole synchronous drive loop; it is
-    // restored before returning. Queries run sequentially through
-    // Verify/Bench, so the mutation window cannot leak into another plan.
-    val spKey = "spark.sql.shuffle.partitions"
-    val oldSp = spark.conf.get(spKey)
-    // The oracles run on the PRODUCTION state store (RocksDB, off-heap,
-    // the backend a 100 TB stream's state actually lives in), not the
-    // default in-memory HDFS-backed provider — state encoding and
-    // store semantics are part of what the hash-compare certifies.
-    // Scoped + restored exactly like the partition count.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProvider = spark.conf.getOption(providerKey)
+    // these settings must hold across the whole synchronous drive loop;
+    // each is restored (or unset, when it was not explicitly set: a conf
+    // entry's getOption reports its default) before returning. Queries run
+    // sequentially through Verify/Bench, so the mutation window cannot
+    // leak into another plan.
+    //  - The oracles run on the PRODUCTION state store (RocksDB, off-heap,
+    //    the backend a 100 TB stream's state actually lives in), not the
+    //    default in-memory HDFS-backed provider — state encoding and
+    //    store semantics are part of what the hash-compare certifies.
+    //  - Changelog checkpointing: commit appends a per-batch changelog
+    //    instead of uploading a full RocksDB snapshot every micro-batch —
+    //    the production posture for frequent small commits, and it halves
+    //    the fixed per-batch harness cost here.
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> STATE_PARTITIONS,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    val explicit = spark.conf.getAll
+    val saved = scoped.map { case (k, _) => k -> explicit.get(k) }
     try {
-      spark.conf.set(spKey, STATE_PARTITIONS)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Changelog checkpointing: commit appends a per-batch changelog
-      // instead of uploading a full RocksDB snapshot every micro-batch —
-      // the production posture for frequent small commits, and it halves
-      // the fixed per-batch harness cost here.
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      scoped.foreach { case (k, v) => spark.conf.set(k, v) }
       val q = df.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt.getAbsolutePath)
         .outputMode("append").start()
@@ -122,10 +122,9 @@ object StreamQueries {
       spark.createDataFrame(
         java.util.Arrays.asList(sink.collect(): _*), sink.schema)
     } finally {
-      spark.conf.set(spKey, oldSp)
-      oldProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
       // Drop in the OUTER finally so a failed drive() also releases the
       // sink's driver-resident rows — otherwise each failed best-of-N

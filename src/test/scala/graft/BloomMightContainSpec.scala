@@ -16,7 +16,7 @@ class BloomMightContainSpec extends SparkSpecBase {
     val keys = (0 until 2000).map(i => s"key-$i")
     val bloom = bloomOf(keys)
     val hits = keys.toDF("k")
-      .where(BloomMightContain.mightContain(spark, bloom, $"k"))
+      .where(BloomMightContain.mightContain(bloom, $"k"))
       .count()
     assert(hits === 2000L, "a Bloom filter must never miss an inserted key")
   }
@@ -24,11 +24,11 @@ class BloomMightContainSpec extends SparkSpecBase {
   test("false-positive rate near the configured fpp; nulls stay null") {
     val bloom = bloomOf((0 until 2000).map(i => s"key-$i"))
     val fresh = (0 until 2000).map(i => s"other-$i").toDF("k")
-    val fp = fresh.where(BloomMightContain.mightContain(spark, bloom, $"k")).count()
+    val fp = fresh.where(BloomMightContain.mightContain(bloom, $"k")).count()
     assert(fp < 2000 * 0.05, s"fp rate ${fp / 2000.0} far above configured 1%")
 
     val withNull = Seq(Some("key-1"), None).toDF("k")
-      .select(BloomMightContain.mightContain(spark, bloom, $"k").as("m"))
+      .select(BloomMightContain.mightContain(bloom, $"k").as("m"))
       .collect()
     assert(withNull(0).getBoolean(0) === true)
     assert(withNull(1).isNullAt(0))
@@ -41,7 +41,7 @@ class BloomMightContainSpec extends SparkSpecBase {
     val bloom = bloomOf(corpus)
     val corpusDf = corpus.toDF("k")
     val feedDf = feed.toDF("k")
-    val might = BloomMightContain.mightContain(spark, bloom, $"k")
+    val might = BloomMightContain.mightContain(bloom, $"k")
     val viaBloom = feedDf.where(!might)
       .unionByName(feedDf.where(might).join(corpusDf, Seq("k"), "left_anti"))
     val plain = feedDf.join(corpusDf, Seq("k"), "left_anti")
@@ -54,20 +54,17 @@ class BloomMightContainSpec extends SparkSpecBase {
     "keeps null semantics, and survives release") {
     val keys = (0 until 2000).map(i => s"key-$i")
     val bloom = bloomOf(keys)
-    val handle = BloomMightContainBcast.broadcastFilter(spark, bloom)
+    val handle = spark.sparkContext.broadcast(bloom)
     try {
       val probes = ((0 until 2500).map(i => Some(s"key-$i")) :+ None).toDF("k")
       val inline = probes
-        .select($"k", BloomMightContain.mightContain(spark, bloom, $"k").as("m"))
+        .select($"k", BloomMightContain.mightContain(bloom, $"k").as("m"))
       val bcast = probes
-        .select($"k", BloomMightContainBcast.mightContain(spark, handle, $"k").as("m"))
+        .select($"k", BloomMightContainBcast.mightContain(handle, $"k").as("m"))
       assert(bcast.orderBy("k").collect().toSeq ===
         inline.orderBy("k").collect().toSeq)
       // no false negatives through the broadcast path either
       assert(bcast.where($"m" && $"k".isNotNull).count() >= 2000L)
-    } finally BloomMightContainBcast.release(spark, handle)
-    // retired: the per-broadcast temp function is deregistered
-    assert(!spark.sessionState.functionRegistry.listFunction()
-      .exists(_.funcName.startsWith(s"bloom_might_contain_bcast_${handle.id}")))
+    } finally handle.unpersist()
   }
 }

@@ -30,6 +30,13 @@ class CachesSpec extends SparkSpecBase {
       // 0 disables localization entirely — deliberate cluster-side path
       spark.conf.set(Caches.MaxRowsConf, "0")
       assert(Caches.localize(df(1), maxRows = 1000).isEmpty)
+      // a malformed or negative cap fails naming its key
+      Seq("10MB", "-1").foreach { v =>
+        spark.conf.set(Caches.MaxRowsConf, v)
+        val e = intercept[IllegalArgumentException](Caches.localize(df(1), maxRows = 1))
+        assert(e.getMessage.contains(Caches.MaxRowsConf) && e.getMessage.contains(v),
+          e.getMessage)
+      }
     } finally spark.conf.unset(Caches.MaxRowsConf)
     assert(Caches.localize(df(3), maxRows = 3).isDefined)
   }

@@ -254,7 +254,7 @@ class CorpusQualitySpec extends SparkSpecBase {
     val w = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
     val bf = emb.crossJoin(broadcast(probes))
       .where($"vec_id" =!= $"probe_id")
-      .withColumn("cos", CosineSimilarity.cosineSim(spark, $"embedding", $"probe"))
+      .withColumn("cos", CosineSimilarity.cosineSim($"embedding", $"probe"))
       .withColumn("rn", row_number().over(w)).where($"rn" <= 3)
       .select($"probe_id", $"vec_id").as[(Long, Long)].collect().toSet
     val ivf = run("q54_ann_ivf")

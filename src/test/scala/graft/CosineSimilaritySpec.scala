@@ -15,7 +15,7 @@ class CosineSimilaritySpec extends SparkSpecBase {
     val both = emb.crossJoin(broadcast(probe)).select(
       $"vec_id",
       VectorOps.cosine($"embedding", $"probe").as("hof"),
-      CosineSimilarity.cosineSim(spark, $"embedding", $"probe").as("native"))
+      CosineSimilarity.cosineSim($"embedding", $"probe").as("native"))
     // bit-identical, not approximately equal: same accumulation order
     assert(both.where($"hof" =!= $"native" ||
       ($"hof".isNull !== $"native".isNull)).isEmpty)

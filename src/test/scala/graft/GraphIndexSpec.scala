@@ -25,8 +25,8 @@ class GraphIndexSpec extends SparkSpecBase {
       .partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
     corpus.crossJoin(broadcast(probes))
       .where(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", graft.functions.CosineSimilarity.cosineSim(
-        spark, col("embedding"), col("probe")))
+      .withColumn("cos",
+        graft.functions.CosineSimilarity.cosineSim(col("embedding"), col("probe")))
       .withColumn("rn", row_number().over(w)).where(col("rn") <= k)
       .select(col("probe_id"), col("rn"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted

@@ -59,7 +59,7 @@ class IvfIndexSpec extends SparkSpecBase {
     assert(approx(cents(1), Seq(0.1f / 3, 0.95f, 0.05f)), s"got ${cents(1)}")
     // trained quantizer drops into the assignment expression unchanged
     val cells = vecs.withColumn("cell",
-      IvfIndex.cellOf(spark, col("embedding"), cents))
+      IvfIndex.cellOf(col("embedding"), cents))
       .select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
     assert(cells == Map(0L -> 0, 2L -> 0, 4L -> 0, 1L -> 1, 3L -> 1, 5L -> 1))
 
@@ -72,7 +72,7 @@ class IvfIndexSpec extends SparkSpecBase {
     assert(c2(1) == Seq(1.0f, 0.0f))
   }
 
-  test("trainAndWrite roundtrips: loadCentroids returns the trained " +
+  test("writeCentroids roundtrips: loadCentroids returns the trained " +
     "quantizer exactly") {
     import spark.implicits._
     val vecs = Seq(
@@ -80,7 +80,11 @@ class IvfIndexSpec extends SparkSpecBase {
       (2L, Seq(0.8f, 0.2f)), (3L, Seq(0.2f, 0.8f)))
       .toDF("vec_id", "embedding")
     val path = tmpDir("ivf_trained")
-    val trained = IvfIndex.trainAndWrite(vecs, path, k = 2, iters = 2)
+    // the production flow: train once, persist, read back per query
+    val trained = IvfIndex.kmeansTrain(vecs, k = 2, iters = 2)
+    IvfIndex.writeCentroids(
+      trained.zipWithIndex.map { case (cv, i) => (i, cv) }
+        .toDF("centroid_id", "embedding"), path)
     assert(IvfIndex.loadCentroids(spark, path) == trained)
   }
 

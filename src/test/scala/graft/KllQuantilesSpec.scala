@@ -11,7 +11,7 @@ class KllQuantilesSpec extends SparkSpecBase {
       partitions: Int): Seq[Double] = {
     import spark.implicits._
     values.toDF("v").repartition(partitions)
-      .agg(KllQuantiles.quantiles(spark, col("v"), capacity, qs).as("est"))
+      .agg(KllQuantiles.quantiles(col("v"), capacity, qs).as("est"))
       .collect().head.getSeq[Double](0)
   }
 
@@ -51,11 +51,11 @@ class KllQuantilesSpec extends SparkSpecBase {
   test("nulls are skipped, empty input yields NaN") {
     import spark.implicits._
     val est = Seq[Option[Double]](None, Some(3.0), None).toDF("v")
-      .agg(KllQuantiles.quantiles(spark, col("v"), 64, Seq(0.5)))
+      .agg(KllQuantiles.quantiles(col("v"), 64, Seq(0.5)))
       .collect().head.getSeq[Double](0)
     assert(est == Seq(3.0))
     val empty = Seq.empty[Double].toDF("v")
-      .agg(KllQuantiles.quantiles(spark, col("v"), 64, Seq(0.5)))
+      .agg(KllQuantiles.quantiles(col("v"), 64, Seq(0.5)))
       .collect().head.getSeq[Double](0)
     assert(empty.head.isNaN)
   }
@@ -118,7 +118,7 @@ class KllQuantilesSpec extends SparkSpecBase {
     val df = (1 to 1000).map(i => (i % 5, i.toDouble)).toDF("g", "v")
       .repartition(8)
       .groupBy(col("g"))
-      .agg(KllQuantiles.quantiles(spark, col("v"), 64, Seq(0.5)).as("est"))
+      .agg(KllQuantiles.quantiles(col("v"), 64, Seq(0.5)).as("est"))
     val plan = df.queryExecution.executedPlan.toString
     assert("ObjectHashAggregate".r.findAllIn(plan).length >= 2, plan)
     assert(df.collect().length == 5)

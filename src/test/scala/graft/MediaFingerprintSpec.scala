@@ -96,15 +96,15 @@ class MediaFingerprintSpec extends SparkSpecBase {
       (3L, "caf\u00e9 \u00c5")    // already composed
     ).toDF("id", "s")
     val out = df.select(col("id"),
-      graft.functions.NfcNormalize.nfc(spark, col("s")).as("n"),
-      length(graft.functions.NfcNormalize.nfc(spark, col("s"))).as("len"))
+      graft.functions.NfcNormalize.nfc(col("s")).as("n"),
+      length(graft.functions.NfcNormalize.nfc(col("s"))).as("len"))
       .as[(Long, String, Int)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(out(1L)._1 === out(3L)._1, "decomposed and precomposed must agree")
     assert(out(1L)._2 === 6, "composed length counts code points")
     assert(out(2L)._1 === "plain ascii")
     // null-safety through the expression
     val n = Seq[Option[String]](None).toDF("s")
-      .select(graft.functions.NfcNormalize.nfc(spark, col("s"))).collect()
+      .select(graft.functions.NfcNormalize.nfc(col("s"))).collect()
     assert(n.head.isNullAt(0))
   }
 }

@@ -276,8 +276,7 @@ class MultimodalSpec extends SparkSpecBase {
     // composes with the cosine expression downstream
     val df = feats.toDF()
     val sim = df.as("a").crossJoin(df.as("b"))
-      .select(graft.functions.CosineSimilarity.cosineSim(spark,
-        $"a.features", $"b.features").as("c"))
+      .select(graft.functions.CosineSimilarity.cosineSim($"a.features", $"b.features").as("c"))
     assert(sim.agg(max($"c")).head().getDouble(0) <= 1.0 + 1e-9)
   }
 

@@ -84,10 +84,10 @@ class PqIndexSpec extends SparkSpecBase {
     // reference: flat ADC over ONLY the candidates in each probe's
     // top-2 cells, recomputed independently from raw vectors
     val cells = baseCorpus.select(col("vec_id"),
-      IvfIndex.cellOf(spark, col("embedding"), base16).as("cell"))
+      IvfIndex.cellOf(col("embedding"), base16).as("cell"))
     val probes = b0.select(col("vec_id").as("probe_id"),
       col("embedding").as("probe"),
-      IvfIndex.topCellsOf(spark, col("embedding"), base16, 2).as("pcells"))
+      IvfIndex.topCellsOf(col("embedding"), base16, 2).as("pcells"))
     val expected = annOf(
       PqIndex.encode(baseCorpus, base16)
         .withColumn("recon", PqIndex.reconOf(m => col(s"c$m"), base16))

@@ -376,7 +376,7 @@ class PropertySpec extends SparkSpecBase {
       Gen.const("\u212b") /* ANGSTROM SIGN, NFC-composes to A-ring */)).map(_.mkString)
     def run(s: String): String =
       Seq(Tuple1(s)).toDF("s")
-        .select(NfcNormalize.nfc(spark, $"s")).as[String].head()
+        .select(NfcNormalize.nfc($"s")).as[String].head()
     check(Prop.forAll(unicodeGen) { s =>
       val once = run(s)
       once == java.text.Normalizer.normalize(

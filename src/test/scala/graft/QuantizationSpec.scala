@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.sources.Tables
@@ -11,12 +12,17 @@ import graft.sources.Tables
 class QuantizationSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** Reconstruct a float vector from [[VectorOps.quantizeInt8]] output. */
+  private def dequantizeInt8(q: Column): Column =
+    transform(q.getField("codes"),
+      c => (c.cast("double") * q.getField("scale")).cast("float"))
+
   test("per-component reconstruction error ≤ scale/2 over the full table") {
     val emb = Tables.embeddings(spark, sf0001)
     val q = VectorOps.quantizeInt8($"embedding")
     val err = emb.select(
       $"vec_id", q.as("q"),
-      VectorOps.dequantizeInt8(q).as("deq"), $"embedding")
+      dequantizeInt8(q).as("deq"), $"embedding")
       .select($"vec_id",
         aggregate(
           zip_with($"deq", $"embedding",
@@ -34,7 +40,7 @@ class QuantizationSpec extends SparkSpecBase {
       .as[(Int, Int)].head()
     assert(lo >= -127 && hi <= 127)
     val z = Seq(Array(0f, 0f, 0f)).toDF("v")
-      .select(VectorOps.dequantizeInt8(VectorOps.quantizeInt8($"v")))
+      .select(dequantizeInt8(VectorOps.quantizeInt8($"v")))
       .as[Seq[Float]].head()
     assert(z == Seq(0f, 0f, 0f))
   }
@@ -52,8 +58,8 @@ class QuantizationSpec extends SparkSpecBase {
     val drift = a.crossJoin(b).select(
       abs(VectorOps.cosine($"va", $"vb") -
         VectorOps.cosine(
-          VectorOps.dequantizeInt8(VectorOps.quantizeInt8($"va")),
-          VectorOps.dequantizeInt8(VectorOps.quantizeInt8($"vb"))))
+          dequantizeInt8(VectorOps.quantizeInt8($"va")),
+          dequantizeInt8(VectorOps.quantizeInt8($"vb"))))
         .as("d"))
     assert(drift.agg(max($"d")).as[Double].head() < 1e-2)
   }

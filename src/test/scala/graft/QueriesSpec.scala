@@ -46,6 +46,13 @@ class QueriesSpec extends SparkSpecBase {
     }
   }
 
+  test("a streaming oracle query leaves the session conf as it found it") {
+    val fresh = spark.newSession()
+    val before = fresh.conf.getAll
+    Queries.all.find(_.name == "q48_stream_dedup").get.fn(fresh, sf0001).collect()
+    assert(fresh.conf.getAll === before)
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -7,7 +7,7 @@ class SpaceSavingSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def topOf(df: org.apache.spark.sql.DataFrame, capacity: Int, k: Int) =
-    df.agg(SpaceSavingTopK.topK(spark, $"key", capacity, k).as("top"))
+    df.agg(SpaceSavingTopK.topK($"key", capacity, k).as("top"))
       .select(explode($"top").as("e"))
       .select($"e.key", $"e.n")
       .as[(String, Long)].collect().toSeq

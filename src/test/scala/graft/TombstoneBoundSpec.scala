@@ -1,14 +1,14 @@
 package graft
 
-import graft.ops.{InvertedIndex, IvfIndex, TombstoneLog}
+import graft.ops.{InvertedIndex, IvfIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The bounded tombstone-join contract (TombstoneLog.readDir/read): the
   * takedown set broadcasts into the families' anti/semi joins only while
-  * its on-disk log fits the configured budget; above it the joins
-  * DEGRADE to a shuffle hash join instead of shipping an unbounded hash
-  * relation to every executor. The family contract assumes takedown
+  * its on-disk log fits Spark's `autoBroadcastJoinThreshold`; above it
+  * the joins DEGRADE to a shuffle hash join instead of shipping an
+  * unbounded hash relation to every executor. The family contract assumes takedown
   * volume ≪ compaction cadence — this spec proves the posture is safe
   * when the assumption breaks, with identical results either way. */
 class TombstoneBoundSpec extends SparkSpecBase {
@@ -21,14 +21,14 @@ class TombstoneBoundSpec extends SparkSpecBase {
   private def joinKinds(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** `body` under Spark's broadcast budget `bytes`, the one the
+    * tombstone joins read. */
   private def withCap[T](bytes: Long)(body: => T): T = {
-    val old = spark.conf.getOption(TombstoneLog.BroadcastMaxBytesKey)
-    spark.conf.set(TombstoneLog.BroadcastMaxBytesKey, bytes.toString)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getAll.get(key)
+    spark.conf.set(key, bytes.toString)
     try body
-    finally old match {
-      case Some(v) => spark.conf.set(TombstoneLog.BroadcastMaxBytesKey, v)
-      case None    => spark.conf.unset(TombstoneLog.BroadcastMaxBytesKey)
-    }
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("BM25 probe broadcasts a small tombstone set and shuffle-joins a " +
@@ -61,22 +61,6 @@ class TombstoneBoundSpec extends SparkSpecBase {
     assert(!smallRows.exists(_.split(",")(2) == "3") &&
       !smallRows.exists(_.split(",")(2) == "5"),
       "tombstoned docs must stay hidden under both strategies")
-  }
-
-  test("a malformed or negative broadcast budget fails naming its key") {
-    val path = tmpDir("tomb_bound_conf")
-    InvertedIndex.build(docs, path)
-    InvertedIndex.markDeleted(spark, path, Seq(3L))
-    val q = Seq((0L, "alpha")).toDF("query_id", "term")
-    val key = TombstoneLog.BroadcastMaxBytesKey
-    val old = spark.conf.getOption(key)
-    try Seq("10MB", "-1").foreach { v =>
-      spark.conf.set(key, v)
-      val e = intercept[IllegalArgumentException] {
-        InvertedIndex.probe(spark, path, q, 8).collect()
-      }
-      assert(e.getMessage.contains(key) && e.getMessage.contains(v), e.getMessage)
-    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("IVF compact applies a forced-large tombstone set via shuffle and " +
