@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import ByteFields._
+
 /** REAL video-container codec for uncompressed AVI — self-written
   * RIFF walker in the same discipline as [[Multimodal.SoundCodec]]'s WAV
   * path: no codec library exists in this container, but AVI's RIFF
@@ -57,16 +59,6 @@ object AviCodec {
   case class Container(usPerFrame: Int, totalFrames: Long, width: Int,
       height: Int, streams: Seq[StreamInfo], moviStart: Int, moviEnd: Int)
 
-  // ---------------------------------------------------------- LE readers
-  private def u16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def i32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-  private def u32(b: Array[Byte], o: Int): Long = i32(b, o) & 0xffffffffL
-  private def fourcc(b: Array[Byte], o: Int): String =
-    new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
   // ---------------------------------------------------------------- parse
 
   /** Parse the container's headers. One pass over the chunk tree; the
@@ -82,7 +74,7 @@ object AviCodec {
     def scan(from: Int, end: Int): Unit = {
       var o = from
       while (o + 8 <= end) {
-        val id = fourcc(bytes, o); val sz = i32(bytes, o + 4)
+        val id = fourcc(bytes, o); val sz = getLe32(bytes, o + 4)
         val body = o + 8
         // Long arithmetic: a hostile sz near Int.MaxValue overflows
         // body + sz to negative in Int space and would pass the check.
@@ -96,16 +88,16 @@ object AviCodec {
               case _ => () // unknown list (INFO, ...): skip whole
             }
           case "avih" =>
-            usPerFrame = i32(bytes, body)
-            totalFrames = u32(bytes, body + 16)
-            mainW = i32(bytes, body + 32); mainH = i32(bytes, body + 36)
+            usPerFrame = getLe32(bytes, body)
+            totalFrames = getLeU32(bytes, body + 16)
+            mainW = getLe32(bytes, body + 32); mainH = getLe32(bytes, body + 36)
           case "strh" =>
             streams += StreamInfo(streams.size,
               fccType = fourcc(bytes, body),
               handler = fourcc(bytes, body + 4),
-              scale = i32(bytes, body + 20), rate = i32(bytes, body + 24),
-              length = u32(bytes, body + 32),
-              sampleSize = i32(bytes, body + 44),
+              scale = getLe32(bytes, body + 20), rate = getLe32(bytes, body + 24),
+              length = getLeU32(bytes, body + 32),
+              sampleSize = getLe32(bytes, body + 44),
               width = 0, height = 0, bitCount = 0, compression = 0,
               channels = 0, sampleRate = 0, bitsPerSample = 0)
           case "strf" =>
@@ -113,15 +105,15 @@ object AviCodec {
             val s = streams.last
             streams(streams.size - 1) = s.fccType match {
               case "vids" => s.copy(
-                width = i32(bytes, body + 4),
+                width = getLe32(bytes, body + 4),
                 // negative biHeight = top-down DIB; magnitude is the height
-                height = math.abs(i32(bytes, body + 8)),
-                bitCount = u16(bytes, body + 14),
-                compression = i32(bytes, body + 16))
+                height = math.abs(getLe32(bytes, body + 8)),
+                bitCount = getLe16(bytes, body + 14),
+                compression = getLe32(bytes, body + 16))
               case "auds" => s.copy(
-                channels = u16(bytes, body + 2),
-                sampleRate = i32(bytes, body + 4),
-                bitsPerSample = u16(bytes, body + 14))
+                channels = getLe16(bytes, body + 2),
+                sampleRate = getLe32(bytes, body + 4),
+                bitsPerSample = getLe16(bytes, body + 14))
               case _ => s
             }
           case _ => () // JUNK, idx1, vendor chunks: skip
@@ -136,11 +128,14 @@ object AviCodec {
       moviStart, moviEnd)
   }
 
-  /** (offset, size) of each video-frame chunk of the first vids stream,
-    * in presentation order — the walk is over chunk headers only, so
-    * locating frame `k` costs k header reads, zero pixel decodes. */
-  def videoFrameChunks(docId: Long, bytes: Array[Byte],
-      c: Container): IndexedSeq[(Int, Int)] = {
+  /** The first vids stream of the container and the (offset, size) of
+    * each of its frame chunks, in presentation order — the walk is over
+    * chunk headers only, so locating frame `k` costs k header reads,
+    * zero pixel decodes. A container with no vids stream or no frame
+    * chunk fails with the doc id. */
+  def videoFrames(docId: Long, bytes: Array[Byte]):
+      (StreamInfo, IndexedSeq[(Int, Int)]) = {
+    val c = parse(docId, bytes)
     val vids = c.streams.find(_.fccType == "vids").getOrElse(
       throw new IllegalArgumentException(s"doc $docId: AVI has no vids stream"))
     val prefix = f"${vids.streamIdx}%02d"
@@ -148,7 +143,7 @@ object AviCodec {
     def walk(from: Int, end: Int): Unit = {
       var o = from
       while (o + 8 <= end) {
-        val id = fourcc(bytes, o); val sz = i32(bytes, o + 4)
+        val id = fourcc(bytes, o); val sz = getLe32(bytes, o + 4)
         val body = o + 8
         // Same validation as parse: a negative sz (e.g. -8) would make
         // o = body + sz + (sz & 1) = o — an infinite loop on an executor —
@@ -163,7 +158,8 @@ object AviCodec {
       }
     }
     walk(c.moviStart, c.moviEnd)
-    out.toIndexedSeq
+    require(out.nonEmpty, s"doc $docId: AVI has no frames")
+    (vids, out.toIndexedSeq)
   }
 
   /** fourcc `'MJPG'` as the little-endian `biCompression` int — the
@@ -181,13 +177,9 @@ object AviCodec {
     * genuinely need a codec library and fail loudly. */
   def decodeFrame(docId: Long, bytes: Array[Byte], offset: Int, size: Int,
       s: StreamInfo): java.awt.image.BufferedImage = {
-    if (s.compression == MjpgFourcc) {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(
-        java.util.Arrays.copyOfRange(bytes, offset, offset + size)))
-      require(img != null,
-        s"doc $docId: MJPG frame chunk is not a decodable JPEG image")
-      return img
-    }
+    if (s.compression == MjpgFourcc)
+      return Multimodal.ImageIoCodec.read(docId, "MJPG frame chunk", bytes,
+        offset, size)
     require(s.compression == 0 && s.bitCount == 24,
       s"doc $docId: only BI_RGB 24-bit DIB and MJPG frames are decodable " +
         s"(biCompression=${s.compression}, biBitCount=${s.bitCount})")
@@ -214,15 +206,6 @@ object AviCodec {
 
   // --------------------------------------------------------------- encode
 
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32(v: Int): Array[Byte] = Array(
-    (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-    ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def cc(s: String): Array[Byte] = {
-    require(s.length == 4, s"fourcc '$s'")
-    s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-  }
   private def chunk(id: String, payload: Array[Byte]): Array[Byte] =
     cc(id) ++ le32(payload.length) ++ payload ++
       (if ((payload.length & 1) == 1) Array(0.toByte) else Array.empty[Byte])

@@ -59,7 +59,6 @@ object FlacCodec {
         require(len == 34,
           s"doc $docId: STREAMINFO must be 34 bytes, got $len")
         val b = o + 4
-        def u16(i: Int) = ((bytes(i) & 0xff) << 8) | (bytes(i + 1) & 0xff)
         // sample rate: 20 bits at byte 10; channels-1: next 3; bps-1:
         // next 5; total samples: next 36 — all straddling bytes.
         val rate = ((bytes(b + 10) & 0xff) << 12) |
@@ -71,8 +70,8 @@ object FlacCodec {
           ((bytes(b + 14) & 0xffL) << 24) | ((bytes(b + 15) & 0xffL) << 16) |
           ((bytes(b + 16) & 0xffL) << 8) | (bytes(b + 17) & 0xffL)
         require(rate > 0, s"doc $docId: STREAMINFO sample rate is 0")
-        si = Meta(u16(b), u16(b + 2), rate, ch, bps, total,
-          IndexedSeq.empty, 0L)
+        si = Meta(ByteFields.getBe16(bytes, b), ByteFields.getBe16(bytes, b + 2),
+          rate, ch, bps, total, IndexedSeq.empty, 0L)
       }
       o += 4 + len
     }

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import ByteFields._
+
 /** REAL metadata codec for MP4 / ISO Base Media File Format — the
   * dominant real-world video container, and the third member of the
   * self-written header-parser family ([[Multimodal.SoundCodec]]'s WAV
@@ -77,27 +79,16 @@ object Mp4Codec {
   case class Mp4Container(majorBrand: String, movieTimescale: Long,
       movieDuration: Long, tracks: Seq[TrackInfo])
 
-  // ------------------------------------------------------ BE readers
-  private def u16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def u32(b: Array[Byte], o: Int): Long =
-    (((b(o) & 0xff).toLong << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)) & 0xffffffffL
-  private def u64(b: Array[Byte], o: Int): Long =
-    (u32(b, o) << 32) | u32(b, o + 4)
-  private def fourcc(b: Array[Byte], o: Int): String =
-    new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
   /** (type, bodyStart, bodyEnd, nextBoxStart) of the box at `o`. */
   private def box(docId: Long, b: Array[Byte], o: Int, end: Int):
       (String, Int, Int, Int) = {
     require(o + 8 <= end, s"doc $docId: truncated box header at $o")
-    val sz = u32(b, o)
+    val sz = getBeU32(b, o)
     val tpe = fourcc(b, o + 4)
     val (body, boxEnd) =
       if (sz == 1L) {
         require(o + 16 <= end, s"doc $docId: truncated largesize box at $o")
-        (o + 16, o + u64(b, o + 8))
+        (o + 16, o + getBeU64(b, o + 8))
       }
       else if (sz == 0L) (o + 8, end.toLong) // last box runs to EOF
       else (o + 8, o + sz)
@@ -139,7 +130,7 @@ object Mp4Codec {
       var stsc: Array[(Long, Long)] = null     // (first_chunk, samples_per_chunk)
       def parseStbl(f2: Int, e2: Int): Unit = walk(docId, bytes, f2, e2) {
         case ("stsd", b, e) =>
-          val entries = u32(bytes, b + 4)
+          val entries = getBeU32(bytes, b + 4)
           if (entries > 0 && b + 16 <= e) {
             val entryBody = b + 8 // first entry: u32 size + fourcc format
             codec = fourcc(bytes, entryBody + 4)
@@ -148,36 +139,36 @@ object Mp4Codec {
             handler match {
               case "vide" if fields + 16 + 4 <= e =>
                 // VisualSampleEntry: pre_defined/reserved 16 B, then w/h
-                width = u16(bytes, fields + 16)
-                height = u16(bytes, fields + 18)
+                width = getBe16(bytes, fields + 16)
+                height = getBe16(bytes, fields + 18)
               case "soun" if fields + 16 + 4 <= e =>
                 // AudioSampleEntry: reserved 8 B, channelcount,
                 // samplesize, pre_defined, reserved, 16.16 samplerate
-                channels = u16(bytes, fields + 8)
-                sampleRate = (u32(bytes, fields + 16) >> 16).toInt
+                channels = getBe16(bytes, fields + 8)
+                sampleRate = (getBeU32(bytes, fields + 16) >> 16).toInt
               case _ => ()
             }
           }
         case ("stts", b, _) =>
-          val n = u32(bytes, b + 4).toInt
+          val n = getBeU32(bytes, b + 4).toInt
           var i = 0
-          while (i < n) { nSamples += u32(bytes, b + 8 + i * 8); i += 1 }
+          while (i < n) { nSamples += getBeU32(bytes, b + 8 + i * 8); i += 1 }
         case ("stsz", b, _) =>
-          val uniform = u32(bytes, b + 4)
-          val n = u32(bytes, b + 8).toInt
+          val uniform = getBeU32(bytes, b + 4)
+          val n = getBeU32(bytes, b + 8).toInt
           sizes =
             if (uniform != 0L) Array.fill(n)(uniform)
-            else Array.tabulate(n)(i => u32(bytes, b + 12 + i * 4))
+            else Array.tabulate(n)(i => getBeU32(bytes, b + 12 + i * 4))
         case ("stco", b, _) =>
-          val n = u32(bytes, b + 4).toInt
-          chunkOffsets = Array.tabulate(n)(i => u32(bytes, b + 8 + i * 4))
+          val n = getBeU32(bytes, b + 4).toInt
+          chunkOffsets = Array.tabulate(n)(i => getBeU32(bytes, b + 8 + i * 4))
         case ("co64", b, _) =>
-          val n = u32(bytes, b + 4).toInt
-          chunkOffsets = Array.tabulate(n)(i => u64(bytes, b + 8 + i * 8))
+          val n = getBeU32(bytes, b + 4).toInt
+          chunkOffsets = Array.tabulate(n)(i => getBeU64(bytes, b + 8 + i * 8))
         case ("stsc", b, _) =>
-          val n = u32(bytes, b + 4).toInt
+          val n = getBeU32(bytes, b + 4).toInt
           stsc = Array.tabulate(n)(i =>
-            (u32(bytes, b + 8 + i * 12), u32(bytes, b + 12 + i * 12)))
+            (getBeU32(bytes, b + 8 + i * 12), getBeU32(bytes, b + 12 + i * 12)))
         case _ => ()
       }
       /** stsc×stsz×stco expansion per ISO/IEC 14496-12 §8.7: each stsc
@@ -224,8 +215,8 @@ object Mp4Codec {
         walk(docId, bytes, f2, e2) {
           case ("mdhd", b, _) =>
             val v = bytes(b) & 0xff
-            if (v == 1) { timescale = u32(bytes, b + 20); duration = u64(bytes, b + 24) }
-            else { timescale = u32(bytes, b + 12); duration = u32(bytes, b + 16) }
+            if (v == 1) { timescale = getBeU32(bytes, b + 20); duration = getBeU64(bytes, b + 24) }
+            else { timescale = getBeU32(bytes, b + 12); duration = getBeU32(bytes, b + 16) }
           case ("hdlr", b, _) => handler = fourcc(bytes, b + 8)
           case _ => ()
         }
@@ -238,13 +229,13 @@ object Mp4Codec {
         case ("tkhd", b, _) =>
           val v = bytes(b) & 0xff
           if (v == 1) {
-            trackId = u32(bytes, b + 20)
-            width = (u32(bytes, b + 84) >> 16).toInt
-            height = (u32(bytes, b + 88) >> 16).toInt
+            trackId = getBeU32(bytes, b + 20)
+            width = (getBeU32(bytes, b + 84) >> 16).toInt
+            height = (getBeU32(bytes, b + 88) >> 16).toInt
           } else {
-            trackId = u32(bytes, b + 12)
-            width = (u32(bytes, b + 76) >> 16).toInt
-            height = (u32(bytes, b + 80) >> 16).toInt
+            trackId = getBeU32(bytes, b + 12)
+            width = (getBeU32(bytes, b + 76) >> 16).toInt
+            height = (getBeU32(bytes, b + 80) >> 16).toInt
           }
         case ("mdia", b, e) => parseMdia(b, e)
         case _ => ()
@@ -259,8 +250,8 @@ object Mp4Codec {
         walk(docId, bytes, mb, me) {
           case ("mvhd", b, _) =>
             val v = bytes(b) & 0xff
-            if (v == 1) { movieTimescale = u32(bytes, b + 20); movieDuration = u64(bytes, b + 24) }
-            else { movieTimescale = u32(bytes, b + 12); movieDuration = u32(bytes, b + 16) }
+            if (v == 1) { movieTimescale = getBeU32(bytes, b + 20); movieDuration = getBeU64(bytes, b + 24) }
+            else { movieTimescale = getBeU32(bytes, b + 12); movieDuration = getBeU32(bytes, b + 16) }
           case ("trak", b, e) => parseTrak(b, e)
           case _ => ()
         }
@@ -273,15 +264,6 @@ object Mp4Codec {
 
   // ------------------------------------------------------------ encode
 
-  private def be16(v: Int): Array[Byte] =
-    Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def be32(v: Long): Array[Byte] = Array(
-    ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-    ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def cc(s: String): Array[Byte] = {
-    require(s.length == 4, s"fourcc '$s'")
-    s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-  }
   private def mkBox(tpe: String, payload: Array[Byte]*): Array[Byte] = {
     val body = payload.foldLeft(Array.empty[Byte])(_ ++ _)
     be32(8L + body.length) ++ cc(tpe) ++ body

@@ -1,10 +1,11 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal column handling: image/audio/video as opaque BINARY columns
-  * with typed metadata, processed in batches via `mapPartitions`.
+  * with typed metadata, decoded one record at a time via `mapPartitions`.
   *
   * IMAGE handling is REAL end-to-end: [[ImageIoCodec]] decodes
   * PNG/JPEG/GIF/BMP payloads with the JDK's `javax.imageio` (no extra
@@ -33,9 +34,11 @@ import org.apache.spark.sql.functions._
   * genuinely need libraries this container doesn't have — behind
   * [[StubCodec]]-style deterministic fakes; [[decodeBatched]]
   * dispatches per record on the mime type. Everything around the codecs is real and load-bearing:
-  * the binary schema, the batched iteration shape (decode codecs
-  * amortize per-batch setup, exactly like an Arrow-batched pandas UDF),
-  * the partition sizing, and the typed output schema.
+  * the binary schema, the per-record streaming shape (every `*Batched`
+  * entry point runs through one kernel that holds one payload and its
+  * decoded rows in flight per task — no codec has per-batch setup to
+  * amortize, so nothing is buffered between records), the partition
+  * sizing, and the typed output schema.
   *
   * Scale notes: binary payloads dominate row size → keep
   * `spark.sql.files.maxPartitionBytes` low enough that a partition of
@@ -60,11 +63,30 @@ object Multimodal {
   case class MediaMeta(doc_id: Long, mime: String, n_bytes: Int,
       width: Int, height: Int, n_frames: Int)
 
+  /** The one kernel behind every `*Batched` entry point: each partition
+    * streams through `f` one record at a time (`take(1)` decodes one
+    * payload, and a task holds one blob and its output rows in flight).
+    * `accepts` is the entry point's mime guard; a record it rejects
+    * fails with the doc id, the `entry` name and the mime. Encoders come
+    * from `media`'s own session. Single-row entry points return
+    * `Some(row)`. */
+  private def perRecord[T <: Product : TypeTag](media: DataFrame,
+      entry: String, accepts: String => Boolean = _ => true)(
+      f: MediaRecord => IterableOnce[T]): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.as[MediaRecord].mapPartitions(_.flatMap { r =>
+      require(accepts(r.mime),
+        s"doc ${r.doc_id}: $entry does not accept mime ${r.mime}")
+      f(r)
+    })
+  }
+
   /** The clearly-marked decode stub for mimes NO in-container codec
     * owns (image, WAV/PCM audio and uncompressed-AVI video all have real
     * codec paths): deterministic pseudo-metadata from the byte payload.
     * A real deployment replaces `decode` with its codec call; the
-    * signature (batch in, batch out) is the contract. */
+    * signature (record in, metadata out) is the contract. */
   object StubCodec {
     // shared with q29's column-level spelling and its oracle SQL — one
     // source of truth for the fake-decode formulas
@@ -75,16 +97,15 @@ object Multimodal {
     val HeightMod = 416
     val FrameMod = 29
 
-    def decode(batch: Seq[MediaRecord]): Seq[MediaMeta] =
+    def decode(r: MediaRecord): MediaMeta = {
       // ??? <- a codec for formats outside the in-container surface
       // (compressed video, exotic stills) goes here; deterministic fake:
-      batch.map { r =>
-        val n = r.content.length
-        MediaMeta(r.doc_id, r.mime, n,
-          width = BaseDim + n % WidthMod,
-          height = BaseDim + (r.doc_id * HeightMul % HeightMod).toInt,
-          n_frames = 1 + n % FrameMod)
-      }
+      val n = r.content.length
+      MediaMeta(r.doc_id, r.mime, n,
+        width = BaseDim + n % WidthMod,
+        height = BaseDim + (r.doc_id * HeightMul % HeightMod).toInt,
+        n_frames = 1 + n % FrameMod)
+    }
   }
 
   /** REAL image codec on the JDK's `javax.imageio` — no extra dependency,
@@ -92,8 +113,8 @@ object Multimodal {
     * throwing) on undecodable bytes; that surfaces as a loud per-record
     * failure here because silently faking metadata for a corrupt blob is
     * exactly the wrong-but-plausible failure this module must not have.
-    * Readers are sought per call (`ImageIO` caches SPI lookups); the
-    * batched shape still amortizes JIT + allocation across the batch. */
+    * Readers are sought per call (`ImageIO` caches SPI lookups), one
+    * payload at a time like every codec here. */
   object ImageIoCodec {
     /** Mimes this codec owns; everything else falls back to [[StubCodec]]. */
     val Mimes: Set[String] =
@@ -118,6 +139,21 @@ object Multimodal {
         finally reader.dispose()
       } finally in.close()
     }
+
+    /** `ImageIO.read` of `len` bytes at `off` with the loud-failure
+      * contract: undecodable bytes (a null image) fail naming the doc
+      * and `what` was being read. */
+    private[multimodal] def read(docId: Long, what: String,
+        bytes: Array[Byte], off: Int, len: Int): java.awt.image.BufferedImage = {
+      val img = javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(bytes, off, len))
+      require(img != null, s"doc $docId: $what is not a decodable image")
+      img
+    }
+
+    /** [[read]] of a whole payload. */
+    private[multimodal] def read(r: MediaRecord): java.awt.image.BufferedImage =
+      read(r.doc_id, s"${r.mime} payload", r.content, 0, r.content.length)
 
     def decodeOne(r: MediaRecord): MediaMeta =
       withImageReader(r) { reader =>
@@ -199,9 +235,7 @@ object Multimodal {
     /** Bilinear `Graphics2D` resize, re-encoded as PNG (lossless — the
       * deterministic choice for a fixture-pinned spec). */
     def resizeOne(r: MediaRecord, targetW: Int, targetH: Int): ResizedMedia = {
-      val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.content))
-      require(src != null, s"doc ${r.doc_id}: payload is not a decodable ${r.mime}")
-      val dst = bilinear(src, targetW, targetH)
+      val dst = bilinear(read(r), targetW, targetH)
       val out = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(dst, "png", out)
       ResizedMedia(r.doc_id, "image/png", targetW, targetH, out.toByteArray)
@@ -238,15 +272,10 @@ object Multimodal {
     }
   }
 
-  /** Batched audio-metadata decode: the same mapPartitions batch shape as
+  /** Audio-metadata decode: the same per-record shape as
     * [[decodeBatched]], typed to the audio schema. */
-  def decodeAudioBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[AudioMeta] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map(SoundCodec.decodeOne))
-    }
-  }
+  def decodeAudioBatched(media: DataFrame): Dataset[AudioMeta] =
+    perRecord(media, "decodeAudioBatched")(r => Some(SoundCodec.decodeOne(r)))
 
   /** REAL PCM sample codec on `javax.sound.sampled` — the layer below
     * [[SoundCodec]]'s header parse: decodes the actual 16-bit signed PCM
@@ -420,32 +449,25 @@ object Multimodal {
   case class AudioFeatures(doc_id: Long, sample_rate: Int, n_samples: Int,
       zero_crossings: Long, envelope: Array[Float])
 
-  /** Batched REAL audio feature extraction: decode the PCM samples and
-    * derive (rate, length, zero-crossings, mean-|amplitude| envelope) per
-    * payload. Same mapPartitions batch shape as [[decodeBatched]]; blobs
-    * never cross a shuffle, only the scalar/vector features do. */
-  def extractAudioFeaturesBatched(spark: SparkSession, media: DataFrame,
-      cells: Int = 16, batchSize: Int = 64): Dataset[AudioFeatures] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        val (rate, s) = PcmCodec.samples(r)
-        AudioFeatures(r.doc_id, rate, s.length, PcmCodec.zeroCrossings(s),
-          PcmCodec.envelopeGrid(s, cells))
-      })
+  /** REAL audio feature extraction: decode the PCM samples and derive
+    * (rate, length, zero-crossings, mean-|amplitude| envelope) per
+    * payload. Same per-record shape as [[decodeBatched]]; blobs never
+    * cross a shuffle, only the scalar/vector features do. */
+  def extractAudioFeaturesBatched(media: DataFrame,
+      cells: Int = 16): Dataset[AudioFeatures] =
+    perRecord(media, "extractAudioFeaturesBatched") { r =>
+      val (rate, s) = PcmCodec.samples(r)
+      Some(AudioFeatures(r.doc_id, rate, s.length, PcmCodec.zeroCrossings(s),
+        PcmCodec.envelopeGrid(s, cells)))
     }
-  }
 
-  /** Batched REAL audio resample: every payload through
+  /** REAL audio resample: every payload through
     * [[PcmCodec.resampleOne]]'s linear-interpolation kernel, re-encoded
     * WAV out. The audio counterpart of [[resizeBatched]]'s image path. */
-  def resampleAudioBatched(spark: SparkSession, media: DataFrame,
-      targetRate: Int, batchSize: Int = 64): Dataset[MediaRecord] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map(PcmCodec.resampleOne(_, targetRate)))
-    }
-  }
+  def resampleAudioBatched(media: DataFrame,
+      targetRate: Int): Dataset[MediaRecord] =
+    perRecord(media, "resampleAudioBatched")(r =>
+      Some(PcmCodec.resampleOne(r, targetRate)))
 
   /** Wrap a text/doc table as media records: the text bytes stand in for
     * an image payload (same shape a real ingest would produce: id + blob +
@@ -454,62 +476,48 @@ object Multimodal {
     docs.select(col("doc_id"), col("text").cast("binary").as("content"),
       lit(StubCodec.FakeMime).as("mime"))
 
-  /** Batched decode over partitions: groups each partition's iterator into
-    * `batchSize` chunks (the Arrow-batch shape) and dispatches each chunk
+  /** Metadata decode over partitions, one record at a time, dispatched
     * by mime — real `javax.imageio` for image mimes, the real
     * [[AviCodec]] container parse for AVI video mimes, the deterministic
     * stub for everything else. No shuffle; output is a typed Dataset. */
-  def decodeBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[MediaMeta] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          if (ImageIoCodec.Mimes(r.mime)) ImageIoCodec.decodeOne(r)
-          else if (AviCodec.Mimes(r.mime)) {
-            val c = AviCodec.parse(r.doc_id, r.content)
-            MediaMeta(r.doc_id, r.mime, r.content.length,
-              c.width, c.height, c.totalFrames.toInt)
-          } else if (Mp4Codec.Mimes(r.mime)) {
-            // REAL ISO-BMFF header parse: dims + frame count from the
-            // first video track (or the first track for audio-only)
-            val c = Mp4Codec.parse(r.doc_id, r.content)
-            val t = c.tracks.find(_.handler == "vide").getOrElse(c.tracks.head)
-            MediaMeta(r.doc_id, r.mime, r.content.length,
-              t.width, t.height, t.nSamples.toInt)
-          } else StubCodec.decode(Seq(r)).head
-        }
-      }
+  def decodeBatched(media: DataFrame): Dataset[MediaMeta] =
+    perRecord(media, "decodeBatched") { r =>
+      Some(
+        if (ImageIoCodec.Mimes(r.mime)) ImageIoCodec.decodeOne(r)
+        else if (AviCodec.Mimes(r.mime)) {
+          val c = AviCodec.parse(r.doc_id, r.content)
+          MediaMeta(r.doc_id, r.mime, r.content.length,
+            c.width, c.height, c.totalFrames.toInt)
+        } else if (Mp4Codec.Mimes(r.mime)) {
+          // REAL ISO-BMFF header parse: dims + frame count from the
+          // first video track (or the first track for audio-only)
+          val c = Mp4Codec.parse(r.doc_id, r.content)
+          val t = c.tracks.find(_.handler == "vide").getOrElse(c.tracks.head)
+          MediaMeta(r.doc_id, r.mime, r.content.length,
+            t.width, t.height, t.nSamples.toInt)
+        } else StubCodec.decode(r))
     }
-  }
 
   case class ResizedMedia(doc_id: Long, mime: String, width: Int,
       height: Int, content: Array[Byte])
   case class MediaFeatures(doc_id: Long, features: Array[Float])
 
-  /** Batched resize: same mapPartitions batch shape as decode. Image
-    * mimes get the REAL bilinear `Graphics2D` kernel
+  /** Per-record resize: same shape as decode. Image mimes get the REAL bilinear `Graphics2D` kernel
     * ([[ImageIoCodec.resizeOne]]); AVI video mimes get the REAL
     * per-frame path — every frame decoded ([[AviCodec.decodeFrame]],
     * DIB or MJPG), resized through the SAME bilinear kernel, and
     * re-encoded as an uncompressed AVI at the source fps (lossless
     * out, so downstream decode is oracle-exact regardless of the input
     * codec). Remaining mimes keep the deterministic stub (truncate
-    * bytes to the target "resolution"), so the schema/batching/lineage
-    * are exercised for every payload type. */
-  def resizeBatched(spark: SparkSession, media: DataFrame,
-      targetW: Int, targetH: Int, batchSize: Int = 64): Dataset[ResizedMedia] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
+    * bytes to the target "resolution"), so the schema/lineage are
+    * exercised for every payload type. */
+  def resizeBatched(media: DataFrame, targetW: Int,
+      targetH: Int): Dataset[ResizedMedia] =
+    perRecord(media, "resizeBatched") { r =>
+      Some(
         if (ImageIoCodec.Mimes(r.mime)) ImageIoCodec.resizeOne(r, targetW, targetH)
         else if (AviCodec.Mimes(r.mime)) {
-          val c = AviCodec.parse(r.doc_id, r.content)
-          val vids = c.streams.find(_.fccType == "vids").getOrElse(
-            throw new IllegalArgumentException(
-              s"doc ${r.doc_id}: AVI has no vids stream"))
-          val chunks = AviCodec.videoFrameChunks(r.doc_id, r.content, c)
-          require(chunks.nonEmpty, s"doc ${r.doc_id}: AVI has no frames")
+          val (vids, chunks) = AviCodec.videoFrames(r.doc_id, r.content)
           val resized = chunks.map { case (off, sz) =>
             ImageIoCodec.bilinear(
               AviCodec.decodeFrame(r.doc_id, r.content, off, sz, vids),
@@ -522,12 +530,10 @@ object Multimodal {
           // image/audio/AVI codec surface; deterministic fake:
           val n = math.min(r.content.length, targetW * targetH / 64 + 1)
           ResizedMedia(r.doc_id, r.mime, targetW, targetH, r.content.take(n))
-        }
-      })
+        })
     }
-  }
 
-  /** Batched REAL video frame-rate resample — the temporal twin of
+  /** REAL video frame-rate resample — the temporal twin of
     * [[resampleAudioBatched]]'s linear-interpolation kernel, with
     * nearest-lower-frame selection instead of interpolation (frames are
     * discrete; MJPEG/DIB sources both decode through
@@ -541,42 +547,32 @@ object Multimodal {
     * decode sees the source pixels bit-exactly). The auds stream, if
     * any, is dropped — resampling audio is [[resampleAudioBatched]]'s
     * job on the audio column, not a container-rewrite side effect. */
-  def resampleVideoBatched(spark: SparkSession, media: DataFrame,
-      targetFps: Int, batchSize: Int = 64): Dataset[MediaRecord] = {
-    import spark.implicits._
+  def resampleVideoBatched(media: DataFrame,
+      targetFps: Int): Dataset[MediaRecord] = {
     require(targetFps > 0, s"target fps $targetFps")
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        require(AviCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: no video resampler for mime ${r.mime}")
-        val c = AviCodec.parse(r.doc_id, r.content)
-        val vids = c.streams.find(_.fccType == "vids").getOrElse(
-          throw new IllegalArgumentException(
-            s"doc ${r.doc_id}: AVI has no vids stream"))
-        val chunks = AviCodec.videoFrameChunks(r.doc_id, r.content, c)
-        require(chunks.nonEmpty, s"doc ${r.doc_id}: AVI has no frames")
-        val nOut = Math.floorDiv(
-          chunks.size.toLong * targetFps * vids.scale, vids.rate.toLong).toInt
-        require(nOut >= 1,
-          s"doc ${r.doc_id}: resample to $targetFps fps yields zero frames")
-        var memoIdx = -1
-        var memoImg: java.awt.image.BufferedImage = null
-        val out = (0 until nOut).map { j =>
-          val srcIdx = Math.floorDiv(
-            j.toLong * vids.rate, targetFps.toLong * vids.scale).toInt
-          if (srcIdx != memoIdx) {
-            val (off, sz) = chunks(srcIdx)
-            memoImg = AviCodec.decodeFrame(r.doc_id, r.content, off, sz, vids)
-            memoIdx = srcIdx
-          }
-          memoImg
+    perRecord(media, "resampleVideoBatched", AviCodec.Mimes) { r =>
+      val (vids, chunks) = AviCodec.videoFrames(r.doc_id, r.content)
+      val nOut = Math.floorDiv(
+        chunks.size.toLong * targetFps * vids.scale, vids.rate.toLong).toInt
+      require(nOut >= 1,
+        s"doc ${r.doc_id}: resample to $targetFps fps yields zero frames")
+      var memoIdx = -1
+      var memoImg: java.awt.image.BufferedImage = null
+      val out = (0 until nOut).map { j =>
+        val srcIdx = Math.floorDiv(
+          j.toLong * vids.rate, targetFps.toLong * vids.scale).toInt
+        if (srcIdx != memoIdx) {
+          val (off, sz) = chunks(srcIdx)
+          memoImg = AviCodec.decodeFrame(r.doc_id, r.content, off, sz, vids)
+          memoIdx = srcIdx
         }
-        MediaRecord(r.doc_id, AviCodec.encode(out, rate = targetFps), "video/avi")
-      })
+        memoImg
+      }
+      Some(MediaRecord(r.doc_id, AviCodec.encode(out, rate = targetFps), "video/avi"))
     }
   }
 
-  /** Batched feature extraction: blob → fixed-width float vector, output
+  /** Per-record feature extraction: blob → fixed-width float vector, output
     * shape matching the embeddings table's `array<float>` so downstream
     * ANN ops compose directly. Image mimes take the REAL path: decode the
     * actual pixels with `javax.imageio` and pool them into a
@@ -587,11 +583,10 @@ object Multimodal {
     * envelope ([[PcmCodec.envelopeGrid]]). Other mimes keep the
     * deterministic stand-in for an external embedding model
     * (L2-normalized byte histogram mod dim). */
-  def extractFeaturesBatched(spark: SparkSession, media: DataFrame,
-      dim: Int = 64, batchSize: Int = 64): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
+  def extractFeaturesBatched(media: DataFrame,
+      dim: Int = 64): Dataset[MediaFeatures] =
+    perRecord(media, "extractFeaturesBatched") { r =>
+      Some(
         if (PcmCodec.Mimes(r.mime)) {
           val (_, s) = PcmCodec.samples(r)
           MediaFeatures(r.doc_id, PcmCodec.envelopeGrid(s, dim))
@@ -599,11 +594,7 @@ object Multimodal {
           val g = math.sqrt(dim.toDouble).toInt
           require(g * g == dim,
             s"doc ${r.doc_id}: image feature dim $dim is not a perfect square")
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.content))
-          require(img != null,
-            s"doc ${r.doc_id}: payload is not a decodable ${r.mime}")
-          MediaFeatures(r.doc_id, ImageIoCodec.lumaGrid(img, g))
+          MediaFeatures(r.doc_id, ImageIoCodec.lumaGrid(ImageIoCodec.read(r), g))
         } else if (AviCodec.Mimes(r.mime)) {
           // REAL video path: frame 0's pixels through the same pooled
           // mean-luma grid the image path uses (multi-frame features go
@@ -611,12 +602,7 @@ object Multimodal {
           val g = math.sqrt(dim.toDouble).toInt
           require(g * g == dim,
             s"doc ${r.doc_id}: video feature dim $dim is not a perfect square")
-          val c = AviCodec.parse(r.doc_id, r.content)
-          val vids = c.streams.find(_.fccType == "vids").getOrElse(
-            throw new IllegalArgumentException(
-              s"doc ${r.doc_id}: AVI has no vids stream"))
-          val chunks = AviCodec.videoFrameChunks(r.doc_id, r.content, c)
-          require(chunks.nonEmpty, s"doc ${r.doc_id}: AVI has no frames")
+          val (vids, chunks) = AviCodec.videoFrames(r.doc_id, r.content)
           val img = AviCodec.decodeFrame(
             r.doc_id, r.content, chunks.head._1, chunks.head._2, vids)
           MediaFeatures(r.doc_id, ImageIoCodec.lumaGrid(img, g))
@@ -627,35 +613,22 @@ object Multimodal {
           r.content.foreach(b => v(java.lang.Byte.toUnsignedInt(b) % dim) += 1f)
           val norm = math.sqrt(v.map(x => x * x).sum).toFloat
           MediaFeatures(r.doc_id, if (norm == 0f) v else v.map(_ / norm))
-        }
-      })
+        })
     }
-  }
 
-  /** Batched REAL still-image pooling onto a RECTANGULAR `gw`×`gh`
+  /** REAL still-image pooling onto a RECTANGULAR `gw`×`gh`
     * mean-luma grid ([[ImageIoCodec.lumaGridWH]]) — the decode stage of
     * the perceptual-hash pipeline (graft.ops.MediaFingerprint.dhash63
     * consumes the row-major grid). Kept separate from
     * [[extractFeaturesBatched]] because perceptual hashes need the
-    * asymmetric grid shape, not a square embedding. Same batched
-    * mapPartitions shape as [[decodeBatched]]: blobs never cross a
-    * shuffle; only (doc, gw·gh floats) rows do. */
-  def imageGridsBatched(spark: SparkSession, media: DataFrame,
-      gw: Int, gh: Int, batchSize: Int = 64): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        require(ImageIoCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: imageGridsBatched expects a still-image " +
-            s"mime, got ${r.mime}")
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.content))
-        require(img != null,
-          s"doc ${r.doc_id}: payload is not a decodable ${r.mime}")
-        MediaFeatures(r.doc_id, ImageIoCodec.lumaGridWH(img, gw, gh))
-      })
-    }
-  }
+    * asymmetric grid shape, not a square embedding. Same per-record
+    * shape as [[decodeBatched]]: blobs never cross a shuffle; only
+    * (doc, gw·gh floats) rows do. */
+  def imageGridsBatched(media: DataFrame, gw: Int,
+      gh: Int): Dataset[MediaFeatures] =
+    perRecord(media, "imageGridsBatched", ImageIoCodec.Mimes)(r =>
+      Some(MediaFeatures(r.doc_id,
+        ImageIoCodec.lumaGridWH(ImageIoCodec.read(r), gw, gh))))
 
   /** One stream's parsed `strh`+`strf` facts as a row — [[AviCodec]]'s
     * per-stream output schema. `width`/`height` are 0 for audio streams,
@@ -666,33 +639,28 @@ object Multimodal {
       stream_type: String, width: Int, height: Int, length: Long,
       rate: Int, scale: Int, channels: Int, bits: Int)
 
-  /** Batched REAL video-container metadata decode: every payload's RIFF
+  /** REAL video-container metadata decode: every payload's RIFF
     * headers through [[AviCodec.parse]], one output row PER STREAM —
     * the multimodal twin of [[decodeAudioBatched]], exposing the full
     * stream inventory (a real corpus carries mixed vids+auds
-    * containers). Same mapPartitions batch shape; the movi frame bytes
-    * are never touched, so metadata scans stay header-bounded. */
-  def decodeVideoStreamsBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[VideoStreamMeta] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        if (Y4mCodec.Mimes(r.mime)) {
-          // Y4M is single-stream by construction: one vids row with the
-          // header geometry, the walked frame count, and the F rational
-          // as rate/scale (8-bit planar luma).
-          val c = Y4mCodec.parse(r.doc_id, r.content)
-          Seq(VideoStreamMeta(r.doc_id, 0, "vids", c.width, c.height,
-            c.nFrames.toLong, c.fpsNum, c.fpsDen, 0, 8))
-        } else AviCodec.parse(r.doc_id, r.content).streams.map { s =>
-          VideoStreamMeta(r.doc_id, s.streamIdx, s.fccType,
-            s.width, s.height, s.length,
-            if (s.fccType == "auds") s.sampleRate else s.rate, s.scale,
-            s.channels, if (s.fccType == "auds") s.bitsPerSample else s.bitCount)
-        }
-      })
+    * containers). Same per-record shape; the movi frame bytes are never
+    * touched, so metadata scans stay header-bounded. */
+  def decodeVideoStreamsBatched(media: DataFrame): Dataset[VideoStreamMeta] =
+    perRecord(media, "decodeVideoStreamsBatched") { r =>
+      if (Y4mCodec.Mimes(r.mime)) {
+        // Y4M is single-stream by construction: one vids row with the
+        // header geometry, the walked frame count, and the F rational
+        // as rate/scale (8-bit planar luma).
+        val c = Y4mCodec.parse(r.doc_id, r.content)
+        Seq(VideoStreamMeta(r.doc_id, 0, "vids", c.width, c.height,
+          c.nFrames.toLong, c.fpsNum, c.fpsDen, 0, 8))
+      } else AviCodec.parse(r.doc_id, r.content).streams.map { s =>
+        VideoStreamMeta(r.doc_id, s.streamIdx, s.fccType,
+          s.width, s.height, s.length,
+          if (s.fccType == "auds") s.sampleRate else s.rate, s.scale,
+          s.channels, if (s.fccType == "auds") s.bitsPerSample else s.bitCount)
+      }
     }
-  }
 
   /** One ISO-BMFF track's parsed facts as a row — [[Mp4Codec]]'s
     * per-track output schema, the MP4 twin of [[VideoStreamMeta]].
@@ -703,25 +671,20 @@ object Multimodal {
       codec: String, width: Int, height: Int, timescale: Long,
       duration: Long, n_samples: Long, channels: Int, sample_rate: Int)
 
-  /** Batched REAL MP4/ISO-BMFF metadata decode: every payload's box
-    * tree through [[Mp4Codec.parse]], one output row PER TRACK — the
-    * MP4 member of the per-stream decode family
+  /** REAL MP4/ISO-BMFF metadata decode: every payload's box tree
+    * through [[Mp4Codec.parse]], one output row PER TRACK — the MP4
+    * member of the per-stream decode family
     * ([[decodeVideoStreamsBatched]] for AVI, [[decodeAudioBatched]]
-    * for WAV). Same mapPartitions batch shape; mdat sample bytes are
-    * never touched, so metadata scans stay header-bounded. */
-  def decodeMp4TracksBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[Mp4TrackMeta] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        Mp4Codec.parse(r.doc_id, r.content).tracks.map { t =>
-          Mp4TrackMeta(r.doc_id, t.trackId, t.handler, t.codec,
-            t.width, t.height, t.timescale, t.duration, t.nSamples,
-            t.channels, t.sampleRate)
-        }
-      })
+    * for WAV). Same per-record shape; mdat sample bytes are never
+    * touched, so metadata scans stay header-bounded. */
+  def decodeMp4TracksBatched(media: DataFrame): Dataset[Mp4TrackMeta] =
+    perRecord(media, "decodeMp4TracksBatched") { r =>
+      Mp4Codec.parse(r.doc_id, r.content).tracks.map { t =>
+        Mp4TrackMeta(r.doc_id, t.trackId, t.handler, t.codec,
+          t.width, t.height, t.timescale, t.duration, t.nSamples,
+          t.channels, t.sampleRate)
+      }
     }
-  }
 
   /** One demuxed elementary stream of an MPEG transport stream as a
     * row — [[TsCodec]]'s per-PID output schema plus the PSI facts
@@ -732,31 +695,23 @@ object Multimodal {
       pcr_pid: Int, pid: Int, stream_type: Int, n_packets: Int,
       payload_bytes: Long, n_pusi: Int, cc_ok: Boolean)
 
-  /** Batched REAL MPEG-TS demux: every payload's 188-byte packet layer
+  /** REAL MPEG-TS demux: every payload's 188-byte packet layer
     * and PAT/PMT sections through [[TsCodec.parse]] (CRC-validated),
     * one output row PER ELEMENTARY STREAM — the transport-stream member
     * of the per-stream decode family ([[decodeVideoStreamsBatched]] for
     * AVI/Y4M, [[decodeMp4TracksBatched]] for MP4). ES payload bytes are
     * counted, never decoded (H.264/AAC is the documented codec seam).
-    * Same batched mapPartitions shape: blobs never cross a shuffle,
-    * only scalar stat rows do. */
-  def tsDemuxStatsBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[TsEsRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        require(TsCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: tsDemuxStatsBatched expects an MPEG-TS " +
-            s"mime, got ${r.mime}")
-        val d = TsCodec.parse(r.doc_id, r.content)
-        d.streams.map { s =>
-          TsEsRow(r.doc_id, d.programNumber, d.pmtPid, d.pcrPid,
-            s.pid, s.streamType, s.nPackets, s.payloadBytes, s.nPusi,
-            s.ccErrors == 0)
-        }
-      })
+    * Same per-record shape: blobs never cross a shuffle, only scalar
+    * stat rows do. */
+  def tsDemuxStatsBatched(media: DataFrame): Dataset[TsEsRow] =
+    perRecord(media, "tsDemuxStatsBatched", TsCodec.Mimes) { r =>
+      val d = TsCodec.parse(r.doc_id, r.content)
+      d.streams.map { s =>
+        TsEsRow(r.doc_id, d.programNumber, d.pmtPid, d.pcrPid,
+          s.pid, s.streamType, s.nPackets, s.payloadBytes, s.nPusi,
+          s.ccErrors == 0)
+      }
     }
-  }
 
   /** One FLAC payload's metadata layer as a row — [[FlacCodec]]'s
     * STREAMINFO facts plus the block inventory (`block_types` is the
@@ -766,28 +721,20 @@ object Multimodal {
       bits: Int, total_samples: Long, n_blocks: Int, block_types: String,
       frame_bytes: Long)
 
-  /** Batched REAL FLAC metadata decode: every payload's metadata-block
+  /** REAL FLAC metadata decode: every payload's metadata-block
     * chain through [[FlacCodec.parse]] — the FLAC member of the
     * audio-metadata family ([[decodeAudioBatched]] owns WAV/AIFF/AU via
     * javax.sound; FLAC's packed STREAMINFO bitfields need the
     * self-written walker). Audio FRAMES are Rice/LPC entropy-coded —
-    * counted, never decoded (the documented codec seam). Same batched
-    * mapPartitions shape: blobs never cross a shuffle. */
-  def flacMetaBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[FlacMetaRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        require(FlacCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: flacMetaBatched expects a FLAC mime, " +
-            s"got ${r.mime}")
-        val m = FlacCodec.parse(r.doc_id, r.content)
-        FlacMetaRow(r.doc_id, m.sampleRate, m.channels, m.bitsPerSample,
-          m.totalSamples, m.blockTypes.size, m.blockTypes.mkString(","),
-          m.frameBytes)
-      })
+    * counted, never decoded (the documented codec seam). Same
+    * per-record shape: blobs never cross a shuffle. */
+  def flacMetaBatched(media: DataFrame): Dataset[FlacMetaRow] =
+    perRecord(media, "flacMetaBatched", FlacCodec.Mimes) { r =>
+      val m = FlacCodec.parse(r.doc_id, r.content)
+      Some(FlacMetaRow(r.doc_id, m.sampleRate, m.channels, m.bitsPerSample,
+        m.totalSamples, m.blockTypes.size, m.blockTypes.mkString(","),
+        m.frameBytes))
     }
-  }
 
   /** One WARC record as a row — [[WarcCodec]]'s framing facts, the
     * HTTP split of `response` records, and the document payload bytes
@@ -800,32 +747,23 @@ object Multimodal {
       content_length: Int, http_status: Int, http_header_bytes: Int,
       payload: Array[Byte], member_bytes: Int)
 
-  /** Batched REAL WARC ingest: every payload (plain or Common-Crawl
+  /** REAL WARC ingest: every payload (plain or Common-Crawl
     * member-gzipped `.warc.gz`, auto-detected) through
     * [[WarcCodec.parse]] — gzip members inflated + CRC-checked, WARC
     * framing walked, `response` records' HTTP layer split so the
     * payload column holds exactly the document bytes. One output row
-    * per record. Same batched mapPartitions shape as the media
-    * decoders: archive blobs never cross a shuffle, downstream stages
-    * project the scalar facts (or a payload hash) before any keyed
-    * op. */
-  def warcRecordsBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[WarcRecordRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        require(WarcCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: warcRecordsBatched expects a WARC mime, " +
-            s"got ${r.mime}")
-        WarcCodec.parse(r.doc_id, r.content).zipWithIndex.map {
-          case (p, i) =>
-            WarcRecordRow(r.doc_id, i, p.warcType, p.targetUri, p.date,
-              p.contentType, p.contentLength, p.httpStatus,
-              p.httpHeaderBytes, p.payload, p.memberBytes)
-        }
-      })
+    * per record. Same per-record shape as the media decoders: archive
+    * blobs never cross a shuffle, downstream stages project the scalar
+    * facts (or a payload hash) before any keyed op. */
+  def warcRecordsBatched(media: DataFrame): Dataset[WarcRecordRow] =
+    perRecord(media, "warcRecordsBatched", WarcCodec.Mimes) { r =>
+      WarcCodec.parse(r.doc_id, r.content).zipWithIndex.map {
+        case (p, i) =>
+          WarcRecordRow(r.doc_id, i, p.warcType, p.targetUri, p.date,
+            p.contentType, p.contentLength, p.httpStatus,
+            p.httpHeaderBytes, p.payload, p.memberBytes)
+      }
     }
-  }
 
   /** One MP3's metadata layers as a row — [[Mp3Codec]]'s ID3v2 text
     * facts plus the MPEG frame-walk facts. */
@@ -833,53 +771,36 @@ object Multimodal {
       tag_bytes: Int, n_frames: Int, bitrate_kbps: Int, sample_rate: Int,
       channels: Int, audio_bytes: Long, duration_ms: Long)
 
-  /** Batched REAL MP3 metadata decode: ID3v2.3 tag walk + MPEG-1
+  /** REAL MP3 metadata decode: ID3v2.3 tag walk + MPEG-1
     * Layer III frame-header walk through [[Mp3Codec.parse]] — the
     * compressed-audio member of the audio-metadata family (javax.sound
     * owns WAV/AIFF/AU, [[FlacCodec]] owns FLAC). Huffman frame
     * payloads are counted, never decoded (the documented entropy-codec
-    * seam). Same batched mapPartitions shape: blobs never cross a
-    * shuffle. */
-  def mp3MetaBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[Mp3MetaRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        require(Mp3Codec.Mimes(r.mime),
-          s"doc ${r.doc_id}: mp3MetaBatched expects an MP3 mime, " +
-            s"got ${r.mime}")
-        val m = Mp3Codec.parse(r.doc_id, r.content)
-        Mp3MetaRow(r.doc_id, m.title, m.artist, m.tagBytes, m.nFrames,
-          m.bitrateKbps, m.sampleRate, m.channels, m.audioBytes,
-          m.durationMs)
-      })
+    * seam). Same per-record shape: blobs never cross a shuffle. */
+  def mp3MetaBatched(media: DataFrame): Dataset[Mp3MetaRow] =
+    perRecord(media, "mp3MetaBatched", Mp3Codec.Mimes) { r =>
+      val m = Mp3Codec.parse(r.doc_id, r.content)
+      Some(Mp3MetaRow(r.doc_id, m.title, m.artist, m.tagBytes, m.nFrames,
+        m.bitrateKbps, m.sampleRate, m.channels, m.audioBytes,
+        m.durationMs))
     }
-  }
 
   /** One parsed ADTS stream as a row ([[AdtsCodec]]). */
   case class AdtsMetaRow(doc_id: Long, n_frames: Int, profile: Int,
       sample_rate: Int, channels: Int, audio_bytes: Long, duration_ms: Long,
       crc_frames: Int)
 
-  /** Batched REAL ADTS transport walk: every payload's frame headers
+  /** REAL ADTS transport walk: every payload's frame headers
     * through [[AdtsCodec.parse]] — the raw-AAC ingest surface next to
     * MP3's ([[mp3MetaBatched]]); framing is byte-exact, the AAC raw
-    * data block stays the documented entropy-codec seam. Same batched
-    * mapPartitions shape: audio blobs never cross a shuffle. */
-  def adtsMetaBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[AdtsMetaRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        require(AdtsCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: adtsMetaBatched expects an AAC mime, " +
-            s"got ${r.mime}")
-        val m = AdtsCodec.parse(r.doc_id, r.content)
-        AdtsMetaRow(r.doc_id, m.nFrames, m.profile, m.sampleRate,
-          m.channels, m.audioBytes, m.durationMs, m.crcFrames)
-      })
+    * data block stays the documented entropy-codec seam. Same
+    * per-record shape: audio blobs never cross a shuffle. */
+  def adtsMetaBatched(media: DataFrame): Dataset[AdtsMetaRow] =
+    perRecord(media, "adtsMetaBatched", AdtsCodec.Mimes) { r =>
+      val m = AdtsCodec.parse(r.doc_id, r.content)
+      Some(AdtsMetaRow(r.doc_id, m.nFrames, m.profile, m.sampleRate,
+        m.channels, m.audioBytes, m.durationMs, m.crcFrames))
     }
-  }
 
   /** One parsed H.264 Annex-B stream as a row ([[H264Codec]]). */
   case class H264MetaRow(doc_id: Long, width: Int, height: Int,
@@ -887,28 +808,20 @@ object Multimodal {
       n_idr: Int, n_nonidr: Int, slice_rbsp_bytes: Long,
       slice_rbsp_sum: Long)
 
-  /** Batched REAL H.264 NAL transport walk: every payload's Annex-B
+  /** REAL H.264 NAL transport walk: every payload's Annex-B
     * start codes, NAL headers, emulation-prevention layer and
     * exp-Golomb SPS through [[H264Codec.parse]] — the compressed-video
     * ingest surface next to raw AAC's ([[adtsMetaBatched]]); the NAL
     * framing and SPS geometry are bit-exact, the slice entropy data
-    * stays the documented codec seam. Same batched mapPartitions
-    * shape: video blobs never cross a shuffle. */
-  def h264MetaBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[H264MetaRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        require(H264Codec.Mimes(r.mime),
-          s"doc ${r.doc_id}: h264MetaBatched expects an H.264 mime, " +
-            s"got ${r.mime}")
-        val m = H264Codec.parse(r.doc_id, r.content)
-        H264MetaRow(r.doc_id, m.width, m.height, m.profile, m.level,
-          m.maxFrameNum, m.chromaFormat, m.nIdr, m.nNonIdr,
-          m.sliceRbspBytes, m.sliceRbspSum)
-      })
+    * stays the documented codec seam. Same per-record shape: video
+    * blobs never cross a shuffle. */
+  def h264MetaBatched(media: DataFrame): Dataset[H264MetaRow] =
+    perRecord(media, "h264MetaBatched", H264Codec.Mimes) { r =>
+      val m = H264Codec.parse(r.doc_id, r.content)
+      Some(H264MetaRow(r.doc_id, m.width, m.height, m.profile, m.level,
+        m.maxFrameNum, m.chromaFormat, m.nIdr, m.nNonIdr,
+        m.sliceRbspBytes, m.sliceRbspSum))
     }
-  }
 
   /** One demux→reassemble→NAL-walk chain result as a row: transport
     * facts from [[TsCodec]], stream facts from [[H264Codec]]. */
@@ -917,65 +830,49 @@ object Multimodal {
       level: Int, max_frame_num: Int, n_idr: Int, n_nonidr: Int,
       slice_rbsp_bytes: Long, slice_rbsp_sum: Long)
 
-  /** Batched REAL broadcast-video ingest chain: demux the transport
+  /** REAL broadcast-video ingest chain: demux the transport
     * stream ([[TsCodec.parse]] — PSI + packet stats), locate the H.264
     * PID from the PMT's stream_type registry (0x1B), reassemble its
     * payload under strict continuity, strip the PES header, and walk
     * the recovered Annex-B elementary stream ([[H264Codec.parse]]) —
     * the full path an HLS segment takes from storage to per-stream
     * metadata. Every stage validates; corrupt transport fails loudly
-    * with the doc id. Same batched mapPartitions shape: segment blobs
-    * never cross a shuffle. */
-  def tsH264ChainBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[TsH264Row] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        require(TsCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: tsH264ChainBatched expects an MPEG-TS " +
-            s"mime, got ${r.mime}")
-        val d = TsCodec.parse(r.doc_id, r.content)
-        val h264 = d.streams.filter(_.streamType == 0x1b)
-        require(h264.size == 1,
-          s"doc ${r.doc_id}: expected exactly one H.264 PID in the " +
-            s"PMT, found ${h264.size}")
-        val st = h264.head
-        require(st.ccErrors == 0,
-          s"doc ${r.doc_id}: ${st.ccErrors} continuity errors on the " +
-            "video PID — refusing to parse a torn stream")
-        val es = TsCodec.pesUnwrap(r.doc_id,
-          TsCodec.reassemble(r.doc_id, r.content, st.pid))
-        val m = H264Codec.parse(r.doc_id, es)
-        TsH264Row(r.doc_id, d.nPackets, st.payloadBytes, m.width,
-          m.height, m.profile, m.level, m.maxFrameNum, m.nIdr,
-          m.nNonIdr, m.sliceRbspBytes, m.sliceRbspSum)
-      })
+    * with the doc id. Same per-record shape: segment blobs never cross
+    * a shuffle. */
+  def tsH264ChainBatched(media: DataFrame): Dataset[TsH264Row] =
+    perRecord(media, "tsH264ChainBatched", TsCodec.Mimes) { r =>
+      val d = TsCodec.parse(r.doc_id, r.content)
+      val h264 = d.streams.filter(_.streamType == 0x1b)
+      require(h264.size == 1,
+        s"doc ${r.doc_id}: expected exactly one H.264 PID in the " +
+          s"PMT, found ${h264.size}")
+      val st = h264.head
+      require(st.ccErrors == 0,
+        s"doc ${r.doc_id}: ${st.ccErrors} continuity errors on the " +
+          "video PID — refusing to parse a torn stream")
+      val es = TsCodec.pesUnwrap(r.doc_id,
+        TsCodec.reassemble(r.doc_id, r.content, st.pid))
+      val m = H264Codec.parse(r.doc_id, es)
+      Some(TsH264Row(r.doc_id, d.nPackets, st.payloadBytes, m.width,
+        m.height, m.profile, m.level, m.maxFrameNum, m.nIdr,
+        m.nNonIdr, m.sliceRbspBytes, m.sliceRbspSum))
     }
-  }
 
   /** One WebVTT cue as a row ([[VttCodec]]). */
   case class VttCueRow(doc_id: Long, cue_idx: Int, start_ms: Long,
       end_ms: Long, cue_text: String)
 
-  /** Batched REAL WebVTT parse: every payload's cue blocks through
+  /** REAL WebVTT parse: every payload's cue blocks through
     * [[VttCodec.parse]] — the caption side of video-text training
-    * pairs; one output row per cue. Same batched mapPartitions shape:
-    * subtitle blobs never cross a shuffle, downstream alignment joins
-    * on scalar (doc, time) columns. */
-  def vttCuesBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[VttCueRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        require(VttCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: vttCuesBatched expects a WebVTT mime, " +
-            s"got ${r.mime}")
-        VttCodec.parse(r.doc_id, new String(r.content, "UTF-8")).map { c =>
-          VttCueRow(r.doc_id, c.idx, c.startMs, c.endMs, c.text)
-        }
-      })
+    * pairs; one output row per cue. Same per-record shape: subtitle
+    * blobs never cross a shuffle, downstream alignment joins on scalar
+    * (doc, time) columns. */
+  def vttCuesBatched(media: DataFrame): Dataset[VttCueRow] =
+    perRecord(media, "vttCuesBatched", VttCodec.Mimes) { r =>
+      VttCodec.parse(r.doc_id, new String(r.content, "UTF-8")).map { c =>
+        VttCueRow(r.doc_id, c.idx, c.startMs, c.endMs, c.text)
+      }
     }
-  }
 
   /** One tar member as a row ([[TarCodec]]): the WebDataset convention
     * keys samples by the member name's dot-prefix (`00042.txt` →
@@ -984,29 +881,21 @@ object Multimodal {
   case class TarMemberRow(doc_id: Long, sample_key: String, field: String,
       size: Int, payload: Array[Byte])
 
-  /** Batched REAL WebDataset shard ingest: every tar payload's members
+  /** REAL WebDataset shard ingest: every tar payload's members
     * through [[TarCodec.parse]] (header checksums verified), one row
-    * per member with the sample key / field split. Same batched
-    * mapPartitions shape: archive blobs never cross a shuffle — only
-    * member rows (or their hashes) reach a keyed op. */
-  def webdatasetMembersBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[TarMemberRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        require(TarCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: webdatasetMembersBatched expects a tar " +
-            s"mime, got ${r.mime}")
-        TarCodec.parse(r.doc_id, r.content).map { m =>
-          val dot = m.name.lastIndexOf('.')
-          val (key, field) =
-            if (dot > 0) (m.name.substring(0, dot), m.name.substring(dot + 1))
-            else (m.name, "")
-          TarMemberRow(r.doc_id, key, field, m.size, m.data)
-        }
-      })
+    * per member with the sample key / field split. Same per-record
+    * shape: archive blobs never cross a shuffle — only member rows (or
+    * their hashes) reach a keyed op. */
+  def webdatasetMembersBatched(media: DataFrame): Dataset[TarMemberRow] =
+    perRecord(media, "webdatasetMembersBatched", TarCodec.Mimes) { r =>
+      TarCodec.parse(r.doc_id, r.content).map { m =>
+        val dot = m.name.lastIndexOf('.')
+        val (key, field) =
+          if (dot > 0) (m.name.substring(0, dot), m.name.substring(dot + 1))
+          else (m.name, "")
+        TarMemberRow(r.doc_id, key, field, m.size, m.data)
+      }
     }
-  }
 
   /** One zip member as a row, in central-directory order
     * ([[ZipCodec]]): `member_idx` is the directory position, `method`
@@ -1015,27 +904,19 @@ object Multimodal {
   case class ZipMemberRow(doc_id: Long, member_idx: Int, name: String,
       method: Int, size: Int, payload: Array[Byte])
 
-  /** Batched REAL zip-shard walk: every payload through
-    * [[ZipCodec.parse]] — end-record tail scan, central-directory
-    * walk, local-header cross-checks, stored + deflate decode, CRC-32
-    * verification per member. Same batched mapPartitions shape as the
-    * tar/WARC walks: archive blobs never cross a shuffle; downstream
-    * queries reduce payloads to sizes/hashes before any exchange. */
-  def zipMembersBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[ZipMemberRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        require(ZipCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: zipMembersBatched expects a zip mime, " +
-            s"got ${r.mime}")
-        ZipCodec.parse(r.doc_id, r.content).zipWithIndex.map {
-          case (m, i) =>
-            ZipMemberRow(r.doc_id, i, m.name, m.method, m.size, m.data)
-        }
-      })
+  /** REAL zip-shard walk: every payload through [[ZipCodec.parse]] —
+    * end-record tail scan, central-directory walk, local-header
+    * cross-checks, stored + deflate decode, CRC-32 verification per
+    * member. Same per-record shape as the tar/WARC walks: archive blobs
+    * never cross a shuffle; downstream queries reduce payloads to
+    * sizes/hashes before any exchange. */
+  def zipMembersBatched(media: DataFrame): Dataset[ZipMemberRow] =
+    perRecord(media, "zipMembersBatched", ZipCodec.Mimes) { r =>
+      ZipCodec.parse(r.doc_id, r.content).zipWithIndex.map {
+        case (m, i) =>
+          ZipMemberRow(r.doc_id, i, m.name, m.method, m.size, m.data)
+      }
     }
-  }
 
   /** One extracted PDF page as a row ([[PdfCodec]]): `text` is the
     * decoded show-operator text in operator order, `n_text_ops` the
@@ -1044,120 +925,94 @@ object Multimodal {
   case class PdfPageRow(doc_id: Long, page_idx: Int, text: String,
       n_text_ops: Int, content_bytes: Int, flate: Boolean)
 
-  /** Batched REAL PDF text extraction: every payload through
+  /** REAL PDF text extraction: every payload through
     * [[PdfCodec.parse]] — startxref tail scan, classic xref walk,
     * trailer checks (encrypted / xref-stream / incremental files fail
     * loudly), catalog→pages→contents object walk, plain + FlateDecode
     * stream decode, BT/ET + Tj/TJ text scan with the full literal-string
-    * escape set. Same batched mapPartitions shape as the archive walks:
-    * document blobs never cross a shuffle — downstream queries reduce
-    * each page to text hashes/counters before any exchange. */
-  def pdfPagesBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[PdfPageRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        require(PdfCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: pdfPagesBatched expects a pdf mime, " +
-            s"got ${r.mime}")
-        PdfCodec.parse(r.doc_id, r.content).pages.zipWithIndex.map {
-          case (p, i) =>
-            PdfPageRow(r.doc_id, i, p.text, p.nTextOps, p.contentBytes,
-              p.flate)
-        }
-      })
+    * escape set. Same per-record shape as the archive walks: document
+    * blobs never cross a shuffle — downstream queries reduce each page
+    * to text hashes/counters before any exchange. */
+  def pdfPagesBatched(media: DataFrame): Dataset[PdfPageRow] =
+    perRecord(media, "pdfPagesBatched", PdfCodec.Mimes) { r =>
+      PdfCodec.parse(r.doc_id, r.content).pages.zipWithIndex.map {
+        case (p, i) =>
+          PdfPageRow(r.doc_id, i, p.text, p.nTextOps, p.contentBytes,
+            p.flate)
+      }
     }
-  }
 
   /** One Ogg stream's page-layer facts as a row ([[OggCodec]]). */
   case class OggMetaRow(doc_id: Long, serial: Int, n_pages: Int,
       n_packets: Int, payload_bytes: Long, last_granule: Long,
       bos_ok: Boolean, eos_ok: Boolean)
 
-  /** Batched REAL Ogg page walk: every payload's page layer through
+  /** REAL Ogg page walk: every payload's page layer through
     * [[OggCodec.parse]] (CRC-verified pages, lacing-framed packet
     * counting, BOS/EOS accounting) — the Opus/Vorbis transport member
     * of the audio-container family. Codec packets are counted, never
-    * decoded (the documented entropy-codec seam). Same batched
-    * mapPartitions shape: blobs never cross a shuffle. */
-  def oggMetaBatched(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[OggMetaRow] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
-        require(OggCodec.Mimes(r.mime),
-          s"doc ${r.doc_id}: oggMetaBatched expects an Ogg mime, " +
-            s"got ${r.mime}")
-        val m = OggCodec.parse(r.doc_id, r.content)
-        OggMetaRow(r.doc_id, m.serial, m.nPages, m.nPackets,
-          m.payloadBytes, m.lastGranule, m.bosOk, m.eosOk)
-      })
+    * decoded (the documented entropy-codec seam). Same per-record
+    * shape: blobs never cross a shuffle. */
+  def oggMetaBatched(media: DataFrame): Dataset[OggMetaRow] =
+    perRecord(media, "oggMetaBatched", OggCodec.Mimes) { r =>
+      val m = OggCodec.parse(r.doc_id, r.content)
+      Some(OggMetaRow(r.doc_id, m.serial, m.nPages, m.nPackets,
+        m.payloadBytes, m.lastGranule, m.bosOk, m.eosOk))
     }
-  }
 
   case class FrameFeatures(doc_id: Long, frame_idx: Int, width: Int,
       height: Int, grid: Array[Float])
 
-  /** Batched REAL sampled-frame feature extraction for video containers:
+  /** REAL sampled-frame feature extraction for video containers:
     * frames `0, everyN, 2·everyN, …` of each AVI payload are located by
     * the chunk-size walk (skipped frames cost a header read, not a
     * decode), decoded from their BGR24 pixels, and pooled into a
     * `g`×`g` mean-luma grid each — the per-frame rows an aggregate
-    * turns into one per-doc embedding (see q111). Same batched
-    * mapPartitions shape as [[decodeFramesBatched]]; blobs never cross
-    * a shuffle, only (doc, frame, g²-float) rows do. */
-  def videoFrameGridsBatched(spark: SparkSession, media: DataFrame,
-      everyN: Int, g: Int, batchSize: Int = 64): Dataset[FrameFeatures] = {
-    import spark.implicits._
+    * turns into one per-doc embedding (see q111). Same per-record
+    * shape as [[decodeFramesBatched]]; blobs never cross a shuffle,
+    * only (doc, frame, g²-float) rows do. */
+  def videoFrameGridsBatched(media: DataFrame, everyN: Int,
+      g: Int): Dataset[FrameFeatures] = {
     require(everyN >= 1, s"everyN must be >= 1, got $everyN")
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        if (Mp4Codec.Mimes(r.mime)) {
-          // REAL MP4 sample extraction: the stsc×stsz×stco expansion
-          // yields per-frame byte ranges; intra-frame 'jpeg' samples
-          // decode through the JDK like AVI-MJPG frame chunks do.
-          val c = Mp4Codec.parse(r.doc_id, r.content)
-          val v = c.tracks.find(t => t.handler == "vide" && t.samples.nonEmpty)
-            .getOrElse(throw new IllegalArgumentException(
-              s"doc ${r.doc_id}: MP4 has no 'vide' track with a sample table"))
-          require(v.codec == "jpeg",
-            s"doc ${r.doc_id}: MP4 video sample format '${v.codec}' is " +
-              "inter-frame/entropy-coded and needs a codec library (the " +
-              "documented seam); only intra-frame 'jpeg' samples decode here")
-          (0 until v.samples.size by everyN).map { f =>
-            val (off, sz) = v.samples(f)
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.content, off.toInt, sz.toInt))
-            require(img != null,
-              s"doc ${r.doc_id}: MP4 sample $f is not a decodable JPEG image")
-            FrameFeatures(r.doc_id, f, img.getWidth, img.getHeight,
-              ImageIoCodec.lumaGrid(img, g))
-          }
-        } else if (Y4mCodec.Mimes(r.mime)) {
-          // REAL Y4M path: the FRAME-marker walk yields plane offsets;
-          // luma is the native Y plane, pooled with the same exact
-          // integer statistics as the image path (no RGB roundtrip).
-          val c = Y4mCodec.parse(r.doc_id, r.content)
-          (0 until c.nFrames by everyN).map { f =>
-            FrameFeatures(r.doc_id, f, c.width, c.height,
-              Y4mCodec.frameLumaGrid(r.doc_id, r.content, c, f, g))
-          }
-        } else {
-          require(AviCodec.Mimes(r.mime),
-            s"doc ${r.doc_id}: no video frame decoder for mime ${r.mime}")
-          val c = AviCodec.parse(r.doc_id, r.content)
-          val vids = c.streams.find(_.fccType == "vids").getOrElse(
-            throw new IllegalArgumentException(
-              s"doc ${r.doc_id}: AVI has no vids stream"))
-          val chunks = AviCodec.videoFrameChunks(r.doc_id, r.content, c)
-          (0 until chunks.size by everyN).map { f =>
-            val (off, sz) = chunks(f)
-            val img = AviCodec.decodeFrame(r.doc_id, r.content, off, sz, vids)
-            FrameFeatures(r.doc_id, f, img.getWidth, img.getHeight,
-              ImageIoCodec.lumaGrid(img, g))
-          }
+    perRecord(media, "videoFrameGridsBatched",
+        Mp4Codec.Mimes ++ Y4mCodec.Mimes ++ AviCodec.Mimes) { r =>
+      if (Mp4Codec.Mimes(r.mime)) {
+        // REAL MP4 sample extraction: the stsc×stsz×stco expansion
+        // yields per-frame byte ranges; intra-frame 'jpeg' samples
+        // decode through the JDK like AVI-MJPG frame chunks do.
+        val c = Mp4Codec.parse(r.doc_id, r.content)
+        val v = c.tracks.find(t => t.handler == "vide" && t.samples.nonEmpty)
+          .getOrElse(throw new IllegalArgumentException(
+            s"doc ${r.doc_id}: MP4 has no 'vide' track with a sample table"))
+        require(v.codec == "jpeg",
+          s"doc ${r.doc_id}: MP4 video sample format '${v.codec}' is " +
+            "inter-frame/entropy-coded and needs a codec library (the " +
+            "documented seam); only intra-frame 'jpeg' samples decode here")
+        (0 until v.samples.size by everyN).map { f =>
+          val (off, sz) = v.samples(f)
+          val img = ImageIoCodec.read(r.doc_id, s"MP4 sample $f", r.content,
+            off.toInt, sz.toInt)
+          FrameFeatures(r.doc_id, f, img.getWidth, img.getHeight,
+            ImageIoCodec.lumaGrid(img, g))
         }
-      })
+      } else if (Y4mCodec.Mimes(r.mime)) {
+        // REAL Y4M path: the FRAME-marker walk yields plane offsets;
+        // luma is the native Y plane, pooled with the same exact
+        // integer statistics as the image path (no RGB roundtrip).
+        val c = Y4mCodec.parse(r.doc_id, r.content)
+        (0 until c.nFrames by everyN).map { f =>
+          FrameFeatures(r.doc_id, f, c.width, c.height,
+            Y4mCodec.frameLumaGrid(r.doc_id, r.content, c, f, g))
+        }
+      } else {
+        val (vids, chunks) = AviCodec.videoFrames(r.doc_id, r.content)
+        (0 until chunks.size by everyN).map { f =>
+          val (off, sz) = chunks(f)
+          val img = AviCodec.decodeFrame(r.doc_id, r.content, off, sz, vids)
+          FrameFeatures(r.doc_id, f, img.getWidth, img.getHeight,
+            ImageIoCodec.lumaGrid(img, g))
+        }
+      }
     }
   }
 
@@ -1199,41 +1054,30 @@ object Multimodal {
     * frames are decoded to pixels; skipped frames cost a header seek, not
     * a decode — and emits each sampled frame's dimensions plus its mean
     * luma (the 1×1 [[ImageIoCodec.lumaGrid]] pool, i.e. the real pixel
-    * statistic per frame). Same batched mapPartitions shape as
-    * [[decodeBatched]]: blobs never cross a shuffle; the output is
-    * (doc, frame) rows of five scalars. */
-  def decodeFramesBatched(spark: SparkSession, media: DataFrame,
-      everyN: Int, batchSize: Int = 64): Dataset[FrameMeta] = {
-    import spark.implicits._
+    * statistic per frame). Same per-record shape as [[decodeBatched]]:
+    * blobs never cross a shuffle; the output is (doc, frame) rows of
+    * five scalars. */
+  def decodeFramesBatched(media: DataFrame, everyN: Int): Dataset[FrameMeta] = {
     require(everyN >= 1, s"everyN must be >= 1, got $everyN")
-    media.as[MediaRecord].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
-        if (AviCodec.Mimes(r.mime)) {
-          // REAL video path: same sampled walk, AviCodec frames
-          val c = AviCodec.parse(r.doc_id, r.content)
-          val vids = c.streams.find(_.fccType == "vids").getOrElse(
-            throw new IllegalArgumentException(
-              s"doc ${r.doc_id}: AVI has no vids stream"))
-          val chunks = AviCodec.videoFrameChunks(r.doc_id, r.content, c)
-          (0 until chunks.size by everyN).map { f =>
-            val (off, sz) = chunks(f)
-            val img = AviCodec.decodeFrame(r.doc_id, r.content, off, sz, vids)
-            FrameMeta(r.doc_id, f, img.getWidth, img.getHeight,
-              ImageIoCodec.lumaGrid(img, 1)(0).toDouble)
-          }
-        } else {
-          require(ImageIoCodec.Mimes(r.mime),
-            s"doc ${r.doc_id}: no frame decoder for mime ${r.mime}")
-          ImageIoCodec.withImageReader(r) { reader =>
-            val n = reader.getNumImages(true)
-            (0 until n by everyN).map { f =>
-              val img = reader.read(f)
-              FrameMeta(r.doc_id, f, img.getWidth, img.getHeight,
-                ImageIoCodec.lumaGrid(img, 1)(0).toDouble)
-            }
-          }
+    perRecord(media, "decodeFramesBatched",
+        AviCodec.Mimes ++ ImageIoCodec.Mimes) { r =>
+      if (AviCodec.Mimes(r.mime)) {
+        // REAL video path: same sampled walk, AviCodec frames
+        val (vids, chunks) = AviCodec.videoFrames(r.doc_id, r.content)
+        (0 until chunks.size by everyN).map { f =>
+          val (off, sz) = chunks(f)
+          val img = AviCodec.decodeFrame(r.doc_id, r.content, off, sz, vids)
+          FrameMeta(r.doc_id, f, img.getWidth, img.getHeight,
+            ImageIoCodec.lumaGrid(img, 1)(0).toDouble)
         }
-      })
+      } else ImageIoCodec.withImageReader(r) { reader =>
+        val n = reader.getNumImages(true)
+        (0 until n by everyN).map { f =>
+          val img = reader.read(f)
+          FrameMeta(r.doc_id, f, img.getWidth, img.getHeight,
+            ImageIoCodec.lumaGrid(img, 1)(0).toDouble)
+        }
+      }
     }
   }
 }

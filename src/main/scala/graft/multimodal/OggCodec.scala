@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import ByteFields._
+
 /** Ogg container codec — self-written page walker + writer for the
   * transport every Opus/Vorbis audio file on the open web ships in
   * (public spec: RFC 3533). After MP3/FLAC this is the remaining
@@ -109,15 +111,6 @@ object OggCodec {
     out.toByteArray
   }
 
-  private def putLe32(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-    b(off + 2) = ((v >> 16) & 0xff).toByte; b(off + 3) = ((v >>> 24) & 0xff).toByte
-  }
-
-  private def le32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) |
-      ((b(o + 3) & 0xff) << 24)
-
   // ------------------------------------------------------------- walker
 
   /** Walk every page: magic, version, CRC (recomputed with the field
@@ -142,15 +135,15 @@ object OggCodec {
       var granule = 0L
       var i = 7
       while (i >= 0) { granule = (granule << 8) | (bytes(o + 6 + i) & 0xff); i -= 1 }
-      val ser = le32(bytes, o + 14)
-      val seq = le32(bytes, o + 18)
+      val ser = getLe32(bytes, o + 14)
+      val seq = getLe32(bytes, o + 18)
       if (nPages == 0) serial = ser
       else require(ser == serial,
         s"doc $docId: page $seq switches serial (multiplexed streams " +
           "are out of scope here)")
       require(seq == nPages,
         s"doc $docId: page sequence gap (expected $nPages, got $seq)")
-      val storedCrc = le32(bytes, o + 22)
+      val storedCrc = getLe32(bytes, o + 22)
       val nSeg = bytes(o + 26) & 0xff
       require(o + 27 + nSeg <= bytes.length,
         s"doc $docId: page $seq segment table overruns the file")

@@ -290,7 +290,7 @@ object TsCodec {
     val sid = pes(3) & 0xff
     if (sid < 0xc0 || sid > 0xef)
       fail(s"PES stream_id 0x${sid.toHexString} outside audio/video range")
-    val plen = ((pes(4) & 0xff) << 8) | (pes(5) & 0xff)
+    val plen = ByteFields.getBe16(pes, 4)
     if (plen != 0 && plen != pes.length - 6)
       fail(s"bounded PES length $plen does not match payload ${pes.length - 6}")
     if ((pes(6) & 0xc0) != 0x80) fail("PES marker bits are not '10'")
@@ -453,8 +453,7 @@ object TsCodec {
         require(sec.dataLen == 4,
           s"doc $docId: multi-program PAT (${sec.dataLen / 4} entries) — " +
             "single-program TS only; out of scope")
-        programNumber = ((bytes(sec.data) & 0xff) << 8) |
-          (bytes(sec.data + 1) & 0xff)
+        programNumber = ByteFields.getBe16(bytes, sec.data)
         pmtPid = ((bytes(sec.data + 2) & 0x1f) << 8) |
           (bytes(sec.data + 3) & 0xff)
       } else if (pid == pmtPid) { // ---- PMT

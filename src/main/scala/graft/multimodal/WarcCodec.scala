@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import ByteFields._
+
 /** WARC web-archive codec — self-written reader + writer for the
   * format LLM pretraining corpora are actually mined from (public
   * spec: ISO 28500 / WARC 1.1; Common Crawl ships every crawl as
@@ -132,7 +134,7 @@ object WarcCodec {
       var h = o + 10
       if ((flg & 0x04) != 0) { // FEXTRA
         require(h + 2 <= bytes.length, s"doc $docId: truncated FEXTRA at $h")
-        val xlen = (bytes(h) & 0xff) | ((bytes(h + 1) & 0xff) << 8)
+        val xlen = getLe16(bytes, h)
         h += 2 + xlen
       }
       if ((flg & 0x08) != 0) h = skipZeroTerminated(docId, bytes, h) // FNAME
@@ -164,10 +166,10 @@ object WarcCodec {
         s"doc $docId: gzip member at $o missing its 8-byte trailer")
       val plain = body.toByteArray
       val crc = new java.util.zip.CRC32(); crc.update(plain)
-      val wantCrc = u32le(bytes, trailerAt)
+      val wantCrc = getLeU32(bytes, trailerAt)
       require(crc.getValue == wantCrc,
         s"doc $docId: gzip member at $o CRC mismatch")
-      val wantIsize = u32le(bytes, trailerAt + 4)
+      val wantIsize = getLeU32(bytes, trailerAt + 4)
       require((plain.length.toLong & 0xffffffffL) == wantIsize,
         s"doc $docId: gzip member at $o ISIZE mismatch")
       val next = trailerAt + 8
@@ -184,10 +186,6 @@ object WarcCodec {
     require(i < bytes.length, s"doc $docId: unterminated gzip header field")
     i + 1
   }
-
-  private def u32le(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL)) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
 
   /** Walk plain (already-inflated) WARC bytes record by record. */
   private def parsePlain(docId: Long,

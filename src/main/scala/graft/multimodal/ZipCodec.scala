@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import ByteFields._
+
 /** ZIP archive codec — self-written central-directory walker + writer
   * for the other container training shards actually ship in (next to
   * tar/WebDataset): many public image-text and document dumps
@@ -40,13 +42,6 @@ object ZipCodec {
 
   // ------------------------------------------------------------- writer
 
-  private def le16(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-  }
-  private def le32(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    out.write((v & 0xff).toInt); out.write(((v >>> 8) & 0xff).toInt)
-    out.write(((v >>> 16) & 0xff).toInt); out.write(((v >>> 24) & 0xff).toInt)
-  }
 
   /** Write one archive: local header + data per member (method 0 =
     * stored, 8 = raw deflate), then the central directory and the
@@ -76,38 +71,28 @@ object ZipCodec {
           buf.toByteArray
         }
       val offset = out.size()
-      le32(out, 0x04034b50L); le16(out, 20); le16(out, 0) // sig, need, flags
-      le16(out, method); le16(out, 0); le16(out, 0x21) // time 0, date epoch
-      le32(out, crc.getValue); le32(out, comp.length.toLong)
-      le32(out, data.length.toLong)
-      le16(out, nameB.length); le16(out, 0)
+      out.write(le32(0x04034b50L) ++ le16(20) ++ le16(0) ++ // sig, need, flags
+        le16(method) ++ le16(0) ++ le16(0x21) ++ // time 0, date epoch
+        le32(crc.getValue) ++ le32(comp.length) ++ le32(data.length) ++
+        le16(nameB.length) ++ le16(0))
       out.write(nameB); out.write(comp)
-      le32(central, 0x02014b50L); le16(central, 20); le16(central, 20)
-      le16(central, 0); le16(central, method)
-      le16(central, 0); le16(central, 0x21)
-      le32(central, crc.getValue); le32(central, comp.length.toLong)
-      le32(central, data.length.toLong)
-      le16(central, nameB.length); le16(central, 0); le16(central, 0)
-      le16(central, 0); le16(central, 0); le32(central, 0L)
-      le32(central, offset.toLong)
+      central.write(le32(0x02014b50L) ++ le16(20) ++ le16(20) ++
+        le16(0) ++ le16(method) ++ le16(0) ++ le16(0x21) ++
+        le32(crc.getValue) ++ le32(comp.length) ++ le32(data.length) ++
+        le16(nameB.length) ++ le16(0) ++ le16(0) ++ le16(0) ++ le16(0) ++
+        le32(0L) ++ le32(offset))
       central.write(nameB)
     }
     val cdOffset = out.size()
     val cd = central.toByteArray
     out.write(cd)
-    le32(out, 0x06054b50L); le16(out, 0); le16(out, 0)
-    le16(out, members.size); le16(out, members.size)
-    le32(out, cd.length.toLong); le32(out, cdOffset.toLong); le16(out, 0)
+    out.write(le32(0x06054b50L) ++ le16(0) ++ le16(0) ++
+      le16(members.size) ++ le16(members.size) ++
+      le32(cd.length) ++ le32(cdOffset) ++ le16(0))
     out.toByteArray
   }
 
   // ------------------------------------------------------------- walker
-
-  private def u16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
 
   /** Walk one archive in central-directory order, cross-checking each
     * local header and CRC-verifying every decoded payload. */
@@ -115,33 +100,33 @@ object ZipCodec {
     // end-of-central-directory: bounded tail scan (≤ 65535-byte comment)
     val minE = math.max(0, bytes.length - 22 - 0xffff)
     var e = bytes.length - 22
-    while (e >= minE && !(u32(bytes, e) == 0x06054b50L &&
-        e + 22 + u16(bytes, e + 20) == bytes.length)) e -= 1
+    while (e >= minE && !(getLeU32(bytes, e) == 0x06054b50L &&
+        e + 22 + getLe16(bytes, e + 20) == bytes.length)) e -= 1
     require(e >= minE && e >= 0,
       s"doc $docId: no end-of-central-directory record")
-    val n = u16(bytes, e + 10)
-    val cdSize = u32(bytes, e + 12)
-    var o = u32(bytes, e + 16).toInt
+    val n = getLe16(bytes, e + 10)
+    val cdSize = getLeU32(bytes, e + 12)
+    var o = getLeU32(bytes, e + 16).toInt
     require(o >= 0 && o + cdSize <= e,
       s"doc $docId: central directory overruns the end record")
-    require(n == u16(bytes, e + 8),
+    require(n == getLe16(bytes, e + 8),
       s"doc $docId: multi-disk archives are not supported")
     val out = scala.collection.mutable.ArrayBuffer[Member]()
     for (i <- 0 until n) {
-      require(o + 46 <= e && u32(bytes, o) == 0x02014b50L,
+      require(o + 46 <= e && getLeU32(bytes, o) == 0x02014b50L,
         s"doc $docId: central entry $i has a bad signature at $o")
-      val flags = u16(bytes, o + 8)
+      val flags = getLe16(bytes, o + 8)
       require((flags & 0x8) == 0,
         s"doc $docId: entry $i uses a data descriptor (streaming " +
           "writer) — not produced by this codec's writer")
-      val method = u16(bytes, o + 10)
-      val crc = u32(bytes, o + 16)
-      val csize = u32(bytes, o + 20).toInt
-      val usize = u32(bytes, o + 24).toInt
-      val nlen = u16(bytes, o + 28)
-      val xlen = u16(bytes, o + 30)
-      val clen = u16(bytes, o + 32)
-      val lofs = u32(bytes, o + 42).toInt
+      val method = getLe16(bytes, o + 10)
+      val crc = getLeU32(bytes, o + 16)
+      val csize = getLeU32(bytes, o + 20).toInt
+      val usize = getLeU32(bytes, o + 24).toInt
+      val nlen = getLe16(bytes, o + 28)
+      val xlen = getLe16(bytes, o + 30)
+      val clen = getLe16(bytes, o + 32)
+      val lofs = getLeU32(bytes, o + 42).toInt
       // name/extra/comment must fit inside the central directory BEFORE
       // the name bytes are read — a corrupt nlen (≤ 65535) would
       // otherwise overrun the buffer with an IndexOutOfBoundsException
@@ -155,10 +140,10 @@ object ZipCodec {
         s"doc $docId: member '$name' uncompressed size overflows")
       // cross-check the local header this entry points at
       require(lofs >= 0 && lofs + 30 <= bytes.length &&
-          u32(bytes, lofs) == 0x04034b50L,
+          getLeU32(bytes, lofs) == 0x04034b50L,
         s"doc $docId: member '$name' has a bad local header at $lofs")
-      val lnlen = u16(bytes, lofs + 26)
-      val lxlen = u16(bytes, lofs + 28)
+      val lnlen = getLe16(bytes, lofs + 26)
+      val lxlen = getLe16(bytes, lofs + 28)
       require(lofs + 30 + lnlen <= bytes.length,
         s"doc $docId: member '$name' local name overruns the archive")
       require(lnlen == nlen &&

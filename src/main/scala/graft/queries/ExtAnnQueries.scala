@@ -741,7 +741,7 @@ private[queries] trait ExtAnnQueries extends ExtQueryHelpers {
             AviCodec.encodeMjpg(Seq(img), rate = 10), "video/avi")
         }).toDF()
       def featsOf(ids: org.apache.spark.sql.Dataset[Long]): DataFrame =
-        Multimodal.videoFrameGridsBatched(spark, mediaOf(ids), everyN = 1, g = 2)
+        Multimodal.videoFrameGridsBatched(mediaOf(ids), everyN = 1, g = 2)
           .toDF()
           .select(col("doc_id").as("vec_id"), col("grid").as("embedding"))
       val ids = Tables.documents(spark, dir).select(col("doc_id"))

@@ -179,7 +179,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         javax.imageio.ImageIO.write(img, "png", out)
         Multimodal.MediaRecord(docId, out.toByteArray, "image/png")
       })
-    Multimodal.decodeBatched(spark, media.toDF()).toDF()
+    Multimodal.decodeBatched(media.toDF()).toDF()
       .select(col("doc_id"), col("mime"), col("width"), col("height"),
         col("n_frames"))
       .orderBy(col("doc_id"))
@@ -225,7 +225,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
         Multimodal.MediaRecord(docId, out.toByteArray, "audio/wav")
       })
-    Multimodal.decodeAudioBatched(spark, media.toDF()).toDF()
+    Multimodal.decodeAudioBatched(media.toDF()).toDF()
       .select(col("doc_id"), col("mime"), col("sample_rate"), col("channels"),
         col("n_samples"), col("duration_ms"))
       .orderBy(col("doc_id"))
@@ -279,10 +279,10 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         javax.imageio.ImageIO.write(img, "png", out)
         Multimodal.MediaRecord(docId, out.toByteArray, "image/png")
       }).toDF()
-    val corpus = Multimodal.extractFeaturesBatched(spark,
+    val corpus = Multimodal.extractFeaturesBatched(
       mediaOf(Tables.spread(Tables.documents(spark, dir))), dim = 16).toDF()
     // probes filter BEFORE the encode stage: 5 PNGs rendered, not the corpus twice
-    val probes = Multimodal.extractFeaturesBatched(spark,
+    val probes = Multimodal.extractFeaturesBatched(
       mediaOf(Tables.documents(spark, dir).where(col("doc_id") < 5)), dim = 16)
       .toDF()
       .select(col("doc_id").as("probe_id"), col("features").as("probe"))
@@ -366,7 +366,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         ios.close(); writer.dispose()
         Multimodal.MediaRecord(docId, out.toByteArray, "image/gif")
       }).toDF()
-    Multimodal.decodeFramesBatched(spark, media, everyN = 2).toDF()
+    Multimodal.decodeFramesBatched(media, everyN = 2).toDF()
       .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
         col("luma"))
       .orderBy(col("doc_id"), col("frame_idx"))
@@ -427,7 +427,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
         Multimodal.MediaRecord(docId, out.toByteArray, "audio/wav")
       }).toDF()
-    Multimodal.extractAudioFeaturesBatched(spark, media, cells = 4).toDF()
+    Multimodal.extractAudioFeaturesBatched(media, cells = 4).toDF()
       .select(col("doc_id"), col("sample_rate"), col("n_samples"),
         col("zero_crossings"),
         element_at(col("envelope"), 1).cast("double").as("env_0"),
@@ -485,7 +485,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
         Multimodal.MediaRecord(docId, out.toByteArray, "audio/wav")
       }).toDF()
-    Multimodal.resampleAudioBatched(spark, media, targetRate = 8000)
+    Multimodal.resampleAudioBatched(media, targetRate = 8000)
       .mapPartitions(_.map { r =>
         val (rate, s) = Multimodal.PcmCodec.samples(r)
         (r.doc_id, rate, s.length, s.map(_.toLong).sum, s.head, s.last)
@@ -590,7 +590,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           audio = Some((sr, new Array[Byte](ns * 2))))
         Multimodal.MediaRecord(docId, bytes, "video/avi")
       }).toDF()
-    Multimodal.decodeVideoStreamsBatched(spark, media).toDF()
+    Multimodal.decodeVideoStreamsBatched(media).toDF()
       .select(col("doc_id"), col("stream_idx"), col("stream_type"),
         col("width"), col("height"), col("length"), col("rate"),
         col("scale"), col("channels"), col("bits"))
@@ -659,7 +659,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           "video/avi")
       }).toDF()
     def featsOf(docs: DataFrame) =
-      Multimodal.videoFrameGridsBatched(spark, mediaOf(docs), everyN = 2, g = 2)
+      Multimodal.videoFrameGridsBatched(mediaOf(docs), everyN = 2, g = 2)
         .toDF()
         .groupBy(col("doc_id"))
         // dyadic sample counts make the float cast exact (scaladoc above)
@@ -747,7 +747,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId,
           AviCodec.encodeMjpg(frames, rate = 10), "video/avi")
       }).toDF()
-    Multimodal.videoFrameGridsBatched(spark, media, everyN = 1, g = 2).toDF()
+    Multimodal.videoFrameGridsBatched(media, everyN = 1, g = 2).toDF()
       .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
         element_at(col("grid"), 1).cast("int").as("q1"),
         element_at(col("grid"), 2).cast("int").as("q2"),
@@ -806,8 +806,8 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId,
           AviCodec.encode(frames, rate = src), "video/avi")
       }).toDF()
-    val resampled = Multimodal.resampleVideoBatched(spark, media, targetFps = 12)
-    Multimodal.decodeFramesBatched(spark, resampled.toDF(), everyN = 1).toDF()
+    val resampled = Multimodal.resampleVideoBatched(media, targetFps = 12)
+    Multimodal.decodeFramesBatched(resampled.toDF(), everyN = 1).toDF()
       .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
         col("luma").cast("int").as("luma"))
       .orderBy(col("doc_id"), col("frame_idx"))
@@ -861,7 +861,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
               sampleRate = sr, timescale = sr, duration = ns, nSamples = ns)))
         Multimodal.MediaRecord(docId, bytes, "video/mp4")
       }).toDF()
-    Multimodal.decodeMp4TracksBatched(spark, media).toDF()
+    Multimodal.decodeMp4TracksBatched(media).toDF()
       .select(col("doc_id"), col("track_id"), col("handler"), col("codec"),
         col("width"), col("height"), col("timescale"), col("duration"),
         col("n_samples"), col("channels"), col("sample_rate"))
@@ -932,7 +932,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId,
           Mp4Codec.encodeMjpg(frames, samplesPerChunk = 2), "video/mp4")
       }).toDF()
-    Multimodal.videoFrameGridsBatched(spark, media, everyN = 1, g = 2).toDF()
+    Multimodal.videoFrameGridsBatched(media, everyN = 1, g = 2).toDF()
       .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
         element_at(col("grid"), 1).cast("int").as("q1"),
         element_at(col("grid"), 2).cast("int").as("q2"),
@@ -992,7 +992,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           Mp4Codec.encodePcm16(s, sampleRate = 8000, samplesPerChunk = 25),
           "audio/mp4")
       }).toDF()
-    Multimodal.extractAudioFeaturesBatched(spark, media, cells = 4).toDF()
+    Multimodal.extractAudioFeaturesBatched(media, cells = 4).toDF()
       .select(col("doc_id"), col("sample_rate"), col("n_samples"),
         col("zero_crossings"),
         element_at(col("envelope"), 1).cast("double").as("env_0"),
@@ -1115,7 +1115,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
     * stage both q127 (batch) and q132 (per micro-batch) run. */
   private[queries] def dhashFingerprints(spark: SparkSession, ids: DataFrame): DataFrame =
     graft.multimodal.Multimodal
-      .imageGridsBatched(spark, dhashPngMedia(spark, ids), gw = 9, gh = 8)
+      .imageGridsBatched(dhashPngMedia(spark, ids), gw = 9, gh = 8)
       .toDF()
       .select(col("doc_id"),
         graft.ops.MediaFingerprint.dhash63(col("features"), gw = 9, gh = 8).as("sh"))
@@ -1211,7 +1211,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
         Multimodal.MediaRecord(docId, out.toByteArray, "audio/wav")
       }).toDF()
-    val fp = Multimodal.extractAudioFeaturesBatched(spark, media, cells = 8)
+    val fp = Multimodal.extractAudioFeaturesBatched(media, cells = 8)
       .toDF()
       .select(col("doc_id"),
         MediaFingerprint.contourBits(col("envelope"), cells = 8).as("fp"))
@@ -1274,7 +1274,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId,
           AviCodec.encodeMjpg(frames, rate = 10), "video/avi")
       }).toDF()
-    val frames = Multimodal.videoFrameGridsBatched(spark, media, everyN = 1, g = 1)
+    val frames = Multimodal.videoFrameGridsBatched(media, everyN = 1, g = 1)
       .toDF()
     Multimodal.sceneCuts(frames, element_at(col("grid"), 1), threshold = 40.0)
       .select(col("doc_id"), col("frame_idx"), col("prev_luma"), col("luma"))
@@ -1435,9 +1435,9 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId,
           Y4mCodec.encode(frames, w, h, fps, 1, cs), "video/y4m")
       }).toDF()
-    val grids = Multimodal.videoFrameGridsBatched(spark, media, everyN = 1, g = 2)
+    val grids = Multimodal.videoFrameGridsBatched(media, everyN = 1, g = 2)
       .toDF()
-    val meta = Multimodal.decodeVideoStreamsBatched(spark, media).toDF()
+    val meta = Multimodal.decodeVideoStreamsBatched(media).toDF()
       .select(col("doc_id"), col("rate").as("fps_num"),
         col("length").as("n_frames"))
     grids.join(meta, "doc_id")
@@ -1504,7 +1504,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
                 (2 + docId % 3).toInt, firstAdaptLen = 0))),
           "video/mp2t")
       }).toDF()
-    Multimodal.tsDemuxStatsBatched(spark, media).toDF()
+    Multimodal.tsDemuxStatsBatched(media).toDF()
       .select(col("doc_id"), col("pid"),
         when(col("stream_type") === 0x1b, "h264")
           .when(col("stream_type") === 0x0f, "aac")
@@ -1571,7 +1571,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
             extraBlocks = extras,
             frameBytes = (64 + nChars % 128).toInt), "audio/flac")
       }).toDF()
-    Multimodal.flacMetaBatched(spark, media).toDF()
+    Multimodal.flacMetaBatched(media).toDF()
       .select(col("doc_id"), col("sample_rate"), col("channels"),
         col("bits"), col("total_samples"),
         expr("total_samples * 1000 DIV sample_rate").as("duration_ms"),
@@ -1635,7 +1635,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           Multimodal.MediaRecord(docId, WarcCodec.encode(recs),
             "application/warc")
       }).toDF()
-    Multimodal.warcRecordsBatched(spark, media).toDF()
+    Multimodal.warcRecordsBatched(media).toDF()
       .select(col("doc_id"), col("record_idx"), col("warc_type"),
         col("target_uri"), col("warc_date"), col("content_length"),
         col("http_status"), col("http_header_bytes"),
@@ -1800,7 +1800,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
             nFrames = (2 + docId % 7).toInt,
             mono = docId % 2 == 0), "audio/mpeg")
       }).toDF()
-    Multimodal.mp3MetaBatched(spark, media).toDF()
+    Multimodal.mp3MetaBatched(media).toDF()
       .select(col("doc_id"), col("title"), col("artist"), col("tag_bytes"),
         col("n_frames"), col("bitrate_kbps"), col("sample_rate"),
         col("channels"), col("audio_bytes"), col("duration_ms"))
@@ -1863,7 +1863,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
             crc = docId % 3 == 0), // every third stream CRC-protected
           "audio/aac")
       }).toDF()
-    Multimodal.adtsMetaBatched(spark, media).toDF()
+    Multimodal.adtsMetaBatched(media).toDF()
       .select(col("doc_id"), col("n_frames"), col("profile"),
         col("sample_rate"), col("channels"), col("audio_bytes"),
         col("duration_ms"), col("crc_frames"))
@@ -1931,7 +1931,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
               else ((docId * 7 + i * 31 + j) % 255 + 1).toInt),
           "video/h264")
       }).toDF()
-    Multimodal.h264MetaBatched(spark, media).toDF()
+    Multimodal.h264MetaBatched(media).toDF()
       .select(col("doc_id"), col("width"), col("height"),
         col("profile").as("profile_idc"), col("level").as("level_idc"),
         col("max_frame_num"), col("chroma_format"), col("n_idr"),
@@ -2016,7 +2016,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
             streamType = 0x1b, payload = TsCodec.pesWrap(0xe0, es)),
           "video/mp2t")
       }).toDF()
-    Multimodal.tsH264ChainBatched(spark, media).toDF()
+    Multimodal.tsH264ChainBatched(media).toDF()
       .select(col("doc_id"), col("n_ts_packets"), col("payload_bytes"),
         col("width"), col("height"), col("profile").as("profile_idc"),
         col("level").as("level_idc"), col("max_frame_num"),
@@ -2126,7 +2126,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         }
         Multimodal.MediaRecord(docId, bytes, "application/pdf")
       }).toDF()
-    Multimodal.pdfPagesBatched(spark, media).toDF()
+    Multimodal.pdfPagesBatched(media).toDF()
       .select(col("doc_id"), col("page_idx"), col("n_text_ops"),
         col("flate"), length(col("text")).cast("int").as("text_chars"),
         md5(col("text")).as("text_md5"))
@@ -2182,7 +2182,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId, ZipCodec.encode(members),
           "application/zip")
       }).toDF()
-    val pdfs = Multimodal.zipMembersBatched(spark, shards).toDF()
+    val pdfs = Multimodal.zipMembersBatched(shards).toDF()
       .where(col("name").endsWith(".pdf"))
       // the full name stem, not a fixed 8-char slice: %08d is a MINIMUM
       // width, so doc_id*10+s outgrows 8 digits at large scale factors
@@ -2190,7 +2190,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
       .select(regexp_extract(col("name"), "^(\\d+)\\.pdf$", 1)
         .cast("bigint").as("doc_id"),
         col("payload").as("content"), lit("application/pdf").as("mime"))
-    Multimodal.pdfPagesBatched(spark, pdfs).toDF()
+    Multimodal.pdfPagesBatched(pdfs).toDF()
       .select(col("doc_id").as("pdf_id"), col("n_text_ops"), col("flate"),
         length(col("text")).cast("int").as("text_chars"),
         md5(col("text")).as("text_md5"))
@@ -2299,7 +2299,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId,
           VttCodec.encode(cues).getBytes("UTF-8"), "text/vtt")
       }).toDF()
-    val cues = Multimodal.vttCuesBatched(spark, media).toDF()
+    val cues = Multimodal.vttCuesBatched(media).toDF()
     val frames = Tables.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), col("source"),
         explode(sequence(lit(0), lit(5))).as("frame_k"))
@@ -2367,7 +2367,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId, TarCodec.encode(members),
           "application/x-tar")
       }).toDF()
-    Multimodal.webdatasetMembersBatched(spark, media).toDF()
+    Multimodal.webdatasetMembersBatched(media).toDF()
       .groupBy(col("doc_id"), col("sample_key"))
       .agg(count(lit(1)).as("n_fields"),
         max(when(col("field") === "txt", length(col("payload"))))
@@ -2443,7 +2443,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           Multimodal.MediaRecord(docId, WarcCodec.encode(recs),
             "application/warc")
       }).toDF()
-    val records = Multimodal.warcRecordsBatched(spark, media).toDF()
+    val records = Multimodal.warcRecordsBatched(media).toDF()
     val texts = records.where(col("warc_type") === "response")
       .select(col("doc_id"), col("payload").cast("string").as("text"))
     val metas = records.where(col("warc_type") === "metadata")
@@ -2522,7 +2522,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId,
           OggCodec.encode((1000 + docId % 100).toInt, pages), "audio/ogg")
       }).toDF()
-    Multimodal.oggMetaBatched(spark, media).toDF()
+    Multimodal.oggMetaBatched(media).toDF()
       .select(col("doc_id"), col("serial"), col("n_pages"), col("n_packets"),
         col("payload_bytes"), col("last_granule"), col("bos_ok"),
         col("eos_ok"))
@@ -2581,7 +2581,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
         Multimodal.MediaRecord(docId, ZipCodec.encode(members),
           "application/zip")
       }).toDF()
-    Multimodal.zipMembersBatched(spark, media).toDF()
+    Multimodal.zipMembersBatched(media).toDF()
       .select(col("doc_id"), col("member_idx"), col("name"),
         when(col("method") === ZipCodec.MethodStored, lit("stored"))
           .otherwise(lit("deflate")).as("method"),
@@ -2719,7 +2719,7 @@ private[queries] trait ExtInfraQueries extends ExtQueryHelpers {
           Multimodal.MediaRecord(docId, WarcCodec.encode(recs),
             "application/warc")
       }).toDF()
-    val records = Multimodal.warcRecordsBatched(spark, media).toDF()
+    val records = Multimodal.warcRecordsBatched(media).toDF()
     val ext = records.where(col("warc_type") === "response")
       .select(col("doc_id"), col("payload").cast("string").as("html"))
       .as[(Long, String)]

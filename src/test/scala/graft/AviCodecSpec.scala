@@ -47,9 +47,7 @@ class AviCodecSpec extends AnyFunSuite {
     val f0 = gray(7, 3, 10); f0.setRGB(2, 1, 0x0a141e) // R=10,G=20,B=30
     val f1 = gray(7, 3, 200)
     val bytes = AviCodec.encode(Seq(f0, f1), rate = 5)
-    val c = AviCodec.parse(2L, bytes)
-    val vids = c.streams.head
-    val chunks = AviCodec.videoFrameChunks(2L, bytes, c)
+    val (vids, chunks) = AviCodec.videoFrames(2L, bytes)
     assert(chunks.size === 2)
     val d0 = AviCodec.decodeFrame(2L, bytes, chunks(0)._1, chunks(0)._2, vids)
     val d1 = AviCodec.decodeFrame(2L, bytes, chunks(1)._1, chunks(1)._2, vids)
@@ -85,9 +83,8 @@ class AviCodecSpec extends AnyFunSuite {
 
   test("inter-frame-compressed or non-24-bit frames refuse to decode") {
     val bytes = AviCodec.encode(Seq(gray(4, 4, 7)), rate = 10)
-    val c = AviCodec.parse(5L, bytes)
-    val chunks = AviCodec.videoFrameChunks(5L, bytes, c)
-    val bad = c.streams.head.copy(compression = 0x34363248 /* 'H264' */)
+    val (vids, chunks) = AviCodec.videoFrames(5L, bytes)
+    val bad = vids.copy(compression = 0x34363248 /* 'H264' */)
     val e = intercept[IllegalArgumentException] {
       AviCodec.decodeFrame(5L, bytes, chunks.head._1, chunks.head._2, bad)
     }
@@ -103,7 +100,7 @@ class AviCodecSpec extends AnyFunSuite {
     assert(vids.handler === "MJPG")
     assert(vids.compression === AviCodec.MjpgFourcc)
     assert(c.totalFrames === 256L)
-    val chunks = AviCodec.videoFrameChunks(7L, bytes, c)
+    val (_, chunks) = AviCodec.videoFrames(7L, bytes)
     assert(chunks.size === 256)
     for (v <- 0 until 256) {
       val (o, s) = chunks(v)
@@ -125,10 +122,9 @@ class AviCodecSpec extends AnyFunSuite {
       img.setRGB(x, y, (v << 16) | (v << 8) | v)
     }
     val bytes = AviCodec.encodeMjpg(Seq(img), rate = 10)
-    val c = AviCodec.parse(8L, bytes)
-    val chunks = AviCodec.videoFrameChunks(8L, bytes, c)
+    val (vids, chunks) = AviCodec.videoFrames(8L, bytes)
     val dec = AviCodec.decodeFrame(8L, bytes, chunks.head._1,
-      chunks.head._2, c.streams.head)
+      chunks.head._2, vids)
     for (y <- 0 until 16; x <- 0 until 16)
       assert((dec.getRGB(x, y) & 0xff) === quad((y / 8) * 2 + (x / 8)),
         s"pixel ($x,$y)")
@@ -139,13 +135,12 @@ class AviCodecSpec extends AnyFunSuite {
 
   test("MJPG garbage frame chunk fails loudly, not with fake pixels") {
     val good = AviCodec.encodeMjpg(Seq(gray(8, 8, 99)), rate = 10)
-    val c = AviCodec.parse(9L, good)
-    val chunks = AviCodec.videoFrameChunks(9L, good, c)
+    val (vids, chunks) = AviCodec.videoFrames(9L, good)
     val (o, s) = chunks.head
     val corrupt = good.clone()
     corrupt(o) = 0x00 // destroy the JPEG SOI marker
     val e = intercept[IllegalArgumentException] {
-      AviCodec.decodeFrame(9L, corrupt, o, s, c.streams.head)
+      AviCodec.decodeFrame(9L, corrupt, o, s, vids)
     }
     assert(e.getMessage.contains("9"))
   }
@@ -154,9 +149,7 @@ class AviCodecSpec extends AnyFunSuite {
     val vals = Seq(30, 60, 90, 120)
     val frames = vals.map(gray(8, 8, _))
     val bytes = AviCodec.encode(frames, rate = 10)
-    val c = AviCodec.parse(6L, bytes)
-    val vids = c.streams.head
-    val chunks = AviCodec.videoFrameChunks(6L, bytes, c)
+    val (vids, chunks) = AviCodec.videoFrames(6L, bytes)
     val lumas = chunks.map { case (o, s) =>
       Multimodal.ImageIoCodec.lumaGrid(
         AviCodec.decodeFrame(6L, bytes, o, s, vids), 1)(0)

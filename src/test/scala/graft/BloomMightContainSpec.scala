@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{BloomMightContain, BloomMightContainBcast}
+import graft.functions.BloomMightContain
 
 /** The Bloom membership expression behind q51's incremental dedup. */
 class BloomMightContainSpec extends SparkSpecBase {
@@ -48,23 +48,5 @@ class BloomMightContainSpec extends SparkSpecBase {
     assert(viaBloom.orderBy("k").collect().toSeq ===
       plain.orderBy("k").collect().toSeq)
     assert(viaBloom.count() === 500L)
-  }
-
-  test("broadcast variant probes identically to the inline variant, " +
-    "keeps null semantics, and survives release") {
-    val keys = (0 until 2000).map(i => s"key-$i")
-    val bloom = bloomOf(keys)
-    val handle = spark.sparkContext.broadcast(bloom)
-    try {
-      val probes = ((0 until 2500).map(i => Some(s"key-$i")) :+ None).toDF("k")
-      val inline = probes
-        .select($"k", BloomMightContain.mightContain(bloom, $"k").as("m"))
-      val bcast = probes
-        .select($"k", BloomMightContainBcast.mightContain(handle, $"k").as("m"))
-      assert(bcast.orderBy("k").collect().toSeq ===
-        inline.orderBy("k").collect().toSeq)
-      // no false negatives through the broadcast path either
-      assert(bcast.where($"m" && $"k".isNotNull).count() >= 2000L)
-    } finally handle.unpersist()
   }
 }

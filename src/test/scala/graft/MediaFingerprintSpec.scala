@@ -37,7 +37,7 @@ class MediaFingerprintSpec extends SparkSpecBase {
   }
 
   private def dhashOf(media: Seq[Multimodal.MediaRecord]): Map[Long, Long] =
-    Multimodal.imageGridsBatched(spark, media.toDF(), gw = 9, gh = 8).toDF()
+    Multimodal.imageGridsBatched(media.toDF(), gw = 9, gh = 8).toDF()
       .select(col("doc_id"), MediaFingerprint.dhash63(col("features"), 9, 8).as("h"))
       .as[(Long, Long)].collect().toMap
 

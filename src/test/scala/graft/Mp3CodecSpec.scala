@@ -52,20 +52,15 @@ class Mp3CodecSpec extends SparkSpecBase {
     intercept[IllegalArgumentException](Mp3Codec.encode("t", "a", 5, 3, 1, true))
   }
 
-  test("mp3MetaBatched dispatches and rejects foreign mimes loudly") {
+  test("mp3MetaBatched dispatches an MP3 payload to one metadata row") {
     import spark.implicits._
     val media = Seq(
       Multimodal.MediaRecord(7L,
         Mp3Codec.encode("T7", "A7", 3, 2, 6, mono = true), "audio/mpeg")).toDF()
-    val rows = Multimodal.mp3MetaBatched(spark, media).collect()
+    val rows = Multimodal.mp3MetaBatched(media).collect()
     assert(rows.length == 1)
     val r = rows.head
     assert(r.title == "T7" && r.artist == "A7" && r.n_frames == 6 &&
       r.bitrate_kbps == 48 && r.sample_rate == 32000 && r.channels == 1)
-    val wrong = Seq(Multimodal.MediaRecord(8L,
-      Mp3Codec.encode("x", "y", 3, 2, 1, mono = true), "audio/flac")).toDF()
-    val e = intercept[org.apache.spark.SparkException](
-      Multimodal.mp3MetaBatched(spark, wrong).collect())
-    assert(e.getMessage.contains("8") || e.getCause.getMessage.contains("8"))
   }
 }

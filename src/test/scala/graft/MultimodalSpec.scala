@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 import graft.sources.Tables
@@ -11,7 +12,7 @@ class MultimodalSpec extends SparkSpecBase {
     "matches the deterministic formulas") {
     val docs = Tables.documents(spark, sf0001)
     val media = Multimodal.asMedia(docs)
-    val meta = Multimodal.decodeBatched(spark, media, batchSize = 64)
+    val meta = Multimodal.decodeBatched(media)
     assert(meta.count() === docs.count())
     val one = meta.where($"doc_id" === 0).head()
     val nChars = docs.where($"doc_id" === 0).select("n_chars").as[Long].head()
@@ -39,7 +40,7 @@ class MultimodalSpec extends SparkSpecBase {
       Multimodal.MediaRecord(2L, png(320, 240, 1), "image/png"),
       Multimodal.MediaRecord(3L, "not an image".getBytes, Multimodal.StubCodec.FakeMime)
     ).toDF()
-    val meta = Multimodal.decodeBatched(spark, media).collect()
+    val meta = Multimodal.decodeBatched(media).collect()
       .map(m => m.doc_id -> m).toMap
     assert((meta(1L).width, meta(1L).height) === (17, 9))
     assert((meta(2L).width, meta(2L).height) === (320, 240))
@@ -48,7 +49,7 @@ class MultimodalSpec extends SparkSpecBase {
     val n = "not an image".getBytes.length
     assert(meta(3L).width === 64 + n % 576)
     // real RESIZE: bilinear kernel to 8×6, output re-decodes at 8×6
-    val resized = Multimodal.resizeBatched(spark,
+    val resized = Multimodal.resizeBatched(
       media.where($"mime" === "image/png"), 8, 6).collect()
     assert(resized.length === 2)
     resized.foreach { r =>
@@ -59,7 +60,7 @@ class MultimodalSpec extends SparkSpecBase {
     // corrupt bytes under an image mime fail LOUDLY, not silently
     val bad = Seq(Multimodal.MediaRecord(9L, Array[Byte](1, 2, 3), "image/png")).toDF()
     val ex = intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeBatched(spark, bad).collect()
+      Multimodal.decodeBatched(bad).collect()
     }
     assert(ex.getMessage != null)
   }
@@ -81,7 +82,7 @@ class MultimodalSpec extends SparkSpecBase {
       Multimodal.MediaRecord(1L, wav(8000f, 1, 4000), "audio/wav"),
       Multimodal.MediaRecord(2L, wav(44100f, 2, 22050), "audio/wav")
     ).toDF()
-    val meta = Multimodal.decodeAudioBatched(spark, media).collect()
+    val meta = Multimodal.decodeAudioBatched(media).collect()
       .map(m => m.doc_id -> m).toMap
     assert((meta(1L).sample_rate, meta(1L).channels, meta(1L).n_samples) ===
       (8000, 1, 4000L))
@@ -91,7 +92,7 @@ class MultimodalSpec extends SparkSpecBase {
     assert(meta(2L).duration_ms === 500L)
     val bad = Seq(Multimodal.MediaRecord(9L, "not audio".getBytes, "audio/wav")).toDF()
     intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeAudioBatched(spark, bad).collect()
+      Multimodal.decodeAudioBatched(bad).collect()
     }
   }
 
@@ -121,7 +122,7 @@ class MultimodalSpec extends SparkSpecBase {
       Multimodal.MediaRecord(1L, gif(1), "image/gif"),
       Multimodal.MediaRecord(2L, gif(5), "image/gif")
     ).toDF()
-    val meta = Multimodal.decodeBatched(spark, media).collect()
+    val meta = Multimodal.decodeBatched(media).collect()
       .map(m => m.doc_id -> m).toMap
     assert(meta(1L).n_frames === 1)
     assert(meta(2L).n_frames === 5)
@@ -168,7 +169,7 @@ class MultimodalSpec extends SparkSpecBase {
     javax.imageio.ImageIO.write(flat, "png", out)
     val media = Seq(
       Multimodal.MediaRecord(7L, out.toByteArray, "image/png")).toDF()
-    val feats = Multimodal.extractFeaturesBatched(spark, media, dim = 16)
+    val feats = Multimodal.extractFeaturesBatched(media, dim = 16)
       .head().features
     assert(feats.toSeq === Seq.fill(16)(42f))
   }
@@ -196,7 +197,7 @@ class MultimodalSpec extends SparkSpecBase {
     val media = Seq(
       Multimodal.MediaRecord(1L, gif(Seq(10, 20, 30, 40, 50)), "image/gif")
     ).toDF()
-    val frames = Multimodal.decodeFramesBatched(spark, media, everyN = 2)
+    val frames = Multimodal.decodeFramesBatched(media, everyN = 2)
       .collect().sortBy(_.frame_idx)
     // frames 0, 2, 4 sampled; mean luma of a constant-gray frame is the
     // gray level exactly (GIF palette round-trips constant gray bit-exact)
@@ -205,13 +206,13 @@ class MultimodalSpec extends SparkSpecBase {
     assert(frames.forall(f => f.width === 8 && f.height === 4))
     val bad = Seq(Multimodal.MediaRecord(9L, "x".getBytes, "video/mp4")).toDF()
     intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeFramesBatched(spark, bad, everyN = 1).collect()
+      Multimodal.decodeFramesBatched(bad, everyN = 1).collect()
     }
   }
 
   test("frame sampling explodes every Nth frame index") {
     val media = Multimodal.asMedia(Tables.documents(spark, sf0001).limit(10))
-    val meta = Multimodal.decodeBatched(spark, media)
+    val meta = Multimodal.decodeBatched(media)
     val frames = Multimodal.sampleFrames(meta, everyN = 5)
     val expected = meta.collect()
       .map(m => (m.n_frames + 4) / 5).sum // ceil(n/5) sampled frames each
@@ -247,16 +248,16 @@ class MultimodalSpec extends SparkSpecBase {
         AviCodec.encode(Seq(gray(200)), rate = 25), "video/x-msvideo"))
       .toDF("doc_id", "content", "mime")
     // container metadata through the generic decode entry point
-    val meta = Multimodal.decodeBatched(spark, media).collect()
+    val meta = Multimodal.decodeBatched(media).collect()
       .map(m => m.doc_id -> ((m.width, m.height, m.n_frames))).toMap
     assert(meta === Map(1L -> ((8, 8, 3)), 2L -> ((8, 8, 1))))
     // frame sampling through the generic frame entry point: every 2nd
     // frame, real per-frame luma (gray v pools to exactly v)
-    val frames = Multimodal.decodeFramesBatched(spark, media, everyN = 2)
+    val frames = Multimodal.decodeFramesBatched(media, everyN = 2)
       .collect().map(f => (f.doc_id, f.frame_idx) -> f.luma).toMap
     assert(frames === Map((1L, 0) -> 50.0, (1L, 2) -> 150.0, (2L, 0) -> 200.0))
     // single-vector features = frame 0's luma grid
-    val feats = Multimodal.extractFeaturesBatched(spark, media, dim = 4)
+    val feats = Multimodal.extractFeaturesBatched(media, dim = 4)
       .collect().map(f => f.doc_id -> f.features.toSeq).toMap
     assert(feats === Map(1L -> Seq(50f, 50f, 50f, 50f),
       2L -> Seq(200f, 200f, 200f, 200f)))
@@ -265,10 +266,10 @@ class MultimodalSpec extends SparkSpecBase {
   test("batched resize and feature extraction keep shape and compose " +
     "with ANN ops") {
     val media = Multimodal.asMedia(Tables.documents(spark, sf0001).limit(50))
-    val resized = Multimodal.resizeBatched(spark, media, 224, 224)
+    val resized = Multimodal.resizeBatched(media, 224, 224)
     assert(resized.count() === 50)
     assert(resized.head().width === 224)
-    val feats = Multimodal.extractFeaturesBatched(spark, media, dim = 64)
+    val feats = Multimodal.extractFeaturesBatched(media, dim = 64)
     assert(feats.count() === 50)
     val v = feats.head().features
     assert(v.length === 64)
@@ -299,8 +300,8 @@ class MultimodalSpec extends SparkSpecBase {
       Multimodal.MediaRecord(2L,
         AviCodec.encodeMjpg(lum(2L).map(grayFrame(8, 8, _)), rate = 6), "video/avi")
     ).toDF()
-    val out = Multimodal.resampleVideoBatched(spark, media, targetFps = 12)
-    val frames = Multimodal.decodeFramesBatched(spark, out.toDF(), everyN = 1)
+    val out = Multimodal.resampleVideoBatched(media, targetFps = 12)
+    val frames = Multimodal.decodeFramesBatched(out.toDF(), everyN = 1)
       .collect().map(f => (f.doc_id, f.frame_idx) -> f.luma.toInt).toMap
     // doc 1: 12→12 fps is the identity
     assert((0 until 6).forall(j => frames((1L, j)) === lum(1L)(j)))
@@ -312,9 +313,9 @@ class MultimodalSpec extends SparkSpecBase {
       out.collect().find(_.doc_id == 2L).get.content)
     assert((c.streams.head.rate, c.streams.head.scale) === ((12, 1)))
     // downsample direction: 12→6 halves the count, keeping even frames
-    val down = Multimodal.resampleVideoBatched(spark,
+    val down = Multimodal.resampleVideoBatched(
       media.where($"doc_id" === 1L), targetFps = 6)
-    val dFrames = Multimodal.decodeFramesBatched(spark, down.toDF(), everyN = 1)
+    val dFrames = Multimodal.decodeFramesBatched(down.toDF(), everyN = 1)
       .collect().map(f => f.frame_idx -> f.luma.toInt).toMap
     assert(dFrames === Map(0 -> 10, 1 -> 30, 2 -> 50))
   }
@@ -329,19 +330,19 @@ class MultimodalSpec extends SparkSpecBase {
         Mp4Codec.TrackSpec(trackId = 2, video = false, channels = 1,
           sampleRate = 8000, timescale = 8000, duration = 4000, nSamples = 4000)))
     val media = Seq(Multimodal.MediaRecord(7L, bytes, "video/mp4")).toDF()
-    val meta = Multimodal.decodeBatched(spark, media).head()
+    val meta = Multimodal.decodeBatched(media).head()
     assert((meta.width, meta.height, meta.n_frames) === ((48, 32, 12)))
-    val tracks = Multimodal.decodeMp4TracksBatched(spark, media)
+    val tracks = Multimodal.decodeMp4TracksBatched(media)
       .collect().sortBy(_.track_id)
     assert(tracks.map(t => (t.track_id, t.handler, t.codec)).toSeq ===
       Seq((1L, "vide", "avc1"), (2L, "soun", "mp4a")))
     assert((tracks(1).channels, tracks(1).sample_rate) === ((1, 8000)))
     // sample decode for inter-frame codecs stays a loud failure
     val e = intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeFramesBatched(spark, media, everyN = 1).collect()
+      Multimodal.decodeFramesBatched(media, everyN = 1).collect()
     }
-    assert(e.getMessage.contains("no frame decoder") ||
-      e.getCause.getMessage.contains("no frame decoder"))
+    assert(rootCause(e).getMessage.contains(
+      "doc 7: decodeFramesBatched does not accept mime video/mp4"))
   }
 
   test("REAL video spatial resize: every frame through the bilinear " +
@@ -350,7 +351,7 @@ class MultimodalSpec extends SparkSpecBase {
     val media = Seq(Multimodal.MediaRecord(3L,
       AviCodec.encode(Seq(grayFrame(16, 16, 30), grayFrame(16, 16, 90)),
         rate = 10), "video/avi")).toDF()
-    val resized = Multimodal.resizeBatched(spark, media, 8, 8).collect()
+    val resized = Multimodal.resizeBatched(media, 8, 8).collect()
     assert(resized.length === 1)
     assert((resized.head.width, resized.head.height) === ((8, 8)))
     assert(resized.head.mime === "video/avi")
@@ -358,9 +359,56 @@ class MultimodalSpec extends SparkSpecBase {
     assert((c.width, c.height, c.totalFrames) === ((8, 8, 2L)))
     assert((c.streams.head.rate, c.streams.head.scale) === ((10, 1)))
     // solid frames stay solid through bilinear: decoded lumas unchanged
-    val frames = Multimodal.decodeFramesBatched(spark,
+    val frames = Multimodal.decodeFramesBatched(
       Seq(Multimodal.MediaRecord(3L, resized.head.content, "video/avi")).toDF(),
       everyN = 1).collect().map(f => f.frame_idx -> f.luma).toMap
     assert(frames === Map(0 -> 30.0, 1 -> 90.0))
+  }
+
+  private def rootCause(e: Throwable): Throwable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+
+  test("per-record streaming: take(1) decodes only the first payload, " +
+    "so a corrupt second record in the same partition is never reached") {
+    import graft.multimodal.FlacCodec
+    val media = Seq(
+      Multimodal.MediaRecord(1L,
+        FlacCodec.encode(16000, 1, 16, 32000L, Nil, 64), "audio/flac"),
+      Multimodal.MediaRecord(2L, Array[Byte](1, 2, 3), "audio/flac"))
+      .toDF().coalesce(1)
+    assert(Multimodal.flacMetaBatched(media).take(1).map(_.doc_id).toSeq ===
+      Seq(1L))
+    // reaching the corrupt record still fails loudly with its doc id
+    val e = intercept[org.apache.spark.SparkException](
+      Multimodal.flacMetaBatched(media).collect())
+    assert(rootCause(e).getMessage.contains("doc 2:"))
+  }
+
+  test("every mime-guarded entry point rejects a foreign mime naming the " +
+    "doc, itself and the mime") {
+    val wrong = Seq(Multimodal.MediaRecord(41L, Array[Byte](1, 2, 3),
+      "application/x-unknown")).toDF()
+    val guarded: Seq[(String, DataFrame => Dataset[_])] = Seq(
+      "flacMetaBatched" -> (Multimodal.flacMetaBatched(_)),
+      "oggMetaBatched" -> (Multimodal.oggMetaBatched(_)),
+      "warcRecordsBatched" -> (Multimodal.warcRecordsBatched(_)),
+      "mp3MetaBatched" -> (Multimodal.mp3MetaBatched(_)),
+      "adtsMetaBatched" -> (Multimodal.adtsMetaBatched(_)),
+      "h264MetaBatched" -> (Multimodal.h264MetaBatched(_)),
+      "tsDemuxStatsBatched" -> (Multimodal.tsDemuxStatsBatched(_)),
+      "tsH264ChainBatched" -> (Multimodal.tsH264ChainBatched(_)),
+      "vttCuesBatched" -> (Multimodal.vttCuesBatched(_)),
+      "webdatasetMembersBatched" -> (Multimodal.webdatasetMembersBatched(_)),
+      "zipMembersBatched" -> (Multimodal.zipMembersBatched(_)),
+      "pdfPagesBatched" -> (Multimodal.pdfPagesBatched(_)),
+      "imageGridsBatched" -> (Multimodal.imageGridsBatched(_, 9, 8)),
+      "resampleVideoBatched" -> (Multimodal.resampleVideoBatched(_, 12)),
+      "videoFrameGridsBatched" -> (Multimodal.videoFrameGridsBatched(_, 1, 2)),
+      "decodeFramesBatched" -> (Multimodal.decodeFramesBatched(_, 1)))
+    guarded.foreach { case (entry, run) =>
+      val e = intercept[org.apache.spark.SparkException](run(wrong).collect())
+      assert(rootCause(e).getMessage.contains(s"doc 41: $entry does not " +
+        "accept mime application/x-unknown"), entry)
+    }
   }
 }

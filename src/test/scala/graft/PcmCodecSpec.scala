@@ -97,7 +97,7 @@ class PcmCodecSpec extends SparkSpecBase {
   test("corrupt bytes and non-16-bit payloads fail loudly in the batched ops") {
     val bad = Seq(MediaRecord(9L, "not audio".getBytes, "audio/wav")).toDF()
     intercept[org.apache.spark.SparkException] {
-      Multimodal.extractAudioFeaturesBatched(spark, bad, cells = 2).collect()
+      Multimodal.extractAudioFeaturesBatched(bad, cells = 2).collect()
     }
     // genuine 8-bit WAV: decodable header, unsupported sample width
     import javax.sound.sampled._
@@ -109,7 +109,7 @@ class PcmCodecSpec extends SparkSpecBase {
       AudioFileFormat.Type.WAVE, out)
     val eightBit = Seq(MediaRecord(8L, out.toByteArray, "audio/wav")).toDF()
     val ex = intercept[org.apache.spark.SparkException] {
-      Multimodal.resampleAudioBatched(spark, eightBit, 4000).collect()
+      Multimodal.resampleAudioBatched(eightBit, 4000).collect()
     }
     assert(ex.getMessage != null)
   }
@@ -120,12 +120,12 @@ class PcmCodecSpec extends SparkSpecBase {
     val media = Seq(
       MediaRecord(1L, wav(s), "audio/wav"),
       MediaRecord(2L, "plain text".getBytes, "text/plain")).toDF()
-    val feats = Multimodal.extractFeaturesBatched(spark, media, dim = 2)
+    val feats = Multimodal.extractFeaturesBatched(media, dim = 2)
       .collect().map(f => f.doc_id -> f.features).toMap
     assert(feats(1L).toSeq === Seq(250f, 750f)) // real |amplitude| means
     assert(feats(2L).length === 2) // stub path still serves unknown mimes
     // features compose with the ANN ops: envelope is a plain float vector
-    val afs = Multimodal.extractAudioFeaturesBatched(spark,
+    val afs = Multimodal.extractAudioFeaturesBatched(
       Seq(MediaRecord(1L, wav(s), "audio/wav")).toDF(), cells = 4).head()
     assert(afs.sample_rate === 8000)
     assert(afs.n_samples === 64)

@@ -72,19 +72,14 @@ class TarVttCodecSpec extends SparkSpecBase {
     import spark.implicits._
     val tarMedia = Seq(Multimodal.MediaRecord(3L,
       TarCodec.encode(members), "application/x-tar")).toDF()
-    val rows = Multimodal.webdatasetMembersBatched(spark, tarMedia)
+    val rows = Multimodal.webdatasetMembersBatched(tarMedia)
       .collect().sortBy(r => (r.sample_key, r.field))
     assert(rows.map(r => (r.sample_key, r.field)).toSeq ==
       Seq(("00001", "cls"), ("00001", "txt"), ("00002", "txt")))
     val vttMedia = Seq(Multimodal.MediaRecord(4L,
       VttCodec.encode(Seq(VttCodec.Cue(1, 0L, 1000L, "t"))).getBytes("UTF-8"),
       "text/vtt")).toDF()
-    val cues = Multimodal.vttCuesBatched(spark, vttMedia).collect()
+    val cues = Multimodal.vttCuesBatched(vttMedia).collect()
     assert(cues.length == 1 && cues.head.end_ms == 1000L)
-    val wrong = Seq(Multimodal.MediaRecord(5L,
-      TarCodec.encode(members), "text/vtt")).toDF()
-    val e = intercept[org.apache.spark.SparkException](
-      Multimodal.vttCuesBatched(spark, wrong).collect())
-    assert(e.getMessage.contains("5") || e.getCause.getMessage.contains("5"))
   }
 }

@@ -75,7 +75,7 @@ class TsCodecSpec extends SparkSpecBase {
       Multimodal.MediaRecord(3L, TsCodec.encode(6, 33, 300,
         Seq(TsCodec.EsSpec(300, 0x1b, 3, 7),
           TsCodec.EsSpec(301, 0x0f, 2, 0))), "video/mp2t")).toDF()
-    val rows = Multimodal.tsDemuxStatsBatched(spark, media)
+    val rows = Multimodal.tsDemuxStatsBatched(media)
       .collect().sortBy(_.pid)
     assert(rows.length == 2)
     assert(rows(0).program_number == 6 && rows(0).pmt_pid == 33 &&

@@ -68,7 +68,7 @@ class WarcCodecSpec extends SparkSpecBase {
       Multimodal.MediaRecord(3L, WarcCodec.encode(recs), "application/warc"),
       Multimodal.MediaRecord(4L, WarcCodec.encodeGzip(recs),
         "application/warc+gzip")).toDF()
-    val rows = Multimodal.warcRecordsBatched(spark, media).collect()
+    val rows = Multimodal.warcRecordsBatched(media).collect()
       .sortBy(r => (r.doc_id, r.record_idx))
     assert(rows.length == 4)
     assert(rows.forall(_.target_uri == "https://example.org/a"))
@@ -77,10 +77,5 @@ class WarcCodecSpec extends SparkSpecBase {
         new String(r.payload, "US-ASCII") == "hello warc world"))
     assert(rows.filter(_.doc_id == 3L).forall(_.member_bytes == 0))
     assert(rows.filter(_.doc_id == 4L).forall(_.member_bytes > 0))
-    val wrongMime = Seq(
-      Multimodal.MediaRecord(5L, WarcCodec.encode(recs), "video/mp2t")).toDF()
-    val e = intercept[org.apache.spark.SparkException](
-      Multimodal.warcRecordsBatched(spark, wrongMime).collect())
-    assert(e.getMessage.contains("5") || e.getCause.getMessage.contains("5"))
   }
 }

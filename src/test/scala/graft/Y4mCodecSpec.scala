@@ -90,10 +90,10 @@ class Y4mCodecSpec extends SparkSpecBase {
     val luma = gray(4, 4, (_, _) => 77)
     val bytes = Y4mCodec.encode(Seq(luma, luma), 4, 4, 12, 1, "Cmono")
     val media = Seq(Multimodal.MediaRecord(3L, bytes, "video/y4m")).toDF()
-    val grids = Multimodal.videoFrameGridsBatched(spark, media, everyN = 1, g = 2)
+    val grids = Multimodal.videoFrameGridsBatched(media, everyN = 1, g = 2)
       .collect().sortBy(_.frame_idx)
     assert(grids.length == 2 && grids.forall(_.grid.forall(_ == 77f)))
-    val meta = Multimodal.decodeVideoStreamsBatched(spark, media).collect()
+    val meta = Multimodal.decodeVideoStreamsBatched(media).collect()
     assert(meta.length == 1)
     val m = meta.head
     assert(m.stream_type == "vids" && m.width == 4 && m.height == 4 &&
